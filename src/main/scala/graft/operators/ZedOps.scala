@@ -500,7 +500,8 @@ object ZedOps {
   /** `fuse` — unify all record types into one wide schema
     * (runtime/sam/op/fuse/fuse.go). Across DataFrames this is
     * unionByName(allowMissing); a single DataFrame is already fused
-    * (schema merge happens at read with parquet mergeSchema).
+    * (its source merged its inputs' schemas when it planned the read — a
+    * lake scan merges its objects' footer schemas on the driver).
     */
   def fuse(dfs: DataFrame*): DataFrame =
     dfs.reduce(_.unionByName(_, allowMissingColumns = true))

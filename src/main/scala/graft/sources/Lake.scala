@@ -12,9 +12,11 @@ import java.nio.charset.StandardCharsets
   *   <root>/<pool>/commits.jsonl      append-only commit journal (driver-side
   *                                    metadata only, like zed's journal)
   *
-  * Scan is merge-on-read: the union of all live commits' parquet dirs with
-  * schema merge — the same shape as zed's Lister/SeqScan over pool objects,
-  * with Spark handling partition planning and pushdown per file.
+  * Scan is merge-on-read: the union of all live commits' parquet dirs,
+  * planned on the driver from the journal's live set and one footer per
+  * object, without a Spark job (zed's Lister/SeqScan plans a pool scan
+  * from its journal too). Spark handles partition planning and pushdown
+  * per file.
   */
 object Lake {
 
@@ -211,7 +213,9 @@ object Lake {
 
   /** `load` — commit a query result into a pool (load.go:11-30). The data
     * write is a distributed parquet write; only the tiny journal append is
-    * driver-side, mirroring zed's commit-journal design.
+    * driver-side, mirroring zed's commit-journal design. The commit record
+    * carries the object's row count and key range, observed on the write
+    * job.
     */
   def load(df: DataFrame, root: String, pool: String,
            author: String = "graft", message: String = "",
@@ -246,18 +250,18 @@ object Lake {
         df.select(lit("{}").as(graft.operators.Het.typeTag, md))
       }
     val key = poolKey(root, pool).filter(dfW.columns.contains)
-    // the object's key range rides the WRITE job itself (Observation
-    // metrics over the flowing rows) — exact, no second pass over the
-    // input, and no re-read of a just-written directory (a listing
-    // immediately after a write has been observed partial on this host)
-    val obs = key.map(_ => new org.apache.spark.sql.Observation())
-    val sorted = (key, obs) match {
+    // the object's row count, and a keyed pool's key range, ride the WRITE
+    // job itself (Observation metrics over the flowing rows) — exact, no
+    // second pass over the input, and no re-read of a just-written
+    // directory (a listing immediately after a write can come back partial)
+    import org.apache.spark.sql.functions._
+    val obs = new org.apache.spark.sql.Observation()
+    val rowsMetric = count(lit(1)).as("rows")
+    val sorted = key match {
       // keyed pool: range-sort so each file and row group covers a tight
       // key slice — this is what makes the journal's [min,max] and the
       // parquet stats selective at scan time
-      case (Some(k), Some(o)) =>
-        import org.apache.spark.sql.functions._
-        import org.apache.spark.sql.types.{LongType, TimestampType, TimestampNTZType}
+      case Some(k) =>
         // TIME keys record their range in zed's ISO form (ns precision,
         // trailing zeros trimmed) so :objects min/max render like the
         // reference and range pruning compares consistently
@@ -281,27 +285,22 @@ object Lake {
             Seq(col(k)) ++ tb.toSeq
           } else Seq(col(k))
         dfW.repartitionByRange(col(k)).sortWithinPartitions(sortCols: _*)
-          .observe(o, min_by(keyText(col(k)), col(k)).as("kmin"),
+          .observe(obs, rowsMetric, min_by(keyText(col(k)), col(k)).as("kmin"),
             max_by(keyText(col(k)), col(k)).as("kmax"))
-      case _ => dfW
+      case None => dfW.observe(obs, rowsMetric)
     }
     sorted.write.mode("errorifexists").parquet(dataDir.toString)
-    val range = obs.map { o =>
-      val m = o.get
-      def named(key: String, idx: Int): String =
-        m.get(key).orElse(m.values.toSeq.lift(idx)).flatMap(Option(_))
-          .map(_.toString).getOrElse("")
-      (named("kmin", 0), named("kmax", 1))
-    }
-    val rangeJson = range.map { case (lo, hi) =>
-      s""","keymin":"${lo.replace("\"", "'")}","keymax":"${hi.replace("\"", "'")}""""
+    val observed = obs.get
+    val rows = observed.get("rows").collect { case n: Long => n }.getOrElse(-1L)
+    val rangeJson = key.map { _ =>
+      def named(m: String): String =
+        observed.get(m).flatMap(Option(_)).map(_.toString).getOrElse("").replace("\"", "'")
+      s""","keymin":"${named("kmin")}","keymax":"${named("kmax")}""""
     }.getOrElse("")
     // object stats for :log / :objects meta scans — a local listing of
     // the object just written (cheap: one directory)
     val files = Option(dataDir.toFile.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-    val rows = try spark_rowcount(df.sparkSession, dataDir.toString)
-               catch { case _: Exception => -1L }
     // "data bytes" is the zng-equivalent size like the reference's (log
     // ztest pins it); computed exactly for small objects, approximated by
     // the parquet footprint for big ones (a second serialization pass at
@@ -318,7 +317,6 @@ object Lake {
             // (lake/data/writer.go writeIndex); each stream re-emits its
             // types frame and ends with EOS, so per-stream byte lengths —
             // and the object's total "data bytes" — are byte-exact.
-            import org.apache.spark.sql.functions.{col, asc_nulls_last, desc_nulls_first}
             val desc = poolOrder(root, pool) == "desc"
             // cached: the zng write and the key-text collect below must
             // see ONE ordering — rows with equal pool keys have no stable
@@ -337,81 +335,83 @@ object Lake {
                 df.coalesce(1).sortWithinPartitions(cols: _*)
               case None => df.coalesce(1)
             }).cache()
-            ZngIO.write(sortedOne, tmp.toString)
-            val (typesPayload, values) = ZngIO.parseStream(tmp.toString)
-            val keyInfo: Seq[(String, Int)] = key match {
-              case Some(k) =>
-                val kc = col(k)
-                sortedOne.select(keyTextOf(df, k)(kc).as("t"), kc.as("r"))
-                  .collect().toSeq.map { r =>
-                    (Option(r.get(0)).map(_.toString).getOrElse(""),
-                      zngBodyLen(r.get(1), df.schema(k).dataType))
-                  }
-              case None => values.map(_ => ("", 0))
-            }
-            val stride = seekStride(root, pool)
-            // windows: (count, vbytes, minText, maxText, offset, length)
-            val wins = Vector.newBuilder[(Long, Long, String, String, Long, Long)]
-            var off = 0L; var valOff = 0L
-            var i = 0
-            while (i < values.length) {
-              var trigger = 0L; var cnt = 0L; var vb = 0L
-              val first = keyInfo(i)._1
-              var last = first
-              val raw = new java.io.ByteArrayOutputStream()
-              while (i < values.length && (cnt == 0L || trigger < stride)) {
-                trigger += keyInfo(i)._2
-                vb += values(i)._2
-                raw.write(values(i)._1)
-                last = keyInfo(i)._1
-                cnt += 1; i += 1
-              }
-              val tf = ZngIO.frame(0, typesPayload)
-              val vf = ZngIO.frame(1, raw.toByteArray)
-              val len = tf.length + vf.length + 1L // + EOS
-              val (mn, mx) = if (desc) (last, first) else (first, last)
-              wins += ((cnt, vb, mn, mx, off, len))
-              off += len; valOff += cnt
-            }
-            val ws = wins.result()
-            // the physical seek index (<id>-seek.zng, lake/seekindex):
-            // readable with plain `super query` like the reference's
-            if (key.isDefined && ws.nonEmpty) {
-              try {
-                val isStr = df.schema(key.get).dataType ==
-                  org.apache.spark.sql.types.StringType
-                def kv(s: String): String =
-                  if (s.isEmpty) "null"
-                  else if (isStr) "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-                  else s
-                var vo = 0L
-                val zson = ws.map { case (cnt, _, mn, mx, o, len) =>
-                  val line = s"{min:${kv(mn)},max:${kv(mx)},val_off:$vo(uint64),val_cnt:$cnt(uint64),offset:$o(uint64),length:$len(uint64)}"
-                  vo += cnt; line
-                }.mkString("\n")
-                val seekTmp = Files.createTempDirectory("seekzng")
-                try {
-                  ZngIO.write(ZsonReader.fromText(df.sparkSession, zson,
-                    tag = false), seekTmp.toString)
-                  Option(seekTmp.toFile.listFiles()).getOrElse(Array.empty)
-                    .find(f => f.isFile && f.getName.startsWith("part-"))
-                    .foreach { p =>
-                      Files.copy(p.toPath,
-                        poolDir(root, pool).resolve("data").resolve(s"$id-seek.zng"),
-                        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
+            // released on every path: an exception in the size block must
+            // not leave the frame in the cache manager
+            try {
+              ZngIO.write(sortedOne, tmp.toString)
+              val (typesPayload, values) = ZngIO.parseStream(tmp.toString)
+              val keyInfo: Seq[(String, Int)] = key match {
+                case Some(k) =>
+                  val kc = col(k)
+                  sortedOne.select(keyTextOf(df, k)(kc).as("t"), kc.as("r"))
+                    .collect().toSeq.map { r =>
+                      (Option(r.get(0)).map(_.toString).getOrElse(""),
+                        zngBodyLen(r.get(1), df.schema(k).dataType))
                     }
-                } finally org.apache.commons.io.FileUtils.deleteQuietly(seekTmp.toFile): Unit
-              } catch { case _: Exception => () }
-            }
-            sortedOne.unpersist(blocking = false): Unit
-            (ws.map(_._6).sum, ws.map(_._2).sum, ws)
+                case None => values.map(_ => ("", 0))
+              }
+              val stride = seekStride(root, pool)
+              // windows: (count, vbytes, minText, maxText, offset, length)
+              val wins = Vector.newBuilder[(Long, Long, String, String, Long, Long)]
+              var off = 0L; var valOff = 0L
+              var i = 0
+              while (i < values.length) {
+                var trigger = 0L; var cnt = 0L; var vb = 0L
+                val first = keyInfo(i)._1
+                var last = first
+                val raw = new java.io.ByteArrayOutputStream()
+                while (i < values.length && (cnt == 0L || trigger < stride)) {
+                  trigger += keyInfo(i)._2
+                  vb += values(i)._2
+                  raw.write(values(i)._1)
+                  last = keyInfo(i)._1
+                  cnt += 1; i += 1
+                }
+                val tf = ZngIO.frame(0, typesPayload)
+                val vf = ZngIO.frame(1, raw.toByteArray)
+                val len = tf.length + vf.length + 1L // + EOS
+                val (mn, mx) = if (desc) (last, first) else (first, last)
+                wins += ((cnt, vb, mn, mx, off, len))
+                off += len; valOff += cnt
+              }
+              val ws = wins.result()
+              // the physical seek index (<id>-seek.zng, lake/seekindex):
+              // readable with plain `super query` like the reference's
+              if (key.isDefined && ws.nonEmpty) {
+                try {
+                  val isStr = df.schema(key.get).dataType ==
+                    org.apache.spark.sql.types.StringType
+                  def kv(s: String): String =
+                    if (s.isEmpty) "null"
+                    else if (isStr) "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+                    else s
+                  var vo = 0L
+                  val zson = ws.map { case (cnt, _, mn, mx, o, len) =>
+                    val line = s"{min:${kv(mn)},max:${kv(mx)},val_off:$vo(uint64),val_cnt:$cnt(uint64),offset:$o(uint64),length:$len(uint64)}"
+                    vo += cnt; line
+                  }.mkString("\n")
+                  val seekTmp = Files.createTempDirectory("seekzng")
+                  try {
+                    ZngIO.write(ZsonReader.fromText(df.sparkSession, zson,
+                      tag = false), seekTmp.toString)
+                    Option(seekTmp.toFile.listFiles()).getOrElse(Array.empty)
+                      .find(f => f.isFile && f.getName.startsWith("part-"))
+                      .foreach { p =>
+                        Files.copy(p.toPath,
+                          poolDir(root, pool).resolve("data").resolve(s"$id-seek.zng"),
+                          java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
+                      }
+                  } finally org.apache.commons.io.FileUtils.deleteQuietly(seekTmp.toFile): Unit
+                } catch { case _: Exception => () }
+              }
+              (ws.map(_._6).sum, ws.map(_._2).sum, ws)
+            } finally sortedOne.unpersist(blocking = false): Unit
           } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile): Unit
         } catch { case _: Exception =>
           (files.map(_.length()).sum, -1L, Seq.empty[(Long, Long, String, String, Long, Long)]) }
       } else (files.map(_.length()).sum, -1L,
         Seq.empty[(Long, Long, String, String, Long, Long)])
-    val metaJson =
-      if (meta.isEmpty) "" else s""","meta":"${meta.replace("\\", "\\\\").replace("\"", "\\\"")}""""
+    val metaJson = if (meta.isEmpty) "" else s""","meta":"${esc(meta)}""""
     // a TAGGED frame keeps per-row shapes through the lake: the tag
     // column is stored in parquet and the shape list rides the journal so
     // scans re-attach it (the reference lake stores per-value types
@@ -421,8 +421,7 @@ object Lake {
       val shp = tagField.filter(_.metadata.contains("shapes"))
         .map(_.metadata.getStringArray("shapes").toSeq).getOrElse(Seq.empty)
       if (shp.isEmpty) ""
-      else shp.map(t => "\"" + t.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
-        .mkString(""","shapes":[""", ",", "]")
+      else shp.map(t => "\"" + esc(t) + "\"").mkString(""","shapes":[""", ",", "]")
     }
     val winsJson =
       if (windows.isEmpty) ""
@@ -432,16 +431,26 @@ object Lake {
     id
   }
 
-  /** Row count of a just-written object from parquet footers (no scan). */
-  private def spark_rowcount(spark: SparkSession, dir: String): Long =
-    spark.read.parquet(dir).count()
+  /** Journal string escaping (backslash and quote) and its inverse. */
+  private def esc(x: String): String = x.replace("\\", "\\\\").replace("\"", "\\\"")
+
+  private def unesc(x: String): String =
+    if (x.indexOf('\\') < 0) x
+    else {
+      val b = new StringBuilder(x.length)
+      var i = 0
+      while (i < x.length) {
+        if (x.charAt(i) == '\\' && i + 1 < x.length) i += 1
+        b += x.charAt(i); i += 1
+      }
+      b.result()
+    }
 
   /** Serialize a commit record for the journal, preserving its stats,
     * key range, meta and shape list (merge/revert copy records across
     * branches — the copies must stay as rich as the originals).
     */
   private def commitJson(c: Commit, branch: String, message: String): String = {
-    def esc(x: String) = x.replace("\\", "\\\\").replace("\"", "\\\"")
     val range = (c.keyMin, c.keyMax) match {
       case (Some(mn), Some(mx)) => s""","keymin":"${esc(mn)}","keymax":"${esc(mx)}""""
       case _ => ""
@@ -492,47 +501,52 @@ object Lake {
     recId
   }
 
+  private val idRe = """"id":"([^"]+)"""".r
+  private val authorRe = """"author":"([^"]*)"""".r
+  private val msgRe = """"message":"([^"]*)"""".r
+  private val tsRe = """"ts":(\d+)""".r
+  private val branchRe = """"branch":"([^"]*)"""".r
+  private val kindRe = """"kind":"([^"]*)"""".r
+  private val targetRe = """"target":"([^"]*)"""".r
+  private val kminRe = """"keymin":"([^"]*)"""".r
+  private val kmaxRe = """"keymax":"([^"]*)"""".r
+  // escaped strings match possessively: a backtracking `(?:[^"\\]|\\.)*`
+  // recurses per character in java.util.regex and overflows the stack on
+  // long values
+  private val metaRe = """"meta":"((?:[^"\\]++|\\.)*+)"""".r
+  private val rowsRe = """"rows":(-?\d+)""".r
+  private val shapesRe = """"shapes":\[((?:"(?:[^"\\]++|\\.)*+",?)*+)\]""".r
+  private val shapeRe = """"((?:[^"\\]++|\\.)*+)"""".r
+  private val bytesRe = """"bytes":(-?\d+)""".r
+  private val vbytesRe = """"vbytes":(-?\d+)""".r
+  private val winsRe = """"wins":"([^"]*)"""".r
+
   def commits(root: String, pool: String): Seq[Commit] = {
     if (!exists(root, pool)) return Seq.empty
-    val idRe = """"id":"([^"]+)"""".r
-    val authorRe = """"author":"([^"]*)"""".r
-    val msgRe = """"message":"([^"]*)"""".r
-    val tsRe = """"ts":(\d+)""".r
-    val branchRe = """"branch":"([^"]*)"""".r
-    val kindRe = """"kind":"([^"]*)"""".r
-    val targetRe = """"target":"([^"]*)"""".r
-    val kminRe = """"keymin":"([^"]*)"""".r
-    val kmaxRe = """"keymax":"([^"]*)"""".r
-    val metaRe = """"meta":"((?:[^"\\]|\\.)*)"""".r
-    val rowsRe = """"rows":(-?\d+)""".r
-    val shapesRe = """"shapes":\[(.*?)\]""".r
-    val bytesRe = """"bytes":(-?\d+)""".r
-    val vbytesRe = """"vbytes":(-?\d+)""".r
+    def str(re: scala.util.matching.Regex, l: String): Option[String] =
+      re.findFirstMatchIn(l).map(_.group(1))
     scala.jdk.CollectionConverters.ListHasAsScala(
       Files.readAllLines(journal(root, pool))).asScala.toSeq
       .filter(_.nonEmpty)
       .map { l =>
         Commit(
-          idRe.findFirstMatchIn(l).map(_.group(1)).getOrElse(""),
-          authorRe.findFirstMatchIn(l).map(_.group(1)).getOrElse(""),
-          msgRe.findFirstMatchIn(l).map(_.group(1)).getOrElse(""),
-          tsRe.findFirstMatchIn(l).map(_.group(1).toLong).getOrElse(0L),
-          branchRe.findFirstMatchIn(l).map(_.group(1)).getOrElse("main"),
-          kindRe.findFirstMatchIn(l).map(_.group(1)).getOrElse("commit"),
-          targetRe.findFirstMatchIn(l).map(_.group(1)).getOrElse(""),
-          kminRe.findFirstMatchIn(l).map(_.group(1)),
-          kmaxRe.findFirstMatchIn(l).map(_.group(1)),
-          metaRe.findFirstMatchIn(l).map(_.group(1)
-            .replace("\\\"", "\"").replace("\\\\", "\\")).getOrElse(""),
-          rowsRe.findFirstMatchIn(l).map(_.group(1).toLong).getOrElse(-1L),
-          bytesRe.findFirstMatchIn(l).map(_.group(1).toLong).getOrElse(-1L),
-          shapesRe.findFirstMatchIn(l).map(_.group(1)).map { arr =>
-            """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(arr).map(_.group(1)
-              .replace("\\\"", "\"").replace("\\\\", "\\")).toSeq
+          str(idRe, l).getOrElse(""),
+          str(authorRe, l).getOrElse(""),
+          str(msgRe, l).getOrElse(""),
+          str(tsRe, l).map(_.toLong).getOrElse(0L),
+          str(branchRe, l).getOrElse("main"),
+          str(kindRe, l).getOrElse("commit"),
+          str(targetRe, l).getOrElse(""),
+          str(kminRe, l),
+          str(kmaxRe, l),
+          str(metaRe, l).map(unesc).getOrElse(""),
+          str(rowsRe, l).map(_.toLong).getOrElse(-1L),
+          str(bytesRe, l).map(_.toLong).getOrElse(-1L),
+          str(shapesRe, l).map { arr =>
+            shapeRe.findAllMatchIn(arr).map(m => unesc(m.group(1))).toSeq
           }.getOrElse(Seq.empty),
-          vbytesRe.findFirstMatchIn(l).map(_.group(1).toLong).getOrElse(-1L),
-          """"wins":"([^"]*)"""".r.findFirstMatchIn(l).map(m => winsDecode(m.group(1)))
-            .getOrElse(Seq.empty))
+          str(vbytesRe, l).map(_.toLong).getOrElse(-1L),
+          str(winsRe, l).map(winsDecode).getOrElse(Seq.empty))
       }
   }
 
@@ -629,9 +643,53 @@ object Lake {
       }
     }
 
+  /** The schema of one data object: the footer of one of its parquet
+    * files (every file of an object shares the load's schema). None for
+    * an object with no data file, which parquet inference skips as well.
+    */
+  private def objectSchema(spark: SparkSession,
+                           dir: java.nio.file.Path): Option[org.apache.spark.sql.types.StructType] =
+    Option(dir.toFile.listFiles()).getOrElse(Array.empty)
+      .find(f => f.isFile && f.getName.endsWith(".parquet"))
+      .map(f => org.apache.spark.sql.graftshim.SchemaBridge.footerSchema(
+        spark.sparkContext.hadoopConfiguration, f.toString))
+
+  /** Read data objects `ids` as one frame, planned on the driver: one
+    * footer per object, merged with the merge parquet `mergeSchema`
+    * inference runs, in the order it runs it (file paths sorted, so by
+    * object id), so the frame has the schema inference would give without
+    * the Spark job that reads every file's footer. A tagged frame's shape
+    * list, stored in the journal, re-attaches to its tag column.
+    */
+  private def readObjects(spark: SparkSession, root: String, pool: String,
+                          ids: Seq[String], byId: Map[String, Commit]): DataFrame = {
+    val data = poolDir(root, pool).resolve("data")
+    val caseSensitive = spark.conf.get("spark.sql.caseSensitive").toBoolean
+    val schema = ids.sortBy(_ + "/").flatMap(id => objectSchema(spark, data.resolve(id)))
+      .reduceOption(org.apache.spark.sql.graftshim.SchemaBridge.merge(_, _, caseSensitive))
+      .getOrElse(throw new IllegalStateException(
+        s"pool $pool: no data files under objects ${ids.mkString(", ")}"))
+    val df0 = spark.read.schema(schema).parquet(ids.map(id => data.resolve(id).toString): _*)
+    val tagName = graft.operators.Het.typeTag
+    val allShapes = ids.flatMap(byId.get).flatMap(_.shapes).distinct
+    if (!df0.columns.contains(tagName) || allShapes.isEmpty) df0
+    else {
+      import org.apache.spark.sql.functions.col
+      val md = new org.apache.spark.sql.types.MetadataBuilder()
+        .putStringArray("shapes", allShapes.toArray).build()
+      df0.select(df0.schema.fields.toIndexedSeq.map { f =>
+        if (f.name == tagName) col(s"`${f.name}`").as(f.name, md)
+        else col(s"`${f.name}`")
+      }: _*)
+    }
+  }
+
   /** `from <pool>[@commit|@branch]` — merge-on-read scan of the live
     * commits: a branch sees ancestors up to its fork plus its own
-    * commits, minus anything a delete record on the branch removed.
+    * commits, minus anything a delete record on the branch removed. The
+    * scan is planned on the driver from the journal and the objects'
+    * footers (see [[readObjects]]): no Spark job runs until the frame is
+    * executed.
     */
   def scan(spark: SparkSession, root: String, pool: String,
            asOf: Option[String] = None,
@@ -679,26 +737,10 @@ object Lake {
         if (kept.nonEmpty) kept else live.take(1) // keep a scannable frame for schema
       case _ => live
     }
-    val dirs = pruned.map(id => poolDir(root, pool).resolve("data").resolve(id).toString)
-    val df0 = spark.read.option("mergeSchema", "true").parquet(dirs: _*)
-    // re-attach per-row shape metadata stored at load time (tagged
-    // frames keep their shape tag column through parquet)
-    val tagName = graft.operators.Het.typeTag
-    val allShapes = pruned.flatMap(id => byId.get(id)).flatMap(_.shapes).distinct
-    val df1 =
-      if (!df0.columns.contains(tagName)) df0
-      else {
-        import org.apache.spark.sql.functions.col
-        if (allShapes.isEmpty) df0
-        else {
-          val md = new org.apache.spark.sql.types.MetadataBuilder()
-            .putStringArray("shapes", allShapes.toArray).build()
-          df0.select(df0.schema.fields.toIndexedSeq.map { f =>
-            if (f.name == tagName) col(s"`${f.name}`").as(f.name, md)
-            else col(s"`${f.name}`")
-          }: _*)
-        }
-      }
+    val df1 = readObjects(spark, root, pool, pruned, byId)
+    val allShapes = df1.schema.fields.find(_.name == graft.operators.Het.typeTag)
+      .filter(_.metadata.contains("shapes"))
+      .map(_.metadata.getStringArray("shapes").toSeq).getOrElse(Seq.empty)
     // a KEYED pool scans in key order (the reference's pools are sorted
     // sequences; `db query "*"` output order is pinned by ztests)
     val df = key match {
@@ -848,19 +890,7 @@ object Lake {
   def vectorAdd(spark: SparkSession, root: String, pool: String, id: String): Unit = {
     val c = commits(root, pool).find(_.id == id).getOrElse(
       throw new IllegalArgumentException(s"$id: commit object not found"))
-    val dataDir = poolDir(root, pool).resolve("data").resolve(id)
-    val df0 = spark.read.parquet(dataDir.toString)
-    val tagName = graft.operators.Het.typeTag
-    val df =
-      if (c.shapes.nonEmpty && df0.columns.contains(tagName)) {
-        val md = new org.apache.spark.sql.types.MetadataBuilder()
-          .putStringArray("shapes", c.shapes.toArray).build()
-        import org.apache.spark.sql.functions.col
-        df0.select(df0.schema.fields.toIndexedSeq.map { f =>
-          if (f.name == tagName) col(s"`${f.name}`").as(f.name, md)
-          else col(s"`${f.name}`")
-        }: _*)
-      } else df0
+    val df = readObjects(spark, root, pool, Seq(id), Map(id -> c))
     val tmp = Files.createTempDirectory("vecvng")
     try {
       VngIO.write(df.coalesce(1), tmp.toString)
@@ -897,21 +927,7 @@ object Lake {
                  vectors: Boolean = false): String = {
     val byId = commits(root, pool).filter(_.kind == "commit")
       .map(c => c.id -> c).toMap
-    val dirs = ids.map(id => poolDir(root, pool).resolve("data").resolve(id).toString)
-    val df0 = spark.read.option("mergeSchema", "true").parquet(dirs: _*)
-    val tagName = graft.operators.Het.typeTag
-    val allShapes = ids.flatMap(byId.get).flatMap(_.shapes).distinct
-    val df =
-      if (!df0.columns.contains(tagName) || allShapes.isEmpty) df0
-      else {
-        import org.apache.spark.sql.functions.col
-        val md = new org.apache.spark.sql.types.MetadataBuilder()
-          .putStringArray("shapes", allShapes.toArray).build()
-        df0.select(df0.schema.fields.toIndexedSeq.map { f =>
-          if (f.name == tagName) col(s"`${f.name}`").as(f.name, md)
-          else col(s"`${f.name}`")
-        }: _*)
-      }
+    val df = readObjects(spark, root, pool, ids, byId)
     val id = load(df, root, pool, "compact", s"compact ${ids.length} objects",
       branch, bodyTiebreak = true)
     ids.foreach(cid => delete(root, pool, cid, branch))
