@@ -95,26 +95,6 @@ object ZvOps extends Serializable {
     */
   private def parse(text: String): Option[ZValue] = ZsonParser.memoParse(text)
 
-  /** Field access into a boxed value: a.b where a is a variant. Missing
-    * field / non-record → error("missing") (reference expr/eval.go
-    * DotExpr).
-    */
-  private val getU = udf((text: String, field: String) => {
-    if (text == null) errMissing
-    else parse(text).flatMap(v => ZValue.unwrap(v) match {
-      case ZValue.VRec(fs) => fs.find(_._1 == field) match {
-        case Some((_, fv)) => zvOf(fv)
-        case None => errMissing
-      }
-      case ZValue.VMap(es) =>
-        es.find(e => ZValue.unwrap(e._1) == ZValue.VStr(field)) match {
-          case Some((_, mv)) => zvOf(mv)
-          case None => errMissing
-        }
-      case _ => errMissing
-    }).orElse(errMissing)
-  })
-
   /** int64 variant literal from a native integer column (codegen path). */
   private def intVariant(c: Column): Column = Het.mkVariant(
     lit(0), c.cast(DoubleType), lit(null).cast(StringType),
@@ -126,29 +106,6 @@ object ZvOps extends Serializable {
     */
   def get(v: Column, field: String): Column =
     Bridge.column(VariantGet(Bridge.expression(v), Bridge.expression(lit(field))))
-
-  /** Element access into a boxed array/set/map value: arrays and sets by
-    * position (negative from the end), maps by key equality.
-    */
-  private val indexU = udf((text: String, idx: Int) => {
-    if (text == null) errMissing
-    else parse(text).flatMap(v => ZValue.unwrap(v) match {
-      case ZValue.VArr(items, _) =>
-        val i = if (idx < 0) items.length + idx else idx
-        if (i >= 0 && i < items.length) zvOf(items(i)) else errMissing
-      case ZValue.VMap(es) =>
-        es.find(e => ZValue.unwrap(e._1) match {
-          case ZValue.VInt(n, _) => n == idx
-          case ZValue.VUint64(n) => n == BigDecimal(idx)
-          case ZValue.VFloat(d, _) => d == idx
-          case _ => false
-        }) match {
-          case Some((_, mv)) => zvOf(mv)
-          case None => errMissing
-        }
-      case _ => errMissing
-    }).orElse(errMissing)
-  })
 
   /** Positional access: NATIVE via the elements cache `a` — one
     * VariantAccess pick per row (negative-from-end inside), codegen; text

@@ -676,25 +676,14 @@ final class Parser(tokens: Vector[Token], source: String,
     peekAt(k).text == ":="
   }
 
-  /** Assignment target: dotted path, or `this[<name>]` where the name is
-    * a string literal or const ref (path-index ztests) — the resulting
-    * field name is LITERAL (a dot inside it is part of the name).
-    */
-  private def parseAssignTarget(): String =
-    parseAssignTargetE() match {
-      case Left(n) => n
-      case Right(_) => fail("output field must be static") // summarize lhs
-    }
-
-  /** Left(name) for static targets; Right(expr) when `this[<expr>]` names
-    * the field at RUNTIME (lval.go ExprLvalElem) — put/cut/rename accept
-    * the dynamic form, summarize requires static (summarize-lhs-error).
-    */
   /** An assignment TARGET (lval.go Lval): a chain of static dotted
     * segments and dynamic `[<expr>]` elements — `this[a][b]`, `a[b]`,
-    * `this[a]["lit"]`. All-static chains collapse to a dotted name;
-    * single-dynamic stays a bare expr; multi-element chains encode as
-    * `__lval(e1, e2, …)` for the compiler's path rewrite.
+    * `this[a]["lit"]`. All-static chains collapse to a dotted name
+    * (Left); single-dynamic stays a bare expr (Right, the field named at
+    * RUNTIME, lval.go ExprLvalElem); multi-element chains encode as
+    * `__lval(e1, e2, …)` for the compiler's path rewrite. put/cut/rename
+    * accept the dynamic form, summarize requires static
+    * (summarize-lhs-error).
     */
   private def parseAssignTargetE(): Either[String, Expr] = {
     val elems = Vector.newBuilder[Expr]
@@ -1002,12 +991,6 @@ final class Parser(tokens: Vector[Token], source: String,
     })
   }
 
-  private def parseAssignList(): Seq[(String, Expr)] =
-    parseAssignListE().map {
-      case (Left(n), e) => (n, e)
-      case (Right(_), _) => fail("output field must be static")
-    }
-
   private def parseAssignListE(): Seq[(Either[String, Expr], Expr)] = {
     val out = Vector.newBuilder[(Either[String, Expr], Expr)]
     do {
@@ -1055,15 +1038,6 @@ final class Parser(tokens: Vector[Token], source: String,
       (t.fold(Expr.StringLit(_): Expr, identity),
        f.fold(Expr.StringLit(_): Expr, identity))
     })
-  }
-
-  private def parseRenameList(): Seq[(String, String)] = {
-    val out = Vector.newBuilder[(String, String)]
-    do {
-      val to = parseDottedName(); expect(":="); val from = parseDottedName()
-      out += ((to, from))
-    } while (eat(","))
-    out.result()
   }
 
   private def parseDottedName(): String = {

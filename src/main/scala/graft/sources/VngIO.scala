@@ -526,9 +526,6 @@ object VngIO {
     case other => throw new IllegalArgumentException(s"vng: unknown compression format $other")
   }
 
-  private def segBytes(data: Array[Byte], s: Seg): Array[Byte] =
-    segBytesAt(data, 0, s)
-
   /** Segment slice at a base offset — lets the full-decode path fetch
     * straight from the file buffer instead of first duplicating the whole
     * data section (one near-file-size array per task, pure GC pressure on

@@ -132,9 +132,6 @@ object ZFormat {
     override def initialValue() = scala.collection.mutable.HashMap.empty
   }
 
-  /** The type of a reconstructed value WITH the row's decorators intact. */
-  def valueType(v: ZValue): ZType = ZValue.typeOf(v)
-
   // ---- number / time formatting --------------------------------------------
 
   /** Shortest decimal digits + decimal exponent that round-trip d at the

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, SpecializedGetters, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 
@@ -10,89 +10,45 @@ import org.apache.spark.sql.types._
   * total-order tiebreak (zbuf/merger.go): the lake comparator appends
   * the record's raw body bytes after the pool key so ties (including
   * rows with a wholly missing key) have a pinned order. This computes
-  * the same bytes from a het-TAGGED frame by compiling each shape to
-  * the fast typed field encoders the zng writer uses, so the sort key
-  * equals what the reference would have stored on disk.
+  * the same bytes from a het-TAGGED frame through the zng writer's own
+  * routes — the typed shape encoders when every shape compiles, else the
+  * value-model row conversion — so the sort key equals what the writer
+  * stores on disk.
   */
 object ZngBody {
 
-  private type FieldEnc = (ZngIO.ByteBuf, SpecializedGetters, Int) => Unit
-
-  /** Compile per-shape body encoders against the frame schema. None when
-    * any shape fails to compile to the typed fast form (callers then skip
-    * the tiebreak rather than sort on a lie).
-    */
-  private[graft] def bodyEncoders(shapes: Seq[String], sch: StructType)
-      : Option[Map[String, Array[(Int, FieldEnc)]]] = {
-    if (shapes.isEmpty) return None
-    val built = shapes.map { tag =>
-      try {
-        val zt0 = ZsonParser.parseType(ZType.stripNullWrap(tag))
-        ZType.strip(zt0) match {
-          case ZType.Rec(fs) =>
-            val colEncs = fs.map { case (n, ft) =>
-              val ci = sch.fieldNames.indexOf(n)
-              if (ci < 0) None
-              else ZngIO.shapeFieldEncoder(ft, sch.fields(ci).dataType).map(ci -> _)
-            }
-            if (colEncs.exists(_.isEmpty)) None
-            else Some(tag -> colEncs.map(_.get).toArray)
-          case _ => None
-        }
-      } catch { case _: Exception => None }
-    }
-    if (built.exists(_.isEmpty)) None else Some(built.map(_.get).toMap)
-  }
-
   /** The tiebreak column for a het-tagged frame, or None when the frame
-    * isn't tagged / a shape doesn't compile. Validated on the driver so a
+    * isn't tagged / carries no shapes. Validated on the driver so a
     * non-applicable frame skips the sort instead of ordering on nulls.
     */
   def tiebreak(df: DataFrame): Option[Column] = {
-    val het = graft.operators.Het
     val sch = df.schema
-    val tagIdx = sch.fieldNames.indexOf(het.typeTag)
+    val tagIdx = sch.fieldNames.indexOf(graft.operators.Het.typeTag)
     if (tagIdx < 0) return None
-    val f = sch.fields(tagIdx)
-    val shapes =
-      if (f.metadata.contains("shapes")) f.metadata.getStringArray("shapes").toSeq
-      else Seq.empty
+    val shapes = ZngIO.tagShapes(sch)
     if (shapes.isEmpty) return None
     import org.apache.spark.sql.functions.{struct, col, udf}
     val packed = struct(sch.fieldNames.toIndexedSeq.map(n => col(s"`$n`")): _*)
-    bodyEncoders(shapes, sch) match {
+    ZngIO.shapeEncoders(shapes, sch) match {
       case Some(_) =>
         Some(graft.functions.Bridge.column(
           ZngBodyBytes(graft.functions.Bridge.expression(packed), shapes, sch)))
       case None =>
         // shapes with containers/unions/named exotica don't compile to
-        // the typed fast encoders — take the zng slow writer's per-value
+        // the typed fast encoders — take the zng writer's value-model
         // route (Row → ZValue → retype against the shape → body bytes).
-        // Same UDF-class path the slow tagged writer itself uses; only
-        // reachable on frames that can't codegen anyway.
-        val slow = new ZngBody.SlowBody(sch, tagIdx)
-        val fn = udf((r: org.apache.spark.sql.Row) => slow.bytes(r))
+        // Only reachable on frames that can't codegen anyway.
+        val toValue = new ZngIO.RowValue(sch)
+        val fn = udf { (r: org.apache.spark.sql.Row) =>
+          if (r.isNullAt(tagIdx)) null
+          else {
+            val v = toValue(r)
+            val out = new java.io.ByteArrayOutputStream()
+            ZngIO.encodeZBody(out, v, ZngIO.toZT(ZValue.typeOf(v)))
+            out.toByteArray
+          }
+        }
         Some(fn(packed))
-    }
-  }
-
-  /** Serializable holder for the slow per-row body encoder; the Row→ZValue
-    * converter rebuilds lazily per executor.
-    */
-  private[sources] final class SlowBody(sch: StructType, tagIdx: Int)
-      extends Serializable {
-    // rowValueFn is shape-aware over the FULL row (tag included): it
-    // reconstructs each row's typed value exactly as the zson/zng output
-    // writers do, variant carriers included
-    @transient private lazy val fn = ZFormat.rowValueFn(sch)
-
-    def bytes(row: org.apache.spark.sql.Row): Array[Byte] = {
-      if (row.isNullAt(tagIdx)) return null
-      val v = fn(row)
-      val t = ZngIO.toZT(ZValue.typeOf(v))
-      val out = new java.io.ByteArrayOutputStream()
-      ZngIO.encodeZBody(out, v, t)
-      out.toByteArray
     }
   }
 }
@@ -113,7 +69,7 @@ case class ZngBodyBytes(child: Expression, shapes: Seq[String],
   @transient private lazy val tagIdx =
     schema.fieldNames.indexOf(graft.operators.Het.typeTag)
   @transient private lazy val encMap =
-    ZngBody.bodyEncoders(shapes, schema).getOrElse(Map.empty)
+    ZngIO.shapeEncoders(shapes, schema).getOrElse(Map.empty)
   @transient private lazy val scratch = new ZngIO.ByteBuf(1 << 10)
 
   override def nullSafeEval(input: Any): Any = {
@@ -121,7 +77,7 @@ case class ZngBodyBytes(child: Expression, shapes: Seq[String],
     if (tagIdx < 0 || r.isNullAt(tagIdx)) return null
     val tag = r.getUTF8String(tagIdx).toString
     encMap.get(tag) match {
-      case Some(encs) =>
+      case Some((_, encs)) =>
         val buf = scratch
         buf.reset()
         var k = 0

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import java.io.ByteArrayOutputStream
+import java.io.{ByteArrayOutputStream, OutputStream}
 
 /** ZNG binary format (reference: docs/formats/zng.md, zio/zngio/).
   *
@@ -19,17 +19,19 @@ import java.io.ByteArrayOutputStream
   * format 0) and skips control frames.
   *
   * Spark integration: the writer emits one independent ZNG stream per
-  * partition (streams concatenate legally per spec §2.4); the reader lists
-  * files via Spark's binaryFile source and decodes each stream DISTRIBUTED
-  * straight to typed values (decodeZValue), so mixed-type streams fuse
-  * into the same tagged/variant frame as any heterogeneous input — with
-  * full union/enum/error/named-type fidelity at file scale.
+  * partition (streams concatenate legally per spec §2.4) through one
+  * frame writer (FrameWriter); the reader discovers each file's shapes
+  * (scanMeta) and decodes the streams DISTRIBUTED through the DSv2 scan,
+  * so mixed-type streams fuse into the same tagged/variant frame as any
+  * heterogeneous input — with full union/enum/error/named-type fidelity
+  * at file scale. Every reader takes its frames from one frame reader
+  * (readFrameRaw / inflateFrame / parseTypedefs).
   */
 object ZngIO {
 
   // ---- low-level encoding ----------------------------------------------------
 
-  private[graft] def uvarint(out: ByteArrayOutputStream, v0: Long): Unit = {
+  private[graft] def uvarint(out: OutputStream, v0: Long): Unit = {
     var v = v0
     while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
     out.write(v.toInt)
@@ -59,132 +61,32 @@ object ZngIO {
   private val ID_STRING = 25; private val ID_NULL = 29
   private val ID_IP = 26; private val ID_NET = 27
 
-  private def primId(dt: DataType): Option[Int] = dt match {
-    case ByteType => Some(ID_INT8)
-    case ShortType => Some(ID_INT16)
-    case IntegerType => Some(ID_INT32)
-    case LongType => Some(ID_INT64)
-    case FloatType => Some(ID_FLOAT32)
-    case DoubleType => Some(ID_FLOAT64)
-    case BooleanType => Some(ID_BOOL)
-    case BinaryType => Some(ID_BYTES)
-    case StringType => Some(ID_STRING)
-    case TimestampType | TimestampNTZType | DateType => Some(ID_TIME)
-    case _: DayTimeIntervalType => Some(ID_DURATION)
-    case NullType => Some(ID_NULL)
+  /** The wire type of a Spark column type: primitives by id (zng.md §3),
+    * containers by structure. Nullability and field metadata never reach
+    * the wire, so types that differ only there share one typedef.
+    */
+  private[sources] def ztOf(dt: DataType): ZT = dt match {
+    case ByteType => ZPrim(ID_INT8)
+    case ShortType => ZPrim(ID_INT16)
+    case IntegerType => ZPrim(ID_INT32)
+    case LongType => ZPrim(ID_INT64)
+    case FloatType => ZPrim(ID_FLOAT32)
+    case DoubleType => ZPrim(ID_FLOAT64)
+    case BooleanType => ZPrim(ID_BOOL)
+    case BinaryType => ZPrim(ID_BYTES)
+    case StringType => ZPrim(ID_STRING)
+    case TimestampType | TimestampNTZType | DateType => ZPrim(ID_TIME)
+    case _: DayTimeIntervalType => ZPrim(ID_DURATION)
+    case NullType => ZPrim(ID_NULL)
     // Decimal(20,0) is the engine's FULL-RANGE uint64 carrier (value.go
     // carries uint64 natively; 2^64−1 doesn't fit a long — SURVEY §1.4);
     // other decimals have no zed type and ride as float64
-    case dt: DecimalType if dt.precision == 20 && dt.scale == 0 => Some(3)
-    case _: DecimalType => Some(ID_FLOAT64)
-    case _ => None
-  }
-
-  /** Assign stream type IDs (from 30) for the complex types of a schema,
-    * emitting typedefs in dependency order (zng.md §2.1).
-    */
-  private[sources] final class TypeTable {
-    val defs = new ByteArrayOutputStream()
-    private var next = 30
-    private val ids = scala.collection.mutable.Map.empty[DataType, Int]
-
-    def idOf(dt: DataType): Int = primId(dt).getOrElse(ids.getOrElseUpdate(dt, define(dt)))
-
-    private def counted(s: String): Unit = {
-      val b = s.getBytes("UTF-8")
-      uvarint(defs, b.length.toLong); defs.write(b, 0, b.length)
-    }
-
-    private def define(dt: DataType): Int = dt match {
-      case st: StructType =>
-        val fieldIds = st.fields.map(f => idOf(f.dataType)) // define children first
-        defs.write(0x00)
-        uvarint(defs, st.fields.length.toLong)
-        st.fields.zip(fieldIds).foreach { case (f, id) =>
-          counted(f.name); uvarint(defs, id.toLong)
-        }
-        val id = next; next += 1; id
-      case ArrayType(et, _) =>
-        val inner = idOf(et)
-        defs.write(0x01); uvarint(defs, inner.toLong)
-        val id = next; next += 1; id
-      case MapType(kt, vt, _) =>
-        val k = idOf(kt); val v = idOf(vt)
-        defs.write(0x03); uvarint(defs, k.toLong); uvarint(defs, v.toLong)
-        val id = next; next += 1; id
-      case other =>
-        throw new IllegalArgumentException(s"zng: unsupported type $other")
-    }
-  }
-
-  // tag = 0 for null, length+1 otherwise (§2.2.1)
-  private def tagged(out: ByteArrayOutputStream, body: Array[Byte]): Unit = {
-    uvarint(out, body.length + 1L); out.write(body, 0, body.length)
-  }
-  private def nullTag(out: ByteArrayOutputStream): Unit = out.write(0)
-
-  private[sources] def encodeValue(out: ByteArrayOutputStream, v: Any, dt: DataType): Unit = {
-    if (v == null) { nullTag(out); return }
-    dt match {
-      case ByteType => tagged(out, signedBytes(v.asInstanceOf[Byte].toLong))
-      case ShortType => tagged(out, signedBytes(v.asInstanceOf[Short].toLong))
-      case IntegerType => tagged(out, signedBytes(v.asInstanceOf[Int].toLong))
-      case LongType => tagged(out, signedBytes(v.asInstanceOf[Long]))
-      case FloatType =>
-        tagged(out, leBytes(java.lang.Float.floatToIntBits(v.asInstanceOf[Float]).toLong & 0xffffffffL, 4))
-      case DoubleType =>
-        tagged(out, leBytes(java.lang.Double.doubleToLongBits(v.asInstanceOf[Double]), 8))
-      case BooleanType => tagged(out, Array[Byte](if (v.asInstanceOf[Boolean]) 1 else 0))
-      case StringType => tagged(out, v.toString.getBytes("UTF-8"))
-      case BinaryType => tagged(out, v.asInstanceOf[Array[Byte]])
-      case dt: DecimalType if dt.precision == 20 && dt.scale == 0 =>
-        // uint64 carrier: unsigned little-endian minimal bytes
-        var x = BigInt(v.asInstanceOf[java.math.BigDecimal].toBigInteger)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[Byte]
-        while (x != 0) { buf += (x & 0xff).toByte; x >>= 8 }
-        tagged(out, buf.toArray)
-      case _: DecimalType =>
-        tagged(out, leBytes(java.lang.Double.doubleToLongBits(
-          v.asInstanceOf[java.math.BigDecimal].doubleValue()), 8))
-      case TimestampType =>
-        val ns = v.asInstanceOf[java.sql.Timestamp].toInstant
-        tagged(out, signedBytes(ns.getEpochSecond * 1000000000L + ns.getNano))
-      case TimestampNTZType =>
-        val ldt = v.asInstanceOf[java.time.LocalDateTime]
-        val inst = ldt.toInstant(java.time.ZoneOffset.UTC)
-        tagged(out, signedBytes(inst.getEpochSecond * 1000000000L + inst.getNano))
-      case DateType =>
-        val d = v.asInstanceOf[java.sql.Date]
-        tagged(out, signedBytes(d.toLocalDate.toEpochDay * 86400L * 1000000000L))
-      case _: DayTimeIntervalType =>
-        val dur = v.asInstanceOf[java.time.Duration]
-        tagged(out, signedBytes(Math.addExact(
-          Math.multiplyExact(dur.getSeconds, 1000000000L), dur.getNano.toLong)))
-      case st: StructType =>
-        val inner = new ByteArrayOutputStream()
-        val r = v.asInstanceOf[Row]
-        st.fields.zipWithIndex.foreach { case (f, i) =>
-          encodeValue(inner, if (r.isNullAt(i)) null else r.get(i), f.dataType)
-        }
-        tagged(out, inner.toByteArray)
-      case ArrayType(et, _) =>
-        val inner = new ByteArrayOutputStream()
-        v.asInstanceOf[scala.collection.Seq[Any]].foreach(e => encodeValue(inner, e, et))
-        tagged(out, inner.toByteArray)
-      case MapType(kt, vt, _) =>
-        // normalized: entries sorted by encoded key bytes (§2.2.3)
-        val entries = v.asInstanceOf[scala.collection.Map[Any, Any]].toSeq.map { case (k, mv) =>
-          val kb = new ByteArrayOutputStream(); encodeValue(kb, k, kt)
-          val vb = new ByteArrayOutputStream(); encodeValue(vb, mv, vt)
-          (kb.toByteArray, vb.toByteArray)
-        }.sortWith((a, b) => java.util.Arrays.compare(a._1, b._1) < 0)
-        val inner = new ByteArrayOutputStream()
-        entries.foreach { case (kb, vb) =>
-          inner.write(kb, 0, kb.length); inner.write(vb, 0, vb.length)
-        }
-        tagged(out, inner.toByteArray)
-      case other => throw new IllegalArgumentException(s"zng: unsupported type $other")
-    }
+    case dt: DecimalType if dt.precision == 20 && dt.scale == 0 => ZPrim(3)
+    case _: DecimalType => ZPrim(ID_FLOAT64)
+    case st: StructType => ZRecord(st.fields.toSeq.map(f => f.name -> ztOf(f.dataType)))
+    case ArrayType(et, _) => ZArray(ztOf(et))
+    case MapType(kt, vt, _) => ZMap(ztOf(kt), ztOf(vt))
+    case other => throw new IllegalArgumentException(s"zng: unsupported type $other")
   }
 
   private def sizeOfUvarint(v: Long): Int = {
@@ -193,11 +95,6 @@ object ZngIO {
     n
   }
 
-  /** One block with the reference writer's framing (zngio/writer.go
-    * writeBlock): LZ4-compress, keep the compressed form only when it is
-    * smaller than the raw payload (pierrec CompressBlock into a buffer of
-    * the payload's size), else raw.
-    */
   /** Diagnostic CLI knobs (-zng.compress=false / -zng.readmax): frames
     * write raw / reads cap the frame length. Set by the test harness in
     * local mode; cluster data paths keep the defaults.
@@ -223,6 +120,11 @@ object ZngIO {
     }
   }
 
+  /** One block with the reference writer's framing (zngio/writer.go
+    * writeBlock): LZ4-compress, keep the compressed form only when it is
+    * smaller than the raw payload (pierrec CompressBlock into a buffer of
+    * the payload's size), else raw.
+    */
   private[sources] def frame(t: Int, payload: Array[Byte]): Array[Byte] = {
     val out = new ByteArrayOutputStream()
     val len = payload.length
@@ -248,40 +150,29 @@ object ZngIO {
     out.toByteArray
   }
 
-  /** Stream-encode rows of one schema as a ZNG stream: types frame first
-    * (fully determined by the schema), then bounded values frames as rows
-    * arrive — at most one ~1 MiB frame is buffered, never the partition.
-    */
-  def encodeStreamTo(out: java.io.OutputStream, rows: Iterator[Row], schema: StructType): Unit = {
-    val table = new TypeTable
-    val topId = table.idOf(schema)
-    val tf = frame(0, table.defs.toByteArray) // types frame
-    out.write(tf, 0, tf.length)
-    val values = new ByteArrayOutputStream()
-    def flush(): Unit = {
-      val vf = frame(1, values.toByteArray)
-      out.write(vf, 0, vf.length); values.reset()
-    }
-    rows.foreach { r =>
-      uvarint(values, topId.toLong)
-      val body = new ByteArrayOutputStream()
-      schema.fields.zipWithIndex.foreach { case (f, i) =>
-        encodeValue(body, if (r.isNullAt(i)) null else r.get(i), f.dataType)
-      }
-      val b = body.toByteArray
-      uvarint(values, b.length + 1L)
-      values.write(b, 0, b.length)
-      if (values.size() >= 512 * 1024) flush() // reference FrameThresh (zngio DefaultFrameThresh)
-    }
-    if (values.size() > 0) flush()
-    out.write(0xff) // end of stream
-  }
+  /** The reference writer's FrameThresh (zngio DefaultFrameThresh). */
+  private val FrameThresh = 512 * 1024
 
-  /** Encode a complete single-stream ZNG byte sequence for rows of one schema. */
-  def encodeStream(rows: Iterator[Row], schema: StructType): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    encodeStreamTo(out, rows, schema)
-    out.toByteArray
+  /** The one ZNG stream writer's framing: values accumulate in one frame
+    * buffer, typedefs the table assigns since the last flush go out as a
+    * types frame right before the next values frame, a frame is cut once
+    * its values (or the pending typedefs) reach FrameThresh, and `finish`
+    * ends the stream with EOS. Callers append `type-id + tagged body` to
+    * `values` and call `endValue()` after each value.
+    */
+  private[sources] final class FrameWriter(out: OutputStream) {
+    val table = new ZtTable
+    val values = new ByteBuf(1 << 20)
+
+    def endValue(): Unit =
+      if (values.size >= FrameThresh || table.defs.size() >= FrameThresh) flush()
+
+    def flush(): Unit = {
+      if (table.defs.size() > 0) { out.write(frame(0, table.defs.toByteArray)); table.defs.reset() }
+      if (values.size > 0) { out.write(frame(1, values.toByteArray)); values.reset() }
+    }
+
+    def finish(): Unit = { flush(); out.write(0xff) }
   }
 
   /** Distributed write: one ZNG stream file per partition, through the
@@ -292,6 +183,7 @@ object ZngIO {
     * Tungsten memory to the wire.
     */
   def write(df: DataFrame, path: String): Unit = {
+    HadoopFs.prepareDir(df.sparkSession, path)
     // TAGGED frames write per-row TYPED values: each row re-types against
     // its shape so zed types (ip/time/named, per-row shapes) hit the wire
     // — and the engine's tag column itself never leaks into the file
@@ -311,11 +203,10 @@ object ZngIO {
     if (dataNames == Seq("this") ||
         df.schema.fields.exists(f => !f.metadata.contains("graft.scopeVar") &&
           ZsonIO.isVariantType(f.dataType))) {
-      writeRuntimeSlow(df, path)
+      writeValues(df, path)
       return
     }
     val schema = df.schema
-    HadoopFs.prepareDir(df.sparkSession, path)
     val confMap = HadoopFs.confMap(df.sparkSession)
     df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
       val out = HadoopFs.create(confMap, path, f"part-$pid%05d.zng")
@@ -324,13 +215,15 @@ object ZngIO {
     }.count(): Unit
   }
 
+  private[graft] type FieldEnc = (ByteBuf, SpecializedGetters, Int) => Unit
+
   /** Typed-shape field encoder over INTERNAL rows: the zed type from the
     * shape drives the wire form (ips as address bytes, ns-long carriers
     * as time, named types via the type table), the Spark type drives the
     * access. None = this (shape, carrier) pair needs the slow row path.
     */
   private[graft] def shapeFieldEncoder(zt: ZType, dt: DataType)
-      : Option[(ByteBuf, SpecializedGetters, Int) => Unit] = ZType.strip(zt) match {
+      : Option[FieldEnc] = ZType.strip(zt) match {
     case ZType.Prim("ip") if dt == StringType => Some { (out, g, i) =>
       val s = g.getUTF8String(i).toString
       try {
@@ -473,125 +366,122 @@ object ZngIO {
     case _ => false
   }
 
-  private def writeTagged(df: DataFrame, path: String): Unit = {
-    val het = graft.operators.Het
-    val schema = df.schema
-    val dataF = StructType(schema.fields.filter(f =>
-      f.name != het.typeTag && !f.metadata.contains("graft.scopeVar")))
-    val tagIdx = schema.fieldIndex(het.typeTag)
-    val shapes: Seq[String] = {
-      val f = schema.fields(tagIdx)
-      if (f.metadata.contains("shapes")) f.metadata.getStringArray("shapes").toSeq
-      else Seq.empty
-    }
-    // FAST path: every shape compiles to a typed internal-row encoder —
-    // one pass over internal rows, zero external-Row materialization.
-    // Encoder lambdas hold scratch ByteBufs, so the map is rebuilt inside
-    // each partition; the driver only validates that every shape compiles.
-    def buildEncoders(sch: StructType)
-        : Option[Map[String, (ZT, Array[(Int, (ByteBuf, SpecializedGetters, Int) => Unit)])]] =
-      if (shapes.isEmpty) None
-      else {
-        val built = shapes.map { tag =>
-          try {
-            val zt0 = ZsonParser.parseType(ZType.stripNullWrap(tag))
-            ZType.strip(zt0) match {
-              case ZType.Rec(fs) =>
-                val colEncs = fs.map { case (n, ft) =>
-                  val ci = sch.fieldNames.indexOf(n)
-                  if (ci < 0) None
-                  else shapeFieldEncoder(ft, sch.fields(ci).dataType).map(ci -> _)
-                }
-                if (colEncs.exists(_.isEmpty)) None
-                else Some(tag -> (toZT(zt0), colEncs.map(_.get).toArray))
-              case _ => None
-            }
-          } catch { case _: Exception => None }
-        }
-        if (built.exists(_.isEmpty)) None else Some(built.map(_.get).toMap)
-      }
-    HadoopFs.prepareDir(df.sparkSession, path)
-    val confMap = HadoopFs.confMap(df.sparkSession)
-    buildEncoders(schema) match {
-      case Some(_) =>
-        df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-          val encMap = buildEncoders(schema).get
-          val out = HadoopFs.create(confMap, path, f"part-$pid%05d.zng")
-          val table = new ZtTable
-          // tag dispatch stays in the byte domain: the String-keyed form
-          // re-decoded and re-hashed the tag text per ROW (toString + two
-          // map lookups). UTF8String keys hash the bytes, the id is folded
-          // into the entry, and a last-tag inline cache turns the
-          // homogeneous-stream case into one byte-equals per row.
-          // (idOf assignment iterates encMap exactly as before, so type
-          // ids and the defs-frame bytes are unchanged.)
-          type Encs = Array[(Int, (ByteBuf, SpecializedGetters, Int) => Unit)]
-          val encByTag = new java.util.HashMap[org.apache.spark.unsafe.types.UTF8String, (Long, Encs)]()
-          encMap.foreach { case (tag, (t, encs)) =>
-            encByTag.put(org.apache.spark.unsafe.types.UTF8String.fromString(tag),
-              (table.idOf(t).toLong, encs))
-          }
-          var lastTag: org.apache.spark.unsafe.types.UTF8String = null
-          var lastE: (Long, Encs) = null
-          val body = new ByteArrayOutputStream()
-          val buf = new ByteBuf(1 << 12)
-          try {
-            rows.foreach { r =>
-              val tagU = r.getUTF8String(tagIdx)
-              if (lastTag == null || !lastTag.equals(tagU)) {
-                val e = encByTag.get(tagU)
-                if (e == null) throw new NoSuchElementException(tagU.toString)
-                lastTag = tagU.clone() // the scan buffer behind tagU is reused
-                lastE = e
-              }
-              val encs = lastE._2
-              uvarint(body, lastE._1)
-              buf.reset()
-              var k = 0
-              while (k < encs.length) {
-                val (ci, enc) = encs(k)
-                if (r.isNullAt(ci)) buf.writeNullTag() else enc(buf, r, ci)
-                k += 1
-              }
-              uvarint(body, buf.size + 1L)
-              buf.writeTo(body)
-              if (body.size >= 512 * 1024 || table.defs.size() >= 512 * 1024) { // reference FrameThresh
-                if (table.defs.size() > 0) {
-                  out.write(frame(0, table.defs.toByteArray)); table.defs.reset()
-                }
-                out.write(frame(1, body.toByteArray)); body.reset()
-              }
-            }
-            if (table.defs.size() > 0) out.write(frame(0, table.defs.toByteArray))
-            if (body.size() > 0) out.write(frame(1, body.toByteArray))
-            out.write(0xff)
-          } finally out.close()
-          Iterator.empty
-        }.count(): Unit
-      case None =>
-        writeTaggedSlow(df, path, dataF, tagIdx)
-    }
+  /** The shape list a het-tagged frame carries on its tag column. */
+  private[sources] def tagShapes(schema: StructType): Seq[String] = {
+    val f = schema(graft.operators.Het.typeTag)
+    if (f.metadata.contains("shapes")) f.metadata.getStringArray("shapes").toSeq
+    else Seq.empty
   }
 
-  /** Untagged frame with variant columns: rebuild each row's runtime value
-    * and write it with its own type (the same per-value typed encoding the
-    * tagged slow path uses, minus the tag).
+  /** Compile every shape of a tagged frame to its wire type and its typed
+    * internal-row field encoders (column index, encoder) in shape field
+    * order. None when any shape doesn't compile: the frame then takes the
+    * value-model route. Encoders hold scratch ByteBufs, so each partition
+    * compiles its own.
     */
-  private def writeRuntimeSlow(df: DataFrame, path: String): Unit = {
-    val dataF = StructType(df.schema.fields.filter(f =>
-      !f.metadata.contains("graft.scopeVar")))
-    val dataIdxs = df.schema.fields.zipWithIndex.collect {
-      case (f, i) if !f.metadata.contains("graft.scopeVar") => i
+  private[sources] def shapeEncoders(shapes: Seq[String], sch: StructType)
+      : Option[Map[String, (ZT, Array[(Int, FieldEnc)])]] =
+    if (shapes.isEmpty) None
+    else {
+      val built = shapes.map { tag =>
+        try {
+          val zt0 = ZsonParser.parseType(ZType.stripNullWrap(tag))
+          ZType.strip(zt0) match {
+            case ZType.Rec(fs) =>
+              val colEncs = fs.map { case (n, ft) =>
+                val ci = sch.fieldNames.indexOf(n)
+                if (ci < 0) None
+                else shapeFieldEncoder(ft, sch.fields(ci).dataType).map(ci -> _)
+              }
+              if (colEncs.exists(_.isEmpty)) None
+              else Some(tag -> (toZT(zt0), colEncs.map(_.get).toArray))
+            case _ => None
+          }
+        } catch { case _: Exception => None }
+      }
+      if (built.exists(_.isEmpty)) None else Some(built.map(_.get).toMap)
     }
-    HadoopFs.prepareDir(df.sparkSession, path)
+
+  private def writeTagged(df: DataFrame, path: String): Unit = {
+    val schema = df.schema
+    val tagIdx = schema.fieldIndex(graft.operators.Het.typeTag)
+    val shapes = tagShapes(schema)
+    // FAST path: every shape compiles to a typed internal-row encoder —
+    // one pass over internal rows, zero external-Row materialization.
+    // The driver only validates that every shape compiles.
+    if (shapeEncoders(shapes, schema).isEmpty) {
+      writeValues(df, path)
+      return
+    }
     val confMap = HadoopFs.confMap(df.sparkSession)
-    // this-only frames unwrap the bare-value carrier: convert the single
-    // column directly (variant columns carry their runtime type; static
-    // ones use the column's zed type, honoring type-valued metadata)
-    val thisOnly: Option[(Int, DataType, ZType)] =
-      if (dataF.fields.map(_.name).toSeq == Seq("this")) {
+    df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
+      val encMap = shapeEncoders(shapes, schema).get
+      val out = HadoopFs.create(confMap, path, f"part-$pid%05d.zng")
+      val fw = new FrameWriter(out)
+      // tag dispatch stays in the byte domain: the String-keyed form
+      // re-decoded and re-hashed the tag text per ROW (toString + two
+      // map lookups). UTF8String keys hash the bytes, the id is folded
+      // into the entry, and a last-tag inline cache turns the
+      // homogeneous-stream case into one byte-equals per row.
+      // (idOf assignment iterates encMap, so type ids and the defs-frame
+      // bytes follow the map's order.)
+      type Encs = Array[(Int, FieldEnc)]
+      val encByTag = new java.util.HashMap[UTF8String, (Long, Encs)]()
+      encMap.foreach { case (tag, (t, encs)) =>
+        encByTag.put(UTF8String.fromString(tag), (fw.table.idOf(t).toLong, encs))
+      }
+      var lastTag: UTF8String = null
+      var lastE: (Long, Encs) = null
+      val buf = new ByteBuf(1 << 12)
+      try {
+        rows.foreach { r =>
+          val tagU = r.getUTF8String(tagIdx)
+          if (lastTag == null || !lastTag.equals(tagU)) {
+            val e = encByTag.get(tagU)
+            if (e == null) throw new NoSuchElementException(tagU.toString)
+            lastTag = tagU.clone() // the scan buffer behind tagU is reused
+            lastE = e
+          }
+          val encs = lastE._2
+          fw.values.writeUvarint(lastE._1)
+          buf.reset()
+          var k = 0
+          while (k < encs.length) {
+            val (ci, enc) = encs(k)
+            if (r.isNullAt(ci)) buf.writeNullTag() else enc(buf, r, ci)
+            k += 1
+          }
+          fw.values.writeUvarint(buf.size + 1L)
+          buf.writeTo(fw.values)
+          fw.endValue()
+        }
+        fw.finish()
+      } finally out.close()
+      Iterator.empty
+    }.count(): Unit
+  }
+
+  /** Row → typed value for the value-model routes: rebuilds each row's
+    * runtime value over its data columns (tag and scope variables left
+    * out). A tagged row is re-typed against its shape; an untagged
+    * this-only frame unwraps the bare-value carrier. The writer and the
+    * lake tiebreak (ZngBody) share it, so the tiebreak sorts on the bytes
+    * the writer stores. The Row→ZValue converter rebuilds lazily per
+    * executor.
+    */
+  private[sources] final class RowValue(schema: StructType) extends Serializable {
+    private val tagIdx = schema.fieldNames.indexOf(graft.operators.Het.typeTag)
+    private val dataIdxs = schema.fields.indices.filter(i => i != tagIdx &&
+      !schema.fields(i).metadata.contains("graft.scopeVar")).toArray
+    private val dataF = StructType(dataIdxs.map(schema.fields(_)))
+    // this-only frames convert the single column directly (variant
+    // columns carry their runtime type; static ones use the column's zed
+    // type, honoring type-valued metadata)
+    private val thisType: Option[ZType] =
+      if (tagIdx >= 0 || dataF.fieldNames.toSeq != Seq("this")) None
+      else {
         val f = dataF.fields.head
-        val zt =
+        Some(
           if (f.metadata.contains("graft.zedType"))
             ZType.Prim(f.metadata.getString("graft.zedType"))
           // a boxed variant carrier has no static zed type — its Spark
@@ -599,100 +489,68 @@ object ZngIO {
           // record shape; null rows must be null(null), not the carrier
           else if (ZsonIO.isVariantType(f.dataType)) ZType.Prim("null")
           else try ZsonParser.parseType(graft.functions.Shaper.zedTypeOf(f.dataType))
-          catch { case _: Exception => ZType.Prim("string") }
-        Some((dataIdxs.head, f.dataType, zt))
-      } else None
-    df.rdd.mapPartitionsWithIndex { (pid, rows) =>
-      val fn = ZFormat.rowValueFn(dataF)
-      val out = HadoopFs.create(confMap, path, f"part-$pid%05d.zng")
-      val table = new ZtTable
-      val body = new ByteArrayOutputStream()
+          catch { case _: Exception => ZType.Prim("string") })
+      }
+    @transient private lazy val fn = ZFormat.rowValueFn(dataF)
+
+    def apply(row: Row): ZValue = thisType match {
+      case Some(zt) =>
+        val i = dataIdxs(0)
+        if (row.isNullAt(i)) ZValue.VNull(zt)
+        else ZValue.fromExternal(row.get(i), dataF.fields(0).dataType, zt)
+      case None =>
+        val base = fn(Row.fromSeq(dataIdxs.toIndexedSeq.map(row.get)))
+        if (tagIdx < 0) base else retype(row.getString(tagIdx), base)
+    }
+
+    // re-type against the row's shape; non-record shapes unwrap their
+    // `this` carrier
+    private def retype(tag: String, base: ZValue): ZValue =
       try {
-        rows.foreach { row =>
-          val v = thisOnly match {
-            case Some((i, dt, zt)) =>
-              if (row.isNullAt(i)) ZValue.VNull(zt)
-              else ZValue.fromExternal(row.get(i), dt, zt)
-            case None =>
-              fn(org.apache.spark.sql.Row.fromSeq(dataIdxs.toIndexedSeq.map(row.get)))
+        val zt0 = ZsonParser.parseType(ZType.stripNullWrap(tag))
+        // a null(<type>) tag means the whole row IS a typed null — the
+        // physical columns are merge artifacts
+        if (ZType.isNullWrap(tag)) ZValue.VNull(zt0)
+        else {
+          val subject = (ZType.strip(zt0), base) match {
+            // record shape in a MERGED frame: restrict to the shape's own
+            // fields — sibling columns are other shapes' nulls (the fast
+            // encoders read only the shape's columns)
+            case (rec: ZType.Rec, ZValue.VRec(fs)) =>
+              val byName = fs.toMap
+              ZValue.VRec(rec.fields.flatMap { case (n, _) => byName.get(n).map(n -> _) })
+            case (_: ZType.Rec, _) => base
+            // non-record shape in a MERGED frame: the value rides the
+            // `this` carrier; sibling columns are other shapes' nulls
+            case (_, ZValue.VRec(fs)) if fs.exists(_._1 == "this") =>
+              fs.collectFirst { case ("this", inner) => inner }.get
+            case _ => base
           }
-          val t = toZT(ZValue.typeOf(v))
-          val id = table.idOf(t)
-          uvarint(body, id.toLong)
-          encodeZTagged(body, v, t)
-          if (body.size >= 512 * 1024 || table.defs.size() >= 512 * 1024) { // reference FrameThresh
-            if (table.defs.size() > 0) {
-              out.write(frame(0, table.defs.toByteArray)); table.defs.reset()
-            }
-            out.write(frame(1, body.toByteArray)); body.reset()
-          }
+          ZsonParser.retype(subject, zt0)
         }
-        if (table.defs.size() > 0) out.write(frame(0, table.defs.toByteArray))
-        if (body.size() > 0) out.write(frame(1, body.toByteArray))
-        out.write(0xff)
-      } finally out.close()
-      Iterator.empty
-    }.count(): Unit
+      } catch { case _: Exception => base }
   }
 
-  private def writeTaggedSlow(df: DataFrame, path: String,
-      dataF: StructType, tagIdx: Int): Unit = {
-    val het = graft.operators.Het
-    val dataIdxs = df.schema.fields.zipWithIndex.collect {
-      case (f, i) if f.name != het.typeTag &&
-        !f.metadata.contains("graft.scopeVar") => i
-    }
+  /** The value-model writer route: each row becomes one typed ZValue
+    * (RowValue) written with its own type. Serves untagged frames with
+    * runtime-typed columns, this-only frames, and tagged frames whose
+    * shapes don't compile to the typed encoders.
+    */
+  private def writeValues(df: DataFrame, path: String): Unit = {
+    val toValue = new RowValue(df.schema)
     val confMap = HadoopFs.confMap(df.sparkSession)
     df.rdd.mapPartitionsWithIndex { (pid, rows) =>
-      val fn = ZFormat.rowValueFn(dataF)
       val out = HadoopFs.create(confMap, path, f"part-$pid%05d.zng")
-      val table = new ZtTable
-      val body = new ByteArrayOutputStream()
+      val fw = new FrameWriter(out)
       try {
         rows.foreach { row =>
-          val tag = row.getString(tagIdx)
-          val base = fn(org.apache.spark.sql.Row.fromSeq(dataIdxs.toIndexedSeq.map(row.get)))
-          // re-type against the row's shape; non-record shapes unwrap
-          // their `this` carrier
-          val v =
-            try {
-              val zt0 = ZsonParser.parseType(ZType.stripNullWrap(tag))
-              // a null(<type>) tag means the whole row IS a typed null —
-              // the physical columns are merge artifacts
-              if (ZType.isNullWrap(tag)) ZValue.VNull(zt0)
-              else {
-                val subject = (ZType.strip(zt0), base) match {
-                  // record shape in a MERGED frame: restrict to the shape's
-                  // own fields — sibling columns are other shapes' nulls
-                  // (the fast-path encoders read only the shape's columns)
-                  case (rec: ZType.Rec, ZValue.VRec(fs)) =>
-                    val byName = fs.toMap
-                    ZValue.VRec(rec.fields.flatMap { case (n, _) =>
-                      byName.get(n).map(n -> _) })
-                  case (_: ZType.Rec, _) => base
-                  // non-record shape in a MERGED frame: the value rides the
-                  // `this` carrier; sibling columns are other shapes' nulls
-                  case (_, ZValue.VRec(fs)) if fs.exists(_._1 == "this") =>
-                    fs.collectFirst { case ("this", inner) => inner }.get
-                  case _ => base
-                }
-                ZsonParser.retype(subject, zt0)
-              }
-            } catch { case _: Exception => base }
+          val v = toValue(row)
           val t = toZT(ZValue.typeOf(v))
-          val id = table.idOf(t)
-          uvarint(body, id.toLong)
-          encodeZTagged(body, v, t)
-          if (body.size >= 512 * 1024 || table.defs.size() >= 512 * 1024) { // reference FrameThresh
-            if (table.defs.size() > 0) {
-              out.write(frame(0, table.defs.toByteArray)); table.defs.reset()
-            }
-            out.write(frame(1, body.toByteArray)); body.reset()
-          }
+          fw.values.writeUvarint(fw.table.idOf(t).toLong)
+          encodeZTagged(fw.values, v, t)
+          fw.endValue()
         }
-        if (table.defs.size() > 0) out.write(frame(0, table.defs.toByteArray))
-        if (body.size() > 0) out.write(frame(1, body.toByteArray))
-        out.write(0xff)
+        fw.finish()
       } finally out.close()
       Iterator.empty
     }.count(): Unit
@@ -701,13 +559,11 @@ object ZngIO {
   // ---- InternalRow-native encoding (the data-path writer) -------------------
 
   /** Compile one field's wire encoder over Catalyst internal values — the
-    * write twin of the internal decode path. Same wire bytes as
-    * encodeValue on the external value (ZngSpec pins byte equality).
+    * write side of the internal decode path; the wire type is ztOf(dt).
     * Container encoders own one reusable inner buffer each (schemas are
     * finite trees, calls are sequential within a partition).
     */
-  private def internalFieldEncoder(dt: DataType)
-      : (ByteBuf, SpecializedGetters, Int) => Unit = dt match {
+  private def internalFieldEncoder(dt: DataType): FieldEnc = dt match {
     case ByteType => (out, g, i) => out.writeTaggedSigned(g.getByte(i).toLong)
     case ShortType => (out, g, i) => out.writeTaggedSigned(g.getShort(i).toLong)
     case IntegerType => (out, g, i) => out.writeTaggedSigned(g.getInt(i).toLong)
@@ -793,41 +649,32 @@ object ZngIO {
     case other => throw new IllegalArgumentException(s"zng: unsupported type $other")
   }
 
-  /** Stream-encode internal rows of one schema — identical wire output to
-    * encodeStreamTo, without the external-Row detour.
+  /** Stream-encode internal rows of one schema: one types frame first
+    * (fully determined by the schema), then bounded values frames as rows
+    * arrive — at most one frame is buffered, never the partition.
     */
   def encodeInternalStreamTo(out: java.io.OutputStream,
       rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
       schema: StructType): Unit = {
-    val table = new TypeTable
-    val topId = table.idOf(schema)
-    val tf = frame(0, table.defs.toByteArray) // types frame
-    out.write(tf, 0, tf.length)
-    val values = new ByteBuf(1 << 20)
-    def flush(): Unit = {
-      // shared frame writer: LZ4-compresses when smaller, like the
-      // external encoder — the two paths stay byte-identical
-      val vf = frame(1, values.toByteArray)
-      out.write(vf, 0, vf.length)
-      values.reset()
-    }
+    val fw = new FrameWriter(out)
+    val topId = fw.table.idOf(ztOf(schema)).toLong
+    fw.flush() // the types frame leads, even when no row follows
     val encs = schema.fields.map(f => internalFieldEncoder(f.dataType))
     val n = encs.length
     val body = new ByteBuf(1 << 12)
     rows.foreach { r =>
-      values.writeUvarint(topId.toLong)
+      fw.values.writeUvarint(topId)
       body.reset()
       var i = 0
       while (i < n) {
         if (r.isNullAt(i)) body.writeNullTag() else encs(i)(body, r, i)
         i += 1
       }
-      values.writeUvarint(body.size + 1L)
-      body.writeTo(values)
-      if (values.size >= 512 * 1024) flush() // reference FrameThresh (zngio DefaultFrameThresh)
+      fw.values.writeUvarint(body.size + 1L)
+      body.writeTo(fw.values)
+      fw.endValue()
     }
-    if (values.size > 0) flush()
-    out.write(0xff) // end of stream
+    fw.finish()
   }
 
   // ---- decoding --------------------------------------------------------------
@@ -843,62 +690,13 @@ object ZngIO {
   private[sources] case class ZError(inner: ZT) extends ZT
   private[sources] case class ZNamed(name: String, inner: ZT) extends ZT
 
-  /** Σ value-body byte lengths over a written zng file/dir — the
-    * reference's scan statistic (bytes_read counts val.Bytes() sizes,
-    * runtime scanner progress) — compression-independent.
-    */
-  def valueByteSum(path: String): Long = {
-    val f = new java.io.File(path)
-    val files: Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).toSeq
-          .filter(p => p.isFile && !p.getName.startsWith("_") &&
-            !p.getName.startsWith("."))
-          .sortBy(_.getName)
-      else Seq(f)
-    var sum = 0L
-    for (file <- files) {
-      val buf = java.nio.file.Files.readAllBytes(file.toPath)
-      val c = new Cursor(buf, 0)
-      while (!c.done) {
-        val code = c.u8()
-        if (code != 0xff) {
-          val compressed = (code & 0x40) != 0
-          val t = (code >> 4) & 0x3
-          val len = ((c.uvarint() << 4) | (code & 0xf).toLong).toInt
-          val raw = c.bytes(len)
-          if (t == 1) { // values frame
-            val payload =
-              if (!compressed) raw
-              else {
-                val pc = new Cursor(raw, 0)
-                pc.u8() // format
-                val usize = pc.uvarint().toInt
-                val comp = java.util.Arrays.copyOfRange(raw, pc.pos, raw.length)
-                val out = new Array[Byte](usize)
-                net.jpountz.lz4.LZ4Factory.fastestInstance().fastDecompressor()
-                  .decompress(comp, 0, out, 0, usize)
-                out
-              }
-            val vc = new Cursor(payload, 0)
-            while (!vc.done) {
-              vc.uvarint() // type id
-              val tag = vc.uvarint()
-              if (tag > 0) { val n = (tag - 1).toInt; vc.pos += n; sum += n }
-            }
-          }
-        }
-      }
-    }
-    sum
-  }
-
-  /** Decode a (single-stream) zng file into its typedef payload and the
-    * raw per-value slices (`type-id uvarint + tag + body`, exactly as they
-    * sit in the values frames) plus each value's body length. Used by the
-    * lake's seek-index builder to RE-frame an object into per-stride
-    * streams with byte-exact lengths (reference lake/data/writer.go cuts
-    * streams with zngio EndStream; each stream re-emits its types frame).
+  /** Decode a zng file (or directory of part files) into its typedef
+    * payload and the raw per-value slices (`type-id uvarint + tag + body`,
+    * exactly as they sit in the values frames) plus each value's body
+    * length. Used by the lake's seek-index builder to RE-frame a
+    * single-stream object into per-stride streams with byte-exact lengths
+    * (reference lake/data/writer.go cuts streams with zngio EndStream;
+    * each stream re-emits its types frame).
     */
   private[graft] def parseStream(path: String): (Array[Byte], Seq[(Array[Byte], Int)]) = {
     val f = new java.io.File(path)
@@ -912,39 +710,16 @@ object ZngIO {
     val types = new ByteArrayOutputStream()
     val values = Vector.newBuilder[(Array[Byte], Int)]
     for (file <- files) {
-      val buf = java.nio.file.Files.readAllBytes(file.toPath)
-      val c = new Cursor(buf, 0)
-      while (!c.done) {
-        val code = c.u8()
-        if (code != 0xff) {
-          val compressed = (code & 0x40) != 0
-          val t = (code >> 4) & 0x3
-          val len = ((c.uvarint() << 4) | (code & 0xf).toLong).toInt
-          val raw = c.bytes(len)
-          val payload =
-            if (!compressed) raw
-            else {
-              val pc = new Cursor(raw, 0)
-              pc.u8() // format
-              val usize = pc.uvarint().toInt
-              val comp = java.util.Arrays.copyOfRange(raw, pc.pos, raw.length)
-              val out = new Array[Byte](usize)
-              net.jpountz.lz4.LZ4Factory.fastestInstance().fastDecompressor()
-                .decompress(comp, 0, out, 0, usize)
-              out
-            }
-          if (t == 0) types.write(payload, 0, payload.length)
-          else if (t == 1) {
-            val vc = new Cursor(payload, 0)
-            while (!vc.done) {
-              val start = vc.pos
-              vc.uvarint() // type id
-              val tag = vc.uvarint()
-              val bodyLen = if (tag > 0) (tag - 1).toInt else 0
-              vc.pos += bodyLen
-              values += java.util.Arrays.copyOfRange(payload, start, vc.pos) -> bodyLen
-            }
-          }
+      val bytes = java.nio.file.Files.readAllBytes(file.toPath)
+      foreachFrame(bytes, p => types.write(p, 0, p.length)) { (payload, _) =>
+        val vc = new Cursor(payload, 0)
+        while (!vc.done) {
+          val start = vc.pos
+          vc.uvarint() // type id
+          val tag = vc.uvarint()
+          val bodyLen = if (tag > 0) (tag - 1).toInt else 0
+          vc.pos += bodyLen
+          values += java.util.Arrays.copyOfRange(payload, start, vc.pos) -> bodyLen
         }
       }
     }
@@ -977,9 +752,10 @@ object ZngIO {
 
   /** Unsynchronized growable byte buffer for the wire encoders —
     * ByteArrayOutputStream's per-write monitor is real cost on JDK 17
-    * (no biased locking) at tens of millions of field writes.
+    * (no biased locking) at tens of millions of field writes. It is an
+    * OutputStream so the value-model encoders write into frames directly.
     */
-  private[graft] final class ByteBuf(initial: Int = 1 << 12) {
+  private[graft] final class ByteBuf(initial: Int = 1 << 12) extends OutputStream {
     private var buf = new Array[Byte](initial)
     private var len = 0
     def size: Int = len
@@ -1029,7 +805,9 @@ object ZngIO {
       while (i < n) { buf(len) = ((v >>> (8 * i)) & 0xff).toByte; len += 1; i += 1 }
     }
     def writeNullTag(): Unit = writeByte(0)
-    def writeTo(out: java.io.OutputStream): Unit = out.write(buf, 0, len)
+    override def write(b: Int): Unit = writeByte(b)
+    override def write(b: Array[Byte], off: Int, n: Int): Unit = writeBytes(b, off, n)
+    def writeTo(out: OutputStream): Unit = out.write(buf, 0, len)
     def writeTo(other: ByteBuf): Unit = other.writeBytes(buf, 0, len)
     def toByteArray: Array[Byte] = java.util.Arrays.copyOf(buf, len)
   }
@@ -1093,7 +871,7 @@ object ZngIO {
       case ZPrim(id) =>
         val b = c.bytes(n)
         id match {
-          case i if i >= 0 && i <= 5 => unsignedOf(b).toString // uintN
+          case i if i >= 0 && i <= 5 => java.lang.Long.toUnsignedString(unsignedOf(b)) // uintN
           case i if (i >= 6 && i <= 11) || i == 12 => signedOf(b).toString
           case ID_TIME =>
             val ns = signedOf(b)
@@ -1176,200 +954,38 @@ object ZngIO {
     */
   def decodeToZson(bytes: Array[Byte]): Iterator[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val c = new Cursor(bytes, 0)
-    var types = scala.collection.mutable.ArrayBuffer.empty[ZT] // ids from 30
-    def typeOf(id: Int): ZT =
-      if (id < 30) ZPrim(id) else types(id - 30)
-    def readCounted(cc: Cursor): String = {
-      val n = cc.uvarint().toInt
-      new String(cc.bytes(n), "UTF-8")
-    }
-    while (!c.done) {
-      val code = c.u8()
-      if (code == 0xff) {
-        types = scala.collection.mutable.ArrayBuffer.empty[ZT] // new stream
-      } else {
-        require((code & 0x80) == 0, "zng: unsupported version bit")
-        val compressed = (code & 0x40) != 0
-        val t = (code >> 4) & 0x3
-        val len = ((c.uvarint() << 4) | (code & 0xf).toLong).toInt
-        val raw = c.bytes(len)
-        val payload =
-          if (!compressed) raw
-          else {
-            val pc = new Cursor(raw, 0)
-            val format = pc.u8()
-            require(format == 0, s"zng: unknown compression format $format")
-            val usize = pc.uvarint().toInt
-            val comp = java.util.Arrays.copyOfRange(raw, pc.pos, raw.length)
-            val dec = net.jpountz.lz4.LZ4Factory.fastestInstance().fastDecompressor()
-            val buf = new Array[Byte](usize)
-            dec.decompress(comp, 0, buf, 0, usize)
-            buf
-          }
-        t match {
-          case 0 => // types frame
-            val tc = new Cursor(payload, 0)
-            while (!tc.done) {
-              tc.u8() match {
-                case 0x00 =>
-                  val nf = tc.uvarint().toInt
-                  val fields = (0 until nf).map { _ =>
-                    val name = readCounted(tc)
-                    val tid = tc.uvarint().toInt
-                    name -> typeOf(tid)
-                  }
-                  types += ZRecord(fields)
-                case 0x01 => types += ZArray(typeOf(tc.uvarint().toInt))
-                case 0x02 => types += ZSet(typeOf(tc.uvarint().toInt))
-                case 0x03 =>
-                  val k = typeOf(tc.uvarint().toInt)
-                  types += ZMap(k, typeOf(tc.uvarint().toInt))
-                case 0x04 =>
-                  val nt = tc.uvarint().toInt
-                  types += ZUnion((0 until nt).map(_ => typeOf(tc.uvarint().toInt)))
-                case 0x05 =>
-                  val ne = tc.uvarint().toInt
-                  types += ZEnum((0 until ne).map(_ => readCounted(tc)))
-                case 0x06 => types += ZError(typeOf(tc.uvarint().toInt))
-                case 0x07 =>
-                  val name = readCounted(tc)
-                  types += ZNamed(name, typeOf(tc.uvarint().toInt))
-                case other =>
-                  throw new IllegalArgumentException(s"zng: unknown typedef code $other")
-              }
-            }
-          case 1 => // values frame
-            val vc = new Cursor(payload, 0)
-            while (!vc.done) {
-              val tid = vc.uvarint().toInt
-              out += decodeValue(vc, typeOf(tid))
-            }
-          case 2 => // control frame: skip (spec allows)
-          case _ =>
-            throw new IllegalArgumentException("zng: unexpected frame type 3 inside stream")
-        }
-      }
-    }
+    foreachValue(bytes)((t, c) => out += decodeValue(c, t))
     out.iterator
   }
 
-  // ---- structural decode + value-level writer (shared with VngIO) ------------
-
-  /** Decode a ZNG stream to (type, value) pairs with Scala-native values:
-    * records → ListMap[String, Any], arrays → Seq[Any], ints → Long,
-    * floats → Double, strings → String, null → null. Used for metadata
-    * streams (VNG reassembly/trailer) where structure, not text, is needed.
+  /** Walk a whole ZNG byte sequence (possibly several concatenated
+    * streams) frame by frame through the one frame reader: each types
+    * frame extends the stream's type table and is handed to `onTypes`,
+    * each values frame goes to `onValues` with the id→type lookup, control
+    * frames are skipped, and an end-of-stream resets the type context.
     */
-  private[sources] def decodeToValues(bytes: Array[Byte]): Seq[(ZT, Any)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(ZT, Any)]
-    foreachValue(bytes) { (t, cursor) => out += ((t, decodeValueAny(cursor, t))) }
-    out.toSeq
-  }
-
-  private[sources] def decodeValueAny(c: Cursor, t: ZT): Any = {
-    val tag = c.uvarint()
-    if (tag == 0) return null
-    val n = (tag - 1).toInt
-    t match {
-      case ZNamed(_, inner) => c.pos -= sizeOfTag(tag); decodeValueAny(c, inner)
-      case ZPrim(id) =>
-        val b = c.bytes(n)
-        id match {
-          case i if i >= 0 && i <= 5 => unsignedOf(b)
-          case i if (i >= 6 && i <= 11) || i == 12 || i == ID_TIME => signedOf(b)
-          case ID_FLOAT32 => java.lang.Float.intBitsToFloat(unsignedOf(b).toInt).toDouble
-          case ID_FLOAT64 => java.lang.Double.longBitsToDouble(unsignedOf(b))
-          case ID_BOOL => b.nonEmpty && b(0) == 1
-          case ID_STRING => new String(b, "UTF-8")
-          case ID_BYTES => b
-          case _ => null
-        }
-      case ZRecord(fields) =>
-        val inner = new Cursor(c.bytes(n), 0)
-        scala.collection.immutable.ListMap(fields.map { case (name, ft) =>
-          name -> decodeValueAny(inner, ft)
-        }: _*)
-      case ZArray(et) =>
-        val inner = new Cursor(c.bytes(n), 0)
-        Iterator.continually(())
-          .takeWhile(_ => !inner.done).map(_ => decodeValueAny(inner, et)).toSeq
-      case other =>
-        // sets/maps/unions are not used in metadata streams
-        c.bytes(n); null
+  private def foreachFrame(bytes: Array[Byte], onTypes: Array[Byte] => Unit = _ => ())(
+      onValues: (Array[Byte], Int => ZT) => Unit): Unit = {
+    val c = new Cursor(bytes, 0)
+    val types = scala.collection.mutable.ArrayBuffer.empty[ZT]
+    val typeOfId = (id: Int) => if (id < 30) ZPrim(id) else types(id - 30)
+    while (!c.done) {
+      val code = c.u8()
+      if (code == 0xff) types.clear()
+      else readFrame(c, code) match {
+        case (0, payload) => parseTypedefs(payload, types); onTypes(payload)
+        case (1, payload) => onValues(payload, typeOfId)
+        case _ => // control frame: skip (spec allows)
+      }
     }
   }
 
   /** Walk a ZNG stream calling f(type, cursor) positioned at each value. */
-  private def foreachValue(bytes: Array[Byte])(f: (ZT, Cursor) => Unit): Unit = {
-    // delegate to the frame walker in decodeToZson's shape
-    val c = new Cursor(bytes, 0)
-    var types = scala.collection.mutable.ArrayBuffer.empty[ZT]
-    def typeOf(id: Int): ZT = if (id < 30) ZPrim(id) else types(id - 30)
-    def readCounted(cc: Cursor): String = {
-      val n = cc.uvarint().toInt
-      new String(cc.bytes(n), "UTF-8")
+  private def foreachValue(bytes: Array[Byte])(f: (ZT, Cursor) => Unit): Unit =
+    foreachFrame(bytes) { (payload, typeOfId) =>
+      val vc = new Cursor(payload, 0)
+      while (!vc.done) f(typeOfId(vc.uvarint().toInt), vc)
     }
-    while (!c.done) {
-      val code = c.u8()
-      if (code == 0xff) types = scala.collection.mutable.ArrayBuffer.empty[ZT]
-      else {
-        val compressed = (code & 0x40) != 0
-        val t = (code >> 4) & 0x3
-        val len = ((c.uvarint() << 4) | (code & 0xf).toLong).toInt
-        val raw = c.bytes(len)
-        val payload =
-          if (!compressed) raw
-          else {
-            val pc = new Cursor(raw, 0)
-            require(pc.u8() == 0, "zng: unknown compression format")
-            val usize = pc.uvarint().toInt
-            val comp = java.util.Arrays.copyOfRange(raw, pc.pos, raw.length)
-            val buf = new Array[Byte](usize)
-            net.jpountz.lz4.LZ4Factory.fastestInstance().fastDecompressor()
-              .decompress(comp, 0, buf, 0, usize)
-            buf
-          }
-        t match {
-          case 0 =>
-            val tc = new Cursor(payload, 0)
-            while (!tc.done) {
-              tc.u8() match {
-                case 0x00 =>
-                  val nf = tc.uvarint().toInt
-                  types += ZRecord((0 until nf).map { _ =>
-                    val name = readCounted(tc); name -> typeOf(tc.uvarint().toInt)
-                  })
-                case 0x01 => types += ZArray(typeOf(tc.uvarint().toInt))
-                case 0x02 => types += ZSet(typeOf(tc.uvarint().toInt))
-                case 0x03 =>
-                  val k = typeOf(tc.uvarint().toInt)
-                  types += ZMap(k, typeOf(tc.uvarint().toInt))
-                case 0x04 =>
-                  val nt = tc.uvarint().toInt
-                  types += ZUnion((0 until nt).map(_ => typeOf(tc.uvarint().toInt)))
-                case 0x05 =>
-                  val ne = tc.uvarint().toInt
-                  types += ZEnum((0 until ne).map(_ => readCounted(tc)))
-                case 0x06 => types += ZError(typeOf(tc.uvarint().toInt))
-                case 0x07 =>
-                  val name = readCounted(tc)
-                  types += ZNamed(name, typeOf(tc.uvarint().toInt))
-                case other =>
-                  throw new IllegalArgumentException(s"zng: unknown typedef code $other")
-              }
-            }
-          case 1 =>
-            val vc = new Cursor(payload, 0)
-            while (!vc.done) {
-              val tid = vc.uvarint().toInt
-              f(typeOf(tid), vc)
-            }
-          case _ => // control: skip
-        }
-      }
-    }
-  }
 
   // ---- typed decode (ZT → ZType / ZValue) ------------------------------------
 
@@ -1412,7 +1028,7 @@ object ZngIO {
 
   // ---- type VALUES (reference type.go AppendTypeValue; opcodes 30-38) ------
 
-  private[sources] def appendTypeValue(out: ByteArrayOutputStream, t: ZType,
+  private[sources] def appendTypeValue(out: OutputStream, t: ZType,
       defs: scala.collection.mutable.Map[String, ZType]): Unit = {
     def counted(s: String): Unit = {
       val b = s.getBytes("UTF-8"); uvarint(out, b.length.toLong); out.write(b, 0, b.length)
@@ -1512,7 +1128,7 @@ object ZngIO {
   }
 
   /** Encode one typed value's BODY (no outer tag) per its wire type. */
-  private[sources] def encodeZBody(out: ByteArrayOutputStream, v0: ZValue, t: ZT): Unit = {
+  private[sources] def encodeZBody(out: OutputStream, v0: ZValue, t: ZT): Unit = {
     import ZValue._
     val v = v0 match { case VTyped(i, _) => i; case other => other }
     (v, t) match {
@@ -1606,7 +1222,7 @@ object ZngIO {
     }
   }
 
-  private[sources] def encodeZTagged(out: ByteArrayOutputStream, v: ZValue, t: ZT): Unit = {
+  private[sources] def encodeZTagged(out: OutputStream, v: ZValue, t: ZT): Unit = {
     import ZValue._
     v match {
       case VNull(_) => out.write(0)
@@ -1790,12 +1406,14 @@ object ZngIO {
 
   /** Frame header + raw (possibly still-compressed) body — lets the scan
     * DROP a frame before paying LZ4 decompression (stream-level field
-    // pruning, fieldnamefinder.go analog).
+    * pruning, fieldnamefinder.go analog). Every reader reads its frames
+    * here, so each rejects the version bit and frame type 3 alike.
     */
   private def readFrameRaw(c: Cursor, code: Int): (Int, Array[Byte], Boolean) = {
     require((code & 0x80) == 0, "zng: unsupported version bit")
     val compressed = (code & 0x40) != 0
     val t = (code >> 4) & 0x3
+    if (t == 3) throw new IllegalArgumentException("zng: unexpected frame type 3 inside stream")
     val len = ((c.uvarint() << 4) | (code & 0xf).toLong).toInt
     (t, c.bytes(len), compressed)
   }
@@ -1815,21 +1433,21 @@ object ZngIO {
     }
 
   /** Lazily decode a ZNG byte stream (possibly several concatenated
-    * streams) to typed values — one values frame buffered at a time
-    * (frames are ~1 MiB), never the whole file's rows.
+    * streams) to typed values — one values frame buffered at a time,
+    * never the whole file's rows.
     */
   def decodeToZValues(bytes: Array[Byte]): Iterator[ZValue] =
     decodeToZValues(bytes, unionKeepsMember = false)
 
   private[sources] def decodeToZValues(bytes: Array[Byte], unionKeepsMember: Boolean): Iterator[ZValue] = new Iterator[ZValue] {
     private val c = new Cursor(bytes, 0)
-    private var types = scala.collection.mutable.ArrayBuffer.empty[ZT]
+    private val types = scala.collection.mutable.ArrayBuffer.empty[ZT]
     private var queue: Iterator[ZValue] = Iterator.empty
     private def typeOfId(id: Int): ZT = if (id < 30) ZPrim(id) else types(id - 30)
     private def fill(): Unit = {
       while (!queue.hasNext && !c.done) {
         val code = c.u8()
-        if (code == 0xff) types = scala.collection.mutable.ArrayBuffer.empty[ZT]
+        if (code == 0xff) types.clear()
         else readFrame(c, code) match {
           case (0, payload) => parseTypedefs(payload, types)
           case (1, payload) =>
@@ -1840,44 +1458,12 @@ object ZngIO {
               out += decodeZValue(vc, typeOfId(tid), unionKeepsMember)
             }
             queue = out.result().iterator
-          case (2, _) => // control frame: skip (spec allows)
-          case _ =>
-            throw new IllegalArgumentException("zng: unexpected frame type 3 inside stream")
+          case _ => // control frame: skip (spec allows)
         }
       }
     }
     def hasNext: Boolean = { if (!queue.hasNext) fill(); queue.hasNext }
     def next(): ZValue = { if (!hasNext) throw new NoSuchElementException; queue.next() }
-  }
-
-  /** Incremental ZNG stream writer with a shared type context — used for
-    * the VNG reassembly/trailer streams where values of several types
-    * interleave in one stream.
-    */
-  private[sources] final class StreamWriter {
-    private val table = new TypeTable
-    private val values = new ByteArrayOutputStream()
-
-    def write(schema: DataType, v: Any): Unit = {
-      val id = table.idOf(schema)
-      uvarint(values, id.toLong)
-      encodeValue(values, v, schema)
-    }
-
-    /** Write an explicitly-null value of the given (complex) type. */
-    def writeNull(schema: DataType): Unit = {
-      val id = table.idOf(schema)
-      uvarint(values, id.toLong)
-      values.write(0)
-    }
-
-    def finish(): Array[Byte] = {
-      val out = new ByteArrayOutputStream()
-      out.write(frame(0, table.defs.toByteArray))
-      out.write(frame(1, values.toByteArray))
-      out.write(0xff)
-      out.toByteArray
-    }
   }
 
   /** Pass-1 metadata scan of a ZNG stream: shape texts in first-appearance
@@ -1888,7 +1474,7 @@ object ZngIO {
     * This is what makes the two-pass distributed ingest cheap: pass 1 is
     * I/O + tag arithmetic, only pass 2 builds rows.
     */
-  private[sources] def scanMeta(bytes: Array[Byte], startIdx: Long)
+  private[graft] def scanMeta(bytes: Array[Byte], startIdx: Long)
       : (Seq[(String, Long)], Long, Boolean) = {
     val seen = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val textMemo = scala.collection.mutable.HashMap.empty[ZT, String]
@@ -1966,208 +1552,6 @@ object ZngIO {
     (seen.toSeq, i - startIdx, ns)
   }
 
-  /** Build a direct wire→Spark-external decoder for one field: reads the
-    * tag and body off the cursor, returns the external value for `target`
-    * (the same result toExternal(decodeZValue(…)) produces). None when the
-    * type needs the general value-model path (unions, errors, maps, sets —
-    * set normalization reorders elements — uint64, decimals).
-    */
-  private def directFieldDecoder(t: ZT, target: DataType, nsTime: Boolean)
-      : Option[Cursor => Any] = t match {
-    case ZNamed(_, inner) => directFieldDecoder(inner, target, nsTime) // no own tag
-    case ZPrim(id) => id match {
-      case 0 | 1 | 2 => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) null else java.lang.Long.valueOf(unsignedOf(c.bytes((tag - 1).toInt)))
-      }
-      case 6 | 7 | 8 | 9 | ID_DURATION => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) null else java.lang.Long.valueOf(signedOf(c.bytes((tag - 1).toInt)))
-      }
-      case ID_TIME => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) null
-        else {
-          val ns = signedOf(c.bytes((tag - 1).toInt))
-          if (nsTime) java.lang.Long.valueOf(ns)
-          else {
-            val ts = new java.sql.Timestamp(Math.floorDiv(ns, 1000000L))
-            ts.setNanos(Math.floorMod(ns, 1000000000L).toInt)
-            ts
-          }
-        }
-      }
-      case 14 => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) null
-        else java.lang.Double.valueOf(halfToDouble(unsignedOf(c.bytes((tag - 1).toInt)).toInt))
-      }
-      case ID_FLOAT32 => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) null
-        else java.lang.Double.valueOf(
-          java.lang.Float.intBitsToFloat(unsignedOf(c.bytes((tag - 1).toInt)).toInt).toDouble)
-      }
-      case ID_FLOAT64 => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) null
-        else java.lang.Double.valueOf(
-          java.lang.Double.longBitsToDouble(unsignedOf(c.bytes((tag - 1).toInt))))
-      }
-      case ID_BOOL => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) null
-        else { val b = c.bytes((tag - 1).toInt); java.lang.Boolean.valueOf(b.nonEmpty && b(0) == 1) }
-      }
-      case ID_STRING => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) null else new String(c.bytes((tag - 1).toInt), "UTF-8")
-      }
-      case ID_BYTES => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) null else c.bytes((tag - 1).toInt)
-      }
-      case ID_IP => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) null else ipText(c.bytes((tag - 1).toInt))
-      }
-      case ID_NET => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) null
-        else {
-          val b = c.bytes((tag - 1).toInt)
-          val addr = java.util.Arrays.copyOfRange(b, 0, b.length / 2)
-          val mask = java.util.Arrays.copyOfRange(b, b.length / 2, b.length)
-          ipText(addr) + "/" + leadingOnes(mask)
-        }
-      }
-      case ID_NULL => Some { c =>
-        val tag = c.uvarint(); if (tag != 0) c.pos += (tag - 1).toInt; null
-      }
-      case _ => None // uint64 (Decimal carrier), type values, decimals
-    }
-    case ZRecord(fields) => target match {
-      case st: StructType if st.fields.length == fields.length &&
-          st.fields.iterator.map(_.name).sameElements(fields.iterator.map(_._1)) =>
-        val subs = fields.zip(st.fields.toIndexedSeq)
-          .map { case ((_, ft), sf) => directFieldDecoder(ft, sf.dataType, nsTime) }
-        if (subs.exists(_.isEmpty)) None
-        else {
-          val ds = subs.map(_.get).toArray
-          Some { c =>
-            val tag = c.uvarint()
-            if (tag == 0) null
-            else {
-              val inner = new Cursor(c.buf, c.pos)
-              val end = c.pos + (tag - 1).toInt
-              c.pos = end
-              val arr = new Array[Any](ds.length)
-              var i = 0
-              while (i < ds.length) { arr(i) = ds(i)(inner); i += 1 }
-              Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(arr))
-            }
-          }
-        }
-      case _ => None
-    }
-    case ZArray(e) => target match {
-      case ArrayType(et, _) => directFieldDecoder(e, et, nsTime).map { d => c =>
-        val tag = c.uvarint()
-        if (tag == 0) null
-        else {
-          val n = (tag - 1).toInt
-          val inner = new Cursor(c.bytes(n), 0)
-          val b = Vector.newBuilder[Any]
-          while (!inner.done) b += d(inner)
-          b.result()
-        }
-      }
-      case _ => None
-    }
-    case ZEnum(symbols) => Some { c =>
-      val tag = c.uvarint()
-      if (tag == 0) null else symbols(unsignedOf(c.bytes((tag - 1).toInt)).toInt)
-    }
-    case _ => None // sets (normalization reorders), maps, unions, errors
-  }
-
-  /** Top-level decoder for a single-shape stream: a record value straight
-    * to the tagged external Row, matching rowOf(decodeZValue(…)) exactly.
-    */
-  private def directTopDecoder(t: ZT, cleaned: StructType, shapeText: String,
-      nsTime: Boolean): Option[Cursor => Row] = {
-    if (ZType.fullText(zTypeOf(t)) != shapeText) return None
-    def stripNamed(x: ZT): ZT = x match { case ZNamed(_, i) => stripNamed(i); case o => o }
-    stripNamed(t) match {
-      case rec: ZRecord if rec.fields.nonEmpty =>
-        directFieldDecoder(rec, StructType(cleaned.fields), nsTime).map { d => c =>
-          d(c) match {
-            case r: Row => Row.fromSeq(r.toSeq :+ shapeText)
-            case _ => // null record value → all-null row (general-path parity)
-              Row.fromSeq(Vector.fill[Any](cleaned.fields.length)(null) :+ shapeText)
-          }
-        }
-      case _ => None
-    }
-  }
-
-  /** Decode a stream to tagged external Rows for a single-shape frame —
-    * the vectorized pass-2: no ZValue tree for eligible types; per-TYPE
-    * granular fallback through the value model otherwise.
-    */
-  private[sources] def decodeToRows(bytes: Array[Byte], shapeText: String,
-      cleaned: StructType, nsTime: Boolean): Iterator[Row] = new Iterator[Row] {
-    private val c = new Cursor(bytes, 0)
-    private var types = scala.collection.mutable.ArrayBuffer.empty[ZT]
-    private var queue: Iterator[Row] = Iterator.empty
-    private val memo = scala.collection.mutable.HashMap.empty[ZT, Option[Cursor => Row]]
-    private def typeOfId(id: Int): ZT = if (id < 30) ZPrim(id) else types(id - 30)
-    // id-indexed front cache over `memo` (tree hashing per row otherwise);
-    // ids append-only within a stream, cleared with `types` at EOS
-    private var decodersById = new Array[Option[Cursor => Row]](64)
-    private def decoderOfId(id: Int): (ZT, Option[Cursor => Row]) = {
-      if (id >= decodersById.length)
-        decodersById = java.util.Arrays.copyOf(decodersById, math.max(id + 1, decodersById.length << 1))
-      val t = typeOfId(id)
-      var d = decodersById(id)
-      if (d == null) {
-        d = memo.getOrElseUpdate(t, directTopDecoder(t, cleaned, shapeText, nsTime))
-        decodersById(id) = d
-      }
-      (t, d)
-    }
-    private def fill(): Unit = {
-      while (!queue.hasNext && !c.done) {
-        val code = c.u8()
-        if (code == 0xff) {
-          types = scala.collection.mutable.ArrayBuffer.empty[ZT]
-          decodersById = new Array[Option[Cursor => Row]](64)
-        }
-        else readFrame(c, code) match {
-          case (0, payload) => parseTypedefs(payload, types)
-          case (1, payload) =>
-            val vc = new Cursor(payload, 0)
-            val out = Vector.newBuilder[Row]
-            while (!vc.done) {
-              val tid = vc.uvarint().toInt
-              decoderOfId(tid) match {
-                case (_, Some(d)) => out += d(vc)
-                case (t, None) =>
-                  out += ZsonReader.rowOf(decodeZValue(vc, t, unionKeepsMember = false),
-                    cleaned, tag = true)
-              }
-            }
-            queue = out.result().iterator
-          case (2, _) => // control frame: skip
-          case _ =>
-            throw new IllegalArgumentException("zng: unexpected frame type 3 inside stream")
-        }
-      }
-    }
-    def hasNext: Boolean = { if (!queue.hasNext) fill(); queue.hasNext }
-    def next(): Row = { if (!hasNext) throw new NoSuchElementException; queue.next() }
-  }
-
   // ---- InternalRow-native decoding (the DSv2 scan path) ---------------------
 
   /** External→Catalyst-internal converter for the value-model fallback
@@ -2230,10 +1614,10 @@ object ZngIO {
     case _ => identity // Long, Double, Boolean, Array[Byte] ride unchanged
   }
 
-  /** Wire→internal decoder for one field — the DSv2 twin of
-    * directFieldDecoder, total over all types: exotic leaves (sets, maps,
-    * unions/errors, type values, decimals) route through the value model
-    * inline and convert, everything else decodes straight off the cursor.
+  /** Wire→internal decoder for one field of the DSv2 scan, total over all
+    * types: exotic leaves (sets, maps, unions/errors, type values,
+    * decimals) route through the value model inline and convert,
+    * everything else decodes straight off the cursor.
     */
   private def internalFieldDecoder(t0: ZT, target: DataType, nsTime: Boolean): Cursor => Any = {
     def fallback: Cursor => Any = {
@@ -2382,12 +1766,6 @@ object ZngIO {
     }
   }
 
-  /** Decode a stream to internal rows of `required` (a pruned subset of
-    * the cleaned-plus-tag frame) — the DSv2 scan body. Fields outside
-    * `required` are skipped via their length tags; when no record field is
-    * required at all (count(*), tag-only reads) whole value bodies are
-    * skipped, making the scan I/O plus tag arithmetic like pass 1.
-    */
   /** Per-partition frame prefilter counters — surfaced as DSv2 custom
     * metrics (Spark UI) and summed JVM-wide for local-mode assertions.
     */
@@ -2398,6 +1776,12 @@ object ZngIO {
   val totalFramesSkipped = new java.util.concurrent.atomic.LongAdder
   val totalFramesRead = new java.util.concurrent.atomic.LongAdder
 
+  /** Decode a stream to internal rows of `required` (a pruned subset of
+    * the cleaned-plus-tag frame) — the DSv2 scan body. Fields outside
+    * `required` are skipped via their length tags; when no record field is
+    * required at all (count(*), tag-only reads) whole value bodies are
+    * skipped, making the scan I/O plus tag arithmetic like pass 1.
+    */
   private[sources] def decodeToInternalRows(bytes: Array[Byte],
       cleaned: StructType, required: StructType, nsTime: Boolean,
       prefilter: Option[BufferFilter] = None,
@@ -2570,9 +1954,7 @@ object ZngIO {
                 }
                 queue = out.result().iterator
               }
-            case (2, _) => // control frame: skip
-            case _ =>
-              throw new IllegalArgumentException("zng: unexpected frame type 3 inside stream")
+            case _ => // control frame: skip
             }
           }
         }
@@ -2927,9 +2309,7 @@ object ZngIO {
                 stats.read += 1; totalFramesRead.increment()
                 frame = new Cursor(payload, 0)
               }
-            case (2, _) =>
-            case _ =>
-              throw new IllegalArgumentException("zng: unexpected frame type 3 inside stream")
+            case _ => // control frame: skip
             }
           }
         }
@@ -2953,14 +2333,6 @@ object ZngIO {
     (it, () => batch.close())
   }
 
-  /** Read a ZNG file or directory of part files into a typed DataFrame —
-    * per-file typed decode on the executors (streams are self-contained,
-    * so files distribute one task each), fused into the same
-    * tagged/variant frame the in-memory harness builds. Pass 1 (schema
-    * discovery) reads only type frames and value tags via scanMeta; pass 2
-    * is the one full decode — straight to Spark rows (no value tree) when
-    * the stream is single-shape with directly-decodable types.
-    */
   /** Per-file discovery result, cached driver-side keyed by the file's
     * (length, mtime): re-reading a path — interactive sessions, repeated
     * queries over the same objects — skips the pass-1 discovery I/O for
@@ -3022,6 +2394,15 @@ object ZngIO {
       .toDF()
   }
 
+  /** Read a ZNG file or directory of part files into a typed DataFrame —
+    * per-file typed decode on the executors (streams are self-contained,
+    * so files distribute one task each), fused into the same
+    * tagged/variant frame the in-memory harness builds. Pass 1 (schema
+    * discovery) reads only type frames and value tags via scanMeta; pass 2
+    * is the one full decode — the DSv2 scan, wire → InternalRow (or
+    * ColumnarBatch) for every record shape, the value model only for
+    * exotic leaves.
+    */
   def read(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     val fs = new org.apache.hadoop.fs.Path(path)

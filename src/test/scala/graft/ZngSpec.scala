@@ -25,6 +25,30 @@ class ZngSpec extends AnyFunSuite with BeforeAndAfterAll {
     p.resolve("out").toString
   }
 
+  private def sha256(b: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(b)
+      .map(x => f"${x & 0xff}%02x").mkString
+
+  /** One ZNG stream of the frame's internal rows, encoded on the driver. */
+  private def internalStream(df: org.apache.spark.sql.DataFrame): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    ZngIO.encodeInternalStreamTo(out,
+      df.queryExecution.toRdd.map(_.copy()).collect().iterator, df.schema)
+    out.toByteArray
+  }
+
+  /** `ZngIO.write` of one partition: the bytes of its single part file. */
+  private def writtenPart(df: org.apache.spark.sql.DataFrame, name: String): Array[Byte] = {
+    val path = tmp(name)
+    ZngIO.write(df.coalesce(1), path)
+    val parts = new java.io.File(path).listFiles().filter(_.getName.endsWith(".zng"))
+    assert(parts.length == 1, parts.map(_.getName).mkString(","))
+    java.nio.file.Files.readAllBytes(parts.head.toPath)
+  }
+
+  private def zvals(lines: Seq[String]): Seq[graft.sources.ZValue] =
+    lines.map(l => new graft.sources.ZsonParser(l).parseOne())
+
   test("signed counted varint matches the reference (magnitude<<1 | sign)") {
     // zcode/counted.go:59 EncodeCountedVarint — NOT zigzag: -1 → 0x03
     assert(ZngIO.signedBytes(0L).isEmpty)            // minimal: no bytes
@@ -38,9 +62,8 @@ class ZngSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("stream structure: types frame, values frame, end-of-stream") {
-    val schema = StructType(Seq(StructField("a", LongType), StructField("s", StringType)))
-    val rows = Iterator(Row(7L, "x"))
-    val bytes = ZngIO.encodeStream(rows, schema)
+    val df = Seq((7L, "x")).toDF("a", "s")
+    val bytes = internalStream(df)
     assert((bytes(0) >> 4) == 0)            // first frame: types (T=00, V=0, C=0)
     assert(bytes.last == 0xff.toByte)       // end of stream
     val lines = ZngIO.decodeToZson(bytes).toSeq
@@ -165,7 +188,7 @@ class ZngSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(lines == Seq("|[1,2]|", "\"ok\"", "\"hi\"", "80"))
   }
 
-  test("internal-row encoder emits identical wire bytes to the external encoder") {
+  test("internal-row encoder: 16 column types decode to pinned ZSON and digest") {
     val schema = StructType(Seq(
       StructField("b", ByteType), StructField("sh", ShortType), StructField("i", IntegerType),
       StructField("l", LongType), StructField("f", FloatType), StructField("d", DoubleType),
@@ -176,7 +199,7 @@ class ZngSpec extends AnyFunSuite with BeforeAndAfterAll {
       StructField("rec", StructType(Seq(StructField("x", LongType), StructField("y", StringType)))),
       StructField("arr", ArrayType(LongType)),
       StructField("m", MapType(StringType, LongType))))
-    val ts = java.sql.Timestamp.valueOf("2020-03-04 05:06:07.123456")
+    val ts = java.sql.Timestamp.from(java.time.Instant.parse("2020-03-04T05:06:07.123456Z"))
     val rows = Seq(
       Row(1.toByte, 2.toShort, 3, -4L, 1.5f, -2.5, true, "héllo", Array[Byte](1, 2),
         ts, java.sql.Date.valueOf("2021-01-02"),
@@ -188,10 +211,15 @@ class ZngSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = spark.createDataFrame(
       new java.util.ArrayList(scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
       schema).coalesce(1)
-    val external = ZngIO.encodeStream(df.collect().iterator, schema)
-    val out = new java.io.ByteArrayOutputStream()
-    ZngIO.encodeInternalStreamTo(out, df.queryExecution.toRdd.collect().iterator, schema)
-    assert(out.toByteArray.toSeq == external.toSeq)
+    val bytes = internalStream(df)
+    assert(ZngIO.decodeToZson(bytes).toSeq == Seq(
+      "{b:1,sh:2,i:3,l:-4,f:1.5,d:-2.5,bo:true,st:\"héllo\",bin:0x0102," +
+        "ts:2020-03-04T05:06:07.123456Z,dt:2021-01-02T00:00:00.000000Z,dur:3123456000," +
+        "u64:18446744073709551615,rec:{x:7,y:\"in\"},arr:[1,null,3],m:|{\"a\":2,\"k1\":1}|}",
+      "{b:null,sh:null,i:null,l:null,f:null,d:null,bo:null,st:null,bin:null,ts:null," +
+        "dt:null,dur:null,u64:null,rec:null,arr:null,m:null}"))
+    // the digest of the bytes the external-Row encoder was pinned equal to
+    assert(sha256(bytes) == "b70eb906fb8d7f6e9895036ca8ac58a53e73da1657da5905b5f036d2f6a3348b")
   }
 
   test("frame prefilter skips frames that can't match a pushed string " +
@@ -476,6 +504,154 @@ class ZngSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(back == Seq(
       "{a:17(uint8),b:1(uint32),c:18446744073709551615(uint64)}",
       "{a:200(uint8),b:70000(uint32),c:5(uint64)}"))
+  }
+
+  // ---- writer routes: each writes one fixed frame, its bytes pinned ----
+
+  private def taggedFastFrame(n: Int) = graft.sources.ZsonReader.fromValues(spark,
+    zvals((0 until n).map { i =>
+      if (i % 3 == 0) f"""{b:$i%d(int32),ip:10.0.${i % 256}%d.1,t:2024-01-01T00:00:${i % 60}%02dZ}"""
+      else s"""{a:$i,s:"x${i % 100}"}"""
+    }), tag = true)
+
+  // map and union fields don't compile to the typed field encoders
+  private def taggedSlowFrame(n: Int) = graft.sources.ZsonReader.fromValues(spark,
+    zvals((0 until n).map { i =>
+      if (i % 2 == 0) s"""{m:|{"k${i % 10}":$i}|,u:$i((int64,string))}"""
+      else s"""{a:$i,u:"s$i"((int64,string))}"""
+    }), tag = true)
+
+  private def pinRoute(name: String, df: org.apache.spark.sql.DataFrame,
+      rows: Int, digest: String): Array[Byte] = {
+    val bytes = writtenPart(df, name)
+    assert(ZngIO.decodeToZson(bytes).size == rows)
+    assert(sha256(bytes) == digest, name)
+    bytes
+  }
+
+  private def valuesFrames(bytes: Array[Byte]): Int =
+    frameCodes(bytes).count(c => ((c >> 4) & 3) == 1)
+
+  test("writer route pin: untagged frame (several values frames)") {
+    val bytes = pinRoute("untagged", spark.range(0, 30000).selectExpr(
+      "id", "concat('s', id % 1000) as s", "cast(id as double) / 3 as d",
+      "CASE WHEN id % 7 = 0 THEN NULL ELSE array(id, id + 1) END as a",
+      "named_struct('x', id, 'y', concat('y', id % 10)) as r",
+      "timestamp_seconds(id) as ts"), 30000,
+      "432fa26412e4ca8bc7d04713c29d165722d59c18aaf16fc8aadaa601c6800825")
+    assert(valuesFrames(bytes) > 1)
+  }
+
+  test("writer route pin: tagged frame on the typed fast encoders") {
+    pinRoute("tagged-fast", taggedFastFrame(30000), 30000,
+      "f0f60ed576575c72203dc1d1600f8a9f543363058691aa6c5b6417dcd021f953")
+  }
+
+  test("writer route pin: tagged frame on the value-model route (map, union)") {
+    pinRoute("tagged-slow", taggedSlowFrame(3000), 3000,
+      "c9bbf908584eec8a61bdf809ce6c5a2ca8325d8eef4268dd738014ee9693fcb1")
+  }
+
+  test("writer route pin: untagged frame with a runtime-typed column") {
+    val df = graft.sources.ZsonReader.fromValues(spark, zvals((0 until 3000).map(i =>
+      if (i % 2 == 0) s"""{a:$i,b:"x$i"}""" else s"""{a:"s$i",b:"y"}""")), tag = false)
+    assert(df.schema.fields.exists(f => graft.sources.ZsonIO.isVariantType(f.dataType)))
+    pinRoute("runtime", df, 3000,
+      "a42e98090f19f9573d30a4bb750403ad8b755aa62211546358732431f81d82e6")
+  }
+
+  test("writer route pin: this-only frame writes bare values") {
+    val bytes = writtenPart(spark.range(0, 3000).selectExpr("concat('v', id) as this"), "bare")
+    assert(ZngIO.decodeToZson(bytes).take(2).toSeq == Seq("\"v0\"", "\"v1\""))
+    assert(sha256(bytes) == "9211ae5e6e79afb938959ee62893390f469c8c62dfe91286bdd377d784ea0ae9")
+  }
+
+  test("complex types that differ only in nullability share one typedef") {
+    val df = spark.range(0, 3).selectExpr(
+      "named_struct('x', id) as r1", "named_struct('x', CASE WHEN id > 0 THEN id END) as r2",
+      "array(id) as a1", "array(CASE WHEN id > 0 THEN id END) as a2")
+    assert(df.schema("r1").dataType != df.schema("r2").dataType)
+    assert(df.schema("a1").dataType != df.schema("a2").dataType)
+    val bytes = writtenPart(df, "nullability")
+    val file = java.nio.file.Files.createTempFile("graft-nullability", ".zng")
+    java.nio.file.Files.write(file, bytes)
+    // 30 = {x:int64}, 31 = [int64], 32 = the row record over them
+    val expectedTypes = Seq(0, 1, 1, 'x', 9, 1, 9,
+      0, 4, 2, 'r', '1', 30, 2, 'r', '2', 30, 2, 'a', '1', 31, 2, 'a', '2', 31).map(_.toByte)
+    assert(ZngIO.parseStream(file.toString)._1.toSeq == expectedTypes)
+    assert(ZngIO.decodeToZson(bytes).toSeq == Seq(
+      "{r1:{x:0},r2:{x:null},a1:[0],a2:[null]}",
+      "{r1:{x:1},r2:{x:1},a1:[1],a2:[1]}",
+      "{r1:{x:2},r2:{x:2},a1:[2],a2:[2]}"))
+    assert(sha256(bytes) == "c1df5452a841e5e27acbddf27168042efd874b2488f958cd53d67577cc95ba1b")
+  }
+
+  // ---- readers ----
+
+  private def frameCodes(b: Array[Byte]): Seq[Int] = {
+    val out = Seq.newBuilder[Int]
+    var p = 0
+    while (p < b.length) {
+      val code = b(p) & 0xff; p += 1
+      if (code != 0xff) {
+        var len = 0L; var shift = 0; var x = 0
+        while ({ x = b(p) & 0xff; p += 1; len |= (x & 0x7fL) << shift; shift += 7; (x & 0x80) != 0 }) ()
+        p += ((len << 4) | (code & 0xf)).toInt
+        out += code
+      }
+    }
+    out.result()
+  }
+
+  test("whole-buffer readers agree on values and types and reject the version bit") {
+    import graft.sources.{ZType, ZValue, ZsonParser}
+    val lines1 = (0 until 400).map(i =>
+      if (i % 4 == 0) s"""{a:$i,s:"the same text in every fourth value"}""" else s"""{a:$i}""")
+    val lines2 = Seq("""{a:-1,s:"x"}""") // its type table is a prefix of stream 1's
+    val s1 = ZngIO.encodeTypedStream(zvals(lines1))
+    // stream 2: one small raw values frame, then a control frame (T=2)
+    val s2 = ZngIO.encodeTypedStream(zvals(lines2)).dropRight(1) ++
+      Array[Byte](0x23, 0, 'a', 'b', 'c') :+ 0xff.toByte
+    assert(frameCodes(s1).exists(c => ((c >> 4) & 3) == 1 && (c & 0x40) != 0), "LZ4 values frame")
+    assert(frameCodes(s2).forall(c => (c & 0x40) == 0) && frameCodes(s2).contains(0x23))
+    val all = s1 ++ s2
+    val file = java.nio.file.Files.createTempFile("graft-readers", ".zng")
+    java.nio.file.Files.write(file, all)
+
+    def typeText(v: ZValue): String = ZType.fullText(ZValue.typeOf(v))
+    val expected = zvals(lines1 ++ lines2).map(typeText)
+    assert(ZngIO.decodeToZValues(all).map(typeText).toSeq == expected)
+    assert(ZngIO.decodeToZson(all).map(l => typeText(new ZsonParser(l).parseOne())).toSeq == expected)
+    val (shapes, count, _) = ZngIO.scanMeta(all, 0L)
+    assert(count == expected.size && shapes.map(_._1) == expected.distinct)
+    // parseStream's output is what the lake re-frames into one stream
+    val (typesPayload, slices) = ZngIO.parseStream(file.toString)
+    val out = new java.io.ByteArrayOutputStream()
+    for ((t, p) <- Seq(0 -> typesPayload, 1 -> slices.flatMap(_._1).toArray)) {
+      out.write((t << 4) | (p.length & 0xf)); ZngIO.uvarint(out, (p.length >> 4).toLong)
+      out.write(p, 0, p.length)
+    }
+    out.write(0xff)
+    assert(ZngIO.decodeToZValues(out.toByteArray).map(typeText).toSeq == expected)
+
+    val bad = s1 ++ s2.updated(0, (s2(0) | 0x80).toByte)
+    java.nio.file.Files.write(file, bad)
+    intercept[IllegalArgumentException](ZngIO.decodeToZson(bad).size)
+    intercept[IllegalArgumentException](ZngIO.decodeToZValues(bad).size)
+    intercept[IllegalArgumentException](ZngIO.scanMeta(bad, 0L))
+    intercept[IllegalArgumentException](ZngIO.parseStream(file.toString))
+  }
+
+  test("the lake tiebreak sorts on the record-body bytes the writer stores") {
+    for ((name, df) <- Seq("fast" -> taggedFastFrame(300), "slow" -> taggedSlowFrame(300))) {
+      val one = df.coalesce(1)
+      val path = tmp(s"tiebreak-$name")
+      ZngIO.write(one, path)
+      val stored = ZngIO.parseStream(path)._2.map { case (slice, n) => slice.takeRight(n).toSeq }
+      val tb = graft.sources.ZngBody.tiebreak(one).getOrElse(fail(s"$name: no tiebreak"))
+      val keys = one.select(tb).collect().map(r => r.getAs[Array[Byte]](0).toSeq).toSeq
+      assert(keys == stored, name)
+    }
   }
 
   test("uint64 above 2^63-1 keeps its exact value through the Decimal " +
