@@ -361,27 +361,18 @@ object Bench {
       }
 
     // columnar projection over VNG — the segment-pruning axis: the DSv2
-    // scan fetches only the projected column's segments (positioned
-    // reads); the _noprune twin is the full-decode fallback reading and
-    // decoding every vector. The ratio is the columnar win of the format.
-    def timeVngCut(name: String, prune: Boolean): Seq[(String, Seq[Double])] =
-      if (!wanted(name)) Seq.empty
+    // scan fetches only the projected column's segments (positioned reads)
+    val vngResults =
+      if (!wanted("cut_vng")) Seq.empty
       else {
-        System.err.println(s"[bench] class $name")
-        spark.conf.set("graft.vng.prune", prune.toString)
-        try
-          Seq(name -> time3(() => runOnce(
-            graft.sources.VngIO.read(spark, vngDir)
-              .agg(count(col("uid")).as("n")))))
-        finally spark.conf.unset("graft.vng.prune")
+        System.err.println(s"[bench] class cut_vng")
+        Seq("cut_vng" -> time3(() => runOnce(
+          graft.sources.VngIO.read(spark, vngDir).agg(count(col("uid")).as("n")))))
       }
-    val vngResults = Seq(
-      timeVngCut("cut_vng", prune = true),
-      timeVngCut("cut_vng_noprune", prune = false)).flatten
 
-    // HETEROGENEOUS VNG projection — per-member pruned readers
-    // interleaved by the Dynamic tags stream vs the full-decode fallback:
-    // the multi-shape analog of cut_vng (conn + dns shapes in one stream)
+    // HETEROGENEOUS VNG projection — per-member column fills interleaved
+    // by the Dynamic tags stream: the multi-shape analog of cut_vng (conn
+    // + dns shapes in one stream)
     lazy val hetVngDir = {
       val d = s"$tmp/het.vng"
       val dns = spark.range(hetRows(sfDir) / 20).select(
@@ -395,20 +386,13 @@ object Bench {
         graft.operators.Het.fuseTagged(conn, dns), d)
       d
     }
-    def timeVngHetCut(name: String, prune: Boolean): Seq[(String, Seq[Double])] =
-      if (!wanted(name)) Seq.empty
+    val hetVngResults =
+      if (!wanted("cut_vng_het")) Seq.empty
       else {
-        System.err.println(s"[bench] class $name")
-        spark.conf.set("graft.vng.prune", prune.toString)
-        try
-          Seq(name -> time3(() => runOnce(
-            graft.sources.VngIO.read(spark, hetVngDir)
-              .agg(count(col("ts")).as("n")))))
-        finally spark.conf.unset("graft.vng.prune")
+        System.err.println(s"[bench] class cut_vng_het")
+        Seq("cut_vng_het" -> time3(() => runOnce(
+          graft.sources.VngIO.read(spark, hetVngDir).agg(count(col("ts")).as("n")))))
       }
-    val hetVngResults = Seq(
-      timeVngHetCut("cut_vng_het", prune = true),
-      timeVngHetCut("cut_vng_het_noprune", prune = false)).flatten
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
 
     val samples = headlineResults ++ ingestResults ++ searchResults ++ fieldSearchResults ++ scanZng ++ vngResults ++ hetVngResults

@@ -95,7 +95,9 @@ object HadoopFs {
     */
   final class RangeReader(conf: Map[String, String], path: String) extends AutoCloseable {
     private val p = new Path(path)
-    private val in = p.getFileSystem(confOf(conf)).open(p)
+    private val fs = p.getFileSystem(confOf(conf))
+    private val in = fs.open(p)
+    lazy val length: Long = fs.getFileStatus(p).getLen
     def read(pos: Long, len: Int): Array[Byte] = {
       val buf = new Array[Byte](len)
       in.readFully(pos, buf)

@@ -235,4 +235,24 @@ object Lz4Block {
     */
   def compress(src: Array[Byte], len: Int, dst: Array[Byte]): Int =
     local.get().compressBlock(src, len, dst)
+
+  private val decompressor = net.jpountz.lz4.LZ4Factory.fastestInstance().safeDecompressor()
+
+  /** Inflate the block src[off, off+len) of untrusted file bytes, which
+    * must decode to exactly `size` bytes: a malformed block, any other
+    * result length, or a `size` no block of `len` bytes can reach (one
+    * input byte yields at most 255 output bytes) is a corrupt `format`
+    * object.
+    */
+  def decompress(src: Array[Byte], off: Int, len: Int, size: Long, format: String): Array[Byte] = {
+    def corrupt(why: String): Nothing =
+      throw new IllegalArgumentException(s"$format: corrupt LZ4 block ($why)")
+    if (size < 0 || size > 255L * len) corrupt(s"$len bytes cannot inflate to $size")
+    val out = new Array[Byte](size.toInt)
+    val n =
+      try decompressor.decompress(src, off, len, out, 0, out.length)
+      catch { case e: net.jpountz.lz4.LZ4Exception => corrupt(e.getMessage) }
+    if (n != size) corrupt(s"inflated to $n bytes, expected $size")
+    out
+  }
 }

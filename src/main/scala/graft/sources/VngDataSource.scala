@@ -8,18 +8,20 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** DataSource V2 batch source for single-record-shape VNG streams — the
-  * pruned-columnar half of VngIO.read. VNG is the reference's columnar
-  * format (vng/, one metadata tree + per-vector data segments); this
-  * scan turns Catalyst's column pruning into SEGMENT-LEVEL I/O: a
-  * pruned-away field's segments are never read (positioned reads skip
-  * them entirely), never LZ4-decoded, never value-decoded. A count()-
-  * class query reads only each file's metadata section.
+/** DataSource V2 batch source for VNG record streams — one record shape
+  * or several (a Dynamic root) — the columnar half of VngIO.read. VNG is
+  * the reference's columnar format (vng/, one metadata tree + per-vector
+  * data segments); this scan fills column vectors and turns Catalyst's
+  * column pruning into SEGMENT-LEVEL I/O: a pruned-away field's segments
+  * are never read (positioned reads skip them entirely), never
+  * LZ4-decoded, never value-decoded. A count()-class query reads only
+  * each file's metadata section.
   *
   * Options (set by VngIO.read): `files` (newline-separated part list),
-  * `shape` (the stream's record shape text). Filters are not consumed
-  * here — parquet-grade stats pruning would need per-segment min/max the
-  * format doesn't carry; Spark evaluates every predicate above the scan.
+  * `shapes` (the streams' record shape texts), `counts` and `sizes`
+  * (per-file row counts and byte sizes). Filters are not consumed here —
+  * parquet-grade stats pruning would need per-segment min/max the format
+  * doesn't carry; Spark evaluates every predicate above the scan.
   */
 class VngDataSource extends TableProvider {
   override def supportsExternalMetadata(): Boolean = true
@@ -82,7 +84,6 @@ private class VngScanBuilder(full: StructType, options: CaseInsensitiveStringMap
       files = files,
       shapes = Option(options.get("shapes"))
         .map(_.split('\n').toIndexedSeq.filter(_.nonEmpty))
-        .orElse(Option(options.get("shape")).map(Seq(_)))
         .getOrElse(Seq.empty),
       required = required,
       confMap = HadoopFs.confMap(SparkSession.active),
@@ -140,66 +141,28 @@ private class VngScan(files: Seq[String], shapes: Seq[String], required: StructT
   }
   override def readSchema(): StructType = required
 
-  // vectorized when every projected field is a vectorizable primitive in
-  // every shape that carries it AND the merged frame gave it a plain
-  // (non-variant) type (decided from the shape TEXTS — no file I/O): the
-  // reader then fills column vectors straight from the segments and
-  // Spark's codegen'd ColumnarToRow takes over, like the parquet path.
-  // Heterogeneous streams interleave per-member fill sets by the Dynamic
-  // tags; cross-shape TYPE CONFLICTS (variant columns) keep the pruned
-  // row reader, whose per-value boxing builds the variant carrier.
-  private val columnarOk: Boolean = {
-    val enabled = SparkSession.active.conf
-      .getOption("graft.vng.vectorized").forall(_.toBoolean)
-    enabled && shapes.nonEmpty && (try {
-      val perShape: Seq[Map[String, ZType]] = shapes.map { s =>
-        // a null-WRAPPED shape (typed-null record rows) must keep the row
-        // reader: the meta root is MNulls-wrapped there and the vectorized
-        // member fills cannot represent top-level null rows
-        if (ZType.isNullWrap(s)) throw new IllegalArgumentException("null-wrapped shape")
-        ZType.strip(ZsonParser.parseType(s)) match {
-          case ZType.Rec(fs) => fs.toMap
-          case _ => throw new IllegalArgumentException("non-record shape")
-        }
-      }
-      required.fields.forall { f =>
-        f.name == graft.operators.Het.typeTag ||
-        (!ZsonIO.isVariantType(f.dataType) &&
-          perShape.forall(_.get(f.name).forall(VngIO.vectorizableType)))
-      }
-    } catch { case _: Exception => false })
-  }
-
   override def toBatch: Batch = this
   override def description(): String =
     s"vng files=${files.length} shapes=${shapes.length} " +
-      s"columns=${required.fieldNames.mkString(",")}" +
-      (if (columnarOk) " vectorized" else "")
+      s"columns=${required.fieldNames.mkString(",")} vectorized"
   override def planInputPartitions(): Array[InputPartition] =
     files.map(VngPartition(_): InputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    new VngReaderFactory(shapes.headOption.getOrElse(""), required, confMap, columnarOk)
+    new VngReaderFactory(required, confMap)
 }
 
-private class VngReaderFactory(shape: String, required: StructType,
-    confMap: Map[String, String], columnar: Boolean) extends PartitionReaderFactory {
-  override def supportColumnarReads(partition: InputPartition): Boolean = columnar
+/** Every VNG scan is columnar: Spark asks only for batch readers. */
+private class VngReaderFactory(required: StructType, confMap: Map[String, String])
+    extends PartitionReaderFactory {
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val file = partition.asInstanceOf[VngPartition].file
-    val (it, closeFn) = VngIO.prunedRows(confMap, file, required)
-    new PartitionReader[InternalRow] {
-      private var row: InternalRow = _
-      override def next(): Boolean = { val h = it.hasNext; if (h) row = it.next(); h }
-      override def get(): InternalRow = row
-      override def close(): Unit = closeFn()
-    }
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("vng scans read column batches")
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val file = partition.asInstanceOf[VngPartition].file
-    val (it, closeFn) = VngIO.columnarBatches(confMap, file, required, shape)
+    val (it, closeFn) = VngIO.columnarBatches(confMap, file, required)
     new PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
       private var batch: org.apache.spark.sql.vectorized.ColumnarBatch = _
       override def next(): Boolean = { val h = it.hasNext; if (h) batch = it.next(); h }

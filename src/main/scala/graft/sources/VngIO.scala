@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types._
 
 import java.io.ByteArrayOutputStream
 import scala.collection.mutable
@@ -516,25 +517,73 @@ object VngIO {
 
   // ---- readers --------------------------------------------------------------
 
-  private def decompressSeg(raw: Array[Byte], s: Seg): Array[Byte] = s.format match {
-    case 0 => raw
-    case 1 =>
-      val out = new Array[Byte](s.memLength.toInt)
-      net.jpountz.lz4.LZ4Factory.fastestInstance().fastDecompressor()
-        .decompress(raw, 0, out, 0, s.memLength.toInt)
-      out
-    case other => throw new IllegalArgumentException(s"vng: unknown compression format $other")
+  private def corrupt(what: String): Nothing =
+    throw new IllegalArgumentException(s"vng: corrupt $what")
+
+  private def le64(b: Array[Byte], off: Int): Long =
+    (0 until 8).map(i => (b(off + i) & 0xffL) << (8 * i)).sum
+
+  /** One opened object: the header checked against the object's `size`,
+    * the parsed metadata, and a segment fetch bounded by the data
+    * section. `read(pos, len)` returns `len` bytes at `pos` — a positioned
+    * file read or a slice of an in-memory object.
+    */
+  private final class Handle(read: (Long, Int) => Array[Byte], size: Long,
+      name: String, onClose: () => Unit) extends AutoCloseable {
+    // header.go: 'V','N','G',0, version u32 LE, metaSize u64 LE, dataSize u64 LE
+    private val (metaSize, dataSize) = {
+      // shorter than the fixed header: the reference reader surfaces the
+      // raw io EOF (vng/object.go ReadHeader), not a format error
+      if (size < 24) throw new IllegalArgumentException(s"$name: EOF")
+      val head = read(0, 24)
+      require(head(0) == 'V' && head(1) == 'N' && head(2) == 'G' && head(3) == 0,
+        s"not a VNG file: $name")
+      val (m, d) = (le64(head, 8), le64(head, 16))
+      if (m < 0 || m > math.min(size - 24, Int.MaxValue.toLong))
+        corrupt(s"metadata size $m in a $size-byte object: $name")
+      if (d < 0 || d > size - 24 - m) corrupt(s"data size $d in a $size-byte object: $name")
+      (m.toInt, d)
+    }
+    val meta: Meta = parseMeta(
+      ZngIO.decodeToZValues(read(24, metaSize), unionKeepsMember = true).nextOption()
+        .getOrElse(throw new IllegalArgumentException("vng: empty metadata section")))
+    val fetch: Seg => Array[Byte] = s => {
+      if (s.offset < 0 || s.length < 0 || s.length > Int.MaxValue || s.offset > dataSize - s.length)
+        corrupt(s"segment ${s.offset}+${s.length} past the $dataSize-byte data section: $name")
+      val raw = read(24L + metaSize + s.offset, s.length.toInt)
+      s.format match {
+        case 0 => raw
+        case 1 => Lz4Block.decompress(raw, 0, raw.length, s.memLength, "vng")
+        case other => throw new IllegalArgumentException(s"vng: unknown compression format $other")
+      }
+    }
+    def close(): Unit = onClose()
   }
 
-  /** Segment slice at a base offset — lets the full-decode path fetch
-    * straight from the file buffer instead of first duplicating the whole
-    * data section (one near-file-size array per task, pure GC pressure on
-    * the 32-way concurrent fallback scan).
-    */
-  private def segBytesAt(data: Array[Byte], base: Int, s: Seg): Array[Byte] =
-    decompressSeg(
-      java.util.Arrays.copyOfRange(data, base + s.offset.toInt,
-        base + (s.offset + s.length).toInt), s)
+  private object Handle {
+    def apply(bytes: Array[Byte], name: String): Handle =
+      new Handle((pos, len) => java.util.Arrays.copyOfRange(bytes, pos.toInt, pos.toInt + len),
+        bytes.length.toLong, name, () => ())
+
+    /** Plain files fetch segments with POSITIONED reads — only the byte
+      * ranges of the columns a query needs are ever read, the point of a
+      * columnar format on a 100 TB object store. Gzipped files decompress
+      * once in memory (gzip streams can't seek); pruning still skips the
+      * LZ4 + value decode of unneeded columns.
+      */
+    def open(conf: Map[String, String], path: String): Handle = {
+      val r = new HadoopFs.RangeReader(conf, path)
+      val gzipped =
+        try r.length >= 2 && { val m = r.read(0, 2); (m(0) & 0xff) == 0x1f && (m(1) & 0xff) == 0x8b }
+        catch { case e: Throwable => r.close(); throw e }
+      if (gzipped) {
+        r.close()
+        Handle(Gzip.maybeGunzip(HadoopFs.readAll(conf, path)), path)
+      } else
+        try new Handle(r.read, r.length, path, () => r.close())
+        catch { case e: Throwable => r.close(); throw e }
+    }
+  }
 
   private sealed trait Rd { def next(): ZValue }
 
@@ -661,25 +710,14 @@ object VngIO {
 
   /** Decode one VNG object to its typed values. */
   def decodeToZValues(bytes: Array[Byte]): Iterator[ZValue] = {
-    require(bytes.length >= 24 && bytes(0) == 'V' && bytes(1) == 'N' &&
-      bytes(2) == 'G' && bytes(3) == 0, "not a VNG file")
-    def leLong(off: Int, n: Int): Long =
-      (0 until n).map(i => (bytes(off + i) & 0xffL) << (8 * i)).sum
-    val metaSize = leLong(8, 8).toInt
-    val metaBytes = java.util.Arrays.copyOfRange(bytes, 24, 24 + metaSize)
-    val metaVal = ZngIO.decodeToZValues(metaBytes, unionKeepsMember = true).toSeq.headOption.getOrElse(
-      throw new IllegalArgumentException("vng: empty metadata section"))
-    // segments fetch straight from the file buffer (no whole-data-section
-    // duplicate per task)
-    val dataOff = 24 + metaSize
-    val fetch: Seg => Array[Byte] = s => segBytesAt(bytes, dataOff, s)
-    parseMeta(metaVal) match {
+    val h = Handle(bytes, "vng object")
+    h.meta match {
       case MDynamic(tags, values, length) =>
-        val tagRd = new Int64Rd(fetch(tags))
-        val rds = values.map(newRd(_, fetch))
+        val tagRd = new Int64Rd(h.fetch(tags))
+        val rds = values.map(newRd(_, h.fetch))
         Iterator.range(0L, length).map(_ => rds(tagRd.next().toInt).next())
       case single =>
-        val rd = newRd(single, fetch)
+        val rd = newRd(single, h.fetch)
         Iterator.range(0L, metaLen(single)).map(_ => rd.next())
     }
   }
@@ -702,61 +740,7 @@ object VngIO {
     }.count(): Unit
   }
 
-  // ---- meta-only scan + pruned columnar access ------------------------------
-
-  private def leL(b: Array[Byte], off: Int, n: Int): Long =
-    (0 until n).map(i => (b(off + i) & 0xffL) << (8 * i)).sum
-
-  private def parseMetaBytes(metaBytes: Array[Byte]): Meta = {
-    val metaVal = ZngIO.decodeToZValues(metaBytes, unionKeepsMember = true).toSeq.headOption
-      .getOrElse(throw new IllegalArgumentException("vng: empty metadata section"))
-    parseMeta(metaVal)
-  }
-
-  /** A file opened for columnar access: parsed metadata plus a segment
-    * fetcher. Plain files fetch segments with POSITIONED reads — only the
-    * byte ranges of the columns a query needs are ever read, the point of
-    * a columnar format on a 100 TB object store. Gzipped files decompress
-    * once in memory (gzip streams can't seek); pruning still skips the
-    * LZ4 + value decode of unneeded columns.
-    */
-  private final class Handle(conf: Map[String, String], path: String) extends AutoCloseable {
-    private val (metaRoot, dataStart, reader, inlineBytes) = {
-      val r = new HadoopFs.RangeReader(conf, path)
-      val head =
-        try r.read(0, 24)
-        catch {
-          case _: java.io.EOFException =>
-            // shorter than the fixed header — not VNG, not a read error
-            r.close()
-            // shorter than the fixed header: the reference reader surfaces
-            // the raw io EOF (vng/object.go ReadHeader)
-            throw new IllegalArgumentException(s"$path: EOF")
-          case e: Throwable => r.close(); throw e
-        }
-      if ((head(0) & 0xff) == 0x1f && (head(1) & 0xff) == 0x8b) {
-        r.close()
-        val bytes = Gzip.maybeGunzip(HadoopFs.readAll(conf, path))
-        require(bytes.length >= 24 && bytes(0) == 'V' && bytes(1) == 'N' &&
-          bytes(2) == 'G' && bytes(3) == 0, s"not a VNG file: $path")
-        val metaSize = leL(bytes, 8, 8).toInt
-        (parseMetaBytes(java.util.Arrays.copyOfRange(bytes, 24, 24 + metaSize)),
-          24L + metaSize, null: HadoopFs.RangeReader, bytes)
-      } else {
-        require(head(0) == 'V' && head(1) == 'N' && head(2) == 'G' && head(3) == 0,
-          s"not a VNG file: $path")
-        val metaSize = leL(head, 8, 8).toInt
-        (parseMetaBytes(r.read(24, metaSize)), 24L + metaSize, r, null: Array[Byte])
-      }
-    }
-    def meta: Meta = metaRoot
-    val fetch: Seg => Array[Byte] = s =>
-      if (inlineBytes != null)
-        decompressSeg(java.util.Arrays.copyOfRange(inlineBytes,
-          (dataStart + s.offset).toInt, (dataStart + s.offset + s.length).toInt), s)
-      else decompressSeg(reader.read(dataStart + s.offset, s.length.toInt), s)
-    def close(): Unit = if (reader != null) reader.close()
-  }
+  // ---- meta-only discovery ----------------------------------------------------
 
   private def rootMembers(m: Meta): Vector[Meta] = m match {
     case MDynamic(_, vs, _) => vs
@@ -789,7 +773,7 @@ object VngIO {
 
   /** Per-file discovery result, derived from header + metadata section
     * only (the data section is untouched except for time columns' ns
-    * probe). `shapes` is Some(texts) iff the file is pruned-scan
+    * probe). `shapes` is Some(texts) iff the file is columnar-scan
     * eligible: EVERY root member is a plain non-empty record (no
     * top-level nulls, no bare-primitive stream) — one member for a
     * homogeneous stream, several for a Dynamic (heterogeneous) root, in
@@ -802,12 +786,11 @@ object VngIO {
 
   private def scanFileMeta(conf: Map[String, String], path: String,
       len: Long, mtime: Long): FileMeta = {
-    val h = new Handle(conf, path)
+    val h = Handle.open(conf, path)
     try {
       val members = rootMembers(h.meta)
       // Named-wrapped records are shaped too (the text keeps the name, the
-      // readers unwrap to the record) — they previously fell all the way
-      // to the full-decode scan
+      // columnar scan unwraps to the record)
       def recUnder(x: Meta): Option[MRecord] = x match {
         case r: MRecord => Some(r)
         case MNamed(_, v) => recUnder(v)
@@ -825,92 +808,7 @@ object VngIO {
     } finally h.close()
   }
 
-  /** Executor-side pruned columnar read of one file: readers are built
-    * ONLY for the requested top-level fields, so unrequested columns'
-    * segments are never fetched, decompressed, or decoded — and a
-    * count()-class scan (empty required schema) reads nothing but the
-    * metadata section. Heterogeneous (Dynamic-root) files build one
-    * per-member reader set and interleave rows by the Dynamic tags
-    * stream (reference runtime/vcache/object.go fetches per-type
-    * projections the same way), so a one-column projection over a
-    * multi-shape stream still reads only that column's segments of each
-    * member. Returns the row iterator plus a close handle.
-    */
-  private[sources] def prunedRows(conf: Map[String, String], path: String,
-      required: org.apache.spark.sql.types.StructType)
-      : (Iterator[org.apache.spark.sql.catalyst.InternalRow], () => Unit) = {
-    val h = new Handle(conf, path)
-    try {
-      // per-field ZValue→Catalyst-internal conversion (no external Row,
-      // no whole-row converter pass); merged-frame variant columns box
-      // per value exactly like the full-decode path (same toExternal)
-      def colsFor(orig: Meta, rec: MRecord): Array[() => Any] = {
-        val shapeText = ZType.fullText(metaType(orig))
-        val byName = rec.fields.toMap
-        required.fields.map { f =>
-          if (f.name == graft.operators.Het.typeTag) {
-            val tag = org.apache.spark.unsafe.types.UTF8String.fromString(shapeText)
-            () => tag
-          } else byName.get(f.name) match {
-            case Some(m) =>
-              val rd = newRd(m, h.fetch)
-              val dt = f.dataType
-              val conv = ZngIO.extToInternal(dt)
-              () => {
-                val ext = ZValue.toExternal(rd.next(), dt)
-                if (ext == null) null else conv(ext)
-              }
-            case None => () => null
-          }
-        }
-      }
-      val width = required.fields.length
-      def rowFrom(cols: Array[() => Any]): org.apache.spark.sql.catalyst.InternalRow = {
-        val arr = new Array[Any](width)
-        var i = 0
-        while (i < width) { arr(i) = cols(i)(); i += 1 }
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(arr)
-      }
-      def recOf(m: Meta): MRecord = m match {
-        case r: MRecord => r
-        case MNamed(_, v) => recOf(v) // named record roots unwrap; tag keeps the name
-        case other => throw new IllegalStateException(
-          s"vng pruned scan expects record roots, got ${other.getClass.getSimpleName}")
-      }
-      val it = h.meta match {
-        case MDynamic(tags, members, length) =>
-          val memberCols = members.map(m => colsFor(m, recOf(m)))
-          val tagRd = new Int64Rd(h.fetch(tags))
-          Iterator.range(0L, length).map(_ => rowFrom(memberCols(tagRd.next().toInt)))
-        case single =>
-          val cols = colsFor(single, recOf(single))
-          Iterator.range(0L, recOf(single).length).map(_ => rowFrom(cols))
-      }
-      (it, () => h.close())
-    } catch { case e: Throwable => h.close(); throw e }
-  }
-
-  // ---- vectorized (ColumnarBatch) reads -------------------------------------
-
-  /** The primitive zed types the vectorized filler handles — everything a
-    * typical analytic scan projects. Containers/unions/uint64/type values
-    * fall back to the row reader.
-    */
-  private[sources] def vectorizableType(t: ZType): Boolean = ZType.strip(t) match {
-    case Prim("int8") | Prim("int16") | Prim("int32") | Prim("int64") |
-         Prim("uint8") | Prim("uint16") | Prim("uint32") |
-         Prim("duration") | Prim("time") |
-         Prim("float16") | Prim("float32") | Prim("float64") |
-         Prim("bool") | Prim("string") | Prim("bytes") |
-         Prim("ip") | Prim("net") => true
-    case EnumT(_) => true
-    // arrays of vectorizable elements fill the child vector (embeddings!);
-    // SETS are excluded — their row-path decode normalizes element order
-    case Arr(e) => vectorizableType(e)
-    // nested records fill struct child vectors (zeek's id record)
-    case Rec(fs) => fs.nonEmpty && fs.forall { case (_, ft) => vectorizableType(ft) }
-    case _ => false
-  }
+  // ---- columnar (ColumnarBatch) reads ---------------------------------------
 
   private type WVec = org.apache.spark.sql.execution.vectorized.WritableColumnVector
 
@@ -923,9 +821,9 @@ object VngIO {
     def appendNull(v: WVec): Unit = { v.appendNull(); () }
   }
 
-  private def appendNullFor(v: WVec, target: org.apache.spark.sql.types.DataType): Unit =
+  private def appendNullFor(v: WVec, target: DataType): Unit =
     target match {
-      case _: org.apache.spark.sql.types.StructType => v.appendStruct(true): Unit
+      case _: StructType => v.appendStruct(true): Unit
       case _ => v.appendNull(): Unit
     }
 
@@ -944,7 +842,7 @@ object VngIO {
     * the target struct; unmatched target fields stay null).
     */
   private final class StructVFill(subs: Array[(Int, VFill)],
-      nullIdxs: Array[(Int, org.apache.spark.sql.types.DataType)]) extends VFill {
+      nullIdxs: Array[(Int, DataType)]) extends VFill {
     def append(v: WVec): Unit = {
       v.appendStruct(false): Unit
       var i = 0
@@ -965,8 +863,7 @@ object VngIO {
     * dict; entries pre-convert once.
     */
   private final class DictVFill(bytes: Array[Byte],
-      entries: Array[WVec => Unit],
-      target: org.apache.spark.sql.types.DataType) extends VFill {
+      entries: Array[WVec => Unit], target: DataType) extends VFill {
     private var i = 0
     def append(v: WVec): Unit = {
       val idx = bytes(i) & 0xff
@@ -975,119 +872,149 @@ object VngIO {
     }
   }
 
-  /** Plain primitive segment: decodes zng-tagged payloads straight into
-    * the vector — no ZValue, no Row, no per-value boxing.
+  private val TwoTo64 = java.math.BigInteger.ONE.shiftLeft(64)
+
+  /** Decoder of one zng-tagged primitive payload of `n` bytes straight
+    * into the vector — no ZValue, no Row, no per-value boxing — for the
+    * (zed type, column type) pairs below; null for every other pair.
     */
-  private final class PrimVFill(c: ZngIO.Cursor, t: ZType,
-      target: org.apache.spark.sql.types.DataType) extends VFill {
-    import org.apache.spark.sql.types._
-    private val utf8 = java.nio.charset.StandardCharsets.UTF_8
-    private val enumSyms: Array[Array[Byte]] = ZType.strip(t) match {
-      case EnumT(ss) => ss.map(_.getBytes(utf8)).toArray
-      case _ => null
-    }
-    private val app: (WVec, Int) => Unit = ZType.strip(t) match {
-      case Prim("int8") | Prim("int16") | Prim("int32") | Prim("int64") |
-           Prim("duration") =>
-        (v, n) => { v.appendLong(c.signedAt(n)); () }
-      case Prim("time") =>
-        if (target == LongType) (v, n) => { v.appendLong(c.signedAt(n)); () }
-        else (v, n) => { v.appendLong(Math.floorDiv(c.signedAt(n), 1000L)); () }
-      case Prim("uint8") | Prim("uint16") | Prim("uint32") =>
-        (v, n) => { v.appendLong(c.unsignedAt(n)); () }
-      case Prim("float64") =>
-        (v, n) => { v.appendDouble(java.lang.Double.longBitsToDouble(c.unsignedAt(n))); () }
-      case Prim("float32") =>
-        (v, n) => { v.appendDouble(
+  private def primApp(t: ZType, target: DataType): (ZngIO.Cursor, WVec, Int) => Unit = {
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    (ZType.strip(t), target) match {
+      case (Prim("int8") | Prim("int16") | Prim("int32") | Prim("int64") | Prim("duration"),
+            LongType) =>
+        (c, v, n) => { v.appendLong(c.signedAt(n)); () }
+      case (Prim("time"), LongType) => (c, v, n) => { v.appendLong(c.signedAt(n)); () }
+      case (Prim("time"), TimestampType) =>
+        (c, v, n) => { v.appendLong(Math.floorDiv(c.signedAt(n), 1000L)); () }
+      case (Prim("uint8") | Prim("uint16") | Prim("uint32"), LongType) =>
+        (c, v, n) => { v.appendLong(c.unsignedAt(n)); () }
+      // decimal(20,0) stores the unscaled value's big-endian bytes
+      case (Prim("uint64"), dt) if dt == DecimalType(20, 0) =>
+        (c, v, n) => {
+          val u = java.math.BigInteger.valueOf(c.unsignedAt(n))
+          val b = (if (u.signum < 0) u.add(TwoTo64) else u).toByteArray
+          v.appendByteArray(b, 0, b.length); ()
+        }
+      case (Prim("float64"), DoubleType) =>
+        (c, v, n) => { v.appendDouble(java.lang.Double.longBitsToDouble(c.unsignedAt(n))); () }
+      case (Prim("float32"), DoubleType) =>
+        (c, v, n) => { v.appendDouble(
           java.lang.Float.intBitsToFloat(c.unsignedAt(n).toInt).toDouble); () }
-      case Prim("float16") =>
-        (v, n) => { v.appendDouble(ZngIO.halfToDouble(c.unsignedAt(n).toInt)); () }
-      case Prim("bool") =>
-        (v, n) => {
+      case (Prim("float16"), DoubleType) =>
+        (c, v, n) => { v.appendDouble(ZngIO.halfToDouble(c.unsignedAt(n).toInt)); () }
+      case (Prim("bool"), BooleanType) =>
+        (c, v, n) => {
           val b = n > 0 && c.buf(c.pos) == 1
           c.pos += n
           v.appendBoolean(b); ()
         }
-      case Prim("string") | Prim("bytes") =>
-        (v, n) => { v.appendByteArray(c.buf, c.pos, n); c.pos += n; () }
-      case Prim("ip") =>
-        (v, n) => {
+      case (Prim("string"), StringType) | (Prim("bytes"), BinaryType) =>
+        (c, v, n) => { v.appendByteArray(c.buf, c.pos, n); c.pos += n; () }
+      case (Prim("ip"), StringType) =>
+        (c, v, n) => {
           val s = ZngIO.ipText(c.bytes(n)).getBytes(utf8)
           v.appendByteArray(s, 0, s.length); ()
         }
-      case Prim("net") =>
-        (v, n) => {
+      case (Prim("net"), StringType) =>
+        (c, v, n) => {
           val b = c.bytes(n)
           val addr = java.util.Arrays.copyOfRange(b, 0, b.length / 2)
           val mask = java.util.Arrays.copyOfRange(b, b.length / 2, b.length)
           val s = (ZngIO.ipText(addr) + "/" + ZngIO.leadingOnes(mask)).getBytes(utf8)
           v.appendByteArray(s, 0, s.length); ()
         }
-      case EnumT(_) =>
-        (v, n) => {
-          val sym = enumSyms(ZngIO.unsignedOf(c.bytes(n)).toInt)
+      case (EnumT(ss), StringType) =>
+        val syms = ss.map(_.getBytes(utf8)).toArray
+        (c, v, n) => {
+          val sym = syms(ZngIO.unsignedOf(c.bytes(n)).toInt)
           v.appendByteArray(sym, 0, sym.length); ()
         }
-      case other => throw new IllegalStateException(s"vng vectorized fill: $other")
-    }
-    def append(v: WVec): Unit = {
-      val tag = c.uvarint()
-      if (tag == 0) { v.appendNull(); () } else app(v, (tag - 1).toInt)
+      case _ => null
     }
   }
 
-  /** Appender for an already-converted EXTERNAL value (Const columns,
-    * dict entries) — recursive so constant arrays fill the child vector.
+  /** Plain primitive segment through a `primApp` decoder. */
+  private final class PrimVFill(c: ZngIO.Cursor,
+      app: (ZngIO.Cursor, WVec, Int) => Unit) extends VFill {
+    def append(v: WVec): Unit = {
+      val tag = c.uvarint()
+      if (tag == 0) { v.appendNull(); () } else app(c, v, (tag - 1).toInt)
+    }
+  }
+
+  /** Every other (node, column type) pair: the reference decoder's value
+    * for the node (Rd), converted like a Const entry — sets (in normSet
+    * order), maps, unions, errors, type values and variant columns.
     */
-  private def extAppender(target: org.apache.spark.sql.types.DataType): (WVec, Any) => Unit =
-    target match {
-      case org.apache.spark.sql.types.ArrayType(et, _) =>
+  private final class ValueVFill(rd: Rd, target: DataType) extends VFill {
+    private val app = extAppender(target)
+    def append(v: WVec): Unit = app(v, ZValue.toExternal(rd.next(), target))
+    override def appendNull(v: WVec): Unit = appendNullFor(v, target)
+  }
+
+  /** Appender for an already-converted EXTERNAL value (ZValue.toExternal's
+    * output for `target`; null appends a null) — recursive so containers
+    * fill their child vectors.
+    */
+  private def extAppender(target: DataType): (WVec, Any) => Unit = {
+    val app: (WVec, Any) => Unit = target match {
+      case ArrayType(et, _) =>
         val sub = extAppender(et)
         (v, x) => {
           val s = x.asInstanceOf[scala.collection.Seq[Any]]
           v.appendArray(s.length): Unit
           val child = v.arrayData()
-          s.foreach(e => if (e == null) { child.appendNull(); () } else sub(child, e))
+          s.foreach(sub(child, _))
         }
-      case st: org.apache.spark.sql.types.StructType =>
+      // a map vector is an array of entries over a keys and a values child
+      case MapType(kt, vt, _) =>
+        val (ks, vs) = (extAppender(kt), extAppender(vt))
+        (v, x) => {
+          val m = x.asInstanceOf[scala.collection.Map[Any, Any]]
+          v.appendArray(m.size): Unit
+          val (keys, values) = (v.getChild(0), v.getChild(1))
+          m.foreach { case (k, e) => ks(keys, k); vs(values, e) }
+        }
+      case st: StructType =>
         val subs = st.fields.map(f => extAppender(f.dataType))
         (v, x) => {
           val r = x.asInstanceOf[org.apache.spark.sql.Row]
           v.appendStruct(false): Unit
           var i = 0
-          while (i < subs.length) {
-            val e = r.get(i)
-            val c = v.getChild(i)
-            if (e == null) appendNullFor(c, st.fields(i).dataType) else subs(i)(c, e)
-            i += 1
-          }
+          while (i < subs.length) { subs(i)(v.getChild(i), r.get(i)); i += 1 }
         }
-      case _ => (v, x) => x match {
-        case n: java.lang.Long => v.appendLong(n): Unit
-        case d: java.lang.Double => v.appendDouble(d): Unit
-        case b: java.lang.Boolean => v.appendBoolean(b): Unit
-        case s: String =>
-          val bs = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      case LongType => (v, x) => v.appendLong(x.asInstanceOf[Number].longValue): Unit
+      case IntegerType => (v, x) => v.appendInt(x.asInstanceOf[Number].intValue): Unit
+      case DoubleType => (v, x) => v.appendDouble(x.asInstanceOf[Number].doubleValue): Unit
+      case BooleanType => (v, x) => v.appendBoolean(x.asInstanceOf[Boolean]): Unit
+      case StringType =>
+        (v, x) => {
+          val bs = x.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
           v.appendByteArray(bs, 0, bs.length): Unit
-        case bs: Array[Byte] => v.appendByteArray(bs, 0, bs.length): Unit
-        case ts: java.sql.Timestamp =>
-          val inst = ts.toInstant
+        }
+      case BinaryType =>
+        (v, x) => { val bs = x.asInstanceOf[Array[Byte]]; v.appendByteArray(bs, 0, bs.length): Unit }
+      case TimestampType =>
+        (v, x) => {
+          val inst = x.asInstanceOf[java.sql.Timestamp].toInstant
           v.appendLong(Math.addExact(
             Math.multiplyExact(inst.getEpochSecond, 1000000L),
             (inst.getNano / 1000).toLong)): Unit
-        case other =>
-          throw new IllegalStateException(s"vng vectorized const: ${other.getClass}")
-      }
+        }
+      case dt: DecimalType =>
+        (v, x) => v.putDecimal(v.appendNotNull(),
+          Decimal(x.asInstanceOf[java.math.BigDecimal], dt.precision, dt.scale), dt.precision)
+      case other => (_, x) =>
+        throw new IllegalStateException(s"vng column fill: ${x.getClass} into $other")
     }
+    (v, x) => if (x == null) appendNullFor(v, target) else app(v, x)
+  }
 
-  private def constApp(value: ZValue,
-      target: org.apache.spark.sql.types.DataType): WVec => Unit = {
+  private def constApp(value: ZValue, target: DataType): WVec => Unit = {
     val ext = ZValue.toExternal(value, target)
-    if (ext == null) v => appendNullFor(v, target)
-    else {
-      val app = extAppender(target)
-      v => app(v, ext)
-    }
+    val app = extAppender(target)
+    v => app(v, ext)
   }
 
   /** Array column: lengths segment drives appendArray; elements fill the
@@ -1103,69 +1030,65 @@ object VngIO {
     }
   }
 
-  private def vecFill(m: Meta, fetch: Seg => Array[Byte],
-      target: org.apache.spark.sql.types.DataType): VFill = m match {
-    case MNamed(_, v) => vecFill(v, fetch, target)
-    case MNulls(runs, values, _) =>
-      new NullsVFill(new Int64Rd(fetch(runs)), vecFill(values, fetch, target))
-    case MConst(v, _) => new ConstVFill(constApp(v, target))
-    case MArray(_, lens, values, false) =>
-      val et = target match {
-        case org.apache.spark.sql.types.ArrayType(e, _) => e
-        case other => throw new IllegalStateException(s"vng array fill into $other")
-      }
-      new ArrayVFill(new Int64Rd(fetch(lens)), vecFill(values, fetch, et))
-    case MRecord(_, fields) =>
-      val st = target match {
-        case x: org.apache.spark.sql.types.StructType => x
-        case other => throw new IllegalStateException(s"vng struct fill into $other")
-      }
-      val byName = fields.toMap
-      val subs = Vector.newBuilder[(Int, VFill)]
-      val nulls = Vector.newBuilder[(Int, org.apache.spark.sql.types.DataType)]
-      st.fields.zipWithIndex.foreach { case (f, i) =>
-        byName.get(f.name) match {
-          case Some(m) => subs += ((i, vecFill(m, fetch, f.dataType)))
-          case None => nulls += ((i, f.dataType))
+  /** The one per-(metadata node, column type) fill decision. */
+  private def vecFill(m: Meta, fetch: Seg => Array[Byte], target: DataType): VFill = {
+    def value = new ValueVFill(newRd(m, fetch), target)
+    (m, target) match {
+      // a variant boxes the node's whole value: named, null and union
+      // wrappers are part of what it carries
+      case _ if ZsonIO.isVariantType(target) => value
+      case (MNamed(_, v), _) => vecFill(v, fetch, target)
+      case (MNulls(runs, values, _), _) =>
+        new NullsVFill(new Int64Rd(fetch(runs)), vecFill(values, fetch, target))
+      case (MConst(v, _), _) => new ConstVFill(constApp(v, target))
+      case (MArray(_, lens, values, false), ArrayType(et, _)) =>
+        new ArrayVFill(new Int64Rd(fetch(lens)), vecFill(values, fetch, et))
+      case (MRecord(_, fields), st: StructType) =>
+        val byName = fields.toMap
+        val subs = Vector.newBuilder[(Int, VFill)]
+        val nulls = Vector.newBuilder[(Int, DataType)]
+        st.fields.zipWithIndex.foreach { case (f, i) =>
+          byName.get(f.name) match {
+            case Some(m) => subs += ((i, vecFill(m, fetch, f.dataType)))
+            case None => nulls += ((i, f.dataType))
+          }
         }
-      }
-      new StructVFill(subs.result().toArray, nulls.result().toArray)
-    case MPrim(t, loc, dict, _) if dict.nonEmpty =>
-      new DictVFill(fetch(loc),
-        dict.map { case (v, _) => constApp(v, target) }.toArray, target)
-    case MPrim(t, loc, _, _) => new PrimVFill(new ZngIO.Cursor(fetch(loc), 0), t, target)
-    case other => throw new IllegalStateException(
-      s"vng vectorized fill on non-primitive meta: ${other.getClass.getSimpleName}")
+        new StructVFill(subs.result().toArray, nulls.result().toArray)
+      case (MPrim(_, loc, dict, _), _) if dict.nonEmpty =>
+        new DictVFill(fetch(loc), dict.map { case (v, _) => constApp(v, target) }.toArray, target)
+      case (MPrim(t, loc, _, _), _) =>
+        val app = primApp(t, target)
+        if (app == null) value else new PrimVFill(new ZngIO.Cursor(fetch(loc), 0), app)
+      case _ => value
+    }
   }
 
-  /** Vectorized pruned read: fills OnHeapColumnVectors straight from the
-    * projected columns' segments and emits ColumnarBatches — the scan
-    * stays columnar end-to-end (Spark's ColumnarToRow is codegen'd), the
-    * parquet-class path for analytic scans over VNG.
+  /** Columnar read of one file: fills OnHeapColumnVectors from the
+    * projected columns' segments only, so unrequested columns' segments
+    * are never fetched, decompressed or decoded, and a count()-class scan
+    * (empty required schema) reads nothing but the metadata section.
+    * Spark's codegen'd ColumnarToRow takes over, like the parquet path.
     *
-    * Heterogeneous (Dynamic-root) files vectorize too: one fill set per
-    * member, rows interleaved by the Dynamic tags stream into the same
-    * column vectors — a member lacking a projected column appends nulls,
-    * and the shape-tag column appends the row's member type text (the
-    * columnar twin of prunedRows' per-member readers; reference
+    * Heterogeneous (Dynamic-root) files build one fill set per member and
+    * interleave rows by the Dynamic tags stream into the same column
+    * vectors — a member lacking a projected column appends nulls, and the
+    * shape-tag column appends the row's member type text (reference
     * runtime/vcache/object.go fetches per-type projections the same way).
     */
   private[sources] def columnarBatches(conf: Map[String, String], path: String,
-      required: org.apache.spark.sql.types.StructType, shapeText: String,
-      batchSize: Int = 4096)
+      required: StructType, batchSize: Int = 4096)
       : (Iterator[org.apache.spark.sql.vectorized.ColumnarBatch], () => Unit) = {
     import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-    val h = new Handle(conf, path)
+    val h = Handle.open(conf, path)
     try {
-      // a Named-wrapped record root vectorizes like the record it wraps
-      // (the name only changes the type TAG text, kept from the original
-      // meta below); MNulls-wrapped roots (typed-null record rows) cannot
-      // — columnarOk rejects their shape texts so they take the row reader
+      // a Named-wrapped record root fills like the record it wraps (the
+      // name only changes the type TAG text, kept from the original meta
+      // below); discovery sends no other root here
       def unwrapRec(m: Meta): MRecord = m match {
         case r: MRecord => r
         case MNamed(_, v) => unwrapRec(v)
         case other => throw new IllegalStateException(
-          s"vng vectorized scan expects record roots, got ${other.getClass.getSimpleName}")
+          s"vng columnar scan expects record roots, got ${other.getClass.getSimpleName}")
       }
       val members: Vector[(Meta, MRecord)] =
         rootMembers(h.meta).map(m => m -> unwrapRec(m))
@@ -1239,14 +1162,14 @@ object VngIO {
     * pushdown fallback when the discovery counts weren't passed).
     */
   private[sources] def fileRowCount(conf: Map[String, String], path: String): Long = {
-    val h = new Handle(conf, path)
+    val h = Handle.open(conf, path)
     try metaLen(h.meta) finally h.close()
   }
 
   /** Schema inference for direct `spark.read.format(VngDataSource)` users
     * (VngIO.read supplies the schema itself after its distributed scan).
     */
-  private[sources] def inferSingleShape(spark: SparkSession, files: Seq[String]): org.apache.spark.sql.types.StructType = {
+  private[sources] def inferSingleShape(spark: SparkSession, files: Seq[String]): StructType = {
     val conf = HadoopFs.confMap(spark)
     val metas = files.map(f => scanFileMeta(conf, f, -1L, -1L))
     require(metas.forall(_.shapes.isDefined),
@@ -1262,7 +1185,6 @@ object VngIO {
     */
   def readStream(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types._
     val schema = read(spark, path).schema
     val cleaned = StructType(schema.fields.filterNot(_.name == graft.operators.Het.typeTag))
     spark.readStream.format("binaryFile")
@@ -1285,16 +1207,15 @@ object VngIO {
     * not a full second read of the stream (the columnar contract;
     * reference vng/object.go reads metadata first the same way).
     *
-    * Homogeneous record streams (the common case) then scan through a
-    * DataSource V2 table that prunes columns into the segment reader:
-    * `cut ts` over a wide VNG stream fetches the `ts` segments and
-    * nothing else. Heterogeneous streams fall back to full decode with
-    * the two-pass shape discovery (`graft.vng.prune=false` forces the
-    * fallback everywhere, the bench A/B axis).
+    * Record streams, homogeneous or heterogeneous, then scan through the
+    * columnar DataSource V2 table, which prunes columns into the segment
+    * reader: `cut ts` over a wide VNG stream fetches the `ts` segments and
+    * nothing else. Streams with non-record top-level values (bare
+    * primitives, typed nulls) have no columns to prune; they decode whole
+    * with the two-pass shape discovery.
     */
   def read(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val prune = spark.conf.getOption("graft.vng.prune").forall(_.toBoolean)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dataFiles = HadoopFs.dataFiles(spark, path)
@@ -1322,50 +1243,26 @@ object VngIO {
       scanned.foreach { case (p, m) => metaCache.put(p, m) }
     }
     val metas = statuses.map { case (p, _, _) => metaCache.get(p) }
-    // pruned DSv2 scan whenever every root member of every file is a
-    // plain record — homogeneous OR heterogeneous; shape texts keep
-    // first-appearance order (file order, then member order within the
-    // file's Dynamic root). The full-decode fallback remains only for
-    // streams with non-record top-level values (bare primitives, typed
-    // nulls) — by construction those have no columns to prune.
-    val shapeTexts: Option[Vector[String]] =
-      if (metas.forall(_.shapes.isDefined)) {
-        val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-        metas.foreach(_.shapes.get.foreach(seen.add))
-        Some(seen.toVector)
-      } else None
-    shapeTexts match {
-      case Some(shapes) if prune =>
-        val (_, full) = ZsonReader.frameSchema(shapes, tag = true, metas.exists(_.ns))
-        spark.read.format(classOf[VngDataSource].getName)
-          .schema(full)
-          .option("shapes", shapes.mkString("\n"))
-          .option("files", dataFiles.mkString("\n"))
-          // per-file row counts from discovery: count(*) answers from
-          // these without touching the files again (VngCountScan), and
-          // the scan reports them as statistics for join sizing
-          .option("counts", metas.map(_.count).mkString("\n"))
-          .option("sizes", statuses.map(_._2).mkString("\n"))
-          .load()
-      case _ =>
-        val rdd = spark.read.format("binaryFile").load(dataFiles: _*)
-          .select("content").as[Array[Byte]].rdd
-          .flatMap(bytes => decodeToZValues(Gzip.maybeGunzip(bytes)))
-        shapeTexts match {
-          case Some(shapes) =>
-            // full-decode requested (graft.vng.prune=false) but the shapes
-            // are already known from the metadata discovery — skip
-            // fromRDD's extra shape-discovery pass (it would decode the
-            // whole stream a second time just to learn what the metadata
-            // section said for kilobytes)
-            val discovered = shapes.zipWithIndex
-              .map { case (t, i) => (t, i.toLong) } ++
-              (if (metas.exists(_.ns))
-                 Seq(ZsonReader.nsSentinelKey -> Long.MaxValue)
-               else Seq.empty)
-            ZsonReader.fromShapes(spark, rdd, discovered.toArray)
-          case None => ZsonReader.fromRDD(spark, rdd)
-        }
-    }
+    if (metas.forall(_.shapes.isDefined)) {
+      // shape texts keep first-appearance order: file order, then member
+      // order within the file's Dynamic root
+      val seen = scala.collection.mutable.LinkedHashSet.empty[String]
+      metas.foreach(_.shapes.get.foreach(seen.add))
+      val shapes = seen.toVector
+      val (_, full) = ZsonReader.frameSchema(shapes, tag = true, metas.exists(_.ns))
+      spark.read.format(classOf[VngDataSource].getName)
+        .schema(full)
+        .option("shapes", shapes.mkString("\n"))
+        .option("files", dataFiles.mkString("\n"))
+        // per-file row counts from discovery: count(*) answers from
+        // these without touching the files again (VngCountScan), and
+        // the scan reports them as statistics for join sizing
+        .option("counts", metas.map(_.count).mkString("\n"))
+        .option("sizes", statuses.map(_._2).mkString("\n"))
+        .load()
+    } else
+      ZsonReader.fromRDD(spark, spark.read.format("binaryFile").load(dataFiles: _*)
+        .select("content").as[Array[Byte]].rdd
+        .flatMap(bytes => decodeToZValues(Gzip.maybeGunzip(bytes))))
   }
 }

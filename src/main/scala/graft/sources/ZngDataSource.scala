@@ -180,10 +180,8 @@ private class ZngScanBuilder(full: StructType, options: CaseInsensitiveStringMap
     // vectorized when every projected column is a vectorizable primitive
     // in EVERY shape (and the merged column type is atomic — conflict
     // columns are variants and fall back to the row path)
-    val vectorOk = {
-      val on = SparkSession.active.conf
-        .getOption("graft.zng.vectorized").forall(_.toBoolean)
-      on && shapeList.nonEmpty && (try {
+    val vectorOk =
+      shapeList.nonEmpty && (try {
         shapeList.forall { sh =>
           ZType.strip(ZsonParser.parseType(ZType.stripNullWrap(sh))) match {
             case ZType.Rec(fs) if fs.nonEmpty => fs.forall { case (n, ft) =>
@@ -194,7 +192,6 @@ private class ZngScanBuilder(full: StructType, options: CaseInsensitiveStringMap
           }
         }
       } catch { case _: Exception => false })
-    }
     new ZngScan(
       files = files,
       splits = Option(options.get("splits"))

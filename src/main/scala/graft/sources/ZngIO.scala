@@ -1424,12 +1424,8 @@ object ZngIO {
       val pc = new Cursor(raw, 0)
       val format = pc.u8()
       require(format == 0, s"zng: unknown compression format $format")
-      val usize = pc.uvarint().toInt
-      val comp = java.util.Arrays.copyOfRange(raw, pc.pos, raw.length)
-      val dec = net.jpountz.lz4.LZ4Factory.fastestInstance().fastDecompressor()
-      val buf = new Array[Byte](usize)
-      dec.decompress(comp, 0, buf, 0, usize)
-      buf
+      val usize = pc.uvarint()
+      Lz4Block.decompress(raw, pc.pos, raw.length - pc.pos, usize, "zng")
     }
 
   /** Lazily decode a ZNG byte stream (possibly several concatenated

@@ -109,16 +109,14 @@ class PropertySpec extends AnyFunSuite {
       graft.sources.VngIO.write(df, s"$tmp/v")
       def rows(read: => org.apache.spark.sql.DataFrame): Seq[String] =
         read.orderBy(col("id")).drop("__type").collect().map(_.toString).toSeq
-      for ((flag, path) <- Seq("graft.zng.vectorized" -> s"$tmp/z",
-                               "graft.vng.vectorized" -> s"$tmp/v")) {
-        def read() =
-          if (path.endsWith("/z")) graft.sources.ZngIO.read(spark, path)
-          else graft.sources.VngIO.read(spark, path)
-        val vec = rows(read())
-        spark.conf.set(flag, "false")
-        val row = try rows(read()) finally spark.conf.unset(flag)
-        assert(vec == row, s"seed=$seed $flag: vectorized != row path")
-        assert(vec.length == 700, s"seed=$seed $flag: ${vec.length} rows")
+      // the reference: the source frame itself
+      val source = rows(df)
+      for ((format, read) <- Seq(
+             "zng" -> (() => graft.sources.ZngIO.read(spark, s"$tmp/z")),
+             "vng" -> (() => graft.sources.VngIO.read(spark, s"$tmp/v")))) {
+        val scanned = rows(read())
+        assert(scanned == source, s"seed=$seed $format: scan != source frame")
+        assert(scanned.length == 700, s"seed=$seed $format: ${scanned.length} rows")
       }
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
     }
@@ -144,22 +142,20 @@ class PropertySpec extends AnyFunSuite {
       graft.sources.ZngIO.encodeTypedStream(vals))
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$tmp/v", "p.vng"),
       graft.sources.VngIO.encodeObject(vals.iterator))
-    for ((flag, path) <- Seq("graft.zng.vectorized" -> s"$tmp/z",
-                             "graft.vng.vectorized" -> s"$tmp/v")) {
-      def read() =
-        if (path.endsWith("/z")) graft.sources.ZngIO.read(spark, path)
-        else graft.sources.VngIO.read(spark, path)
-      def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-        df.orderBy(col("id")).collect().map(_.toString).toSeq
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.orderBy(col("id")).collect().map(_.toString).toSeq
+    // the reference: the same values, framed without any scan
+    val reference = rows(graft.sources.ZsonReader.fromValues(spark, vals, tag = true))
+    for ((format, read) <- Seq(
+           "zng" -> (() => graft.sources.ZngIO.read(spark, s"$tmp/z")),
+           "vng" -> (() => graft.sources.VngIO.read(spark, s"$tmp/v")))) {
       val vecDf = read()
       assert(vecDf.queryExecution.executedPlan.toString.contains("vectorized"),
-        s"$flag: expected vectorized plan")
+        s"$format: expected vectorized plan")
       assert(vecDf.schema("ts").dataType == org.apache.spark.sql.types.LongType,
-        s"$flag: sub-µs times must ride the ns carrier")
+        s"$format: sub-µs times must ride the ns carrier")
       val vec = rows(vecDf)
-      spark.conf.set(flag, "false")
-      val row = try rows(read()) finally spark.conf.unset(flag)
-      assert(vec == row, s"$flag: vectorized != row on wire-only types")
+      assert(vec == reference, s"$format: vectorized scan != reference on wire-only types")
       assert(vec.length == 400)
     }
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))

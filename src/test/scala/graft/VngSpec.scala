@@ -25,9 +25,31 @@ class VngSpec extends AnyFunSuite with BeforeAndAfterAll {
     p.resolve("out").toString
   }
 
-  import graft.sources.{ZsonParser, ZValue}
+  import graft.sources.{ZngIO, ZsonIO, ZsonParser, ZsonReader, ZType, ZValue}
 
   private def vals(zson: String) = sources.ZsonParser.parseAll(zson).iterator
+
+  private def partFiles(path: String): Seq[java.nio.file.Path] =
+    new java.io.File(path).listFiles().filter(_.getName.endsWith(".vng"))
+      .map(_.toPath).sortBy(_.getFileName.toString).toSeq
+
+  /** The values of every part file through the reference decoder. */
+  private def referenceValues(path: String): Seq[ZValue] =
+    partFiles(path).flatMap(f => VngIO.decodeToZValues(java.nio.file.Files.readAllBytes(f)))
+
+  /** The typed frame the reference decoder's values build, independent of
+    * the columnar scan.
+    */
+  private def referenceFrame(path: String) =
+    ZsonReader.fromValues(spark, referenceValues(path), tag = true)
+
+  private def assertColumnar(df: org.apache.spark.sql.DataFrame): Unit = {
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("ColumnarToRow") && plan.contains("BatchScan vng"), plan.take(800))
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
 
   test("header matches the v4 layout (magic, version, section sizes)") {
     val bytes = VngIO.encodeObject(vals("{a:1}\n{a:2}"))
@@ -118,10 +140,8 @@ class VngSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the scan must be the DSv2 pruned one, not the fallback
     assert(fast.queryExecution.executedPlan.toString.contains("vng files="),
       fast.queryExecution.executedPlan.toString.take(500))
-    spark.conf.set("graft.vng.prune", "false")
-    val slow =
-      try VngIO.read(spark, path)
-      finally spark.conf.unset("graft.vng.prune")
+    // the fallback: the reference decoder's values, framed independently
+    val slow = referenceFrame(path)
     assert(slow.schema == fast.schema)
     val a = fast.orderBy("o_orderkey").collect().toSeq
     val b = slow.orderBy("o_orderkey").collect().toSeq
@@ -154,15 +174,11 @@ class VngSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"))
     assert(vec.queryExecution.executedPlan.toString.contains("vectorized"),
       vec.queryExecution.executedPlan.toString.take(600))
-    spark.conf.set("graft.vng.vectorized", "false")
-    val (rowPlan, rowData) =
-      try {
-        val row = VngIO.read(spark, path)
-          .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"))
-        (row.queryExecution.executedPlan.toString, // scan builds lazily — force in-scope
-          row.orderBy("l_orderkey", "l_quantity", "l_returnflag").collect().toSeq)
-      } finally spark.conf.unset("graft.vng.vectorized")
-    assert(!rowPlan.contains("vectorized"))
+    assertColumnar(vec)
+    // the row reader: the reference decoder's values, framed independently
+    val rowData = referenceFrame(path)
+      .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"))
+      .orderBy("l_orderkey", "l_quantity", "l_returnflag").collect().toSeq
     assert(vec.orderBy("l_orderkey", "l_quantity", "l_returnflag").collect().toSeq ==
       rowData)
     // aggregation over the vectorized scan (nulls, sums) stays exact
@@ -188,24 +204,23 @@ class VngSpec extends AnyFunSuite with BeforeAndAfterAll {
     val vec = q()
     assert(vec.queryExecution.executedPlan.toString.contains("vectorized"),
       vec.queryExecution.executedPlan.toString.take(600))
-    spark.conf.set("graft.vng.vectorized", "false")
-    val rowData =
-      try {
-        val row = q()
-        assert(!row.queryExecution.executedPlan.toString.contains("vectorized"))
-        row.orderBy("ts").collect().toSeq
-      } finally spark.conf.unset("graft.vng.vectorized")
+    assertColumnar(vec)
+    val rowData = referenceFrame(path)
+      .select(col("ts"), col("uid"), col("query"), col(Het.typeTag))
+      .orderBy("ts").collect().toSeq
     assert(vec.orderBy("ts").collect().toSeq == rowData)
     // missing-in-shape columns are null per member, tags carry shape text
     assert(vec.filter(col("query").isNotNull && col("uid").isNotNull).count() == 0)
     assert(vec.select(col(Het.typeTag)).distinct().count() == 2)
-    // a variant (cross-shape conflict) column keeps the row reader
+    // a variant (cross-shape conflict) column is columnar too
     val confl = spark.range(0, 50).select(col("id").as("ts"),
       concat(lit("s"), col("id")).as("rcode"))
     val path2 = tmp("vng-vec-het-confl")
     VngIO.write(Het.fuseTagged(conn, confl), path2)
     val v2 = VngIO.read(spark, path2).select(col("ts"), col("rcode"))
-    assert(!v2.queryExecution.executedPlan.toString.contains("vectorized"))
+    assert(graft.sources.ZsonIO.isVariantType(v2.schema("rcode").dataType))
+    assertColumnar(v2)
+    assert(sortedRows(v2) == sortedRows(referenceFrame(path2).select(col("ts"), col("rcode"))))
   }
 
   test("NAMED record roots vectorize (unwrap to the record, keep the named tag)") {
@@ -220,29 +235,19 @@ class VngSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = tmp("vng-named")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "part-00000.vng"), bytes)
-    def q() = VngIO.read(spark, dir).select(col("a"), col("s"))
-    val vec = q()
-    // previously columnarOk accepted the Named-wrapped shape text but the
-    // member match threw IllegalStateException at runtime
+    val vec = VngIO.read(spark, dir).select(col("a"), col("s"))
+    // the named root's member must unwrap to its record when the fills
+    // are built, not only in the shape text
     assert(vec.queryExecution.executedPlan.toString.contains("vectorized"),
       vec.queryExecution.executedPlan.toString.take(600))
     val vecData = vec.orderBy("a").collect().toSeq
-    spark.conf.set("graft.vng.vectorized", "false")
-    val rowData =
-      try q().orderBy("a").collect().toSeq
-      finally spark.conf.unset("graft.vng.vectorized")
+    // the reference decoder's values, framed independently
+    val rowData = referenceFrame(dir).select(col("a"), col("s")).orderBy("a").collect().toSeq
     assert(vecData == rowData)
     assert(vecData.length == 500)
-    // and both match the pre-change semantics (the full-decode fallback,
-    // which named-record streams always took before)
-    spark.conf.set("graft.vng.prune", "false")
-    val fullData =
-      try q().orderBy("a").collect().toSeq
-      finally spark.conf.unset("graft.vng.prune")
-    assert(vecData == fullData)
   }
 
-  test("vectorized scan covers nested structs; maps/unions fall back") {
+  test("vectorized scan covers nested structs and maps") {
     val df = GraftSession.table(spark, dir, "orders").limit(100)
       .select(col("o_orderkey"),
         struct(col("o_totalprice"), struct(col("o_custkey")).as("deep")).as("info"))
@@ -254,14 +259,16 @@ class VngSpec extends AnyFunSuite with BeforeAndAfterAll {
       q.queryExecution.executedPlan.toString.take(600))
     assert(q.agg(sum("info.deep.o_custkey")).collect()(0).getLong(0) ==
       df.agg(sum("info.deep.o_custkey")).collect()(0).getLong(0))
-    // a MAP column keeps the row path
+    // a MAP column fills the map vector's key and value children
     val mdf = GraftSession.table(spark, dir, "orders").limit(50)
       .select(col("o_orderkey"),
         map(lit("p"), col("o_totalprice")).as("m"))
     val mpath = tmp("vng-vec-map")
     VngIO.write(mdf, mpath)
     val mq = VngIO.read(spark, mpath)
-    assert(!mq.queryExecution.executedPlan.toString.contains("vectorized"))
+    assert(mq.schema("m").dataType.isInstanceOf[MapType], mq.schema.treeString)
+    assertColumnar(mq)
+    assert(sortedRows(mq) == sortedRows(referenceFrame(mpath)))
     assert(mq.count() == 50)
   }
 
@@ -332,13 +339,10 @@ class VngSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fast = VngIO.read(spark, path)
     val plan = fast.queryExecution.executedPlan.toString
     assert(plan.contains("vng files=1 shapes=3"), plan.take(500))
-    spark.conf.set("graft.vng.prune", "false")
-    val slow =
-      try VngIO.read(spark, path)
-      finally spark.conf.unset("graft.vng.prune")
-    assert(fast.schema == slow.schema)
+    // the fallback: the reference decoder's values and their ZSON text
+    assert(fast.schema == referenceFrame(path).schema)
     val a = graft.sources.ZsonIO.toZson(fast).collect().toSeq
-    val b = graft.sources.ZsonIO.toZson(slow).collect().toSeq
+    val b = referenceValues(path).map(ZValue.zsonText)
     assert(a == b)
     // stream order survives the tag interleave
     assert(a == input.linesIterator.toSeq)
@@ -382,5 +386,134 @@ class VngSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s2 = emb.select(sum(aggregate(col("embedding").cast("array<double>"), lit(0.0), (a, x) => a + x)))
       .collect()(0).getDouble(0)
     assert(math.abs(s1 - s2) < 1e-6)
+  }
+
+  // ---- corrupt objects ------------------------------------------------------
+
+  private def le64(b: Array[Byte], off: Int): Long =
+    (0 until 8).map(i => (b(off + i) & 0xffL) << (8 * i)).sum
+
+  private def withHeader(bytes: Array[Byte], metaSize: Long, dataSize: Long): Array[Byte] = {
+    val out = bytes.clone()
+    ZngIO.leBytes(metaSize, 8).copyToArray(out, 8)
+    ZngIO.leBytes(dataSize, 8).copyToArray(out, 16)
+    out
+  }
+
+  /** Re-encode the object's metadata with `f` applied to every Segment
+    * record's fields; the data section is kept as it is.
+    */
+  private def patchSegments(bytes: Array[Byte])(
+      f: Map[String, ZValue] => Map[String, ZValue]): Array[Byte] = {
+    import ZValue._
+    val (metaSize, dataSize) = (le64(bytes, 8).toInt, le64(bytes, 16))
+    def walk(v: ZValue): ZValue = v match {
+      case VTyped(VRec(fs), t @ ZType.Named("Segment", _)) =>
+        val m = f(fs.toMap)
+        VTyped(VRec(fs.map { case (n, _) => n -> m(n) }), t)
+      case VTyped(i, t) => VTyped(walk(i), t)
+      case VRec(fs) => VRec(fs.map { case (n, x) => n -> walk(x) })
+      case VArr(is, set) => VArr(is.map(walk), set)
+      case other => other
+    }
+    val meta = ZngIO.encodeTypedStream(Seq(walk(
+      ZngIO.decodeToZValues(java.util.Arrays.copyOfRange(bytes, 24, 24 + metaSize)).next())))
+    withHeader(bytes.take(24), meta.length, dataSize) ++ meta ++ bytes.drop(24 + metaSize)
+  }
+
+  private def u64(fs: Map[String, ZValue], n: String): Long =
+    ZValue.unwrap(fs(n)) match { case ZValue.VUint64(v) => v.toLong; case x => fail(s"$n: $x") }
+
+  /** A one-column object whose values segment is LZ4-compressed (300
+    * distinct compressible strings: no dict, no Const).
+    */
+  private lazy val lz4Object: Array[Byte] = VngIO.encodeObject(
+    (0 until 300).iterator.map(i => ZValue.VRec(Vector(
+      "s" -> ZValue.VStr(f"row-$i%05d-padding-padding-padding")))))
+
+  /** Every error message of `body`'s failure, through any wrapping job. */
+  private def failure(body: => Any): List[String] = {
+    def chain(t: Throwable): List[Throwable] = if (t == null) Nil else t :: chain(t.getCause)
+    val ts = chain(intercept[Exception](body))
+    val iae = ts.collect { case e: IllegalArgumentException => e.getMessage }
+    assert(iae.nonEmpty, ts.mkString(" | "))
+    iae
+  }
+
+  private def writePart(name: String, bytes: Array[Byte]): String = {
+    val dir = tmp(name)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "part-0.vng"), bytes)
+    dir
+  }
+
+  test("a metadata size of 2^31 or more is rejected, not wrapped negative") {
+    val bytes = VngIO.encodeObject(vals("{a:1}\n{a:2}"))
+    val bad = withHeader(bytes, 1L << 31, le64(bytes, 16))
+    assert(failure(VngIO.decodeToZValues(bad).toList).exists(_.startsWith("vng: corrupt metadata size")))
+    assert(failure(VngIO.read(spark, writePart("vng-meta-wrap", bad)).collect())
+      .exists(_.startsWith("vng: corrupt metadata size")))
+  }
+
+  test("a metadata size past the end of the file is rejected before any allocation") {
+    val bytes = VngIO.encodeObject(vals("{a:1}\n{a:2}"))
+    // just under 2 GiB: a positioned read would allocate it all first
+    val bad = withHeader(bytes, Int.MaxValue - 64L, le64(bytes, 16))
+    assert(failure(VngIO.read(spark, writePart("vng-meta-big", bad)).collect())
+      .exists(_.startsWith("vng: corrupt metadata size")))
+    assert(failure(VngIO.decodeToZValues(bad).toList).exists(_.startsWith("vng: corrupt metadata size")))
+  }
+
+  test("a segment past the data section is rejected") {
+    val bad = patchSegments(lz4Object) { fs =>
+      fs.updated("Offset", ZValue.VUint64(BigDecimal(le64(lz4Object, 16) + 1)))
+    }
+    assert(failure(VngIO.decodeToZValues(bad).toList).exists(_.startsWith("vng: corrupt segment")))
+    assert(failure(VngIO.read(spark, writePart("vng-seg-past", bad)).collect())
+      .exists(_.startsWith("vng: corrupt segment")))
+  }
+
+  test("a truncated LZ4 segment fails as a corrupt vng object") {
+    var patched = 0
+    val bad = patchSegments(lz4Object) { fs =>
+      if (ZValue.unwrap(fs("CompressionFormat")) != ZValue.VInt(1, "uint8")) fs
+      else {
+        patched += 1
+        fs.updated("Length", ZValue.VUint64(BigDecimal(u64(fs, "Length") - 1)))
+      }
+    }
+    assert(patched == 1)
+    assert(VngIO.decodeToZValues(lz4Object).length == 300)
+    assert(failure(VngIO.decodeToZValues(bad).toList).exists(_.startsWith("vng: corrupt LZ4 block")))
+    assert(failure(VngIO.read(spark, writePart("vng-lz4-trunc", bad)).collect())
+      .exists(_.startsWith("vng: corrupt LZ4 block")))
+  }
+
+  test("one columnar scan covers every zed type, named roots, empty " +
+       "containers, missing and conflicting columns (Dynamic root)") {
+    val maxU64 = BigInt("18446744073709551615")
+    // over 256 distinct uint64 values: a plain (not dict) segment
+    val lines = (0 until 400).map { i =>
+      if (i % 11 == 0) s"{id:$i,y:$i.5}(=named)"
+      else if (i % 7 == 0) s"""{id:$i,x:"s$i",t:2024-01-02T00:00:0${i % 10}Z}"""
+      else {
+        val un = if (i % 2 == 0) s"$i" else s""""u$i""""
+        val en = if (i % 3 == 0) "red" else "green"
+        s"""{id:$i,x:$i,u:${maxU64 + 1 - i}(uint64),st:|[${i % 3},1,2]|,""" +
+          s"""m:|{"a":$i,"b":2}|,nk:|{null:$i}|,un:$un((int64,string)),""" +
+          s"""e:error("boom$i"),ty:<int64>,n:10.0.${i % 256}.0/24,""" +
+          s"""en:"$en"(enum(red,green)),h:${i % 8}.5(float16),b:0x01${"%02x".format(i % 256)},""" +
+          s"""d:${i}s,t:2024-01-01T00:00:00.${"%09d".format(i + 1)}Z,""" +
+          s"""ea:[]([int64]),es:|[]|(|[string]|),em:|{}|(|{string:int64}|)}"""
+      }
+    }
+    val bytes = VngIO.encodeObject(vals(lines.mkString("\n")))
+    val back = VngIO.read(spark, writePart("vng-all-types", bytes))
+    assertColumnar(back)
+    assert(back.schema("u").dataType == DecimalType(20, 0), back.schema.treeString)
+    // decorated ZSON on both sides: the frame keeps every value's type
+    assert(ZsonIO.toZson(back).collect().toSeq == VngIO.decodeToZValues(bytes)
+      .map(v => graft.sources.ZsonFormatter.format(ZValue.typeOf(v), v)).toSeq)
+    assert(back.agg(max("u")).collect()(0).getDecimal(0).toBigInteger == maxU64.bigInteger)
   }
 }

@@ -267,14 +267,9 @@ class ZngSpec extends AnyFunSuite with BeforeAndAfterAll {
     val vec = ZngIO.read(spark, path)
     assert(vec.queryExecution.executedPlan.toString.contains("vectorized"),
       vec.queryExecution.executedPlan.toString.take(600))
-    spark.conf.set("graft.zng.vectorized", "false")
-    val (rowPlan, rowData) =
-      try {
-        val row = ZngIO.read(spark, path)
-        (row.queryExecution.executedPlan.toString,
-          row.orderBy("a", "s", "d").collect().toSeq)
-      } finally spark.conf.unset("graft.zng.vectorized")
-    assert(!rowPlan.contains("vectorized"))
+    // the reference: the same values, framed without any scan
+    val rowData = graft.sources.ZsonReader.fromValues(spark, vals, tag = true)
+      .orderBy("a", "s", "d").collect().toSeq
     assert(vec.orderBy("a", "s", "d").collect().toSeq == rowData)
     // tag column semantics survive vectorization (incl. null-record tags)
     val tags = vec.groupBy("__type").count().collect()
@@ -676,5 +671,31 @@ class ZngSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(graft.sources.ZsonIO.toZson(back).collect().toSeq.sorted ==
         Seq("18446744073709551614(uint64)", "18446744073709551615(uint64)"))
     } finally spark.stop()
+  }
+
+  test("a compressed frame whose stated size is wrong fails as a corrupt zng stream") {
+    val vals = (0 until 2000).map(i =>
+      graft.sources.ZsonParser.parseAll(f"""{s:"row-$i%05d-padding-padding-padding"}""").head)
+    val bytes = ZngIO.encodeTypedStream(vals)
+    assert(ZngIO.decodeToZson(bytes).length == 2000)
+    // walk the frames to the first compressed one: code byte, length
+    // uvarint, then format 0 and the uncompressed size uvarint
+    var i = 0
+    def uvarint(): Long = {
+      var v = 0L; var sh = 0; var b = 0
+      do { b = bytes(i) & 0xff; i += 1; v |= (b & 0x7fL) << sh; sh += 7 } while ((b & 0x80) != 0)
+      v
+    }
+    var usizeAt = -1
+    while (usizeAt < 0) {
+      val code = bytes(i) & 0xff
+      i += 1
+      val len = ((uvarint() << 4) | (code & 0xf)).toInt
+      if ((code & 0x40) != 0) usizeAt = i + 1 else i += len
+    }
+    val bad = bytes.clone()
+    bad(usizeAt) = (bad(usizeAt) ^ 1).toByte // ±1, same varint width
+    val e = intercept[IllegalArgumentException](ZngIO.decodeToZson(bad).toList)
+    assert(e.getMessage.startsWith("zng: corrupt LZ4 block"), e.getMessage)
   }
 }

@@ -51,8 +51,8 @@ class Lz4Dbg extends AnyFunSuite {
             val zlen = total - 1 - (i - st)
             val comp = java.util.Arrays.copyOfRange(bytes, i, i + zlen); i += zlen
             val un = new Array[Byte](usize)
-            net.jpountz.lz4.LZ4Factory.fastestInstance().fastDecompressor()
-              .decompress(comp, 0, un, 0, usize)
+            net.jpountz.lz4.LZ4Factory.fastestInstance().safeDecompressor()
+              .decompress(comp, un)
             val dst = new Array[Byte](usize)
             val n = graft.sources.Lz4Block.compress(un, usize, dst)
             val mine = java.util.Arrays.copyOfRange(dst, 0, n)
