@@ -501,12 +501,6 @@ object ZValue {
       while (n != 0) { buf += (n & 0xff).toByte; n >>= 8 }
       buf.result()
     }
-    def ipBytes(s: String): Array[Byte] =
-      try {
-        if (s.matches("""[0-9a-fA-F:.]+"""))
-          java.net.InetAddress.getByName(s).getAddress
-        else s.getBytes("UTF-8")
-      } catch { case _: Exception => s.getBytes("UTF-8") }
     def container(vs: Vector[ZValue]): Array[Byte] = {
       val out = new java.io.ByteArrayOutputStream()
       vs.foreach(x => out.write(encKey(x)))
@@ -524,10 +518,10 @@ object ZValue {
       case VStr(s) => s.getBytes("UTF-8")
       case VTime(ns) => ZngIO.signedBytes(ns)
       case VDur(ns) => ZngIO.signedBytes(ns)
-      case VIp(s) => ipBytes(s)
+      case VIp(s) => ZngIO.ipBody(s)
       case VNet(s) =>
         val cut = s.lastIndexOf('/')
-        if (cut > 0) ipBytes(s.substring(0, cut)) ++ uvarBytes(BigInt(s.substring(cut + 1)))
+        if (cut > 0) ZngIO.ipBody(s.substring(0, cut)) ++ uvarBytes(BigInt(s.substring(cut + 1)))
         else s.getBytes("UTF-8")
       case VBytes(b) => b
       case VEnum(sym) => sym.getBytes("UTF-8")

@@ -30,11 +30,11 @@ object ZngBody {
     import org.apache.spark.sql.functions.{struct, col, udf}
     val packed = struct(sch.fieldNames.toIndexedSeq.map(n => col(s"`$n`")): _*)
     ZngIO.shapeEncoders(shapes, sch) match {
-      case Some(_) =>
+      case Right(_) =>
         Some(graft.functions.Bridge.column(
           ZngBodyBytes(graft.functions.Bridge.expression(packed), shapes, sch)))
-      case None =>
-        // shapes with containers/unions/named exotica don't compile to
+      case Left(_) =>
+        // shapes with maps/unions/errors don't compile to
         // the typed fast encoders — take the zng writer's value-model
         // route (Row → ZValue → retype against the shape → body bytes).
         // Only reachable on frames that can't codegen anyway.

@@ -219,61 +219,33 @@ object ZngIO {
 
   /** Typed-shape field encoder over INTERNAL rows: the zed type from the
     * shape drives the wire form (ips as address bytes, ns-long carriers
-    * as time, named types via the type table), the Spark type drives the
-    * access. None = this (shape, carrier) pair needs the slow row path.
+    * as time, integers at the shape's width and signedness, named types
+    * via the type table), the Spark type drives the access. Every pair
+    * writes the bytes the value-model route writes for the same value.
+    * None = this (shape, carrier) pair needs the value-model route.
     */
   private[graft] def shapeFieldEncoder(zt: ZType, dt: DataType)
       : Option[FieldEnc] = ZType.strip(zt) match {
     case ZType.Prim("ip") if dt == StringType => Some { (out, g, i) =>
-      val s = g.getUTF8String(i).toString
-      try {
-        val b = java.net.InetAddress.getByName(s).getAddress
-        out.writeUvarint(b.length + 1L); out.writeBytes(b)
-      } catch { case _: Exception =>
-        val b = s.getBytes("UTF-8"); out.writeUvarint(b.length + 1L); out.writeBytes(b) }
+      val b = ipBody(g.getUTF8String(i).toString)
+      out.writeUvarint(b.length + 1L); out.writeBytes(b)
     }
     case ZType.Prim("net") if dt == StringType => Some { (out, g, i) =>
-      val s = g.getUTF8String(i).toString
-      try {
-        val Array(addr, bits) = s.split("/", 2)
-        val ab = java.net.InetAddress.getByName(addr).getAddress
-        val mask = new Array[Byte](ab.length)
-        val nbits = bits.toInt
-        for (k <- mask.indices) {
-          val keep = math.max(0, math.min(8, nbits - k * 8))
-          mask(k) = (if (keep == 0) 0 else (0xff << (8 - keep)) & 0xff).toByte
-        }
-        out.writeUvarint(ab.length * 2 + 1L)
-        out.writeBytes(ab); out.writeBytes(mask)
-      } catch { case _: Exception =>
-        val b = s.getBytes("UTF-8"); out.writeUvarint(b.length + 1L); out.writeBytes(b) }
+      val b = netBody(g.getUTF8String(i).toString)
+      out.writeUvarint(b.length + 1L); out.writeBytes(b)
     }
     case ZType.Prim("time") if dt == LongType =>
       Some((out, g, i) => out.writeTaggedSigned(g.getLong(i))) // ns carrier
     case ZType.Prim("duration") if dt == LongType =>
       Some((out, g, i) => out.writeTaggedSigned(g.getLong(i)))
-    // uintN are UNSIGNED minimal-LE on the wire (no zigzag) — the signed
-    // internalFieldEncoder would round-trip v as 2v
-    case ZType.Prim("uint64") if dt == LongType =>
-      Some((out, g, i) => out.writeTaggedUnsigned(g.getLong(i)))
-    case ZType.Prim("uint8") if dt == ShortType =>
-      Some((out, g, i) => out.writeTaggedUnsigned(g.getShort(i).toLong & 0xffL))
-    case ZType.Prim("uint8") if dt == IntegerType =>
-      Some((out, g, i) => out.writeTaggedUnsigned(g.getInt(i).toLong & 0xffL))
-    case ZType.Prim("uint16") if dt == IntegerType =>
-      Some((out, g, i) => out.writeTaggedUnsigned(g.getInt(i).toLong & 0xffffL))
-    case ZType.Prim("uint32") if dt == LongType =>
-      Some((out, g, i) => out.writeTaggedUnsigned(g.getLong(i) & 0xffffffffL))
-    case ZType.Prim("uint64") if dt == DecimalType(20, 0) =>
-      Some(internalFieldEncoder(dt)) // Decimal(20,0) case is already unsigned-LE
+    case ZType.Prim(p) if intWidths(p) => intFieldEncoder(p, dt)
     // float16 is 2-byte IEEE half on the wire, not float32 bits
     case ZType.Prim("float16") if dt == FloatType || dt == DoubleType =>
       Some { (out, g, i) =>
         val d = if (dt == FloatType) g.getFloat(i).toDouble else g.getDouble(i)
         out.writeTaggedFixedLE(ZFormat.toHalfBits(d).toLong & 0xffffL, 2)
       }
-    case ZType.Prim(p) if Set("int8", "int16", "int32", "int64",
-        "float32", "float64", "string",
+    case ZType.Prim(p) if Set("float32", "float64", "string",
         "bool", "bytes", "time", "duration", "null")(p) &&
         sparkPrimMatches(p, dt) =>
       Some(internalFieldEncoder(dt))
@@ -320,18 +292,40 @@ object ZngIO {
       case _ => None
     }
     case ZType.SetT(et) => dt match {
-      // set values are already normalized (read/construction order) —
-      // the wire form matches the array encoding
+      // the array encoding with the elements normalized (zcode
+      // NormalizeSet, as ZValue.normSet orders the value route's sets):
+      // sorted by their tagged bytes, duplicates dropped. ZSON-read sets
+      // arrive normalized and cost one compare per element; zeek-read
+      // sets are in value order and get sorted here.
       case ArrayType(edt, _) =>
         shapeFieldEncoder(et, edt).map { enc =>
           val inner = new ByteBuf(256)
+          var starts = new Array[Int](16)
           (out: ByteBuf, g: SpecializedGetters, i: Int) => {
             val arr = g.getArray(i)
+            val n = arr.numElements()
+            if (starts.length <= n) starts = new Array[Int](n * 2)
             inner.reset()
+            var sorted = true
             var k = 0
-            while (k < arr.numElements()) {
+            while (k < n) {
+              starts(k) = inner.size
               if (arr.isNullAt(k)) inner.writeNullTag() else enc(inner, arr, k)
+              if (k > 0 && sorted)
+                sorted = inner.compareSlices(starts(k - 1), starts(k), starts(k), inner.size) < 0
               k += 1
+            }
+            starts(n) = inner.size
+            if (!sorted) {
+              val elems = Array.tabulate(n)(j => inner.slice(starts(j), starts(j + 1)))
+              java.util.Arrays.sort(elems, (a: Array[Byte], b: Array[Byte]) =>
+                java.util.Arrays.compareUnsigned(a, b))
+              inner.reset()
+              k = 0
+              while (k < n) {
+                if (k == 0 || !java.util.Arrays.equals(elems(k - 1), elems(k))) inner.writeBytes(elems(k))
+                k += 1
+              }
             }
             out.writeUvarint(inner.size + 1L)
             inner.writeTo(out)
@@ -341,24 +335,42 @@ object ZngIO {
     }
     case ZType.EnumT(symbols) if dt == StringType =>
       // enums encode as the SYMBOL INDEX (unsigned)
-      val index = symbols.zipWithIndex.toMap
+      val index = new java.util.HashMap[UTF8String, java.lang.Long]()
+      symbols.zipWithIndex.foreach { case (s, ix) =>
+        index.putIfAbsent(UTF8String.fromString(s), ix.toLong) }
       Some { (out, g, i) =>
-        index.get(g.getUTF8String(i).toString) match {
-          case Some(ix) =>
-            var x = ix.toLong
-            val bytes = scala.collection.mutable.ArrayBuffer.empty[Byte]
-            while (x != 0) { bytes += (x & 0xff).toByte; x >>= 8 }
-            out.writeUvarint(bytes.length + 1L); out.writeBytes(bytes.toArray)
-          case None => out.writeNullTag()
-        }
+        val ix = index.get(g.getUTF8String(i))
+        if (ix == null) out.writeNullTag() else out.writeTaggedUnsigned(ix)
       }
-    case ZType.Named(_, innerT) => shapeFieldEncoder(innerT, dt)
     case _ => None
   }
 
+  private val intWidths = Set("uint8", "uint16", "uint32", "uint64",
+    "int8", "int16", "int32", "int64")
+
+  /** The one integer arm: every (zed width, carrier) pair the readers
+    * produce — any integer carrier, and decimal(20,0) under uint64. The
+    * carrier's value is written at the shape's signedness and never
+    * masked to its width, as the value route writes the carrier's value
+    * retyped to the shape: uintN as unsigned minimal little-endian bytes
+    * (zcode EncodeUint, no zigzag), intN as the signed counted varint.
+    */
+  private def intFieldEncoder(p: String, dt: DataType): Option[FieldEnc] =
+    if (p.startsWith("u")) dt match {
+      case ByteType => Some((out, g, i) => out.writeTaggedUnsigned(g.getByte(i).toLong))
+      case ShortType => Some((out, g, i) => out.writeTaggedUnsigned(g.getShort(i).toLong))
+      case IntegerType => Some((out, g, i) => out.writeTaggedUnsigned(g.getInt(i).toLong))
+      case LongType => Some((out, g, i) => out.writeTaggedUnsigned(g.getLong(i)))
+      case d: DecimalType if p == "uint64" && d.precision == 20 && d.scale == 0 =>
+        Some(internalFieldEncoder(dt))
+      case _ => None
+    } else dt match {
+      case ByteType | ShortType | IntegerType | LongType => Some(internalFieldEncoder(dt))
+      case _ => None
+    }
+
   private def sparkPrimMatches(p: String, dt: DataType): Boolean = (p, dt) match {
-    case ("int8", ByteType) | ("int16", ShortType) | ("int32", IntegerType) |
-         ("int64", LongType) | ("float32", FloatType) |
+    case ("float32", FloatType) |
          ("float64", DoubleType) | ("string", StringType) |
          ("bool", BooleanType) | ("bytes", BinaryType) |
          ("time", TimestampType) | ("time", TimestampNTZType) |
@@ -366,8 +378,50 @@ object ZngIO {
     case _ => false
   }
 
+  /** The address bytes of an IPv4 dotted quad or an IPv6 literal (an
+    * IPv4-mapped IPv6 address gives its 4 IPv4 bytes, as InetAddress
+    * does), or null when `s` is not one. A literal parse only (Guava's
+    * InetAddresses): unlike InetAddress.getByName it never resolves a
+    * hostname.
+    */
+  private[graft] def ipLiteral(s: String): Array[Byte] =
+    try com.google.common.net.InetAddresses.forString(s).getAddress
+    catch { case _: IllegalArgumentException => null }
+
+  /** The wire body of an ip value: its address bytes, or the text itself
+    * when it is not an address literal. Both writer routes use it, so
+    * they agree on every cell and never resolve a hostname.
+    */
+  private[sources] def ipBody(s: String): Array[Byte] = {
+    val b = ipLiteral(s)
+    if (b != null) b else s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  }
+
+  /** The wire body of a net value `addr/bits`: the masked address bytes
+    * then the mask bytes (the value route's nets are masked by
+    * ZValue.netOf), or the text itself when it is not a prefix literal.
+    */
+  private[sources] def netBody(s: String): Array[Byte] = {
+    val slash = s.lastIndexOf('/')
+    val addr = if (slash < 0) null else ipLiteral(s.substring(0, slash))
+    val bits = if (addr == null) -1
+      else try s.substring(slash + 1).toInt catch { case _: NumberFormatException => -1 }
+    if (bits < 0 || bits > addr.length * 8)
+      return s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val out = new Array[Byte](addr.length * 2)
+    var k = 0
+    while (k < addr.length) {
+      val keep = math.max(0, math.min(8, bits - k * 8))
+      val mask = if (keep == 0) 0 else (0xff << (8 - keep)) & 0xff
+      out(k) = (addr(k) & mask).toByte
+      out(addr.length + k) = mask.toByte
+      k += 1
+    }
+    out
+  }
+
   /** The shape list a het-tagged frame carries on its tag column. */
-  private[sources] def tagShapes(schema: StructType): Seq[String] = {
+  private[graft] def tagShapes(schema: StructType): Seq[String] = {
     val f = schema(graft.operators.Het.typeTag)
     if (f.metadata.contains("shapes")) f.metadata.getStringArray("shapes").toSeq
     else Seq.empty
@@ -375,47 +429,81 @@ object ZngIO {
 
   /** Compile every shape of a tagged frame to its wire type and its typed
     * internal-row field encoders (column index, encoder) in shape field
-    * order. None when any shape doesn't compile: the frame then takes the
-    * value-model route. Encoders hold scratch ByteBufs, so each partition
-    * compiles its own.
+    * order. Left names why the first shape that doesn't compile fails —
+    * the shape, the field and its (zed type, Spark type) pair; the frame
+    * then takes the value-model route. Encoders hold scratch ByteBufs, so
+    * each partition compiles its own.
     */
-  private[sources] def shapeEncoders(shapes: Seq[String], sch: StructType)
-      : Option[Map[String, (ZT, Array[(Int, FieldEnc)])]] =
-    if (shapes.isEmpty) None
+  private[graft] def shapeEncoders(shapes: Seq[String], sch: StructType)
+      : Either[String, Map[String, (ZT, Array[(Int, FieldEnc)])]] =
+    if (shapes.isEmpty) Left("the frame carries no shapes")
     else {
-      val built = shapes.map { tag =>
-        try {
-          val zt0 = ZsonParser.parseType(ZType.stripNullWrap(tag))
-          ZType.strip(zt0) match {
-            case ZType.Rec(fs) =>
-              val colEncs = fs.map { case (n, ft) =>
-                val ci = sch.fieldNames.indexOf(n)
-                if (ci < 0) None
-                else shapeFieldEncoder(ft, sch.fields(ci).dataType).map(ci -> _)
-              }
-              if (colEncs.exists(_.isEmpty)) None
-              else Some(tag -> (toZT(zt0), colEncs.map(_.get).toArray))
-            case _ => None
-          }
-        } catch { case _: Exception => None }
-      }
-      if (built.exists(_.isEmpty)) None else Some(built.map(_.get).toMap)
+      val built = shapes.map(tag => compileShape(tag, sch).left.map(why => s"shape $tag: $why"))
+      built.collectFirst { case Left(why) => why }
+        .toLeft(shapes.zip(built.collect { case Right(e) => e }).toMap)
     }
 
+  private def compileShape(tag: String, sch: StructType)
+      : Either[String, (ZT, Array[(Int, FieldEnc)])] =
+    try {
+      val zt0 = ZsonParser.parseType(ZType.stripNullWrap(tag))
+      ZType.strip(zt0) match {
+        case ZType.Rec(fs) =>
+          val colEncs = fs.map { case (n, ft) =>
+            val ci = sch.fieldNames.indexOf(n)
+            if (ci < 0) Left(s"field $n has no column")
+            else {
+              val dt = sch.fields(ci).dataType
+              shapeFieldEncoder(ft, dt).map(ci -> _).toRight(encoderGap(n, ft, dt))
+            }
+          }
+          colEncs.collectFirst { case Left(why) => why }
+            .toLeft(toZT(zt0) -> colEncs.collect { case Right(e) => e }.toArray)
+        case _ => Left("not a record")
+      }
+    } catch { case e: Exception => Left(s"does not compile: ${e.getMessage}") }
+
+  /** The innermost field under `name` whose (zed type, Spark type) pair
+    * has no typed encoder, for the fallback reason.
+    */
+  private def encoderGap(name: String, zt: ZType, dt: DataType): String = {
+    def here = s"field $name: no typed encoder for (${ZType.fullText(zt)}, ${dt.simpleString})"
+    (ZType.strip(zt), dt) match {
+      case (ZType.Rec(fs), st: StructType) if fs.length == st.fields.length =>
+        fs.zip(st.fields).collectFirst {
+          case ((n, ft), sf) if shapeFieldEncoder(ft, sf.dataType).isEmpty =>
+            encoderGap(s"$name.$n", ft, sf.dataType)
+        }.getOrElse(here)
+      case (ZType.Arr(et), ArrayType(edt, _)) => encoderGap(s"$name[]", et, edt)
+      case (ZType.SetT(et), ArrayType(edt, _)) => encoderGap(s"$name[]", et, edt)
+      case _ => here
+    }
+  }
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.sources.ZngIO")
+
+  /** The tagged-frame writer. FAST route: every shape compiles to typed
+    * internal-row encoders (shapeEncoders) — one pass over internal rows,
+    * no external Row and no per-row value. Frames read from Zeek or from
+    * ZNG take it: every scalar zeek type, the dotted id record, sets and
+    * vectors of numbers, addresses and strings. Any other frame (maps,
+    * unions, errors, zeek vectors with string-element carriers) takes the
+    * value-model route, and the driver logs why once per write at INFO.
+    */
   private def writeTagged(df: DataFrame, path: String): Unit = {
     val schema = df.schema
     val tagIdx = schema.fieldIndex(graft.operators.Het.typeTag)
     val shapes = tagShapes(schema)
-    // FAST path: every shape compiles to a typed internal-row encoder —
-    // one pass over internal rows, zero external-Row materialization.
-    // The driver only validates that every shape compiles.
-    if (shapeEncoders(shapes, schema).isEmpty) {
-      writeValues(df, path)
-      return
+    shapeEncoders(shapes, schema) match {
+      case Left(why) =>
+        log.info(s"zng write $path: value-model route: $why")
+        writeValues(df, path)
+        return
+      case Right(_) =>
     }
     val confMap = HadoopFs.confMap(df.sparkSession)
     df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-      val encMap = shapeEncoders(shapes, schema).get
+      val encMap = shapeEncoders(shapes, schema).toOption.get
       val out = HadoopFs.create(confMap, path, f"part-$pid%05d.zng")
       val fw = new FrameWriter(out)
       // tag dispatch stays in the byte domain: the String-keyed form
@@ -467,7 +555,7 @@ object ZngIO {
     * this-only frame unwraps the bare-value carrier. The writer and the
     * lake tiebreak (ZngBody) share it, so the tiebreak sorts on the bytes
     * the writer stores. The Row→ZValue converter rebuilds lazily per
-    * executor.
+    * executor, and each distinct shape tag parses once per instance.
     */
   private[sources] final class RowValue(schema: StructType) extends Serializable {
     private val tagIdx = schema.fieldNames.indexOf(graft.operators.Het.typeTag)
@@ -492,6 +580,10 @@ object ZngIO {
           catch { case _: Exception => ZType.Prim("string") })
       }
     @transient private lazy val fn = ZFormat.rowValueFn(dataF)
+    // tag text → its parsed type (None: it doesn't parse, and the row
+    // keeps its untyped value); tasks that share this instance share it
+    @transient private lazy val tagTypes =
+      new java.util.concurrent.ConcurrentHashMap[String, Option[ZType]]()
 
     def apply(row: Row): ZValue = thisType match {
       case Some(zt) =>
@@ -505,9 +597,13 @@ object ZngIO {
 
     // re-type against the row's shape; non-record shapes unwrap their
     // `this` carrier
-    private def retype(tag: String, base: ZValue): ZValue =
-      try {
-        val zt0 = ZsonParser.parseType(ZType.stripNullWrap(tag))
+    private def retype(tag: String, base: ZValue): ZValue = {
+      val parsed = tagTypes.computeIfAbsent(tag, t =>
+        try Some(ZsonParser.parseType(ZType.stripNullWrap(t)))
+        catch { case _: Exception => None })
+      if (parsed.isEmpty) base
+      else try {
+        val zt0 = parsed.get
         // a null(<type>) tag means the whole row IS a typed null — the
         // physical columns are merge artifacts
         if (ZType.isNullWrap(tag)) ZValue.VNull(zt0)
@@ -529,14 +625,16 @@ object ZngIO {
           ZsonParser.retype(subject, zt0)
         }
       } catch { case _: Exception => base }
+    }
   }
 
   /** The value-model writer route: each row becomes one typed ZValue
     * (RowValue) written with its own type. Serves untagged frames with
     * runtime-typed columns, this-only frames, and tagged frames whose
-    * shapes don't compile to the typed encoders.
+    * shapes don't compile to the typed encoders. The specs use it as the
+    * oracle of the fast route's bytes.
     */
-  private def writeValues(df: DataFrame, path: String): Unit = {
+  private[graft] def writeValues(df: DataFrame, path: String): Unit = {
     val toValue = new RowValue(df.schema)
     val confMap = HadoopFs.confMap(df.sparkSession)
     df.rdd.mapPartitionsWithIndex { (pid, rows) =>
@@ -583,13 +681,10 @@ object ZngIO {
       val b = g.getBinary(i)
       out.writeUvarint(b.length + 1L); out.writeBytes(b)
     }
-    case dt: DecimalType if dt.precision == 20 && dt.scale == 0 => (out, g, i) => {
-      // uint64 carrier: unsigned little-endian minimal bytes
-      var x = BigInt(g.getDecimal(i, 20, 0).toJavaBigDecimal.toBigInteger)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Byte]
-      while (x != 0) { buf += (x & 0xff).toByte; x >>= 8 }
-      out.writeUvarint(buf.length + 1L); out.writeBytes(buf.toArray)
-    }
+    // uint64 carrier: the unscaled value's low 64 bits ARE the uint64's
+    // bits (values ≥ 2^63 included), written unsigned minimal-LE
+    case dt: DecimalType if dt.precision == 20 && dt.scale == 0 => (out, g, i) =>
+      out.writeTaggedUnsigned(g.getDecimal(i, 20, 0).toJavaBigDecimal.unscaledValue.longValue)
     case d: DecimalType => (out, g, i) =>
       out.writeTaggedFixedLE(java.lang.Double.doubleToLongBits(
         g.getDecimal(i, d.precision, d.scale).toDouble), 8)
@@ -805,6 +900,10 @@ object ZngIO {
       while (i < n) { buf(len) = ((v >>> (8 * i)) & 0xff).toByte; len += 1; i += 1 }
     }
     def writeNullTag(): Unit = writeByte(0)
+    /** Unsigned lexicographic order of two slices (a prefix sorts first). */
+    def compareSlices(a0: Int, a1: Int, b0: Int, b1: Int): Int =
+      java.util.Arrays.compareUnsigned(buf, a0, a1, buf, b0, b1)
+    def slice(from: Int, until: Int): Array[Byte] = java.util.Arrays.copyOfRange(buf, from, until)
     override def write(b: Int): Unit = writeByte(b)
     override def write(b: Array[Byte], off: Int, n: Int): Unit = writeBytes(b, off, n)
     def writeTo(out: OutputStream): Unit = out.write(buf, 0, len)
@@ -1191,17 +1290,8 @@ object ZngIO {
       case (VStr(s), _) =>
         val b = s.getBytes("UTF-8"); out.write(b, 0, b.length)
       case (VBytes(b), _) => out.write(b, 0, b.length)
-      case (VIp(s), _) =>
-        val b = java.net.InetAddress.getByName(s).getAddress; out.write(b, 0, b.length)
-      case (VNet(s), _) =>
-        val slash = s.lastIndexOf('/')
-        val addr = java.net.InetAddress.getByName(s.substring(0, slash)).getAddress
-        val bits = s.substring(slash + 1).toInt
-        out.write(addr, 0, addr.length)
-        for (i <- addr.indices) {
-          val keep = math.max(0, math.min(8, bits - i * 8))
-          out.write(if (keep == 0) 0 else ((0xff << (8 - keep)) & 0xff))
-        }
+      case (VIp(s), _) => val b = ipBody(s); out.write(b, 0, b.length)
+      case (VNet(s), _) => val b = netBody(s); out.write(b, 0, b.length)
       case (VTypeVal(text), _) =>
         val t2 = try new ZsonParser(text).parseTypeText() catch { case _: Exception => ZType.nullT }
         appendTypeValue(out, t2, scala.collection.mutable.Map.empty)
@@ -1209,8 +1299,13 @@ object ZngIO {
         val idx = math.max(0, symbols.indexOf(sym)).toLong
         var x = idx; if (x == 0) () else { while (x != 0) { out.write((x & 0xff).toInt); x >>>= 8 } }
       case (VRec(fs), ZRecord(fts)) =>
+        var k = 0
         fts.foreach { case (n, ft) =>
-          encodeZTagged(out, fs.find(_._1 == n).map(_._2).getOrElse(VNull(ZType.nullT)), ft)
+          // values usually list their fields in the type's order
+          val fv = if (k < fs.length && fs(k)._1 == n) fs(k)._2
+            else fs.find(_._1 == n).map(_._2).getOrElse(VNull(ZType.nullT))
+          encodeZTagged(out, fv, ft)
+          k += 1
         }
       case (VArr(items, _), ZArray(et)) => items.foreach(encodeZTagged(out, _, et))
       case (VArr(items, _), ZSet(et)) => items.foreach(encodeZTagged(out, _, et))
@@ -1228,9 +1323,9 @@ object ZngIO {
       case VNull(_) => out.write(0)
       case VTyped(VNull(_), _) => out.write(0)
       case _ =>
-        val body = new ByteArrayOutputStream()
+        val body = new ByteBuf(64)
         encodeZBody(body, v, t)
-        uvarint(out, body.size() + 1L)
+        uvarint(out, body.size + 1L)
         body.writeTo(out)
     }
   }

@@ -37,10 +37,13 @@ class ZngSpec extends AnyFunSuite with BeforeAndAfterAll {
     out.toByteArray
   }
 
-  /** `ZngIO.write` of one partition: the bytes of its single part file. */
-  private def writtenPart(df: org.apache.spark.sql.DataFrame, name: String): Array[Byte] = {
+  /** `ZngIO.write` (or another writer route) of one partition: the bytes
+    * of its single part file.
+    */
+  private def writtenPart(df: org.apache.spark.sql.DataFrame, name: String,
+      write: (org.apache.spark.sql.DataFrame, String) => Unit = ZngIO.write): Array[Byte] = {
     val path = tmp(name)
-    ZngIO.write(df.coalesce(1), path)
+    write(df.coalesce(1), path)
     val parts = new java.io.File(path).listFiles().filter(_.getName.endsWith(".zng"))
     assert(parts.length == 1, parts.map(_.getName).mkString(","))
     java.nio.file.Files.readAllBytes(parts.head.toPath)
@@ -559,6 +562,94 @@ class ZngSpec extends AnyFunSuite with BeforeAndAfterAll {
     val bytes = writtenPart(spark.range(0, 3000).selectExpr("concat('v', id) as this"), "bare")
     assert(ZngIO.decodeToZson(bytes).take(2).toSeq == Seq("\"v0\"", "\"v1\""))
     assert(sha256(bytes) == "9211ae5e6e79afb938959ee62893390f469c8c62dfe91286bdd377d784ea0ae9")
+  }
+
+  /** The value-model route's part file: the oracle of the fast route. */
+  private def valuesPart(df: org.apache.spark.sql.DataFrame, name: String): Array[Byte] =
+    writtenPart(df, name, ZngIO.writeValues)
+
+  private def fastRouteReason(df: org.apache.spark.sql.DataFrame): Either[String, _] =
+    ZngIO.shapeEncoders(ZngIO.tagShapes(df.schema), df.schema)
+
+  test("Zeek- and ZNG-sourced frames take the typed fast route, byte-identical " +
+       "to the value route (every zeek scalar, id record, sets, vectors, ports)") {
+    val zeekPath = java.nio.file.Files.createTempFile("graft-allzeek", ".log")
+    java.nio.file.Files.write(zeekPath, Seq(
+      "#separator \\x09", "#set_separator\t,", "#empty_field\t(empty)", "#unset_field\t-",
+      "#path\tconn",
+      "#fields\tts\tuid\tid.orig_h\tid.orig_p\tid.resp_h\tid.resp_p\tdur\tn\ti\tproto\td\tb\tsn\t" +
+        "ps\tcs\tas\tvs\tvd",
+      "#types\ttime\tstring\taddr\tport\taddr\tport\tinterval\tcount\tint\tenum\tdouble\tbool\t" +
+        "subnet\tset[port]\tset[count]\tset[addr]\tvector[string]\tvector[double]",
+      "1700000000.000001\tC1\t10.0.0.1\t0\t::1\t80\t1.5\t0\t-1\ttcp\t1.25\tT\t10.0.0.0/8\t" +
+        "80,443\t1,2\t10.0.0.1,fe80::1\ta,b\t1.5,2.5",
+      "1700000001.500000\tC2\t192.168.1.1\t65535\t2001:db8::1\t70000\t0.000001\t" +
+        "9223372036854775807\t-9223372036854775807\tudp\t-0.5\tF\t2001:db8::/32\t" +
+        "0,65535,70000\t(empty)\t::ffff:1.2.3.4\t(empty)\t(empty)",
+      "1700000002.000000\tC3\t-\t-\t-\t-\t-\t-\t-\t-\t-\t-\t-\t-\t-\t-\t-\t-",
+      "1700000003.000000\tC4\t172.16.0.9\t70000\t10.1.1.1\t0\t3600\t255\t256\ticmp\t1e300\tT\t" +
+        "192.168.0.0/16\t22,300,513\t18446744\t9.0.0.1,10.0.0.2\tx\\x09y\t-1.0"
+    ).mkString("", "\n", "\n").getBytes("UTF-8"))
+    val fromZeek = graft.sources.ZeekIO.read(spark, zeekPath.toString)
+    val zngPath = tmp("allzeek-zng")
+    ZngIO.write(fromZeek, zngPath)
+    val fromZng = ZngIO.read(spark, zngPath)
+    for ((name, df) <- Seq("zeek" -> fromZeek, "zng" -> fromZng)) {
+      val route = fastRouteReason(df)
+      assert(route.isRight, s"$name: $route")
+      val fast = writtenPart(df, s"allzeek-fast-$name")
+      assert(sha256(fast) == sha256(valuesPart(df, s"allzeek-values-$name")), name)
+      val back = ZngIO.decodeToZson(fast).toSeq
+      assert(back.length == 4, name)
+      // sets are normalized: sorted by their zcode bytes, not by value
+      for (part <- Seq("orig_p:65535", "resp_p:70000", "ps:|[0,65535,70000]|",
+          "ps:|[22,513,300]|", "as:|[9.0.0.1,10.0.0.2]|", "sn:2001:db8::/32"))
+        assert(back.exists(_.contains(part)), s"$name: $part in $back")
+      val rowType = graft.sources.ZType.fullText(
+        graft.sources.ZValue.typeOf(ZngIO.decodeToZValues(fast).next()))
+      assert(rowType.contains("orig_p:port=uint16"), s"$name: $rowType")
+    }
+  }
+
+  test("uint64 on the decimal(20,0) carrier writes the value route's bytes " +
+       "(0, 1, 255, 256, 2^63-1, 2^63, 2^64-1)") {
+    val vals = Seq("0", "1", "255", "256", "9223372036854775807", "9223372036854775808",
+      "18446744073709551615")
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(vals.map(v => Row(new java.math.BigDecimal(v))), 1),
+      StructType(Seq(StructField("n", DecimalType(20, 0)))))
+    val internal = writtenPart(df, "u64-internal")
+    assert(sha256(internal) == sha256(valuesPart(df, "u64-values")))
+    assert(ZngIO.decodeToZson(internal).toSeq == vals.map(v => s"{n:$v}"))
+    assert(ZngIO.decodeToZValues(internal).map(v =>
+      graft.sources.ZType.fullText(graft.sources.ZValue.typeOf(v))).toSet == Set("{n:uint64}"))
+  }
+
+  test("ip and net cells parse as literals only: no hostname lookup, and both " +
+       "routes write the same bytes for a non-literal") {
+    for (s <- Seq("1.2.3.4", "0.0.0.0", "255.255.255.255", "::", "::1", "fe80::1",
+        "2001:db8::8:800:200c:417a", "1:2:3:4:5:6:7:8", "::ffff:1.2.3.4", "::1.2.3.4",
+        "1::", "1:2:3:4:5:6::8", "FE80::A"))
+      assert(ZngIO.ipLiteral(s).toSeq == java.net.InetAddress.getByName(s).getAddress.toSeq, s)
+    for (s <- Seq("localhost", "", "1.2.3", "1.2.3.4.5", "256.1.1.1", "01.2.3.4", "1.2.3.4 ",
+        "abc.def", "1:2:3:4:5:6:7:8:9", "1::2::3", ":1", "1:", "12345::", "1:2:3:4:5:6:7::8"))
+      assert(ZngIO.ipLiteral(s) == null, s)
+    val df = graft.sources.ZsonReader.fromValues(spark,
+      zvals(Seq("{a:10.0.0.1,n:10.0.0.0/8}", "{a:10.0.0.2,n:10.1.0.0/16}")), tag = true)
+      .withColumn("a", when(col("a") === "10.0.0.2", lit("localhost")).otherwise(col("a")))
+      .withColumn("n", when(col("n") === "10.1.0.0/16", lit("localhost/8")).otherwise(col("n")))
+    assert(fastRouteReason(df).isRight)
+    val fast = writtenPart(df, "ip-literal-fast")
+    assert(sha256(fast) == sha256(valuesPart(df, "ip-literal-values")))
+    def has(b: Array[Byte], sub: Array[Byte]) = b.indices.exists(i => b.startsWith(sub, i))
+    assert(has(fast, "localhost".getBytes("UTF-8")))
+    assert(!has(fast, Array[Byte](127, 0, 0, 1)))
+  }
+
+  test("a tagged frame that leaves the fast route says why: shape, field and type pair") {
+    val why = fastRouteReason(taggedSlowFrame(10)).left.getOrElse(fail("fast route taken"))
+    assert(why.contains("field m:") && why.contains("map<string,bigint>"), why)
+    assert(fastRouteReason(taggedFastFrame(10)).isRight)
   }
 
   test("complex types that differ only in nullability share one typedef") {
