@@ -810,7 +810,7 @@ object VngIO {
 
   // ---- columnar (ColumnarBatch) reads ---------------------------------------
 
-  private type WVec = org.apache.spark.sql.execution.vectorized.WritableColumnVector
+  import ZngIO.{WVec, appendNullFor, extAppender, primApp}
 
   /** One value appended per call — the column-vector twin of Rd. */
   private sealed trait VFill {
@@ -820,12 +820,6 @@ object VngIO {
       */
     def appendNull(v: WVec): Unit = { v.appendNull(); () }
   }
-
-  private def appendNullFor(v: WVec, target: DataType): Unit =
-    target match {
-      case _: StructType => v.appendStruct(true): Unit
-      case _ => v.appendNull(): Unit
-    }
 
   private final class NullsVFill(runs: Int64Rd, inner: VFill) extends VFill {
     private var left = runs.next() // values first (nulls.go)
@@ -872,68 +866,6 @@ object VngIO {
     }
   }
 
-  private val TwoTo64 = java.math.BigInteger.ONE.shiftLeft(64)
-
-  /** Decoder of one zng-tagged primitive payload of `n` bytes straight
-    * into the vector — no ZValue, no Row, no per-value boxing — for the
-    * (zed type, column type) pairs below; null for every other pair.
-    */
-  private def primApp(t: ZType, target: DataType): (ZngIO.Cursor, WVec, Int) => Unit = {
-    val utf8 = java.nio.charset.StandardCharsets.UTF_8
-    (ZType.strip(t), target) match {
-      case (Prim("int8") | Prim("int16") | Prim("int32") | Prim("int64") | Prim("duration"),
-            LongType) =>
-        (c, v, n) => { v.appendLong(c.signedAt(n)); () }
-      case (Prim("time"), LongType) => (c, v, n) => { v.appendLong(c.signedAt(n)); () }
-      case (Prim("time"), TimestampType) =>
-        (c, v, n) => { v.appendLong(Math.floorDiv(c.signedAt(n), 1000L)); () }
-      case (Prim("uint8") | Prim("uint16") | Prim("uint32"), LongType) =>
-        (c, v, n) => { v.appendLong(c.unsignedAt(n)); () }
-      // decimal(20,0) stores the unscaled value's big-endian bytes
-      case (Prim("uint64"), dt) if dt == DecimalType(20, 0) =>
-        (c, v, n) => {
-          val u = java.math.BigInteger.valueOf(c.unsignedAt(n))
-          val b = (if (u.signum < 0) u.add(TwoTo64) else u).toByteArray
-          v.appendByteArray(b, 0, b.length); ()
-        }
-      case (Prim("float64"), DoubleType) =>
-        (c, v, n) => { v.appendDouble(java.lang.Double.longBitsToDouble(c.unsignedAt(n))); () }
-      case (Prim("float32"), DoubleType) =>
-        (c, v, n) => { v.appendDouble(
-          java.lang.Float.intBitsToFloat(c.unsignedAt(n).toInt).toDouble); () }
-      case (Prim("float16"), DoubleType) =>
-        (c, v, n) => { v.appendDouble(ZngIO.halfToDouble(c.unsignedAt(n).toInt)); () }
-      case (Prim("bool"), BooleanType) =>
-        (c, v, n) => {
-          val b = n > 0 && c.buf(c.pos) == 1
-          c.pos += n
-          v.appendBoolean(b); ()
-        }
-      case (Prim("string"), StringType) | (Prim("bytes"), BinaryType) =>
-        (c, v, n) => { v.appendByteArray(c.buf, c.pos, n); c.pos += n; () }
-      case (Prim("ip"), StringType) =>
-        (c, v, n) => {
-          val s = ZngIO.ipText(c.bytes(n)).getBytes(utf8)
-          v.appendByteArray(s, 0, s.length); ()
-        }
-      case (Prim("net"), StringType) =>
-        (c, v, n) => {
-          val b = c.bytes(n)
-          val addr = java.util.Arrays.copyOfRange(b, 0, b.length / 2)
-          val mask = java.util.Arrays.copyOfRange(b, b.length / 2, b.length)
-          val s = (ZngIO.ipText(addr) + "/" + ZngIO.leadingOnes(mask)).getBytes(utf8)
-          v.appendByteArray(s, 0, s.length); ()
-        }
-      case (EnumT(ss), StringType) =>
-        val syms = ss.map(_.getBytes(utf8)).toArray
-        (c, v, n) => {
-          val sym = syms(ZngIO.unsignedOf(c.bytes(n)).toInt)
-          v.appendByteArray(sym, 0, sym.length); ()
-        }
-      case _ => null
-    }
-  }
-
   /** Plain primitive segment through a `primApp` decoder. */
   private final class PrimVFill(c: ZngIO.Cursor,
       app: (ZngIO.Cursor, WVec, Int) => Unit) extends VFill {
@@ -951,64 +883,6 @@ object VngIO {
     private val app = extAppender(target)
     def append(v: WVec): Unit = app(v, ZValue.toExternal(rd.next(), target))
     override def appendNull(v: WVec): Unit = appendNullFor(v, target)
-  }
-
-  /** Appender for an already-converted EXTERNAL value (ZValue.toExternal's
-    * output for `target`; null appends a null) — recursive so containers
-    * fill their child vectors.
-    */
-  private def extAppender(target: DataType): (WVec, Any) => Unit = {
-    val app: (WVec, Any) => Unit = target match {
-      case ArrayType(et, _) =>
-        val sub = extAppender(et)
-        (v, x) => {
-          val s = x.asInstanceOf[scala.collection.Seq[Any]]
-          v.appendArray(s.length): Unit
-          val child = v.arrayData()
-          s.foreach(sub(child, _))
-        }
-      // a map vector is an array of entries over a keys and a values child
-      case MapType(kt, vt, _) =>
-        val (ks, vs) = (extAppender(kt), extAppender(vt))
-        (v, x) => {
-          val m = x.asInstanceOf[scala.collection.Map[Any, Any]]
-          v.appendArray(m.size): Unit
-          val (keys, values) = (v.getChild(0), v.getChild(1))
-          m.foreach { case (k, e) => ks(keys, k); vs(values, e) }
-        }
-      case st: StructType =>
-        val subs = st.fields.map(f => extAppender(f.dataType))
-        (v, x) => {
-          val r = x.asInstanceOf[org.apache.spark.sql.Row]
-          v.appendStruct(false): Unit
-          var i = 0
-          while (i < subs.length) { subs(i)(v.getChild(i), r.get(i)); i += 1 }
-        }
-      case LongType => (v, x) => v.appendLong(x.asInstanceOf[Number].longValue): Unit
-      case IntegerType => (v, x) => v.appendInt(x.asInstanceOf[Number].intValue): Unit
-      case DoubleType => (v, x) => v.appendDouble(x.asInstanceOf[Number].doubleValue): Unit
-      case BooleanType => (v, x) => v.appendBoolean(x.asInstanceOf[Boolean]): Unit
-      case StringType =>
-        (v, x) => {
-          val bs = x.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          v.appendByteArray(bs, 0, bs.length): Unit
-        }
-      case BinaryType =>
-        (v, x) => { val bs = x.asInstanceOf[Array[Byte]]; v.appendByteArray(bs, 0, bs.length): Unit }
-      case TimestampType =>
-        (v, x) => {
-          val inst = x.asInstanceOf[java.sql.Timestamp].toInstant
-          v.appendLong(Math.addExact(
-            Math.multiplyExact(inst.getEpochSecond, 1000000L),
-            (inst.getNano / 1000).toLong)): Unit
-        }
-      case dt: DecimalType =>
-        (v, x) => v.putDecimal(v.appendNotNull(),
-          Decimal(x.asInstanceOf[java.math.BigDecimal], dt.precision, dt.scale), dt.precision)
-      case other => (_, x) =>
-        throw new IllegalStateException(s"vng column fill: ${x.getClass} into $other")
-    }
-    (v, x) => if (x == null) appendNullFor(v, target) else app(v, x)
   }
 
   private def constApp(value: ZValue, target: DataType): WVec => Unit = {

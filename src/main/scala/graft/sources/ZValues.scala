@@ -586,7 +586,8 @@ object ZValue {
     */
   def durText(ns: Long): String = ZFormat.durHuman(ns)
 
-  private def floatText(d: Double): String =
+  /** ZSON float text; `bits` = 32 gives float32's shortest digits. */
+  private[sources] def floatText(d: Double, bits: Int = 64): String =
     if (d.isNaN) "NaN"
     else if (d.isPosInfinity) "+Inf"
     else if (d.isNegInfinity) "-Inf"
@@ -594,7 +595,7 @@ object ZValue {
     else {
       // Go strconv 'g' shortest (zson/formatter.go FormatFloat) — the
       // implied-float dot appends only when no '.'/'e' marks it float
-      val s = ZFormat.goG(d, 64)
+      val s = ZFormat.goG(d, bits)
       if (s.exists(c => c == '.' || c == 'e')) s else s + "."
     }
 

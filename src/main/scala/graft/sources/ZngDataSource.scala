@@ -12,14 +12,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSource V2 batch source for ZNG streams — homogeneous or
   * heterogeneous (ZngIO.read routes every stream here after pass-1
-  * shape discovery). Emits Catalyst InternalRows straight from the wire
-  * (strings stay UTF-8 bytes, no external-Row conversion): each record
-  * shape gets its own direct builder projecting BY NAME into the merged
-  * frame, so mixed-shape zeek/zng data — the reference's normal input —
-  * decodes at the same per-row cost as a single-shape stream. Column
-  * pruning reaches the decoder (a pruned-away field is skipped via its
-  * length tag), so `count()`-class queries cost I/O plus tag
-  * arithmetic, like pass 1.
+  * shape discovery). Every scan is columnar: values decode straight
+  * from the wire into column vectors (strings stay UTF-8 bytes, no
+  * external-Row conversion) through one per-(wire type, column type)
+  * fill decision; each record shape gets its own appender projecting BY
+  * NAME into the merged frame, so mixed-shape zeek/zng data — the
+  * reference's normal input — decodes at the same per-row cost as a
+  * single-shape stream. Column pruning reaches the decoder (a
+  * pruned-away field is skipped via its length tag), so `count()`-class
+  * queries cost I/O plus tag arithmetic, like pass 1.
   *
   * String predicates push down as a pre-decode FRAME prefilter (the
   * reference's BufferFilter, runtime/sam/expr/bufferfilter.go): a frame
@@ -31,7 +32,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Options (set by ZngIO.read): `files` (newline-separated part list),
   * `shapes` (newline-separated shape texts, first-appearance order),
-  * `ns` (sub-µs time carrier), `counts` (per-file row counts).
+  * `splits` (per-file stream start offsets), `counts` (per-file row
+  * counts), `sizes` (per-file byte lengths).
   * The reference's zngio reader is the semantic model
   * (zio/zngio/reader.go); the Spark surface is a standard TableProvider
   * so `spark.read.format(...).schema(...).load()` composes with
@@ -177,33 +179,16 @@ private class ZngScanBuilder(full: StructType, options: CaseInsensitiveStringMap
       all.filter(n => perShape.forall(m => m.getOrElse(n, true)))
     }
     val files = ZngDataSource.filesOf(options)
-    // vectorized when every projected column is a vectorizable primitive
-    // in EVERY shape (and the merged column type is atomic — conflict
-    // columns are variants and fall back to the row path)
-    val vectorOk =
-      shapeList.nonEmpty && (try {
-        shapeList.forall { sh =>
-          ZType.strip(ZsonParser.parseType(ZType.stripNullWrap(sh))) match {
-            case ZType.Rec(fs) if fs.nonEmpty => fs.forall { case (n, ft) =>
-              val out = required.fieldNames.indexOf(n)
-              out < 0 || ZngIO.vecSupported(ft, required.fields(out).dataType)
-            }
-            case _ => false
-          }
-        }
-      } catch { case _: Exception => false })
     new ZngScan(
       files = files,
       splits = Option(options.get("splits"))
         .map(_.split('\n').toIndexedSeq).filter(_.length == files.length),
       sizes = ZngDataSource.longsOf(options, "sizes", files.length),
-      nsTime = options.getBoolean("ns", false),
       cleaned = StructType(full.fields.filterNot(_.name == graft.operators.Het.typeTag)),
       required = required,
       prefilter = if (enabled) BufferFilter.fromFilters(pushed, stringCols) else None,
       confMap = HadoopFs.confMap(SparkSession.active),
-      stats = ZngDataSource.statsOf(options, files),
-      columnar = vectorOk)
+      stats = ZngDataSource.statsOf(options, files))
   }
 }
 
@@ -225,12 +210,18 @@ private class FramesReadMetric extends CustomSumMetric {
   override def name(): String = "framesRead"
   override def description(): String = "zng values frames decoded"
 }
+/** Cells (and non-record rows) the scan filled through the value model
+  * rather than the primitive table — the slow-path counter.
+  */
+private class ValueFillsMetric extends CustomSumMetric {
+  override def name(): String = "valueFills"
+  override def description(): String = "zng cells filled through the value model"
+}
 
 private class ZngScan(files: Seq[String], splits: Option[Seq[String]],
-    sizes: Option[Seq[Long]], nsTime: Boolean,
+    sizes: Option[Seq[Long]],
     cleaned: StructType, required: StructType, prefilter: Option[BufferFilter],
-    confMap: Map[String, String], stats: (Option[Long], Option[Long]),
-    columnar: Boolean)
+    confMap: Map[String, String], stats: (Option[Long], Option[Long]))
     extends Scan with Batch with SupportsReportStatistics {
   override def estimateStatistics(): Statistics = new Statistics {
     override def numRows(): java.util.OptionalLong =
@@ -243,10 +234,9 @@ private class ZngScan(files: Seq[String], splits: Option[Seq[String]],
   override def description(): String =
     s"graft zng (${files.length} files, ${required.fields.length} of " +
       s"${cleaned.fields.length + 1} columns" +
-      (if (prefilter.isDefined) ", frame prefilter" else "") +
-      (if (columnar) ", vectorized" else "") + ")"
+      (if (prefilter.isDefined) ", frame prefilter" else "") + ", vectorized)"
   override def supportedCustomMetrics(): Array[CustomMetric] =
-    Array(new FramesSkippedMetric, new FramesReadMetric)
+    Array(new FramesSkippedMetric, new FramesReadMetric, new ValueFillsMetric)
   override def planInputPartitions(): Array[InputPartition] =
     files.indices.flatMap { i =>
       val f = files(i)
@@ -263,7 +253,7 @@ private class ZngScan(files: Seq[String], splits: Option[Seq[String]],
       }
     }.toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    new ZngReaderFactory(nsTime, cleaned, required, prefilter, confMap, columnar)
+    new ZngReaderFactory(cleaned, required, prefilter, confMap)
 }
 
 /** count(*) pushdown: one partial-count row per file. Counts come free
@@ -304,10 +294,14 @@ private class ZngCountScan(files: Seq[String], counts: Option[Seq[Long]], nAggs:
   }
 }
 
-private class ZngReaderFactory(nsTime: Boolean, cleaned: StructType,
-    required: StructType, prefilter: Option[BufferFilter],
-    confMap: Map[String, String], columnar: Boolean) extends PartitionReaderFactory {
-  override def supportColumnarReads(partition: InputPartition): Boolean = columnar
+/** Every ZNG scan is columnar: Spark asks only for batch readers. */
+private class ZngReaderFactory(cleaned: StructType, required: StructType,
+    prefilter: Option[BufferFilter], confMap: Map[String, String])
+    extends PartitionReaderFactory {
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("zng scans read column batches")
 
   private def bytesOf(partition: InputPartition): Array[Byte] = {
     val p = partition.asInstanceOf[ZngPartition]
@@ -322,44 +316,21 @@ private class ZngReaderFactory(nsTime: Boolean, cleaned: StructType,
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val stats = new ZngIO.FrameStats
     val (it, closeFn) =
-      ZngIO.decodeToColumnarBatches(bytesOf(partition), cleaned, required, nsTime,
-        prefilter, stats)
+      ZngIO.decodeToColumnarBatches(bytesOf(partition), cleaned, required, prefilter, stats)
     new PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
       private var batch: org.apache.spark.sql.vectorized.ColumnarBatch = _
       override def next(): Boolean = { val h = it.hasNext; if (h) batch = it.next(); h }
       override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = batch
       override def close(): Unit = closeFn()
       override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
-        new CustomTaskMetric {
-          override def name(): String = "framesSkipped"
-          override def value(): Long = stats.skipped
-        },
-        new CustomTaskMetric {
-          override def name(): String = "framesRead"
-          override def value(): Long = stats.read
-        })
+        taskMetric("framesSkipped", stats.skipped),
+        taskMetric("framesRead", stats.read),
+        taskMetric("valueFills", stats.valueFills))
     }
   }
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val bytes = bytesOf(partition)
-    val stats = new ZngIO.FrameStats
-    val it = ZngIO.decodeToInternalRows(bytes, cleaned, required, nsTime,
-      prefilter, stats)
-    new PartitionReader[InternalRow] {
-      private var row: InternalRow = _
-      override def next(): Boolean = { val h = it.hasNext; if (h) row = it.next(); h }
-      override def get(): InternalRow = row
-      override def close(): Unit = ()
-      override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
-        new CustomTaskMetric {
-          override def name(): String = "framesSkipped"
-          override def value(): Long = stats.skipped
-        },
-        new CustomTaskMetric {
-          override def name(): String = "framesRead"
-          override def value(): Long = stats.read
-        })
-    }
+  private def taskMetric(n: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
+    override def name(): String = n
+    override def value(): Long = v
   }
 }

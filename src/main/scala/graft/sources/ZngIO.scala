@@ -2,8 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, SpecializedGetters}
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -749,7 +748,7 @@ object ZngIO {
     * arrive — at most one frame is buffered, never the partition.
     */
   def encodeInternalStreamTo(out: java.io.OutputStream,
-      rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
+      rows: Iterator[InternalRow],
       schema: StructType): Unit = {
     val fw = new FrameWriter(out)
     val topId = fw.table.idOf(ztOf(schema)).toLong
@@ -784,6 +783,9 @@ object ZngIO {
   private[sources] case class ZEnum(symbols: Seq[String]) extends ZT
   private[sources] case class ZError(inner: ZT) extends ZT
   private[sources] case class ZNamed(name: String, inner: ZT) extends ZT
+
+  /** The type a named type wraps (named types share their inner's tag). */
+  private def unnamed(t: ZT): ZT = t match { case ZNamed(_, i) => unnamed(i); case o => o }
 
   /** Decode a zng file (or directory of part files) into its typedef
     * payload and the raw per-value slices (`type-id uvarint + tag + body`,
@@ -911,6 +913,144 @@ object ZngIO {
     def toByteArray: Array[Byte] = java.util.Arrays.copyOf(buf, len)
   }
 
+  // ---- column-vector fills (the ZNG and VNG scans share these) -------------
+
+  private[sources] type WVec = org.apache.spark.sql.execution.vectorized.WritableColumnVector
+
+  /** Null append that respects the vector's type: struct vectors must use
+    * appendStruct(true) so child vectors stay aligned — plain appendNull
+    * asserts against StructType and, with assertions off, silently skews
+    * every later nested value.
+    */
+  private[sources] def appendNullFor(v: WVec, target: DataType): Unit = target match {
+    case _: StructType => v.appendStruct(true): Unit
+    case _ => v.appendNull(): Unit
+  }
+
+  private val TwoTo64 = java.math.BigInteger.ONE.shiftLeft(64)
+
+  /** The one (zed primitive, column type) decode table of the columnar
+    * scans: decodes one tagged primitive body of `n` bytes (its non-null
+    * tag already read) straight into the vector — no ZValue, no Row, no
+    * per-value boxing. Null for every other pair, which the caller fills
+    * through the value model.
+    */
+  private[sources] def primApp(t: ZType, target: DataType): (Cursor, WVec, Int) => Unit = {
+    import ZType.{EnumT, Prim}
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    (ZType.strip(t), target) match {
+      case (Prim("int8") | Prim("int16") | Prim("int32") | Prim("int64") | Prim("duration"),
+            LongType) =>
+        (c, v, n) => { v.appendLong(c.signedAt(n)); () }
+      // the column type names the time carrier: ns longs in sub-µs frames
+      case (Prim("time"), LongType) => (c, v, n) => { v.appendLong(c.signedAt(n)); () }
+      case (Prim("time"), TimestampType) =>
+        (c, v, n) => { v.appendLong(Math.floorDiv(c.signedAt(n), 1000L)); () }
+      case (Prim("uint8") | Prim("uint16") | Prim("uint32"), LongType) =>
+        (c, v, n) => { v.appendLong(c.unsignedAt(n)); () }
+      // decimal(20,0) stores the unscaled value's big-endian bytes
+      case (Prim("uint64"), dt) if dt == DecimalType(20, 0) =>
+        (c, v, n) => {
+          val u = java.math.BigInteger.valueOf(c.unsignedAt(n))
+          val b = (if (u.signum < 0) u.add(TwoTo64) else u).toByteArray
+          v.appendByteArray(b, 0, b.length); ()
+        }
+      case (Prim("float64"), DoubleType) =>
+        (c, v, n) => { v.appendDouble(java.lang.Double.longBitsToDouble(c.unsignedAt(n))); () }
+      case (Prim("float32"), DoubleType) =>
+        (c, v, n) => { v.appendDouble(
+          java.lang.Float.intBitsToFloat(c.unsignedAt(n).toInt).toDouble); () }
+      case (Prim("float16"), DoubleType) =>
+        (c, v, n) => { v.appendDouble(halfToDouble(c.unsignedAt(n).toInt)); () }
+      case (Prim("bool"), BooleanType) =>
+        (c, v, n) => {
+          val b = n > 0 && c.buf(c.pos) == 1
+          c.pos += n
+          v.appendBoolean(b); ()
+        }
+      case (Prim("string"), StringType) | (Prim("bytes"), BinaryType) =>
+        (c, v, n) => { v.appendByteArray(c.buf, c.pos, n); c.pos += n; () }
+      case (Prim("ip"), StringType) =>
+        (c, v, n) => {
+          val s = ipText(c.bytes(n)).getBytes(utf8)
+          v.appendByteArray(s, 0, s.length); ()
+        }
+      case (Prim("net"), StringType) =>
+        (c, v, n) => {
+          val b = c.bytes(n)
+          val addr = java.util.Arrays.copyOfRange(b, 0, b.length / 2)
+          val mask = java.util.Arrays.copyOfRange(b, b.length / 2, b.length)
+          val s = (ipText(addr) + "/" + leadingOnes(mask)).getBytes(utf8)
+          v.appendByteArray(s, 0, s.length); ()
+        }
+      case (EnumT(ss), StringType) =>
+        val syms = ss.map(_.getBytes(utf8)).toArray
+        (c, v, n) => {
+          val sym = syms(c.unsignedAt(n).toInt)
+          v.appendByteArray(sym, 0, sym.length); ()
+        }
+      case _ => null
+    }
+  }
+
+  /** Appender for an already-converted EXTERNAL value (ZValue.toExternal's
+    * output for `target`; null appends a null) — recursive so containers
+    * fill their child vectors.
+    */
+  private[sources] def extAppender(target: DataType): (WVec, Any) => Unit = {
+    val app: (WVec, Any) => Unit = target match {
+      case ArrayType(et, _) =>
+        val sub = extAppender(et)
+        (v, x) => {
+          val s = x.asInstanceOf[scala.collection.Seq[Any]]
+          v.appendArray(s.length): Unit
+          val child = v.arrayData()
+          s.foreach(sub(child, _))
+        }
+      // a map vector is an array of entries over a keys and a values child
+      case MapType(kt, vt, _) =>
+        val (ks, vs) = (extAppender(kt), extAppender(vt))
+        (v, x) => {
+          val m = x.asInstanceOf[scala.collection.Map[Any, Any]]
+          v.appendArray(m.size): Unit
+          val (keys, values) = (v.getChild(0), v.getChild(1))
+          m.foreach { case (k, e) => ks(keys, k); vs(values, e) }
+        }
+      case st: StructType =>
+        val subs = st.fields.map(f => extAppender(f.dataType))
+        (v, x) => {
+          val r = x.asInstanceOf[Row]
+          v.appendStruct(false): Unit
+          var i = 0
+          while (i < subs.length) { subs(i)(v.getChild(i), r.get(i)); i += 1 }
+        }
+      case LongType => (v, x) => v.appendLong(x.asInstanceOf[Number].longValue): Unit
+      case IntegerType => (v, x) => v.appendInt(x.asInstanceOf[Number].intValue): Unit
+      case DoubleType => (v, x) => v.appendDouble(x.asInstanceOf[Number].doubleValue): Unit
+      case BooleanType => (v, x) => v.appendBoolean(x.asInstanceOf[Boolean]): Unit
+      case StringType =>
+        (v, x) => {
+          val bs = x.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+          v.appendByteArray(bs, 0, bs.length): Unit
+        }
+      case BinaryType =>
+        (v, x) => { val bs = x.asInstanceOf[Array[Byte]]; v.appendByteArray(bs, 0, bs.length): Unit }
+      case TimestampType =>
+        (v, x) => {
+          val inst = x.asInstanceOf[java.sql.Timestamp].toInstant
+          v.appendLong(Math.addExact(
+            Math.multiplyExact(inst.getEpochSecond, 1000000L),
+            (inst.getNano / 1000).toLong)): Unit
+        }
+      case dt: DecimalType =>
+        (v, x) => v.putDecimal(v.appendNotNull(),
+          Decimal(x.asInstanceOf[java.math.BigDecimal], dt.precision, dt.scale), dt.precision)
+      case other => (_, x) =>
+        throw new IllegalStateException(s"column fill: ${x.getClass} into $other")
+    }
+    (v, x) => if (x == null) appendNullFor(v, target) else app(v, x)
+  }
+
   private[graft] def signedOf(b: Array[Byte]): Long = {
     var u = 0L
     for (i <- b.indices.reverse) u = (u << 8) | (b(i) & 0xffL)
@@ -980,11 +1120,8 @@ object ZngIO {
               .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'")
               .withZone(java.time.ZoneOffset.UTC).format(inst)
           case ID_FLOAT32 =>
-            val v = java.lang.Float.intBitsToFloat(unsignedOf(b).toInt)
-            if (v == Math.floor(v) && !v.isInfinite) s"${v.toLong}." else v.toString
-          case ID_FLOAT64 =>
-            val v = java.lang.Double.longBitsToDouble(unsignedOf(b))
-            if (v == Math.floor(v) && !v.isInfinite) s"${v.toLong}." else v.toString
+            ZValue.floatText(java.lang.Float.intBitsToFloat(unsignedOf(b).toInt).toDouble, 32)
+          case ID_FLOAT64 => ZValue.floatText(java.lang.Double.longBitsToDouble(unsignedOf(b)))
           case ID_BOOL => if (b.nonEmpty && b(0) == 1) "true" else "false"
           case ID_BYTES => "0x" + b.map(x => f"${x & 0xff}%02x").mkString
           case ID_STRING => "\"" + esc(new String(b, "UTF-8")) + "\""
@@ -1624,17 +1761,13 @@ object ZngIO {
         while (!inner.done) ts.foreach(t => probe(inner, t))
       }
     }
-    def isRecT(t: ZT): Boolean = t match {
-      case ZNamed(_, inner) => isRecT(inner)
-      case _: ZRecord => true
-      case _ => false
-    }
     foreachValue(bytes) { (t, c) =>
       val base = textMemo.getOrElseUpdate(t, ZType.fullText(zTypeOf(t)))
       // a top-level NULL record value (tag byte 0) registers under the
       // null(<rec>) wrapped shape, matching recordify on the decode pass
       val text =
-        if (isRecT(t) && c.pos < c.buf.length && c.buf(c.pos) == 0) ZType.nullWrap(base)
+        if (unnamed(t).isInstanceOf[ZRecord] && c.pos < c.buf.length && c.buf(c.pos) == 0)
+          ZType.nullWrap(base)
         else base
       if (!seen.contains(text)) seen(text) = i
       probe(c, t)
@@ -1643,622 +1776,109 @@ object ZngIO {
     (seen.toSeq, i - startIdx, ns)
   }
 
-  // ---- InternalRow-native decoding (the DSv2 scan path) ---------------------
+  // ---- columnar decoding (the DSv2 scan path) -------------------------------
 
-  /** External→Catalyst-internal converter for the value-model fallback
-    * leaves (maps, sets, variants, type values): mirrors what Spark's own
-    * Row→InternalRow conversion does over the frame's types.
-    */
-  private[sources] def extToInternal(dt: DataType): Any => Any = dt match {
-    case StringType => v => UTF8String.fromString(v.toString)
-    case TimestampType => { v =>
-      val inst = v.asInstanceOf[java.sql.Timestamp].toInstant
-      java.lang.Long.valueOf(Math.addExact(
-        Math.multiplyExact(inst.getEpochSecond, 1000000L), (inst.getNano / 1000).toLong))
-    }
-    case DateType => v =>
-      java.lang.Integer.valueOf(v.asInstanceOf[java.sql.Date].toLocalDate.toEpochDay.toInt)
-    case d: DecimalType => v => Decimal(v.asInstanceOf[java.math.BigDecimal])
-    case st: StructType =>
-      val subs = st.fields.map(f => extToInternal(f.dataType))
-      v => {
-        val r = v.asInstanceOf[Row]
-        val arr = new Array[Any](subs.length)
-        var i = 0
-        while (i < subs.length) {
-          val x = r.get(i)
-          arr(i) = if (x == null) null else subs(i)(x)
-          i += 1
-        }
-        new GenericInternalRow(arr)
-      }
-    case ArrayType(et, _) =>
-      val sub = extToInternal(et)
-      v => new GenericArrayData(v.asInstanceOf[scala.collection.Seq[Any]].iterator
-        .map(x => if (x == null) null else sub(x)).toArray)
-    case MapType(kt, vt, _) =>
-      val ks = extToInternal(kt); val vs = extToInternal(vt)
-      v => {
-        val es = v.asInstanceOf[scala.collection.Map[Any, Any]].toSeq
-        new ArrayBasedMapData(
-          new GenericArrayData(es.map(e => ks(e._1)).toArray),
-          new GenericArrayData(es.map(e => if (e._2 == null) null else vs(e._2)).toArray))
-      }
-    // narrow numerics: the value tree carries Longs/Doubles — convert to
-    // the slot's exact width (GenericInternalRow.getInt casts, not coerces)
-    case IntegerType => {
-      case n: java.lang.Number => java.lang.Integer.valueOf(n.intValue)
-      case v => v
-    }
-    case ShortType => {
-      case n: java.lang.Number => java.lang.Short.valueOf(n.shortValue)
-      case v => v
-    }
-    case ByteType => {
-      case n: java.lang.Number => java.lang.Byte.valueOf(n.byteValue)
-      case v => v
-    }
-    case FloatType => {
-      case n: java.lang.Number => java.lang.Float.valueOf(n.floatValue)
-      case v => v
-    }
-    case _ => identity // Long, Double, Boolean, Array[Byte] ride unchanged
-  }
-
-  /** Wire→internal decoder for one field of the DSv2 scan, total over all
-    * types: exotic leaves (sets, maps, unions/errors, type values,
-    * decimals) route through the value model inline and convert,
-    * everything else decodes straight off the cursor.
-    */
-  private def internalFieldDecoder(t0: ZT, target: DataType, nsTime: Boolean): Cursor => Any = {
-    def fallback: Cursor => Any = {
-      val conv = extToInternal(target)
-      c => {
-        val ext = ZValue.toExternal(decodeZValue(c, t0, unionKeepsMember = false), target)
-        if (ext == null) null else conv(ext)
-      }
-    }
-    t0 match {
-      case ZNamed(_, inner) => internalFieldDecoder(inner, target, nsTime) // no own tag
-      case ZPrim(id) => (id, target) match {
-        case (0 | 1 | 2, LongType) => c => {
-          val tag = c.uvarint()
-          if (tag == 0) null else java.lang.Long.valueOf(c.unsignedAt((tag - 1).toInt))
-        }
-        case (6 | 7 | 8 | 9 | ID_DURATION, LongType) => c => {
-          val tag = c.uvarint()
-          if (tag == 0) null else java.lang.Long.valueOf(c.signedAt((tag - 1).toInt))
-        }
-        // guarded on target: under heterogeneous streams a cross-shape
-        // type conflict forces the merged column to a variant StructType,
-        // where a raw boxed Long would corrupt the InternalRow slot —
-        // those route through the variant-boxing fallback below
-        case (ID_TIME, LongType | TimestampType | TimestampNTZType) => c => {
-          val tag = c.uvarint()
-          if (tag == 0) null
-          else {
-            val ns = c.signedAt((tag - 1).toInt)
-            java.lang.Long.valueOf(if (nsTime) ns else Math.floorDiv(ns, 1000L))
-          }
-        }
-        case (14, DoubleType) => c => {
-          val tag = c.uvarint()
-          if (tag == 0) null
-          else java.lang.Double.valueOf(halfToDouble(c.unsignedAt((tag - 1).toInt).toInt))
-        }
-        case (ID_FLOAT32, DoubleType) => c => {
-          val tag = c.uvarint()
-          if (tag == 0) null
-          else java.lang.Double.valueOf(
-            java.lang.Float.intBitsToFloat(c.unsignedAt((tag - 1).toInt).toInt).toDouble)
-        }
-        case (ID_FLOAT64, DoubleType) => c => {
-          val tag = c.uvarint()
-          if (tag == 0) null
-          else java.lang.Double.valueOf(
-            java.lang.Double.longBitsToDouble(c.unsignedAt((tag - 1).toInt)))
-        }
-        case (ID_BOOL, BooleanType) => c => {
-          val tag = c.uvarint()
-          if (tag == 0) null
-          else {
-            val n = (tag - 1).toInt
-            val b = n > 0 && c.buf(c.pos) == 1
-            c.pos += n
-            java.lang.Boolean.valueOf(b)
-          }
-        }
-        case (ID_STRING, StringType) => c => {
-          val tag = c.uvarint()
-          if (tag == 0) null
-          else {
-            // zero-copy: wraps the frame payload (never mutated)
-            val n = (tag - 1).toInt
-            val s = UTF8String.fromBytes(c.buf, c.pos, n)
-            c.pos += n
-            s
-          }
-        }
-        case (ID_BYTES, BinaryType) => c => {
-          val tag = c.uvarint()
-          if (tag == 0) null else c.bytes((tag - 1).toInt)
-        }
-        case (ID_IP, StringType) => c => {
-          val tag = c.uvarint()
-          if (tag == 0) null else UTF8String.fromString(ipText(c.bytes((tag - 1).toInt)))
-        }
-        case (ID_NET, StringType) => c => {
-          val tag = c.uvarint()
-          if (tag == 0) null
-          else {
-            val b = c.bytes((tag - 1).toInt)
-            val addr = java.util.Arrays.copyOfRange(b, 0, b.length / 2)
-            val mask = java.util.Arrays.copyOfRange(b, b.length / 2, b.length)
-            UTF8String.fromString(ipText(addr) + "/" + leadingOnes(mask))
-          }
-        }
-        case (3, _: DecimalType) => c => { // uint64 full-range carrier
-          val tag = c.uvarint()
-          if (tag == 0) null
-          else {
-            val b = c.bytes((tag - 1).toInt)
-            var x = BigInt(0)
-            for (i <- b.indices.reverse) x = (x << 8) | (b(i) & 0xff)
-            Decimal(scala.math.BigDecimal(x), 20, 0)
-          }
-        }
-        case (ID_NULL, _) => c => {
-          val tag = c.uvarint(); if (tag != 0) c.pos += (tag - 1).toInt; null
-        }
-        case _ => fallback
-      }
-      case ZRecord(fields) => target match {
-        case st: StructType if st.fields.length == fields.length &&
-            st.fields.iterator.map(_.name).sameElements(fields.iterator.map(_._1)) =>
-          val ds = fields.zip(st.fields.toIndexedSeq)
-            .map { case ((_, ft), sf) => internalFieldDecoder(ft, sf.dataType, nsTime) }.toArray
-          c => {
-            val tag = c.uvarint()
-            if (tag == 0) null
-            else {
-              val inner = new Cursor(c.buf, c.pos)
-              c.pos += (tag - 1).toInt
-              val arr = new Array[Any](ds.length)
-              var i = 0
-              while (i < ds.length) { arr(i) = ds(i)(inner); i += 1 }
-              new GenericInternalRow(arr)
-            }
-          }
-        case _ => fallback // variant-boxed record column
-      }
-      case ZArray(e) => target match {
-        case ArrayType(et, _) =>
-          val d = internalFieldDecoder(e, et, nsTime)
-          c => {
-            val tag = c.uvarint()
-            if (tag == 0) null
-            else {
-              val inner = new Cursor(c.bytes((tag - 1).toInt), 0)
-              val b = scala.collection.mutable.ArrayBuffer.empty[Any]
-              while (!inner.done) b += d(inner)
-              new GenericArrayData(b.toArray)
-            }
-          }
-        case _ => fallback
-      }
-      case ZEnum(symbols) if target == StringType =>
-        val syms = symbols.map(UTF8String.fromString).toArray
-        c => {
-          val tag = c.uvarint()
-          if (tag == 0) null else syms(unsignedOf(c.bytes((tag - 1).toInt)).toInt)
-        }
-      case _ => fallback // sets (normalization reorders), maps, unions, errors,
-                         // and any leaf whose target is a conflict variant
-    }
-  }
-
-  /** Per-partition frame prefilter counters — surfaced as DSv2 custom
-    * metrics (Spark UI) and summed JVM-wide for local-mode assertions.
+  /** Per-partition scan counters — surfaced as DSv2 custom metrics
+    * (Spark UI); the frame counts are also summed JVM-wide for local-mode
+    * assertions. `valueFills` counts the cells (and non-record rows) that
+    * decoded through the value model instead of the primitive table.
     */
   final class FrameStats {
     @volatile var skipped: Long = 0L
     @volatile var read: Long = 0L
+    @volatile var valueFills: Long = 0L
   }
   val totalFramesSkipped = new java.util.concurrent.atomic.LongAdder
   val totalFramesRead = new java.util.concurrent.atomic.LongAdder
 
-  /** Decode a stream to internal rows of `required` (a pruned subset of
-    * the cleaned-plus-tag frame) — the DSv2 scan body. Fields outside
-    * `required` are skipped via their length tags; when no record field is
-    * required at all (count(*), tag-only reads) whole value bodies are
-    * skipped, making the scan I/O plus tag arithmetic like pass 1.
+  /** The one per-(wire type, column type) fill decision of the ZNG scan:
+    * reads one tagged value off the cursor and appends ONE slot to `vec`.
+    * Total over all types — primitives take the shared primitive table,
+    * arrays and name-aligned records fill child vectors, and everything
+    * else (sets in normSet order, maps, unions, errors, type values,
+    * decimals, variant columns) converts the reference decoder's value.
     */
-  private[sources] def decodeToInternalRows(bytes: Array[Byte],
-      cleaned: StructType, required: StructType, nsTime: Boolean,
-      prefilter: Option[BufferFilter] = None,
-      stats: FrameStats = new FrameStats): Iterator[InternalRow] =
-    new Iterator[InternalRow] {
-      private val c = new Cursor(bytes, 0)
-      private var types = scala.collection.mutable.ArrayBuffer.empty[ZT]
-      private var queue: Iterator[InternalRow] = Iterator.empty
-      private val memo = scala.collection.mutable.HashMap.empty[ZT, Cursor => InternalRow]
-      private val width = required.fields.length
-      private val tagIdx = required.fieldNames.indexOf(graft.operators.Het.typeTag)
-      private def typeOfId(id: Int): ZT = if (id < 30) ZPrim(id) else types(id - 30)
-      // id-indexed front cache over `memo` (tree hashing per row otherwise);
-      // ids append-only within a stream, cleared with `types` at EOS
-      private var buildersById = new Array[Cursor => InternalRow](64)
-      private def builderOfId(id: Int): Cursor => InternalRow = {
-        if (id >= buildersById.length)
-          buildersById = java.util.Arrays.copyOf(buildersById, math.max(id + 1, buildersById.length << 1))
-        var b = buildersById(id)
-        if (b == null) {
-          val t = typeOfId(id)
-          b = memo.getOrElseUpdate(t, builderOf(t))
-          buildersById(id) = b
-        }
-        b
-      }
-
-      private def builderOf(t: ZT): Cursor => InternalRow = {
-        def stripNamed(x: ZT): ZT = x match { case ZNamed(_, i) => stripNamed(i); case o => o }
-        // direct per-shape builder: fields project BY NAME into the merged
-        // frame (unshared fields stay null, conflict columns variant-box
-        // through the per-field fallback), so every record shape of a
-        // heterogeneous stream decodes wire→InternalRow with no value tree
-        val shapeText = ZType.fullText(zTypeOf(t))
-        val tagVal = UTF8String.fromString(shapeText)
-        // a top-level null record is all-null relationally but its tag
-        // must carry the null wrapper (writers re-emit `null`)
-        val nullTagVal = UTF8String.fromString(ZType.nullWrap(shapeText))
-        val direct: Option[Cursor => InternalRow] =
-          stripNamed(t) match {
-            case ZRecord(fields) if fields.nonEmpty &&
-                fields.forall { case (n, _) => cleaned.fieldNames.contains(n) } =>
-              val reqCount = fields.count(f => required.fieldNames.contains(f._1))
-              val acts: Array[(Cursor, Array[Any]) => Unit] =
-                fields.map { case (name, ft) =>
-                  val out = required.fieldNames.indexOf(name)
-                  if (out < 0) { (cc: Cursor, _: Array[Any]) =>
-                    val tag = cc.uvarint(); if (tag != 0) cc.pos += (tag - 1).toInt
-                  } else {
-                    val d = internalFieldDecoder(ft, required.fields(out).dataType, nsTime)
-                    (cc: Cursor, arr: Array[Any]) => arr(out) = d(cc)
-                  }
-                }.toArray
-              Some { cc =>
-                val arr = new Array[Any](width)
-                val tag = cc.uvarint()
-                if (tagIdx >= 0) arr(tagIdx) = if (tag == 0) nullTagVal else tagVal
-                if (tag != 0) {
-                  if (reqCount == 0) cc.pos += (tag - 1).toInt
-                  else {
-                    val inner = new Cursor(cc.buf, cc.pos)
-                    cc.pos += (tag - 1).toInt
-                    var i = 0
-                    while (i < acts.length) { acts(i)(inner, arr); i += 1 }
-                  }
-                }
-                new GenericInternalRow(arr)
-              }
-            case _ => None
-          }
-        direct.getOrElse {
-          // general path: external row over cleaned+tag, convert the
-          // required slots (engages only off the single-shape happy path,
-          // e.g. all-null record streams)
-          val srcIdx = required.fields.map { f =>
-            if (f.name == graft.operators.Het.typeTag) cleaned.fields.length
-            else cleaned.fieldIndex(f.name)
-          }
-          val convs = required.fields.map(f => extToInternal(f.dataType))
-          cc => {
-            val r = ZsonReader.rowOf(decodeZValue(cc, t, unionKeepsMember = false),
-              cleaned, tag = true)
-            val arr = new Array[Any](width)
-            var i = 0
-            while (i < width) {
-              val x = r.get(srcIdx(i))
-              arr(i) = if (x == null) null else convs(i)(x)
-              i += 1
-            }
-            new GenericInternalRow(arr)
-          }
+  private def vecAppender(t: ZT, target: DataType, vec: WVec,
+      stats: FrameStats): Cursor => Unit = {
+    def value: Cursor => Unit = {
+      val app = extAppender(target)
+      // a null converts to null in every column but a variant, which
+      // boxes the null's type too
+      val boxesNull = ZsonIO.isVariantType(target)
+      c => {
+        if (!boxesNull && c.buf(c.pos) == 0) { c.pos += 1; appendNullFor(vec, target) }
+        else {
+          stats.valueFills += 1
+          app(vec, ZValue.toExternal(decodeZValue(c, t, unionKeepsMember = false), target))
         }
       }
-
-      // memoized id → top-level field-name set for the field-NAME frame
-      // finder (BfFieldName); reset with the type context at EOS
-      private var fieldMemo = new java.util.HashMap[Int, java.util.Set[String]]()
-      private def fieldsOf(id: Int): java.util.Set[String] = {
-        val hit = fieldMemo.get(id)
-        if (hit != null) return if (hit.isEmpty) null else hit
-        val fs: java.util.Set[String] =
-          try (typeOfId(id) match {
-            case x => {
-              def sn(t: ZT): ZT = t match { case ZNamed(_, i) => sn(i); case o => o }
-              sn(x)
-            }
-          }) match {
-            case ZRecord(fields) =>
-              val set = new java.util.HashSet[String]()
-              fields.foreach(f => set.add(f._1): Unit)
-              set
-            case _ => java.util.Collections.emptySet[String]()
-          } catch { case _: Exception => java.util.Collections.emptySet[String]() }
-        fieldMemo.put(id, fs)
-        if (fs.isEmpty) null else fs
-      }
-
-      // stream-level field pruning: when NO type defined so far in this
-      // stream carries every required field, values frames drop before
-      // LZ4 decompression (typedefs always precede use, so this is sound)
-      private val requiredNames: Set[String] =
-        prefilter.map(BufferFilter.requiredNamesIn).getOrElse(Set.empty)
-      private var fieldCheckLen = -1
-      private var streamCanMatch = true
-      private def streamHasFields(): Boolean = {
-        if (requiredNames.isEmpty) return true
-        if (types.length != fieldCheckLen) {
-          fieldCheckLen = types.length
-          def sn(t: ZT): ZT = t match { case ZNamed(_, i) => sn(i); case o => o }
-          streamCanMatch = types.exists(t => sn(t) match {
-            case ZRecord(fields) =>
-              val names = fields.map(_._1).toSet
-              requiredNames.forall(names.contains)
-            case _ => false
-          })
-        }
-        streamCanMatch
-      }
-
-      private def fill(): Unit = {
-        while (!queue.hasNext && !c.done) {
-          val code = c.u8()
-          if (code == 0xff) {
-            types = scala.collection.mutable.ArrayBuffer.empty[ZT]
-            buildersById = new Array[Cursor => InternalRow](64)
-            fieldMemo = new java.util.HashMap[Int, java.util.Set[String]]()
-            fieldCheckLen = -1
-          }
-          else readFrameRaw(c, code) match {
-            case (1, raw, comp) if !streamHasFields() =>
-              // drop the whole values frame WITHOUT decompressing
-              stats.skipped += 1; totalFramesSkipped.increment()
-            case (t0, raw, comp) => (t0, inflateFrame(raw, comp)) match {
-            case (0, payload) =>
-              parseTypedefs(payload, types)
-              fieldMemo = new java.util.HashMap[Int, java.util.Set[String]]()
-            case (1, payload) =>
-              // BufferFilter prefilter (ref bufferfilter.go +
-              // fieldnamefinder.go): when the pushed predicate's literal
-              // can't appear in this frame's bytes, OR no type in the
-              // frame has the required fields, skip the whole decode
-              if (prefilter.exists(!_.matchesTyped(payload, payload.length, fieldsOf))) {
-                stats.skipped += 1; totalFramesSkipped.increment()
-              } else {
-                stats.read += 1; totalFramesRead.increment()
-                val vc = new Cursor(payload, 0)
-                val out = Vector.newBuilder[InternalRow]
-                while (!vc.done) {
-                  out += builderOfId(vc.uvarint().toInt)(vc)
-                }
-                queue = out.result().iterator
-              }
-            case _ => // control frame: skip
-            }
-          }
-        }
-      }
-      def hasNext: Boolean = { if (!queue.hasNext) fill(); queue.hasNext }
-      def next(): InternalRow = { if (!hasNext) throw new NoSuchElementException; queue.next() }
     }
-
-  // ---- vectorized (ColumnarBatch) decoding ----------------------------------
-
-  /** Can a field of zed type `t` fill a column vector of `target`
-    * directly? (The plan-time eligibility gate for the vectorized scan —
-    * must stay in sync with vecAppender.)
-    */
-  private[sources] def vecSupported(t: graft.sources.ZType, target: DataType): Boolean =
-    ZType.strip(t) match {
-      case ZType.Prim("uint8") | ZType.Prim("uint16") | ZType.Prim("uint32") |
-           ZType.Prim("int8") | ZType.Prim("int16") | ZType.Prim("int32") |
-           ZType.Prim("int64") | ZType.Prim("duration") => target == LongType
-      case ZType.Prim("time") => target == LongType || target == TimestampType
-      case ZType.Prim("float16") | ZType.Prim("float32") | ZType.Prim("float64") =>
-        target == DoubleType
-      case ZType.Prim("bool") => target == BooleanType
-      case ZType.Prim("string") | ZType.Prim("ip") | ZType.Prim("net") =>
-        target == StringType
-      case ZType.Prim("bytes") => target == BinaryType
-      case ZType.Prim("null") => true
-      case ZType.EnumT(_) => target == StringType
-      // arrays of vectorizable elements (zeek vector columns); SETS keep
-      // the row path — their decode normalizes element order
-      case ZType.Arr(e) => target match {
-        case ArrayType(et, _) => vecSupported(e, et)
-        case _ => false
-      }
-      // nested records fill struct child vectors (zeek's id record);
-      // field order is positional on the wire, so names must line up
-      case ZType.Rec(fs) => target match {
-        case st: StructType => fs.nonEmpty && fs.length == st.fields.length &&
-          fs.zip(st.fields.toIndexedSeq).forall { case ((n, ft), sf) =>
-            n == sf.name && vecSupported(ft, sf.dataType)
-          }
-        case _ => false
-      }
-      case _ => false
-    }
-
-  private type WVec = org.apache.spark.sql.execution.vectorized.WritableColumnVector
-
-  /** Null append that respects the vector's type: struct vectors must use
-    * appendStruct(true) so child vectors stay aligned — plain appendNull
-    * asserts against StructType and, with assertions off, silently skews
-    * every subsequent nested value (mirrors VngIO.appendNullFor).
-    */
-  private def appendNullFor(v: WVec, target: DataType): Unit = target match {
-    case _: StructType => v.appendStruct(true): Unit
-    case _ => v.appendNull(): Unit
-  }
-
-  /** Wire→column-vector appender for one primitive field: reads the tag
-    * and body off the cursor and appends ONE slot to `vec` — no boxing,
-    * no row object. None when the type needs the row path.
-    */
-  private def vecAppender(t0: ZT, target: DataType, vec: WVec,
-      nsTime: Boolean): Option[Cursor => Unit] = t0 match {
-    case ZNamed(_, inner) => vecAppender(inner, target, vec, nsTime)
-    case ZEnum(symbols) if target == StringType =>
-      val syms = symbols.map(_.getBytes("UTF-8")).toArray
-      Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) { vec.appendNull(); () }
-        else {
-          val s = syms(unsignedOf(c.bytes((tag - 1).toInt)).toInt)
-          vec.appendByteArray(s, 0, s.length); ()
+    (t, target) match {
+      // a variant boxes the whole value: named and union wrappers are
+      // part of what it carries
+      case _ if ZsonIO.isVariantType(target) => value
+      case (ZNamed(_, inner), _) => vecAppender(inner, target, vec, stats) // no own tag
+      case (_: ZPrim | _: ZEnum, _) =>
+        val app = primApp(zTypeOf(t), target)
+        if (app == null) value
+        else c => {
+          val tag = c.uvarint()
+          if (tag == 0) appendNullFor(vec, target) else app(c, vec, (tag - 1).toInt)
         }
-      }
-    case ZPrim(id) => (id, target) match {
-      case (0 | 1 | 2, LongType) => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) { vec.appendNull(); () }
-        else { vec.appendLong(c.unsignedAt((tag - 1).toInt)); () }
-      }
-      case (6 | 7 | 8 | 9 | ID_DURATION, LongType) => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) { vec.appendNull(); () }
-        else { vec.appendLong(c.signedAt((tag - 1).toInt)); () }
-      }
-      case (ID_TIME, LongType | TimestampType | TimestampNTZType) => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) { vec.appendNull(); () }
-        else {
-          val ns = c.signedAt((tag - 1).toInt)
-          vec.appendLong(if (nsTime) ns else Math.floorDiv(ns, 1000L)); ()
-        }
-      }
-      case (14, DoubleType) => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) { vec.appendNull(); () }
-        else { vec.appendDouble(halfToDouble(c.unsignedAt((tag - 1).toInt).toInt)); () }
-      }
-      case (ID_FLOAT32, DoubleType) => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) { vec.appendNull(); () }
-        else { vec.appendDouble(
-          java.lang.Float.intBitsToFloat(c.unsignedAt((tag - 1).toInt).toInt).toDouble); () }
-      }
-      case (ID_FLOAT64, DoubleType) => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) { vec.appendNull(); () }
-        else { vec.appendDouble(
-          java.lang.Double.longBitsToDouble(c.unsignedAt((tag - 1).toInt))); () }
-      }
-      case (ID_BOOL, BooleanType) => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) { vec.appendNull(); () }
-        else {
-          val n = (tag - 1).toInt
-          val b = n > 0 && c.buf(c.pos) == 1
-          c.pos += n
-          vec.appendBoolean(b); ()
-        }
-      }
-      case (ID_STRING, StringType) | (ID_BYTES, BinaryType) => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) { vec.appendNull(); () }
-        else {
-          val n = (tag - 1).toInt
-          vec.appendByteArray(c.buf, c.pos, n)
-          c.pos += n; ()
-        }
-      }
-      case (ID_IP, StringType) => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) { vec.appendNull(); () }
-        else {
-          val s = ipText(c.bytes((tag - 1).toInt)).getBytes("UTF-8")
-          vec.appendByteArray(s, 0, s.length); ()
-        }
-      }
-      case (ID_NET, StringType) => Some { c =>
-        val tag = c.uvarint()
-        if (tag == 0) { vec.appendNull(); () }
-        else {
-          val b = c.bytes((tag - 1).toInt)
-          val addr = java.util.Arrays.copyOfRange(b, 0, b.length / 2)
-          val mask = java.util.Arrays.copyOfRange(b, b.length / 2, b.length)
-          val s = (ipText(addr) + "/" + leadingOnes(mask)).getBytes("UTF-8")
-          vec.appendByteArray(s, 0, s.length); ()
-        }
-      }
-      case (ID_NULL, _) => Some { c =>
-        val tag = c.uvarint()
-        if (tag != 0) c.pos += (tag - 1).toInt
-        appendNullFor(vec, target)
-      }
-      case _ => None
-    }
-    case ZArray(e) => target match {
-      case ArrayType(et, _) =>
+      case (ZArray(e), ArrayType(et, _)) =>
         // elements fill the child vector; the wire carries no length, so
         // a tag-skip pre-pass counts elements for appendArray's offsets
-        vecAppender(e, et, vec.arrayData(), nsTime).map { elemApp => (c: Cursor) =>
+        val elem = vecAppender(e, et, vec.arrayData(), stats)
+        c => {
           val tag = c.uvarint()
           if (tag == 0) { vec.appendNull(); () }
           else {
-            val body = new Cursor(c.bytes((tag - 1).toInt), 0)
-            val probe = new Cursor(body.buf, 0)
+            val end = c.pos + (tag - 1).toInt
+            val probe = new Cursor(c.buf, c.pos)
             var n = 0
-            while (!probe.done) {
+            while (probe.pos < end) {
               val t2 = probe.uvarint()
               if (t2 != 0) probe.pos += (t2 - 1).toInt
               n += 1
             }
             vec.appendArray(n): Unit
             var i = 0
-            while (i < n) { elemApp(body); i += 1 }
+            while (i < n) { elem(c); i += 1 }
+            c.pos = end
           }
         }
-      case _ => None
-    }
-    case ZRecord(fields) => target match {
-      case st: StructType if fields.length == st.fields.length &&
+      // nested records fill struct child vectors; field order is
+      // positional on the wire, so names must line up
+      case (ZRecord(fields), st: StructType) if fields.length == st.fields.length &&
           fields.iterator.map(_._1).sameElements(st.fields.iterator.map(_.name)) =>
-        val subs = fields.zip(st.fields.toIndexedSeq).zipWithIndex.map {
-          case (((_, ft), sf), i) => vecAppender(ft, sf.dataType, vec.getChild(i), nsTime)
-        }
-        if (subs.exists(_.isEmpty)) None
-        else {
-          val apps = subs.map(_.get).toArray
-          Some { c =>
-            val tag = c.uvarint()
-            if (tag == 0) { vec.appendStruct(true); () }
-            else {
-              val inner = new Cursor(c.buf, c.pos)
-              c.pos += (tag - 1).toInt
-              vec.appendStruct(false): Unit
-              var i = 0
-              while (i < apps.length) { apps(i)(inner); i += 1 }
-            }
+        val apps = fields.zip(st.fields.toIndexedSeq).zipWithIndex.map {
+          case (((_, ft), sf), i) => vecAppender(ft, sf.dataType, vec.getChild(i), stats)
+        }.toArray
+        c => {
+          val tag = c.uvarint()
+          if (tag == 0) { vec.appendStruct(true); () }
+          else {
+            val end = c.pos + (tag - 1).toInt
+            vec.appendStruct(false): Unit
+            var i = 0
+            while (i < apps.length) { apps(i)(c); i += 1 }
+            c.pos = end
           }
         }
-      case _ => None
+      case _ => value
     }
-    case _ => None
   }
 
-  /** Decode a stream straight into ColumnarBatches — the vectorized twin
-    * of decodeToInternalRows, used when every projected column is a
-    * primitive in every shape. Each record shape gets a per-type appender
-    * filling the column vectors (missing fields append null, the tag
-    * column appends the shape's constant bytes); batches span frames.
+  /** Decode a stream straight into ColumnarBatches of `required` (a pruned
+    * subset of the cleaned-plus-tag frame) — the DSv2 scan body. Each
+    * shape gets one appender filling the column vectors: a record shape
+    * projects its fields BY NAME (fields outside `required` skip by their
+    * length tag, fields the shape lacks append null, the tag column
+    * appends the shape's constant bytes); any other shape fills through
+    * one value-model row. Batches span frames.
     */
   private[sources] def decodeToColumnarBatches(bytes: Array[Byte],
-      cleaned: StructType, required: StructType, nsTime: Boolean,
+      cleaned: StructType, required: StructType,
       prefilter: Option[BufferFilter], stats: FrameStats, batchSize: Int = 4096)
       : (Iterator[org.apache.spark.sql.vectorized.ColumnarBatch], () => Unit) = {
     import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
@@ -2291,20 +1911,23 @@ object ZngIO {
       }
 
       private def appenderOf(t: ZT): Cursor => Unit = {
-        def stripNamed(x: ZT): ZT = x match { case ZNamed(_, i) => stripNamed(i); case o => o }
         val shapeText = ZType.fullText(zTypeOf(t))
         val tagVal = shapeText.getBytes("UTF-8")
+        // a top-level null record is all-null relationally but its tag
+        // must carry the null wrapper (writers re-emit `null`)
         val nullTagVal = ZType.nullWrap(shapeText).getBytes("UTF-8")
-        stripNamed(t) match {
+        unnamed(t) match {
           case ZRecord(fields) if fields.nonEmpty &&
               fields.forall { case (n, _) => cleaned.fieldNames.contains(n) } =>
-            val acts: Array[Cursor => Unit] = fields.map { case (name, ft) =>
+            // fields past the last required one are never decoded: the
+            // outer tag skips the rest of the body (all of it when no
+            // field is required — count(*)-class and tag-only reads)
+            val last = fields.lastIndexWhere(f => required.fieldNames.contains(f._1))
+            val acts: Array[Cursor => Unit] = fields.take(last + 1).map { case (name, ft) =>
               val out = required.fieldNames.indexOf(name)
               if (out < 0) { (cc: Cursor) =>
                 val tag = cc.uvarint(); if (tag != 0) cc.pos += (tag - 1).toInt
-              } else vecAppender(ft, required.fields(out).dataType, vectors(out), nsTime)
-                .getOrElse(throw new IllegalStateException(
-                  s"zng vectorized scan on non-primitive field $name"))
+              } else vecAppender(ft, required.fields(out).dataType, vectors(out), stats)
             }.toArray
             val covered = fields.map(_._1).toSet
             val absent = dataIdxs.filter(i => !covered.contains(required.fields(i).name))
@@ -2321,10 +1944,10 @@ object ZngIO {
                   appendNullFor(vectors(d), required.fields(d).dataType); i += 1
                 }
               } else {
-                val inner = new Cursor(cc.buf, cc.pos)
-                cc.pos += (tag - 1).toInt
+                val end = cc.pos + (tag - 1).toInt
                 var i = 0
-                while (i < acts.length) { acts(i)(inner); i += 1 }
+                while (i < acts.length) { acts(i)(cc); i += 1 }
+                cc.pos = end
                 i = 0
                 while (i < absent.length) {
                   val a = absent(i)
@@ -2332,49 +1955,61 @@ object ZngIO {
                 }
               }
             }
-          case other => throw new IllegalStateException(
-            s"zng vectorized scan on non-record shape: ${other.getClass.getSimpleName}")
+          case _ =>
+            // any other shape (non-record root, empty record): one
+            // value-model row over cleaned+tag, its required slots appended
+            val srcIdx = required.fields.map { f =>
+              if (f.name == graft.operators.Het.typeTag) cleaned.fields.length
+              else cleaned.fieldIndex(f.name)
+            }
+            val apps = required.fields.map(f => extAppender(f.dataType))
+            cc => {
+              stats.valueFills += 1
+              val r = ZsonReader.rowOf(decodeZValue(cc, t, unionKeepsMember = false),
+                cleaned, tag = true)
+              var i = 0
+              while (i < apps.length) { apps(i)(vectors(i), r.get(srcIdx(i))); i += 1 }
+            }
         }
       }
 
-      private var fieldMemoV = new java.util.HashMap[Int, java.util.Set[String]]()
-      private def fieldsOfV(id: Int): java.util.Set[String] = {
-        val hit = fieldMemoV.get(id)
+      // memoized id → top-level field-name set for the field-NAME frame
+      // finder (BfFieldName); reset with the type context at EOS
+      private var fieldMemo = new java.util.HashMap[Int, java.util.Set[String]]()
+      private def fieldsOf(id: Int): java.util.Set[String] = {
+        val hit = fieldMemo.get(id)
         if (hit != null) return if (hit.isEmpty) null else hit
         val fs: java.util.Set[String] =
-          try (typeOfId(id) match {
-            case x => {
-              def sn(t: ZT): ZT = t match { case ZNamed(_, i) => sn(i); case o => o }
-              sn(x)
-            }
-          }) match {
+          try unnamed(typeOfId(id)) match {
             case ZRecord(fields) =>
               val set = new java.util.HashSet[String]()
               fields.foreach(f => set.add(f._1): Unit)
               set
             case _ => java.util.Collections.emptySet[String]()
           } catch { case _: Exception => java.util.Collections.emptySet[String]() }
-        fieldMemoV.put(id, fs)
+        fieldMemo.put(id, fs)
         if (fs.isEmpty) null else fs
       }
 
-      private val requiredNamesV: Set[String] =
+      // stream-level field pruning: when NO type defined so far in this
+      // stream carries every required field, values frames drop before
+      // LZ4 decompression (typedefs always precede use, so this is sound)
+      private val requiredNames: Set[String] =
         prefilter.map(BufferFilter.requiredNamesIn).getOrElse(Set.empty)
-      private var fieldCheckLenV = -1
-      private var streamCanMatchV = true
-      private def streamHasFieldsV(): Boolean = {
-        if (requiredNamesV.isEmpty) return true
-        if (types.length != fieldCheckLenV) {
-          fieldCheckLenV = types.length
-          def sn(t: ZT): ZT = t match { case ZNamed(_, i) => sn(i); case o => o }
-          streamCanMatchV = types.exists(t => sn(t) match {
+      private var fieldCheckLen = -1
+      private var streamCanMatch = true
+      private def streamHasFields(): Boolean = {
+        if (requiredNames.isEmpty) return true
+        if (types.length != fieldCheckLen) {
+          fieldCheckLen = types.length
+          streamCanMatch = types.exists(t => unnamed(t) match {
             case ZRecord(fields) =>
               val names = fields.map(_._1).toSet
-              requiredNamesV.forall(names.contains)
+              requiredNames.forall(names.contains)
             case _ => false
           })
         }
-        streamCanMatchV
+        streamCanMatch
       }
 
       private def advanceFrame(): Boolean = {
@@ -2383,18 +2018,23 @@ object ZngIO {
           if (code == 0xff) {
             types = scala.collection.mutable.ArrayBuffer.empty[ZT]
             appsById = new Array[Cursor => Unit](64)
-            fieldMemoV = new java.util.HashMap[Int, java.util.Set[String]]()
-            fieldCheckLenV = -1
+            fieldMemo = new java.util.HashMap[Int, java.util.Set[String]]()
+            fieldCheckLen = -1
           }
           else readFrameRaw(c, code) match {
-            case (1, raw, comp) if !streamHasFieldsV() =>
+            case (1, _, _) if !streamHasFields() =>
+              // drop the whole values frame WITHOUT decompressing
               stats.skipped += 1; totalFramesSkipped.increment()
             case (t0, raw, comp) => (t0, inflateFrame(raw, comp)) match {
             case (0, payload) =>
               parseTypedefs(payload, types)
-              fieldMemoV = new java.util.HashMap[Int, java.util.Set[String]]()
+              fieldMemo = new java.util.HashMap[Int, java.util.Set[String]]()
             case (1, payload) =>
-              if (prefilter.exists(!_.matchesTyped(payload, payload.length, fieldsOfV))) {
+              // BufferFilter prefilter (ref bufferfilter.go +
+              // fieldnamefinder.go): when the pushed predicate's literal
+              // can't appear in this frame's bytes, OR no type in the
+              // frame has the required fields, skip the whole decode
+              if (prefilter.exists(!_.matchesTyped(payload, payload.length, fieldsOf))) {
                 stats.skipped += 1; totalFramesSkipped.increment()
               } else {
                 stats.read += 1; totalFramesRead.increment()
@@ -2490,9 +2130,9 @@ object ZngIO {
     * so files distribute one task each), fused into the same
     * tagged/variant frame the in-memory harness builds. Pass 1 (schema
     * discovery) reads only type frames and value tags via scanMeta; pass 2
-    * is the one full decode — the DSv2 scan, wire → InternalRow (or
-    * ColumnarBatch) for every record shape, the value model only for
-    * exotic leaves.
+    * is the one full decode — the DSv2 scan, wire → column vectors for
+    * every shape, the value model only for exotic leaves and non-record
+    * roots.
     */
   def read(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
@@ -2555,10 +2195,11 @@ object ZngIO {
       ZsonReader.fromShapes(spark, rdd, discovered)
     } else {
       // every stream — homogeneous or heterogeneous — scans through the
-      // DataSource V2 table: wire→InternalRow decode (no external-Row
-      // detour; each record shape gets its own direct builder projecting
-      // by name into the merged frame) with column pruning into the
-      // decoder (unread fields skip by length tag)
+      // DataSource V2 table: wire→column-vector decode (each record shape
+      // gets its own appender projecting by name into the merged frame)
+      // with column pruning into the decoder (unread fields skip by
+      // length tag). The frame's time columns name their carrier (ns
+      // longs when nsTime), so the scan needs no ns flag of its own.
       val (_, full) = ZsonReader.frameSchema(shapeTexts, tag = true, nsTime)
       // group each file's independent streams (EOS boundaries, recorded
       // during discovery) into ~maxPartitionBytes read splits: one huge
@@ -2590,7 +2231,6 @@ object ZngIO {
       spark.read.format(classOf[ZngDataSource].getName)
         .schema(full)
         .option("shapes", shapeTexts.mkString("\n"))
-        .option("ns", nsTime.toString)
         .option("files", dataFiles.mkString("\n"))
         .option("splits", splits)
         // per-file row counts from discovery: count(*) answers from these

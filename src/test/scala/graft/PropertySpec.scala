@@ -89,13 +89,15 @@ class PropertySpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     def randExpr(rnd: scala.util.Random, j: Int): String = {
       val nullEvery = rnd.nextInt(6) + 2 // every column gets a null stripe
-      val base = rnd.nextInt(6) match {
+      val base = rnd.nextInt(8) match {
         case 0 => "id * 3"
         case 1 => "cast(id as double) / 7"
         case 2 => "id % 2 = 0"
         case 3 => s"concat('v', id % ${rnd.nextInt(97) + 3})"
         case 4 => "array(id, id * 2)"
         case 5 => "named_struct('p', id % 13, 'q', concat('s', id))"
+        case 6 => "cast(id * 7919 as decimal(20,0))" // the uint64 carrier
+        case 7 => "map(concat('k', id % 5), id)"
       }
       s"CASE WHEN id % $nullEvery = 0 THEN NULL ELSE $base END AS c$j"
     }

@@ -396,6 +396,91 @@ class ZngSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(tss.head % 1000L == 1L)
   }
 
+  /** The scan node of a planned read (a projection plans no exchange, so
+    * no adaptive wrapper hides it) and the DSv2 metric it reported.
+    */
+  private def zngScan(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.executedPlan.collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.getOrElse(fail(df.queryExecution.executedPlan.toString))
+
+  private def valueFills(df: org.apache.spark.sql.DataFrame): Long = {
+    df.collect()
+    zngScan(df).metrics("valueFills").value
+  }
+
+  test("one columnar zng scan covers every zed type, named and non-record roots, " +
+       "empty containers, missing and conflicting columns") {
+    val path = tmp("zng-all-types")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
+    val u64 = Seq("0", "9223372036854775808", "18446744073709551615")
+    val lines = (0 until 120).map { i =>
+      if (i % 11 == 0) s"{id:$i,y:$i.5}(=named)"
+      else if (i % 13 == 0) s"$i"
+      else if (i % 17 == 0) "null({id:int64,x:int64})"
+      else if (i % 7 == 0) s"""{id:$i,x:"s$i",t:2024-01-02T00:00:0${i % 10}Z}"""
+      else {
+        val un = if (i % 2 == 0) s"$i" else s""""u$i""""
+        val en = if (i % 3 == 0) "red" else "green"
+        s"""{id:$i,x:$i,u:${u64(i % 3)}(uint64),st:|[${i % 3},1,2]|,""" +
+          s"""m:|{"a":$i,"b":2}|,nk:|{null:$i}|,un:$un((int64,string)),""" +
+          s"""e:error("boom$i"),ty:<int64>,n:10.0.${i % 256}.0/24,""" +
+          s"""en:"$en"(enum(red,green)),h:${i % 8}.5(float16),b:0x01${"%02x".format(i % 256)},""" +
+          s"""d:${i}s,t:2024-01-01T00:00:00.${"%09d".format(i + 1)}Z,""" +
+          s"""ea:[]([int64]),es:|[]|(|[string]|),em:|{}|(|{string:int64}|)}"""
+      }
+    }
+    val vals = zvals(lines)
+    java.nio.file.Files.write(java.nio.file.Paths.get(path, "p.zng"),
+      ZngIO.encodeTypedStream(vals))
+    val back = ZngIO.read(spark, path)
+    val plan = back.queryExecution.executedPlan
+    val overScan = plan.collectFirst {
+      case c: org.apache.spark.sql.execution.ColumnarToRowExec => c.child
+    }
+    assert(overScan.exists(_.isInstanceOf[
+      org.apache.spark.sql.execution.datasources.v2.BatchScanExec]), plan.toString)
+    assert(plan.toString.contains("graft zng ("), plan.toString)
+    assert(back.schema("u").dataType == DecimalType(20, 0), back.schema.treeString)
+    assert(back.schema("t").dataType == LongType, "sub-µs times ride the ns carrier")
+    val order = Seq("id", "this", "__type").map(col)
+    val reference = graft.sources.ZsonReader.fromValues(spark, vals, tag = true)
+    assert(back.columns.toSeq == reference.columns.toSeq)
+    assert(back.orderBy(order: _*).collect().toSeq == reference.orderBy(order: _*).collect().toSeq)
+    assert(back.agg(max("u")).collect()(0).getDecimal(0).toBigInteger ==
+      new java.math.BigInteger("18446744073709551615"))
+  }
+
+  test("the scan counts value fills: none for a Zeek conn projection, one per " +
+       "non-null map cell") {
+    val zeekPath = java.nio.file.Files.createTempFile("graft-conn-fills", ".log")
+    java.nio.file.Files.write(zeekPath, (Seq(
+      "#separator \\x09", "#set_separator\t,", "#empty_field\t(empty)", "#unset_field\t-",
+      "#path\tconn",
+      "#fields\tts\tuid\torig_h\torig_p\tresp_h\tresp_p\tproto\tservice\tduration\t" +
+        "orig_bytes\tresp_bytes\tconn_state",
+      "#types\ttime\tstring\taddr\tport\taddr\tport\tenum\tstring\tinterval\tcount\t" +
+        "count\tstring") ++
+      (0 until 50).map { i =>
+        val bytes = if (i % 9 == 0) "-" else (i * 1000L).toString
+        s"1700000000.${"%06d".format(i)}\tC$i\t10.0.0.${i % 250}\t${1024 + i}\t" +
+          s"52.85.0.$i\t443\t${Seq("tcp", "udp", "icmp")(i % 3)}\tssl\t0.5\t$bytes\t" +
+          s"${i * 7}\tSF"
+      }).mkString("", "\n", "\n").getBytes("UTF-8"))
+    val zngPath = tmp("conn-fills")
+    ZngIO.write(graft.sources.ZeekIO.read(spark, zeekPath.toString), zngPath)
+    val conn = ZngIO.read(spark, zngPath).select("uid", "orig_h", "orig_bytes", "proto")
+    assert(valueFills(conn) == 0L)
+    assert(conn.filter(col("orig_bytes").isNull).count() == 6)
+
+    val mapPath = tmp("map-fills")
+    ZngIO.write(spark.range(0, 30).selectExpr("id",
+      "CASE WHEN id % 3 = 0 THEN NULL ELSE map(concat('k', id % 4), id) END AS m"), mapPath)
+    val maps = ZngIO.read(spark, mapPath).select("m")
+    assert(valueFills(maps) == 20L)
+    assert(maps.filter(col("m").isNotNull).count() == 20)
+  }
+
   test("a huge multi-stream file splits at EOS boundaries across tasks") {
     val path = tmp("split")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
@@ -788,5 +873,20 @@ class ZngSpec extends AnyFunSuite with BeforeAndAfterAll {
     bad(usizeAt) = (bad(usizeAt) ^ 1).toByte // ±1, same varint width
     val e = intercept[IllegalArgumentException](ZngIO.decodeToZson(bad).toList)
     assert(e.getMessage.startsWith("zng: corrupt LZ4 block"), e.getMessage)
+  }
+
+  test("decodeToZson renders floats like the ZSON formatter (1e300, 2^63, 2^64, " +
+       "-0, float32 3e38)") {
+    import graft.sources.ZValue.VFloat
+    val f64 = Seq(1e300, -1e300, math.pow(2, 63), math.pow(2, 64), 1e15, 0.5, -0.0)
+    val bytes = ZngIO.encodeTypedStream(f64.map(VFloat(_, "float64")))
+    val formatted = ZngIO.decodeToZValues(bytes)
+      .map(v => graft.sources.ZsonFormatter.format(graft.sources.ZValue.typeOf(v), v)).toSeq
+    assert(ZngIO.decodeToZson(bytes).toSeq == formatted)
+    assert(formatted.head == "1e+300", formatted.mkString(" "))
+    // float32 prints its own shortest digits, not the widened double's
+    val f32 = 3e38f.toDouble
+    val b32 = ZngIO.encodeTypedStream(Seq(VFloat(f32, "float32")))
+    assert(ZngIO.decodeToZson(b32).toSeq == Seq(graft.sources.ZFormat.goG(f32, 32)))
   }
 }
