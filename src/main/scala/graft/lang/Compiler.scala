@@ -494,8 +494,7 @@ final class Compiler(spark: SparkSession, dir: String) {
         val flat =
           if (quietCols.isEmpty || quietCols.length < kept.length) flat0
           else flat0.filter(quietCols.map { c =>
-            val adt = try flat0.select(c).schema.head.dataType
-                      catch { case _: Exception => StringType }
+            val adt = dtOr(flat0, c, StringType)
             if (isVariant(adt)) c.isNotNull && !graft.operators.Het.isError(c)
             else c.isNotNull
           }.reduce(_ || _))
@@ -540,8 +539,7 @@ final class Compiler(spark: SparkSession, dir: String) {
             val out =
               if (quietCols.isEmpty || quietCols.length < kept.length) flat2
               else flat2.filter(quietCols.map { c =>
-                val adt = try flat2.select(c).schema.head.dataType
-                          catch { case _: Exception => StringType }
+                val adt = dtOr(flat2, c, StringType)
                 if (isVariant(adt)) c.isNotNull && !graft.operators.Het.isError(c)
                 else c.isNotNull
               }.reduce(_ || _))
@@ -978,7 +976,7 @@ final class Compiler(spark: SparkSession, dir: String) {
           else if (keys.nonEmpty) keys.flatMap { case (e, asc) =>
             // union-typed keys sort under the cross-type total order
             val c = expr(df, e)
-            if (isVariantExpr(df, e)) Seq((graft.operators.Het.compareKey(c), asc))
+            if (isVariantExpr(df, e)) Seq((compareKeyOf(df, c), asc))
             else sortKeyCols(df, e, c).map((_, asc))
           }
           else guessSortKey(df).map((_, true))
@@ -1365,8 +1363,7 @@ final class Compiler(spark: SparkSession, dir: String) {
             // drops the field at output (cut.md quiet)
             val het = graft.operators.Het
             val inner = rightExpr(p)
-            val idt = try right.select(inner).schema.head.dataType
-                      catch { case _: Exception => StringType }
+            val idt = dtOr(right, inner, StringType)
             when(inner.isNull, het.errQuiet).otherwise(het.variant(inner, idt))
           case _ => expr(right0, e)
         }
@@ -1845,7 +1842,7 @@ final class Compiler(spark: SparkSession, dir: String) {
             }
             val cols = many.map(e => outExpr(df, e))
             val dts = cols.map(c =>
-              try df.select(c).schema.head.dataType catch { case _: Exception => StringType })
+              dtOr(df, c, StringType))
             val anyTyped = many.exists(isTypeValued)
             // `this` over a frame whose columns carry zed-type markers
             // (set-ness, uint64, type values): box with the marked record
@@ -1937,8 +1934,7 @@ final class Compiler(spark: SparkSession, dir: String) {
             val tcol =
               if (isVariantExpr(df, e)) graft.operators.Het.variantTypeOf(c)
               else lit(Shaper.zedTypeOf(
-                try df.select(c).schema.head.dataType
-                catch { case _: Exception => StringType }))
+                dtOr(df, c, StringType)))
             Seq(df.withColumn("__sample_ord", monotonically_increasing_id())
               .filter(c.isNotNull)
               .groupBy(tcol.as("__sample_t"))
@@ -2074,8 +2070,7 @@ final class Compiler(spark: SparkSession, dir: String) {
         val text =
           if (isVariantExpr(df, e)) graft.operators.Het.render(c)
           else {
-            val dt = try df.select(c).schema.head.dataType
-                     catch { case _: Exception => StringType }
+            val dt = dtOr(df, c, StringType)
             graft.sources.ZsonIO.zsonOf(c, dt)
           }
         // row-capped: the debug channel is a diagnostic, not a data path —
@@ -2212,7 +2207,7 @@ final class Compiler(spark: SparkSession, dir: String) {
         // branches may give one output column DIFFERENT types (zed forms a
         // union) — box them into variants so the CASE chain analyzes
         def dtOf(c: Column): DataType =
-          try df.select(c).schema.head.dataType catch { case _: Exception => StringType }
+          dtOr(df, c, StringType)
         val cands = (projs.flatMap(_.toMap.get(name)) ++
           dflt.flatMap(_.toMap.get(name)).toSeq)
         val mixed = cands.map(dtOf).distinct.length > 1
@@ -2271,12 +2266,14 @@ final class Compiler(spark: SparkSession, dir: String) {
     case _ =>
       val c = expr(df, e)
       // keep boolean predicates un-cast so they stay pushdown-able
-      val dt = try df.select(c).schema.head.dataType catch { case _: Exception => BooleanType }
+      val dt = dtOr(df, c, BooleanType)
       if (dt == BooleanType) c
       else if (isVariant(dt))
         // an error-valued condition filters nothing (filter.go: errors
-        // are not true) — read the boolean member
-        coalesce(c.getField("b"), lit(false))
+        // are not true) — read the boolean member of the probe's resolved
+        // tree, so the filter does not analyze the condition again
+        coalesce(typeOf(df, c).flatMap(_.resolved).fold(c)(Bridge.column)
+          .getField("b"), lit(false))
       else
         // a statically non-boolean condition is never true (filter.go:
         // only bool true passes; `where this` over ints yields nothing —
@@ -2520,7 +2517,7 @@ final class Compiler(spark: SparkSession, dir: String) {
       if (parts.isEmpty && df.columns.contains("this"))
         Some(df.schema("this").dataType)
       else if (parts.isEmpty)
-        try Some(df.select(c).schema.head.dataType) catch { case _: Exception => None }
+        typeOf(df, c).map(_.dt)
       else resolveType(df.schema, parts))
     val shapeTs = shapesOf(df).flatMap(s => pathIn(s._2, parts))
       .map(graft.sources.ZType.strip)
@@ -2594,8 +2591,7 @@ final class Compiler(spark: SparkSession, dir: String) {
     // aggs read the numeric member, count/any skip typed nulls (a typed
     // null carries no payload), min/max order under the cross-type key
     val baseIsVariant = base.exists { c =>
-      try isVariant(df.select(c).schema.head.dataType)
-      catch { case _: Exception => false }
+      typeOf(df, c).exists(t => isVariant(t.dt))
     }
     if (baseIsVariant) {
       val het = graft.operators.Het
@@ -2665,7 +2661,7 @@ final class Compiler(spark: SparkSession, dir: String) {
         // uvarint, so SHORTER encodings sort before longer, then bytes)
         val u0 = collect_set(guarded(base.get))
         val et0 = base.map(c =>
-          try df.select(c).schema.head.dataType catch { case _: Exception => StringType })
+          dtOr(df, c, StringType))
         val u =
           et0 match {
             case Some(StringType) =>
@@ -3139,8 +3135,14 @@ final class Compiler(spark: SparkSession, dir: String) {
     else if (present.size == shapes.size || boxed) expr(df, Expr.Path(parts))
     else dt match {
       case Some(d) =>
+        // the box keeps the field's zed type where its carrier cannot say
+        // it (a uint64 rides as decimal(20,0), a uint16 as a long);
+        // numbers only — the other carriers' kinds and text already match
+        // their zed types
+        val zt = staticZedName(df, Expr.Path(parts)).filter(t =>
+          t.substring(t.lastIndexOf('=') + 1).matches("^(u?int|float)(8|16|32|64)$"))
         when(col(het.typeTag).isin(present: _*),
-          het.variant(expr(df, Expr.Path(parts)), d))
+          het.variant(expr(df, Expr.Path(parts)), d, zt.map(lit(_))))
           .otherwise(het.errMissing)
       case None => het.errMissing
     }
@@ -3232,7 +3234,7 @@ final class Compiler(spark: SparkSession, dir: String) {
       case e =>
         val c = expr(df, e)
         val dt = dtypeOf(df, e).getOrElse(
-          try df.select(c).schema.head.dataType catch { case _: Exception => StringType })
+          dtOr(df, c, StringType))
         if (isVariant(dt)) (het.render(c), het.variantTypeOf(c))
         else {
           val fallback: Column = lit(Shaper.zedTypeOf(dt))
@@ -3293,10 +3295,88 @@ final class Compiler(spark: SparkSession, dir: String) {
 
   private def isVariant(dt: DataType): Boolean = graft.sources.ZsonIO.isVariantType(dt)
 
+  /** Type probes of this query: (analyzed plan, column) → the column's
+    * type and, when it resolves as a plain projection of the plan's own
+    * output, its resolved expression. One full analysis per distinct
+    * pair; `typeAnalyses` counts them.
+    */
+  private val probes = new java.util.IdentityHashMap[
+    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+    scala.collection.mutable.HashMap[Column, Option[Compiler.Typed]]]()
+  private var analyses = 0
+  private[graft] def typeAnalyses: Int = analyses
+
+  /** The type of `c` over `df` (None when `c` does not analyze there). */
+  private def typeOf(df: DataFrame, c: Column): Option[Compiler.Typed] = {
+    val plan = df.queryExecution.analyzed
+    var memo = probes.get(plan)
+    if (memo == null) { memo = scala.collection.mutable.HashMap.empty; probes.put(plan, memo) }
+    memo.getOrElseUpdate(c, {
+      analyses += 1
+      try {
+        import org.apache.spark.sql.catalyst.expressions._
+        val p = df.select(c).queryExecution.analyzed
+        // lambda variables, outer references and subqueries stay inline:
+        // RewriteWithExpression cannot place a common expression over them
+        def bindable(e: Expression): Boolean =
+          e.references.subsetOf(plan.outputSet) && !e.exists {
+            case _: NamedLambdaVariable | _: OuterReference | _: SubqueryExpression => true
+            case _ => false
+          }
+        val resolved = p match {
+          case org.apache.spark.sql.catalyst.plans.logical.Project(Seq(ne), _) =>
+            Some(ne match { case a: Alias => a.child; case other => other }).filter(bindable)
+          case _ => None
+        }
+        Some(Compiler.Typed(p.schema.head.dataType, resolved))
+      } catch { case _: Exception => None }
+    })
+  }
+
+  private def dtOr(df: DataFrame, c: Column, orElse: DataType): DataType =
+    typeOf(df, c).fold(orElse)(_.dt)
+
+  /** Build `body` over each column of `cs` bound ONCE: a column that
+    * resolves over `df` becomes a Catalyst common expression (`With`),
+    * so the body may read it any number of times while the analyzer and
+    * optimizer see its tree once; RewriteWithExpression later evaluates
+    * it once per row in a projection below the operator. The definition
+    * must be the RESOLVED operand (With types its refs from it), which
+    * the type probe already produced. A column that does not resolve over
+    * `df` alone (lambda variables, outer references) stays inline.
+    * The body receives each column with its type (NullType when
+    * unknown).
+    */
+  private def shared(df: DataFrame, cs: Column*)(body: Seq[(Column, DataType)] => Column): Column = {
+    import org.apache.spark.sql.catalyst.expressions._
+    // a constant operand folds to one literal; an attribute is as cheap
+    // to read as a reference
+    val typed = cs.map(c => c -> typeOf(df, c).map {
+      case Compiler.Typed(dt, Some(e)) if e.foldable && !e.isInstanceOf[Literal] =>
+        Compiler.Typed(dt, Some(try Literal.create(e.eval(), dt) catch { case _: Exception => e }))
+      case t => t
+    })
+    def bind(e: Expression): Boolean = !e.isInstanceOf[Attribute] && !e.isInstanceOf[Literal]
+    val defs = typed.collect { case (_, Some(Compiler.Typed(_, Some(e)))) if bind(e) => e }
+    def args(refs: Iterator[Expression]): Seq[(Column, DataType)] = typed.map {
+      case (c, Some(Compiler.Typed(dt, Some(e)))) =>
+        (if (bind(e)) Bridge.column(refs.next())
+         else if (e.isInstanceOf[Literal]) Bridge.column(e)
+         else c) -> dt
+      case (c, t) => c -> t.fold(NullType: DataType)(_.dt)
+    }
+    if (defs.isEmpty) body(args(Iterator.empty))
+    else Bridge.column(With(defs: _*)(refs => Bridge.expression(body(args(refs.iterator)))))
+  }
+
+  /** Het.compareKey reads its value eight times: bind it once. */
+  private def compareKeyOf(df: DataFrame, v: Column): Column =
+    shared(df, v) { case Seq((b, _)) => graft.operators.Het.compareKey(b) }
+
   /** Does this expression evaluate to a variant column on df? */
   private def isVariantExpr(df: DataFrame, e: Expr): Boolean =
     dtypeOf(df, e).exists(isVariant) || (dtypeOf(df, e).isEmpty && {
-      try isVariant(df.select(expr(df, e)).schema.head.dataType)
+      try typeOf(df, expr(df, e)).exists(t => isVariant(t.dt))
       catch { case _: Exception => false }
     })
 
@@ -3323,8 +3403,7 @@ final class Compiler(spark: SparkSession, dir: String) {
             } else {
               val c = expr(df, e)
               val dt = dtypeOf(df, e).getOrElse(
-                try df.select(c).schema.head.dataType
-                catch { case _: Exception => StringType })
+                dtOr(df, c, StringType))
               dt match {
                 case ArrayType(et, _) => transform(c, x => het.variant(x, et))
                 case other => array(het.variant(c, other))
@@ -3387,10 +3466,10 @@ final class Compiler(spark: SparkSession, dir: String) {
   }
 
   private def elemType(df: DataFrame, arr: Column): DataType =
-    try df.select(arr).schema.head.dataType match {
+    dtOr(df, arr, StringType) match {
       case ArrayType(et, _) => et
       case other => other
-    } catch { case _: Exception => StringType }
+    }
 
   /** Evaluate an expression over a lambda element (`this` = the element). */
   private def lambdaExpr(df: DataFrame, e: Expr, x: Column): Column = e match {
@@ -3531,7 +3610,7 @@ final class Compiler(spark: SparkSession, dir: String) {
   /** ZSON text of an arbitrary expression (for error payloads etc.). */
   private def zsonTextOf(df: DataFrame, e: Expr): Column = {
     val c = expr(df, e)
-    val dt = try df.select(c).schema.head.dataType catch { case _: Exception => StringType }
+    val dt = dtOr(df, c, StringType)
     graft.sources.ZsonIO.zsonOf(c, dt)
   }
 
@@ -3683,8 +3762,6 @@ final class Compiler(spark: SparkSession, dir: String) {
         val shapes = shapesOf(df)
         val recShapes = shapes.filter(s => zt.strip(s._2).isInstanceOf[zt.Rec])
         val hasBare = dataCols.contains("this") && shapes.size > recShapes.size
-        if (sys.env.contains("GRAFT_DEBUG_THIS"))
-          println(s"DBG this: shapes=${shapes.map(_._1)} rec=${recShapes.size} hasBare=$hasBare")
         if (hasBare && recShapes.nonEmpty) {
           val bare0 =
             if (isVariant(df.schema("this").dataType)) col("this")
@@ -3783,27 +3860,23 @@ final class Compiler(spark: SparkSession, dir: String) {
             if (isVariantExpr(df, other)) idxC
             else graft.operators.Het.variant(idxC,
               dtypeOf(df, other).getOrElse(
-                try df.select(idxC).schema.head.dataType
-                catch { case _: Exception => StringType }))
+                dtOr(df, idxC, StringType)))
           graft.functions.ZvOps.indexAny(arr, boxed)
         case other => graft.functions.ZvOps.index(arr, expr(df, other).cast("int"))
       } else {
-        val innerDt = try df.select(arr).schema.head.dataType
-                      catch { case _: Exception => NullType }
+        val innerDt = dtOr(df, arr, NullType)
         innerDt match {
           case MapType(kt: StructType, _, _) if isVariant(kt) =>
             // union-keyed map: box the lookup key in the same encoding
             val idxC = expr(df, idx)
             val idxDt = dtypeOf(df, idx).getOrElse(
-              try df.select(idxC).schema.head.dataType
-              catch { case _: Exception => StringType })
+              dtOr(df, idxC, StringType))
             element_at(arr, graft.operators.Het.variant(idxC, idxDt))
           case MapType(kt, _, _) =>
             // map KEY lookup (no 0-base shift); a VARIANT key (field of a
             // boxed value) unboxes to the map's key type first
             val idxC = expr(df, idx)
-            val idxDt = try df.select(idxC).schema.head.dataType
-                        catch { case _: Exception => NullType }
+            val idxDt = dtOr(df, idxC, NullType)
             if (isVariant(idxDt)) {
               val k = kt match {
                 case StringType => idxC.getField("s")
@@ -3819,8 +3892,7 @@ final class Compiler(spark: SparkSession, dir: String) {
             val het = graft.operators.Het
             val idxC = expr(df, idx)
             val idxDt = dtypeOf(df, idx).getOrElse(
-              try df.select(idxC).schema.head.dataType
-              catch { case _: Exception => StringType })
+              dtOr(df, idxC, StringType))
             if (idxDt.isInstanceOf[NumericType])
               het.errorValue(concat(lit("{message:\"record index is not a string\",on:"),
                 idxC.cast(StringType), lit("}")))
@@ -3841,12 +3913,13 @@ final class Compiler(spark: SparkSession, dir: String) {
       else -expr(df, inner)
     case Expr.Unary("not" | "!", inner) =>
       val c = expr(df, inner)
-      val dt = try Some(df.select(c).schema.head.dataType) catch { case _: Exception => None }
-      if (dt.exists(isVariant))
+      if (typeOf(df, c).exists(t => isVariant(t.dt)))
         // boxed boolean (comparison over union operands): negate the
         // member, propagate error values (eval.go Not)
-        when(graft.operators.Het.isError(c), c)
-          .otherwise(graft.operators.Het.variant(!coalesce(c.getField("b"), lit(false)), BooleanType))
+        shared(df, c) { case Seq((v, _)) =>
+          when(graft.operators.Het.isError(v), v)
+            .otherwise(graft.operators.Het.variant(!coalesce(v.getField("b"), lit(false)), BooleanType))
+        }
       else !coalesce(c, lit(false)) // a null boolean negates to TRUE (eval.go Not)
     case Expr.Unary(op, _) => throw new IllegalArgumentException(s"unary $op")
 
@@ -3865,7 +3938,7 @@ final class Compiler(spark: SparkSession, dir: String) {
       // Spark would silently coerce (int→string), so box instead
       val (tc, fc) = (expr(df, t), expr(df, f))
       def dtOf(x: Column) =
-        try Some(df.select(x).schema.head.dataType) catch { case _: Exception => None }
+        typeOf(df, x).map(_.dt)
       // a boxed (variant) condition — comparisons over union-typed
       // operands — reads its boolean member; errors are not-true
       def condC: Column = {
@@ -3896,7 +3969,7 @@ final class Compiler(spark: SparkSession, dir: String) {
         if (isVariantExpr(df, a)) graft.operators.Het.render(c)
         else {
           val dt = dtypeOf(df, a).getOrElse(
-            try df.select(c).schema.head.dataType catch { case _: Exception => StringType })
+            dtOr(df, c, StringType))
           graft.sources.ZsonIO.zsonOf(c, dt)
         }
       }
@@ -3956,8 +4029,7 @@ final class Compiler(spark: SparkSession, dir: String) {
         case ("...", se) =>
           val base = expr(df, se)
           dtypeOf(df, se).orElse(
-            try Some(df.select(base).schema.head.dataType)
-            catch { case _: Exception => None }) match {
+            typeOf(df, base).map(_.dt)) match {
             case Some(st: StructType) if !isVariant(st) =>
               st.fields.toSeq.map(f => f.name -> base.getField(f.name))
             case _ => Seq.empty // spread of missing/non-record: contributes nothing
@@ -3986,7 +4058,7 @@ final class Compiler(spark: SparkSession, dir: String) {
           case e2 => (array(expr(df, e2)), false)
         }
         val dts = parts.map { case (c, _) =>
-          try df.select(c).schema.head.dataType catch { case _: Exception => NullType }
+          dtOr(df, c, NullType)
         }
         if (dts.distinct.length <= 1) concat(parts.map(_._1): _*)
         else
@@ -4005,7 +4077,7 @@ final class Compiler(spark: SparkSession, dir: String) {
     */
   private def unifyPair(df: DataFrame, a: Column, b: Column): (Column, Column) = {
     def dt(c: Column) =
-      try df.select(c).schema.head.dataType catch { case _: Exception => StringType }
+      dtOr(df, c, StringType)
     val (da, db) = (dt(a), dt(b))
     if (da == db) (a, b)
     else {
@@ -4024,7 +4096,7 @@ final class Compiler(spark: SparkSession, dir: String) {
       if (isVariantExpr(df, e)) graft.operators.Het.render(c)
       else {
         val dt = dtypeOf(df, e).getOrElse(
-          try df.select(c).schema.head.dataType catch { case _: Exception => StringType })
+          dtOr(df, c, StringType))
         graft.sources.ZsonIO.zsonOf(c, dt)
       }
     }
@@ -4174,108 +4246,113 @@ final class Compiler(spark: SparkSession, dir: String) {
         if (isVar) outExpr(df, e)
         else het.variant(expr(df, e), dtypeOf(df, e).getOrElse(StringType),
           staticZedName(df, e).map(n => lit(n)))
-      val (lv, rv) = (asVar(l, lVar), asVar(r, rVar))
-      val (lk, rk) = (het.compareKey(lv), het.compareKey(rv))
-      // null values (untyped or typed — all payload members null) compare
-      // EQUAL to the null literal and never yield SQL null (zed
-      // comparisons are total; expressions.md "Comparisons")
-      def nullish(v: Column): Column = v.isNull ||
-        (v.getField("n").isNull && v.getField("s").isNull &&
-          v.getField("b").isNull && v.getField("z").isNull &&
-          v.getField("a").isNull && v.getField("m").isNull)
-      // an ERROR operand propagates out of ANY comparison (eval.go
-      // numeric.eval / Compare.Eval return the error value) — the boxed
-      // result keeps predicate contexts working (searchify reads `b`,
-      // which is NULL on errors, so and/or partials still skip —
-      // logical-partials ztest)
-      // operands may be 6-slot LEAF carriers (values plucked from a/m
-      // caches) — widen to the canonical variant so the CASE branches
-      // share one type
-      def widen(v: Column, dt: DataType): Column =
-        if (dt == het.variantType) v
-        else struct((het.variantType.fields.map { f =>
-          (if (dt.isInstanceOf[StructType] &&
-               dt.asInstanceOf[StructType].fieldNames.contains(f.name))
-             v.getField(f.name).cast(f.dataType)
-           else lit(null).cast(f.dataType)).as(f.name)
-        }).toIndexedSeq: _*)
-      def dtOfQ(c: Column): DataType =
-        try df.select(c).schema.head.dataType catch { case _: Exception => NullType }
-      val lvW = widen(lv, dtOfQ(lv))
-      val rvW = widen(rv, dtOfQ(rv))
-      def boxed(b: Column): Column =
-        when(het.isError(lvW), lvW).when(het.isError(rvW), rvW)
-          .otherwise(het.variant(b, BooleanType))
-      return op match {
-        case "==" =>
-          boxed(when(nullish(lv) || nullish(rv), nullish(lv) && nullish(rv))
-            .otherwise(coalesce(lk === rk, lit(false))))
-        case "!=" =>
-          boxed(when(nullish(lv) || nullish(rv), !(nullish(lv) && nullish(rv)))
-            .otherwise(coalesce(lk =!= rk, lit(true))))
-        case "<" | "<=" | ">" | ">=" =>
-          val cmp = op match {
-            case "<" => lk < rk
-            case "<=" => lk <= rk
-            case ">" => lk > rk
-            case _ => lk >= rk
-          }
-          boxed(coalesce(cmp, lit(false)))
-        case _ =>
-          // arithmetic under the reference's RUNTIME promotion lattice
-          // (coerce/promote.go, applied per row by PromoteTypeName): the
-          // result type follows the operand types — int+int stays int,
-          // either-float floats (vam/op/ztests/arith.yaml), named types
-          // strip to their underlying primitive (port-math.yaml),
-          // string+string concatenates (eval.go Add), a failed promote is
-          // error("incompatible types"), and a promote to a
-          // non-arithmetic type is the reference's "type <t> incompatible
-          // with '<op>' operator" (eval.go Add/Subtract/.../Modulo)
-          val resT0 = Bridge.column(graft.functions.PromoteTypeName(
-            Bridge.expression(lv.getField("t")),
-            Bridge.expression(rv.getField("t"))))
-          // time - time is a duration (eval.go Subtract)
-          val resT =
-            if (op == "-") when(resT0 === "time", lit("duration")).otherwise(resT0)
-            else resT0
-          val isFloatRes = resT.startsWith("float")
-          val isNumRes = resT.rlike("^(u?int|float)(8|16|32|64|128|256)$") ||
-            resT === "duration" || resT === "time"
-          // null payloads act as zero (coerce.ToNumeric returns 0 on null)
-          val ln = coalesce(lv.getField("n"), lit(0.0))
-          val rn = coalesce(rv.getField("n"), lit(0.0))
-          val raw = op match {
-            case "+" => ln + rn
-            case "-" => ln - rn
-            case "*" => ln * rn
-            case "/" => ln / rn
-            case "%" => ln % rn
-          }
-          // integer ops truncate toward zero like Go int division (the
-          // double carrier is exact through 2^53)
-          val n = op match {
-            case "/" => when(isFloatRes, raw)
-              .otherwise(raw.cast(LongType).cast(DoubleType))
-            case "%" => (ln.cast(LongType) % rn.cast(LongType)).cast(DoubleType)
-            case _ => raw
-          }
-          val divZero = Set("/", "%")(op)
-          val typeIncompat = het.errorValue(concat(
-            lit("\"type "), resT, lit(s" incompatible with '$op' operator\"")))
-          when(het.isError(lv), lv)
-            .when(het.isError(rv), rv)
-            .when(resT.isNull, het.errorValue(lit("\"incompatible types\"")))
-            .when(if (op == "+") resT === "string" else lit(false),
-              het.variant(concat(coalesce(lv.getField("s"), lit("")),
-                coalesce(rv.getField("s"), lit(""))), StringType))
-            .when(if (op == "%") isFloatRes || !isNumRes else !isNumRes,
-              typeIncompat)
-            .when(if (divZero) rn === 0 else lit(false),
-              het.errorValue(lit("\"divide by zero\"")))
-            .otherwise(het.mkVariant(
-              when(resT === "time", lit(1)).otherwise(lit(0)), n,
-              lit(null).cast(StringType), lit(null).cast(BooleanType),
-              resT, lit(null).cast(StringType)))
+      // Sharing contract: every arm below reads each operand many times
+      // (nullish 7x, compareKey 8x, isError/boxed, the arithmetic slots),
+      // so `shared` binds the two RESOLVED operands from their type probes
+      // as common expressions and the arms read refs — a per-shape path
+      // operand is a CASE over the shape tag, and inlining it at every read
+      // made a one-comparison search a 5k-node condition. An operand that
+      // does not resolve over df alone stays inline (see `shared`).
+      return shared(df, asVar(l, lVar), asVar(r, rVar)) { case Seq((lv, ldt), (rv, rdt)) =>
+        val (lk, rk) = (het.compareKey(lv), het.compareKey(rv))
+        // null values (untyped or typed — all payload members null) compare
+        // EQUAL to the null literal and never yield SQL null (zed
+        // comparisons are total; expressions.md "Comparisons")
+        def nullish(v: Column): Column = v.isNull ||
+          (v.getField("n").isNull && v.getField("s").isNull &&
+            v.getField("b").isNull && v.getField("z").isNull &&
+            v.getField("a").isNull && v.getField("m").isNull)
+        // an ERROR operand propagates out of ANY comparison (eval.go
+        // numeric.eval / Compare.Eval return the error value) — the boxed
+        // result keeps predicate contexts working (searchify reads `b`,
+        // which is NULL on errors, so and/or partials still skip —
+        // logical-partials ztest)
+        // operands may be 6-slot LEAF carriers (values plucked from a/m
+        // caches) — widen to the canonical variant so the CASE branches
+        // share one type
+        def widen(v: Column, dt: DataType): Column =
+          if (dt == het.variantType) v
+          else struct((het.variantType.fields.map { f =>
+            (if (dt.isInstanceOf[StructType] &&
+                 dt.asInstanceOf[StructType].fieldNames.contains(f.name))
+               v.getField(f.name).cast(f.dataType)
+             else lit(null).cast(f.dataType)).as(f.name)
+          }).toIndexedSeq: _*)
+        val (lvW, rvW) = (widen(lv, ldt), widen(rv, rdt))
+        def boxed(b: Column): Column =
+          when(het.isError(lvW), lvW).when(het.isError(rvW), rvW)
+            .otherwise(het.variant(b, BooleanType))
+        op match {
+          case "==" =>
+            boxed(when(nullish(lv) || nullish(rv), nullish(lv) && nullish(rv))
+              .otherwise(coalesce(lk === rk, lit(false))))
+          case "!=" =>
+            boxed(when(nullish(lv) || nullish(rv), !(nullish(lv) && nullish(rv)))
+              .otherwise(coalesce(lk =!= rk, lit(true))))
+          case "<" | "<=" | ">" | ">=" =>
+            val cmp = op match {
+              case "<" => lk < rk
+              case "<=" => lk <= rk
+              case ">" => lk > rk
+              case _ => lk >= rk
+            }
+            boxed(coalesce(cmp, lit(false)))
+          case _ =>
+            // arithmetic under the reference's RUNTIME promotion lattice
+            // (coerce/promote.go, applied per row by PromoteTypeName): the
+            // result type follows the operand types — int+int stays int,
+            // either-float floats (vam/op/ztests/arith.yaml), named types
+            // strip to their underlying primitive (port-math.yaml),
+            // string+string concatenates (eval.go Add), a failed promote is
+            // error("incompatible types"), and a promote to a
+            // non-arithmetic type is the reference's "type <t> incompatible
+            // with '<op>' operator" (eval.go Add/Subtract/.../Modulo)
+            val resT0 = Bridge.column(graft.functions.PromoteTypeName(
+              Bridge.expression(lv.getField("t")),
+              Bridge.expression(rv.getField("t"))))
+            // time - time is a duration (eval.go Subtract)
+            val resT =
+              if (op == "-") when(resT0 === "time", lit("duration")).otherwise(resT0)
+              else resT0
+            val isFloatRes = resT.startsWith("float")
+            val isNumRes = resT.rlike("^(u?int|float)(8|16|32|64|128|256)$") ||
+              resT === "duration" || resT === "time"
+            // null payloads act as zero (coerce.ToNumeric returns 0 on null)
+            val ln = coalesce(lv.getField("n"), lit(0.0))
+            val rn = coalesce(rv.getField("n"), lit(0.0))
+            val raw = op match {
+              case "+" => ln + rn
+              case "-" => ln - rn
+              case "*" => ln * rn
+              case "/" => ln / rn
+              case "%" => ln % rn
+            }
+            // integer ops truncate toward zero like Go int division (the
+            // double carrier is exact through 2^53)
+            val n = op match {
+              case "/" => when(isFloatRes, raw)
+                .otherwise(raw.cast(LongType).cast(DoubleType))
+              case "%" => (ln.cast(LongType) % rn.cast(LongType)).cast(DoubleType)
+              case _ => raw
+            }
+            val divZero = Set("/", "%")(op)
+            val typeIncompat = het.errorValue(concat(
+              lit("\"type "), resT, lit(s" incompatible with '$op' operator\"")))
+            when(het.isError(lv), lv)
+              .when(het.isError(rv), rv)
+              .when(resT.isNull, het.errorValue(lit("\"incompatible types\"")))
+              .when(if (op == "+") resT === "string" else lit(false),
+                het.variant(concat(coalesce(lv.getField("s"), lit("")),
+                  coalesce(rv.getField("s"), lit(""))), StringType))
+              .when(if (op == "%") isFloatRes || !isNumRes else !isNumRes,
+                typeIncompat)
+              .when(if (divZero) rn === 0 else lit(false),
+                het.errorValue(lit("\"divide by zero\"")))
+              .otherwise(het.mkVariant(
+                when(resT === "time", lit(1)).otherwise(lit(0)), n,
+                lit(null).cast(StringType), lit(null).cast(BooleanType),
+                resT, lit(null).cast(StringType)))
+        }
       }
     }
     // an enum operand in arithmetic/comparison coerces to its ordinal
@@ -4360,7 +4437,7 @@ final class Compiler(spark: SparkSession, dir: String) {
     // like TIMESTAMP — session TZ is pinned UTC so the casts are exact —
     // and the result keeps the operand's carrier dtype.
     def dtQ(c: Column): DataType =
-      try df.select(c).schema.head.dataType catch { case _: Exception => NullType }
+      dtOr(df, c, NullType)
     def usOf(c: Column): Column =
       if (dtQ(c) == TimestampNTZType) unix_micros(c.cast(TimestampType))
       else unix_micros(c)
@@ -4511,10 +4588,8 @@ final class Compiler(spark: SparkSession, dir: String) {
             Some(!coalesce(hasPath(df, parts), lit(false)))
           case _ => None
         }
-        val rdt = try df.select(rc).schema.head.dataType
-                  catch { case _: Exception => NullType }
-        val ldt = try df.select(lcN).schema.head.dataType
-                  catch { case _: Exception => NullType }
+        val rdt = dtOr(df, rc, NullType)
+        val ldt = dtOr(df, lcN, NullType)
         val lVarC = isVariant(ldt)
         def eqTo(e: Column, et: DataType): Column =
           if (lVarC) het.compareKey(het.variant(e, et)) === het.compareKey(lcN)
@@ -4600,8 +4675,7 @@ final class Compiler(spark: SparkSession, dir: String) {
         val argCols = args.map { e =>
           val c = outExpr(df, e)
           val isVar = isVariantExpr(df, e) ||
-            (try isVariant(df.select(c).schema.head.dataType)
-             catch { case _: Exception => false })
+            (typeOf(df, c).exists(t => isVariant(t.dt)))
           (c, isVar)
         }
         def strOk(p: (Column, Boolean)): Column =
@@ -4615,7 +4689,7 @@ final class Compiler(spark: SparkSession, dir: String) {
           .reduce((a, b) => coalesce(a, b))
         val base = callBase(df, fn, args)
         val baseDt =
-          try df.select(base).schema.head.dataType catch { case _: Exception => StringType }
+          dtOr(df, base, StringType)
         val payload = concat(lit(s"""{message:"$msg",on:"""), firstBad, lit("}"))
         // null-arg policy varies per function (function/string.go): the
         // to-lower family passes typed string nulls through, replace makes
@@ -4881,7 +4955,7 @@ final class Compiler(spark: SparkSession, dir: String) {
               .flatMap(f => errLeaves(col(s"`${f.name}`"), f.dataType))
           case e =>
             val c = expr(df, e)
-            val dt = try df.select(c).schema.head.dataType catch { case _: Exception => StringType }
+            val dt = dtOr(df, c, StringType)
             errLeaves(c, dt)
         }
         if (preds.isEmpty) lit(false) else preds.reduce(_ || _)
@@ -4910,8 +4984,7 @@ final class Compiler(spark: SparkSession, dir: String) {
             val t =
               if (isVariantExpr(df, e2)) c.getField("s")
               else {
-                val dt = try df.select(c).schema.head.dataType
-                         catch { case _: Exception => StringType }
+                val dt = dtOr(df, c, StringType)
                 if (dt == StringType) c else lit(null).cast(StringType)
               }
             coalesce(t.rlike(re), lit(false))
@@ -5042,7 +5115,7 @@ final class Compiler(spark: SparkSession, dir: String) {
             if (isVariantExpr(df, e)) graft.operators.Het.render(c)
             else {
               val dt = dtypeOf(df, e).getOrElse(
-                try df.select(c).schema.head.dataType catch { case _: Exception => StringType })
+                dtOr(df, c, StringType))
               graft.sources.ZsonIO.zsonOf(c, dt)
             }
         }
@@ -5099,8 +5172,7 @@ final class Compiler(spark: SparkSession, dir: String) {
             }
           case e2 =>
             lit(Shaper.zedTypeOf(dtypeOf(df, e2).getOrElse(
-              try df.select(c).schema.head.dataType
-              catch { case _: Exception => StringType })))
+              dtOr(df, c, StringType))))
         }
         graft.functions.ZvOps.parseUriZed(text, shapeC)
       case "grok" =>
@@ -5131,8 +5203,7 @@ final class Compiler(spark: SparkSession, dir: String) {
             }
           case e2 =>
             lit(Shaper.zedTypeOf(dtypeOf(df, e2).getOrElse(
-              try df.select(c).schema.head.dataType
-              catch { case _: Exception => StringType })))
+              dtOr(df, c, StringType))))
         }
         graft.functions.ZvOps.parseZsonZed(text, shapeC)
       case "parse_zson" =>
@@ -5323,8 +5394,7 @@ final class Compiler(spark: SparkSession, dir: String) {
           // type per row in `t` (data-types.md: typeof(1/this) on 0 ->
           // <error(string)>)
           val c = expr(df, other)
-          val dt = try df.select(c).schema.head.dataType
-                   catch { case _: Exception => StringType }
+          val dt = dtOr(df, c, StringType)
           if (isVariant(dt)) graft.operators.Het.variantTypeOf(c)
           else lit(Shaper.zedTypeOf(dt))
       }
@@ -5375,8 +5445,7 @@ final class Compiler(spark: SparkSession, dir: String) {
               else df.schema.fields.find(_.name == parts.head).map(_ =>
                 col(parts.mkString(".")))
             val carrierVar = carrier.exists(c =>
-              try isVariant(df.select(c).schema.head.dataType)
-              catch { case _: Exception => false })
+              typeOf(df, c).exists(t => isVariant(t.dt)))
             if (pairs.isEmpty) lit("primitive")
             else pairs.foldLeft(lit("primitive")) { case (acc, (tag, t)) =>
               val k: Column = classifyT(t) match {
@@ -5401,8 +5470,7 @@ final class Compiler(spark: SparkSession, dir: String) {
             // expression yielding a variant (e.g. 1/0's error value)
             // dispatches row-level (kind.md: kind(1/0) = "error")
             val c = expr(df, e)
-            val dt = try df.select(c).schema.head.dataType
-                     catch { case _: Exception => NullType }
+            val dt = dtOr(df, c, NullType)
             if (isVariant(dt)) variantKind(c)
             else dt match {
               case _: StructType => lit("record")
@@ -5429,8 +5497,7 @@ final class Compiler(spark: SparkSession, dir: String) {
             // evaluate error-aware: error("missing") → false; any OTHER
             // error propagates OUT of has() (function/has.go)
             val c = expr(df, e)
-            val actual = try df.select(c).schema.head.dataType
-                         catch { case _: Exception => StringType }
+            val actual = dtOr(df, c, StringType)
             if (isVariant(actual))
               when(het.isError(c) && c.getField("z") === lit("\"missing\""),
                 het.variant(lit(false), BooleanType))
@@ -5440,8 +5507,7 @@ final class Compiler(spark: SparkSession, dir: String) {
         }
         if (checks.length == 1) checks.head
         else checks.map { ch =>
-          val adt = try df.select(ch).schema.head.dataType
-                    catch { case _: Exception => BooleanType }
+          val adt = dtOr(df, ch, BooleanType)
           if (isVariant(adt)) coalesce(ch.getField("b"), lit(false)) else ch
         }.reduce(_ && _)
       case "missing" => args.head match {
@@ -5749,8 +5815,7 @@ final class Compiler(spark: SparkSession, dir: String) {
         val het = graft.operators.Het
         val compiled = args.map { e =>
           val c = expr(df, e)
-          val dt = try df.select(c).schema.head.dataType
-                   catch { case _: Exception => NullType }
+          val dt = dtOr(df, c, NullType)
           (e, c, dt)
         }
         val mixed = compiled.map(_._3).filterNot(_ == NullType).distinct.size > 1
@@ -5776,7 +5841,7 @@ final class Compiler(spark: SparkSession, dir: String) {
         val zt = graft.sources.ZType
         val c0 = a(0)
         val varCol =
-          try isVariant(df.select(c0).schema.head.dataType) catch { case _: Exception => false }
+          typeOf(df, c0).exists(t => isVariant(t.dt))
         if (varCol) return graft.functions.ZvOps.lenZed(c0)
         // scalar text of the subject for the per-shape dispatch
         val cTxt = if (varCol) coalesce(c0.getField("s"), c0.getField("z")) else c0.cast(StringType)
@@ -5785,8 +5850,7 @@ final class Compiler(spark: SparkSession, dir: String) {
           case zt.Prim("net") => when(cTxt.contains(":"), lit(32L)).otherwise(lit(8L))
           case zt.Prim("string") => coalesce(length(cTxt).cast(LongType), lit(0L))
           case zt.Prim("bytes")
-              if (try df.select(c0).schema.head.dataType == BinaryType
-                  catch { case _: Exception => false }) =>
+              if typeOf(df, c0).exists(_.dt == BinaryType) =>
             coalesce(length(c0).cast(LongType), lit(0L)) // native binary: byte count
           case zt.Prim("bytes") =>
             coalesce(((length(cTxt) - 2) / 2).cast(LongType), lit(0L)) // "0x…" text
@@ -5814,8 +5878,7 @@ final class Compiler(spark: SparkSession, dir: String) {
               else df.schema.fields.find(_.name == parts.head).map(_ =>
                 col(parts.mkString(".")))
             val carrierVar = carrier.exists(c =>
-              try isVariant(df.select(c).schema.head.dataType)
-              catch { case _: Exception => false })
+              typeOf(df, c).exists(t => isVariant(t.dt)))
             if (pairs.isEmpty) None
             else if (carrierVar) {
               val het = graft.operators.Het
@@ -5867,8 +5930,8 @@ final class Compiler(spark: SparkSession, dir: String) {
               val het = graft.operators.Het
               def vk(i: Int): Column = {
                 val c = expr(df, args(i))
-                if (isVariantExpr(df, args(i))) het.compareKey(c)
-                else het.compareKey(het.variant(c, dtypeOf(df, args(i)).getOrElse(StringType)))
+                if (isVariantExpr(df, args(i))) compareKeyOf(df, c)
+                else compareKeyOf(df, het.variant(c, dtypeOf(df, args(i)).getOrElse(StringType)))
               }
               F.compareVals(vk(0), vk(1), nm)
             } else {
@@ -5881,8 +5944,8 @@ final class Compiler(spark: SparkSession, dir: String) {
                 // cross-TYPE compare: zed total order ranks by type kind
                 // (compare.md: compare(2, "1") = -1, numbers < strings)
                 val het = graft.operators.Het
-                F.compareVals(het.compareKey(het.variant(expr(df, args(0)), d0)),
-                  het.compareKey(het.variant(expr(df, args(1)), d1)), nm)
+                F.compareVals(compareKeyOf(df, het.variant(expr(df, args(0)), d0)),
+                  compareKeyOf(df, het.variant(expr(df, args(1)), d1)), nm)
               } else F.compareVals(a(0), a(1), nm)
             }
         }
@@ -5940,8 +6003,7 @@ final class Compiler(spark: SparkSession, dir: String) {
         }
         Shaper.parseZedType(t) match {
           case Some(dt) =>
-            val srcDt = try df.select(subject).schema.head.dataType
-                        catch { case _: Exception => StringType }
+            val srcDt = dtOr(df, subject, StringType)
             castTo(subject, srcDt, dt)
           case None => subject.cast(zedTypeToDdl(t))
         }
@@ -5955,7 +6017,7 @@ final class Compiler(spark: SparkSession, dir: String) {
             .when(lower(c).isin("f", "false", "0", "no"), lit(false))
             .otherwise(c.cast(BooleanType))
         val c = expr(df, args.head)
-        val dt = try df.select(c).schema.head.dataType catch { case _: Exception => StringType }
+        val dt = dtOr(df, c, StringType)
         dt match {
           case _: NumericType => c =!= lit(0)
           case StringType => boolOfStr(c)
@@ -6012,8 +6074,7 @@ final class Compiler(spark: SparkSession, dir: String) {
         val text =
           if (isVariantExpr(df, e)) graft.operators.Het.render(c)
           else {
-            val adt = try df.select(c).schema.head.dataType
-                      catch { case _: Exception => StringType }
+            val adt = dtOr(df, c, StringType)
             graft.sources.ZsonIO.zsonOf(c, adt)
           }
         graft.functions.ZvOps.unflattenZed(text)
@@ -6108,8 +6169,7 @@ final class Compiler(spark: SparkSession, dir: String) {
         // division on typed streams) produce variants from non-variant
         // inputs, which isVariantExpr's path analysis can't see
         val dt = if (isVariantExpr(df, x)) graft.operators.Het.variantType
-          else try df.select(c).schema.head.dataType
-               catch { case _: Exception => StringType }
+          else dtOr(df, c, StringType)
         if (isVariant(dt)) graft.functions.ZvOps.asText(c)
         else c.cast("string")
       }: _*)
@@ -6193,8 +6253,7 @@ final class Compiler(spark: SparkSession, dir: String) {
     // and/or consume only the BOOL values (agg/agg.go: non-bools skip),
     // numeric aggs the numeric member
     val argIsVariant =
-      try isVariant(df.select(arg).schema.head.dataType)
-      catch { case _: Exception => false }
+      typeOf(df, arg).exists(t => isVariant(t.dt))
     def boolArg: Column = if (argIsVariant) arg.getField("b") else arg.cast(BooleanType)
     def numArg: Column = if (argIsVariant) arg.getField("n") else arg
     fn match {
@@ -6277,6 +6336,12 @@ object Compiler {
   def clearDebug(): Unit = debugThunks.get().clear()
   /** reserved column-name prefix for lateral `with` scope vars */
   val varPrefix = "__var_"
+
+  /** A type probe's result: the column's type and, when it is a plain
+    * projection of the probed plan's output, its resolved expression.
+    */
+  private[lang] final case class Typed(dt: DataType,
+      resolved: Option[org.apache.spark.sql.catalyst.expressions.Expression])
 }
 
 object Graft {

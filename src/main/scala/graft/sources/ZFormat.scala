@@ -179,16 +179,21 @@ object ZFormat {
     if (carry) ("1" + new String(cs, 0, p - 1), 1) else (new String(cs), 0)
   }
 
-  private def shortestDigits(d: Double, bits: Int): (String, Int, Boolean) = {
+  /** Shortest HALF_UP rounding of the JDK digits that round-trips at
+    * `bits`: (digits, decimal exponent, negative). `linear` scans every
+    * precision from 1 — the reference the binary search must agree with.
+    */
+  private[graft] def shortestDigits(d: Double, bits: Int,
+      linear: Boolean = false): (String, Int, Boolean) = {
     val neg = d < 0 || (d == 0.0 && 1.0 / d < 0)
     val a = math.abs(d)
     if (a == 0.0) return ("0", 1, neg)
     val (dd, e10) = toStringDigits(a)
-    // minimal p whose HALF_UP rounding still round-trips; the predicate is
-    // monotone in p, and p = dd.length always passes (the JDK string
-    // parses back exactly), so binary search [1, len] replaces the former
-    // 1..17 linear scan of String.format+parse probes — the probe itself
-    // is now a small string rounding + one parse
+    // minimal p whose HALF_UP rounding still round-trips; p = dd.length
+    // always passes (the JDK string parses back exactly), and a binary
+    // search over [1, len] finds it when the predicate is monotone in p —
+    // checked after the search, since HALF_UP rounding of rounded digits
+    // need not be
     def ok(p: Int): Boolean = {
       if (p >= dd.length) return true
       val (cand, bump) = roundDigits(dd, p)
@@ -196,13 +201,17 @@ object ZFormat {
       if (bits == 32) java.lang.Float.parseFloat(text) == a.toFloat
       else java.lang.Double.parseDouble(text) == a
     }
+    def scan(): Int = (1 to dd.length).find(ok).get
     var lo = 1
     var hi = dd.length
-    while (lo < hi) {
+    while (!linear && lo < hi) {
       val mid = (lo + hi) / 2
       if (ok(mid)) hi = mid else lo = mid + 1
     }
-    val (cand, bump) = roundDigits(dd, hi)
+    // a shorter precision that still passes means the predicate was not
+    // monotone here: the linear scan finds the true minimum
+    val p = if (linear || (hi > 1 && ok(hi - 1))) scan() else hi
+    val (cand, bump) = roundDigits(dd, p)
     var end = cand.length
     while (end > 1 && cand.charAt(end - 1) == '0') end -= 1
     (cand.substring(0, end), e10 + bump, neg)

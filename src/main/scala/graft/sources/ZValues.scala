@@ -771,6 +771,7 @@ object ZValue {
 
   private val floatPrefixU = org.apache.spark.unsafe.types.UTF8String.fromString("float")
   private val decimalTextU = org.apache.spark.unsafe.types.UTF8String.fromString("decimal")
+  private val float32TextU = org.apache.spark.unsafe.types.UTF8String.fromString("float32")
   private val setOpenU = org.apache.spark.unsafe.types.UTF8String.fromString("|[")
   private val mapOpenU = org.apache.spark.unsafe.types.UTF8String.fromString("|{")
   private val parenU = org.apache.spark.unsafe.types.UTF8String.fromString("(")
@@ -806,7 +807,7 @@ object ZValue {
         else {
           val t = if (r.isNullAt(4)) null else r.getUTF8String(4)
           if (t != null && (t.startsWith(floatPrefixU) || t.equals(decimalTextU)))
-            sb.ascii(floatText(r.getDouble(1)))
+            sb.ascii(floatText(r.getDouble(1), if (t.equals(float32TextU)) 32 else 64))
           else sb.ascii(java.lang.Long.toString(r.getDouble(1).toLong))
         }
         false
@@ -896,7 +897,7 @@ object ZValue {
     case VNull(_) => "null"
     case VInt(n, _) => n.toString
     case VUint64(n) => n.toBigInt.toString
-    case VFloat(d, _) => floatText(d)
+    case VFloat(d, t) => floatText(d, if (t == "float32") 32 else 64)
     case VStr(s) => "\"" + escape(s) + "\""
     case VBool(b) => b.toString
     case VBytes(b) => "0x" + b.map(x => f"$x%02x").mkString

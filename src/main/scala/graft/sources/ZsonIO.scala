@@ -129,6 +129,12 @@ object ZsonIO {
   def zsonOfTyped(c: Column, dt: DataType, zt: Option[ZType]): Column =
     zsonOfTyped(c, dt, zt, top = false)
 
+  /** Number types whose values never imply themselves (zson spec:
+    * 371(uint16)) — they always carry their decorator.
+    */
+  private val decoratedNums = Set("uint8", "uint16", "uint32", "uint64",
+    "int8", "int16", "int32", "float16", "float32")
+
   /** `top`: a TOP-LEVEL value decorates like formatter.go FormatValue —
     * empty containers of an implied type stay bare (`[]`), while nested
     * fields decorate them like nulls (formatVector's nullish rule).
@@ -147,8 +153,7 @@ object ZsonIO {
           // variant carrier (glob-mul: {s:7(int32)} after a variant
           // filter); null variants decorate with the full type
           val primDecor = stripped match {
-            case ZType.Prim(p) => Set("uint8", "uint16", "uint32", "uint64",
-              "int8", "int16", "int32", "float16", "float32")(p)
+            case ZType.Prim(p) => decoratedNums(p)
             case _ => false
           }
           // a null variant may be a present carrier with empty slots —
@@ -225,6 +230,12 @@ object ZsonIO {
           date_format(timestamp_seconds(secs), "yyyy-MM-dd'T'HH:mm:ss"),
           when(frac === "", lit("")).otherwise(concat(lit("."), frac)),
           lit("Z")))
+      case (DoubleType, Some(ZType.Prim("float32"))) =>
+        // a float32 riding the double carrier prints float32's shortest
+        // digits (3e+38, not the widened double's 3.0000000054977558e+38)
+        when(c === floor(c) && abs(c) < 1e15, zsonOf(c, DoubleType))
+          .otherwise(graft.functions.Bridge.column(graft.functions.GoFloatText(
+            graft.functions.Bridge.expression(c.cast(FloatType)))))
       case (StringType, Some(ZType.Prim("ip" | "net" | "time"))) =>
         // ip/net (and ISO-text time carriers, e.g. lake :objects
         // ranges) are bare in zson (no quotes)
@@ -301,11 +312,17 @@ object ZsonIO {
           try Some(ZsonParser.parseType(f.metadata.getString("graft.zedType")))
           catch { case _: Exception => None }
         else None)
+      val c = col(s"`${f.name}`")
+      val value = zsonOfZ(c, f.dataType, zt2)
+      // a boxed number with no shape type decorates from its own t slot
       val base = concat(lit(zsonName(f.name) + ":"),
-        zsonOfZ(col(s"`${f.name}`"), f.dataType, zt2))
+        if (zt2.isEmpty && isVariantType(f.dataType))
+          when(c.getField("k") === 0 && value =!= "null" &&
+            c.getField("t").isin(decoratedNums.toSeq: _*),
+            concat(value, lit("("), c.getField("t"), lit(")"))).otherwise(value)
+        else value)
       // error("quiet") fields are OMITTED from output (cut.md quiet)
       if (isVariantType(f.dataType)) {
-        val c = col(s"`${f.name}`")
         when(graft.operators.Het.isError(c) &&
           c.getField("z") === lit("\"quiet\""), lit(null).cast(StringType))
           .otherwise(base)

@@ -443,6 +443,17 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("shortest-digits binary search agrees with the linear scan") {
+    val rnd = new scala.util.Random(11)
+    val doubles = (0 until 5000).map(_ => java.lang.Double.longBitsToDouble(rnd.nextLong())) ++
+      (0 until 2000).map(_ => rnd.nextDouble() * math.pow(10, rnd.nextInt(40) - 20))
+    val floats = (0 until 5000).map(_ => java.lang.Float.intBitsToFloat(rnd.nextInt()).toDouble) ++
+      Seq(3e38f, 0.1f, Float.MaxValue, Float.MinPositiveValue, 1.0e-38f, 16777217f).map(_.toDouble)
+    val sd = graft.sources.ZFormat.shortestDigits _
+    for ((d, bits) <- doubles.map(_ -> 64) ++ floats.map(_ -> 32) if !d.isNaN && !d.isInfinite)
+      assert(sd(d, bits, false) == sd(d, bits, true), s"shortestDigits($d, $bits)")
+  }
+
   test("parser never hangs or crashes the JVM on malformed inputs") {
     val junk = Seq(
       "from", "from |", "| where", "from t | cut", "from t | summarize by",

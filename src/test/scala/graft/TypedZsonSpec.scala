@@ -54,6 +54,23 @@ class TypedZsonSpec extends AnyFunSuite with BeforeAndAfterAll {
       s.contains("error(string)")), out.mkString(" | "))
   }
 
+  test("float32 values print float32's shortest digits, bare and boxed") {
+    for ((text, digits) <- Seq("3e38(float32)" -> "3e+38", "0.1(float32)" -> "0.1")) {
+      val v = ZsonParser.parseAll(text).head
+      assert(ZValue.zsonText(v) == digits)
+      assert(ZsonParser.parseAll(s"$digits(float32)").head == v)
+    }
+    def out(df: org.apache.spark.sql.DataFrame, q: String): Seq[String] =
+      ZsonIO.toZson(graft.lang.Graft.queryOn(df, q)).collect().toSeq
+    val native = ZsonReader.fromText(spark, "{f:3e38(float32)}\n{f:0.1(float32)}")
+    assert(out(native, "yield this") == Seq("{f:3e+38(float32)}", "{f:0.1(float32)}"))
+    assert(out(native, "yield f") == Seq("3e+38(float32)", "0.1(float32)"))
+    // a union field boxes its float32 member into a variant
+    val boxed = ZsonReader.fromText(spark, "{f:3e38(float32)}\n{f:\"x\"}\n{f:0.1(float32)}")
+    assert(ZsonIO.isVariantType(boxed.schema("f").dataType))
+    assert(out(boxed, "yield f") == Seq("3e+38(float32)", "\"x\"", "0.1(float32)"))
+  }
+
   test("union member order is canonical at type creation (LookupTypeUnion)") {
     // context.go:200 sorts members with CompareTypes on every lookup, so
     // declared (string,int32) IS (int32,string) — same type, same
