@@ -595,34 +595,42 @@ final class Service(spark: SparkSession, defaultDir: String, port: Int,
             return
           }
         }
+        // the body's spool outlives the read: the frame reads it lazily,
+        // so it goes once the load has returned or failed
         val d = java.nio.file.Files.createTempDirectory("svcload")
-        val p = if (ext == "auto") d.resolve("in") else d.resolve(s"in.$ext")
-        java.nio.file.Files.write(p, raw)
-        val params = query(ex)
-        val df =
-          if (ext == "csv")
-            Formats.readCsv(spark, p.toString, params.getOrElse("csv.delim", ","))
-          else Formats.read(spark, p.toString)
-        if (df.isEmpty) {
-          jerr(ex, 400, "invalid operation", "no records in request")
-          return
-        }
-        // the reference's branch-load endpoint reads the commit message
-        // from a Zed-Commit header (api/queryio, service/handlers.go)
-        val (author, message) =
-          Option(ex.getRequestHeaders.getFirst("Zed-Commit")) match {
-            case Some(js) =>
-              val a = "\"author\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(js)
-                .map(_.group(1)).getOrElse("service")
-              val b = "\"body\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(js)
-                .map(_.group(1)).getOrElse("")
-              (a, b)
-            case None => ("service", "")
+        try {
+          val p = if (ext == "auto") d.resolve("in") else d.resolve(s"in.$ext")
+          java.nio.file.Files.write(p, raw)
+          val params = query(ex)
+          val df =
+            if (ext == "csv")
+              Formats.readCsv(spark, p.toString, params.getOrElse("csv.delim", ","))
+            else Formats.read(spark, p.toString)
+          // a ZSON read has already discovered its shapes: no separate
+          // emptiness job
+          val empty = if (ext == "zson") !ZsonIO.readHasValues(df) else df.isEmpty
+          if (empty) {
+            jerr(ex, 400, "invalid operation", "no records in request")
+            return
           }
-        val id = Lake.load(df, root, pool, author = author,
-          message = message, branch = branch)
-        event(s"""{kind:"commit",pool:"${Service.esc(pool)}",commit:"$id"}""")
-        respond(ex, 200, commitResponse(ex, id))
+          // the reference's branch-load endpoint reads the commit message
+          // from a Zed-Commit header (api/queryio, service/handlers.go)
+          val (author, message) =
+            Option(ex.getRequestHeaders.getFirst("Zed-Commit")) match {
+              case Some(js) =>
+                val a = "\"author\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(js)
+                  .map(_.group(1)).getOrElse("service")
+                val b = "\"body\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(js)
+                  .map(_.group(1)).getOrElse("")
+                (a, b)
+              case None => ("service", "")
+            }
+          val id = Lake.load(df, root, pool, author = author,
+            message = message, branch = branch)
+          event(s"""{kind:"commit",pool:"${Service.esc(pool)}",commit:"$id"}""")
+          respond(ex, 200, commitResponse(ex, id))
+        } finally
+          org.apache.commons.io.FileUtils.deleteQuietly(d.toFile): Unit
       case _ => legacyPool.handle(ex)
     }
   }

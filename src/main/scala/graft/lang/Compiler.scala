@@ -1804,9 +1804,10 @@ final class Compiler(spark: SparkSession, dir: String) {
                   .putString("graft.zedType", "type").build()
               case p: Expr.Path =>
                 // a path whose zed type says more than the Spark carrier
-                // (named/decorated containers) marks the bare value so the
-                // writer decorates it (vng no-dict: Dict's typed null)
-                staticZedName(df, p)
+                // (named/decorated containers, float32 over a double, its
+                // arrays and sets) marks the bare value so the writer
+                // decorates it (vng no-dict: Dict's typed null)
+                staticZedName(df, p).orElse(bareValueType(df, p))
                   .filter(t => dtypeOf(df, p)
                     .forall(dt2 => Shaper.zedTypeOf(dt2) != t))
                   .map(t => new org.apache.spark.sql.types.MetadataBuilder()
@@ -4174,6 +4175,23 @@ final class Compiler(spark: SparkSession, dir: String) {
           .map(graft.sources.ZType.fullText).distinct
         if (ts.size == 1) Some(ts.head) else None
       }
+    case _ => None
+  }
+
+  /** `this` over a bare-value stream (one `this` column, non-record
+    * shapes) whose shapes agree on one zed type: that type's text. The
+    * tag that carries it does not survive a projection of `this`.
+    */
+  private def bareValueType(df: DataFrame, e: Expr): Option[String] = e match {
+    case Expr.Path(Seq()) | Expr.Path(Seq("this")) if df.schema.fields.count(f =>
+        f.name != graft.operators.Het.typeTag && !f.metadata.contains("graft.scopeVar")) == 1 =>
+      val shapes = shapesOf(df)
+      val ts = shapes.map { case (_, t) => graft.sources.ZType.fullText(t) }.distinct
+      if (ts.size == 1 && !shapes.exists { case (t, zt) =>
+            graft.sources.ZType.isNullWrap(t) ||
+              graft.sources.ZType.strip(zt).isInstanceOf[graft.sources.ZType.Rec] })
+        ts.headOption
+      else None
     case _ => None
   }
 

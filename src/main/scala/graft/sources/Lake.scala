@@ -211,6 +211,30 @@ object Lake {
     }
   }
 
+  /** The number of partitions `df`'s physical plan produces, read from
+    * the plan without running it: a node that states its partitioning
+    * answers, any other unary node keeps its child's count, a union sums
+    * its children, and a scan leaf counts its RDD's partitions (building
+    * that RDD starts no job). None for an adaptive plan or an exchange,
+    * whose count is decided at run time, and for any other node.
+    */
+  private[sources] def plannedPartitions(df: DataFrame): Option[Int] = {
+    import org.apache.spark.sql.execution._
+    def of(p: SparkPlan): Option[Int] = p match {
+      case _: adaptive.AdaptiveSparkPlanExec | _: exchange.Exchange => None
+      case _ if p.outputPartitioning.numPartitions > 0 => Some(p.outputPartitioning.numPartitions)
+      case s: RDDScanExec => Some(s.rdd.getNumPartitions)
+      case s: FileSourceScanExec => Some(s.inputRDD.getNumPartitions)
+      case s: datasources.v2.DataSourceV2ScanExecBase => Some(s.inputRDD.getNumPartitions)
+      case u: UnionExec =>
+        val counts = u.children.map(of)
+        if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
+      case u: UnaryExecNode => of(u.child)
+      case _ => None
+    }
+    of(df.queryExecution.executedPlan)
+  }
+
   /** `load` — commit a query result into a pool (load.go:11-30). The data
     * write is a distributed parquet write; only the tiny journal append is
     * driver-side, mirroring zed's commit-journal design. The commit record
@@ -278,13 +302,15 @@ object Lake {
         // order is what makes the rewritten object's compressed size
         // byte-exact; plain loads skip the cost
         val sortCols =
-          if (bodyTiebreak) {
-            val tb = ZngBody.tiebreak(dfW)
-            if (tb.isEmpty && sys.env.contains("SCRIPT_TRACE"))
-              System.err.println(s"[lake] bodyTiebreak requested but no tag/shapes on ${dfW.columns.mkString(",")}")
-            Seq(col(k)) ++ tb.toSeq
-          } else Seq(col(k))
-        dfW.repartitionByRange(col(k)).sortWithinPartitions(sortCols: _*)
+          if (bodyTiebreak) col(k) +: ZngBody.tiebreak(dfW).toSeq
+          else Seq(col(k))
+        // a one-partition input is already one range: sorting it in place
+        // writes one sorted file without the exchange's boundary-sampling
+        // job (a small batch's exchange output coalesces to one partition)
+        val ranged =
+          if (plannedPartitions(dfW).contains(1)) dfW
+          else dfW.repartitionByRange(col(k))
+        ranged.sortWithinPartitions(sortCols: _*)
           .observe(obs, rowsMetric, min_by(keyText(col(k)), col(k)).as("kmin"),
             max_by(keyText(col(k)), col(k)).as("kmax"))
       case None => dfW.observe(obs, rowsMetric)

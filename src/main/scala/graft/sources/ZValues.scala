@@ -2279,19 +2279,25 @@ object ZsonReader {
     // order is deterministic and matches what a serial read would build
     // the "ns" sentinel key piggybacks the sub-µs-precision probe on
     // the same pass (its presence → escalate the time carrier to ns longs)
-    val nsSentinel = "ns"
-    val discovered = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val seen = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      var i = 0L
-      it.foreach { v =>
-        val t = recordify(v)._2
-        if (!seen.contains(t)) seen(t) = (pid.toLong << 40) | i
-        if (!seen.contains(nsSentinel) && hasSubMicroTime(v)) seen(nsSentinel) = Long.MaxValue
-        i += 1
-      }
-      seen.iterator
-    }.reduceByKey(math.min).collect()
+    val discovered = rdd.mapPartitionsWithIndex((pid, it) => discoverShapes(pid, it).iterator)
+      .reduceByKey(math.min).collect()
     fromShapes(spark, rdd, discovered, tag)
+  }
+
+  /** Pass 1 over one partition's values: each distinct shape text keyed
+    * by its first (partition, row), plus the ns sentinel when a time has
+    * sub-µs digits.
+    */
+  private[sources] def discoverShapes(pid: Int, values: Iterator[ZValue]): Array[(String, Long)] = {
+    val seen = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    var i = 0L
+    values.foreach { v =>
+      val t = recordify(v)._2
+      if (!seen.contains(t)) seen(t) = (pid.toLong << 40) | i
+      if (!seen.contains(nsSentinelKey) && hasSubMicroTime(v)) seen(nsSentinelKey) = Long.MaxValue
+      i += 1
+    }
+    seen.toArray
   }
 
   /** The key a format-specific pass-1 uses to flag sub-µs time presence in

@@ -12,11 +12,8 @@ import org.apache.spark.sql.types._
   * minimal: int64/float64/string/bool/time/null carry no decorator; narrower
   * numerics get `(int32)`-style decorators.
   *
-  * Reader: per-line ZSON → JSON text conversion in mapPartitions (text
-  * parsing is inherently row-wise — same cost class as any text source),
-  * then Spark's distributed JSON reader does schema inference/parse. Type
-  * decorators are consumed and dropped; sets and maps land as arrays and
-  * records.
+  * Reader: typed per-partition parsing of the text scan into the tagged
+  * frame `ZsonReader` builds (see `read`).
   */
 object ZsonIO {
 
@@ -376,8 +373,10 @@ object ZsonIO {
           try Some(ZsonParser.parseType(fields.head.metadata.getString("graft.zedType")))
           catch { case _: Exception => None }
         else None
+      // a marked `this` (a projection dropped the tag) renders like the
+      // tagged shape below
       val base = metaZt match {
-        case Some(z) => zsonOfZ(col("this"), dt, Some(z), top = true)
+        case Some(z) => decorWrap(zsonOfZ(col("this"), dt, Some(z), top = true), ZType.fullText(z))
         case None => zsonOf(col("this"), dt)
       }
       val line = shapes.foldLeft(base) { (acc, t) =>
@@ -622,59 +621,110 @@ object ZsonIO {
     * distributed (reference: zson/parser.go streams typed values).
     *
     * Machine-written ZSON (zq's `-z` and this engine's writer) is one
-    * value per line, so the default path is Spark's splittable text scan
-    * with per-partition typed parsing; a short driver-side probe detects
-    * pretty-printed multi-line ZSON (`-Z`) and falls back to whole-file
-    * decode distributed one task per file.
+    * value per line, so the default route is Spark's splittable text scan
+    * with per-partition typed parsing. ONE Spark job (`scanLines` over
+    * every partition) decides the route and discovers the line route's
+    * shapes: the file is line-oriented iff its first non-blank,
+    * non-comment line parses alone and no line holds a typedef `(=`.
+    * A line-oriented read then builds its frame from the discovered
+    * shapes, so the query's scan is the only other pass. Pretty-printed
+    * (`-Z`) and typedef-bearing files decode whole, one task per file.
+    * A line-oriented partition the scan could not parse (a syntax error,
+    * a value spanning a split) re-runs the two-pass line route, which
+    * surfaces the parse error or decodes the spanning value.
     */
   def read(spark: SparkSession, path: String): DataFrame = {
+    val lines = spark.read.textFile(path).rdd
+    val scans =
+      try Some(lines.mapPartitionsWithIndex((pid, it) => Iterator(scanLines(pid, it))).collect())
+      catch { case scala.util.control.NonFatal(_) => None } // a read error: the line route surfaces it
     // typedef-bearing files ((=name) definitions referenced by later
     // values) must decode as ONE stream per file — a text split could
     // separate a reference from its definition. Parallelism across FILES
     // is kept; only within-file splitting is given up.
-    lazy val hasTypedefs =
-      try spark.read.textFile(path).filter((l: String) => l.contains("(="))
-        .head(1).nonEmpty
-      catch { case _: Exception => false }
-    val rdd =
-      if (probeLineOriented(spark, path) && !hasTypedefs)
-        spark.read.textFile(path).rdd.mapPartitions(parseLineIter)
-      else {
-        // not line-oriented: confirm the head actually parses as (multi-
-        // line) zson before shipping a whole-file decode to executors —
-        // an undetectable file fails fast with the reference's message
-        // (stop-on-error ztest: "bad.zson: format detection error")
-        val head = try spark.read.textFile(path).head(512).mkString("\n")
-                   catch { case _: Exception => "" }
-        // a pretty value can legitimately span more lines than the probe
-        // window, so a failed FULL parse only means "not zson" when the
-        // text doesn't even START like a zson value — otherwise assume a
-        // truncated pretty value and let the executor-side decode surface
-        // any real error
-        val headParses =
-          try { ZsonParser.parseAll(head); true }
-          catch { case _: Exception => false }
-        val firstCh = head.linesIterator
-          .map(_.trim).filterNot(l => l.isEmpty || l.startsWith("//"))
-          .flatMap(_.headOption).nextOption()
-        // container/quote/number starts can be truncated pretty values;
-        // bare prose cannot (only true/false/null/NaN keywords open with
-        // a letter, and those parse fully above)
-        val plausibleStart = firstCh.exists(c =>
-          c == '{' || c == '[' || c == '|' || c == '<' || c == '"' ||
-          c == '-' || c == '+' || c == '(' || c.isDigit)
-        if (head.trim.nonEmpty && !headParses && !plausibleStart)
-          throw new IllegalArgumentException(
-            new java.io.File(path).getName + ": format detection error")
-        perFileValues(spark, path)
+    val lineOriented = scans.forall(ss =>
+      ss.flatMap(_.firstParses).headOption.forall(identity) && !ss.exists(_.typedefs))
+    if (lineOriented) {
+      val values = lines.mapPartitions(parseLineIter)
+      scans.filter(_.forall(_.shapes.isDefined)) match {
+        case Some(ss) =>
+          // each shape keeps its first (partition, row) key
+          val discovered = ss.flatMap(_.shapes.get).groupMapReduce(_._1)(_._2)(math.min)
+          ZsonReader.fromShapes(spark, values, discovered.toArray)
+        case None => ZsonReader.fromRDD(spark, values)
       }
-    ZsonReader.fromRDD(spark, rdd)
+    } else {
+      // not line-oriented: confirm the head actually parses as (multi-
+      // line) zson before shipping a whole-file decode to executors —
+      // an undetectable file fails fast with the reference's message
+      // (stop-on-error ztest: "bad.zson: format detection error")
+      val head = try spark.read.textFile(path).head(512).mkString("\n")
+                 catch { case _: Exception => "" }
+      // a pretty value can legitimately span more lines than the probe
+      // window, so a failed FULL parse only means "not zson" when the
+      // text doesn't even START like a zson value — otherwise assume a
+      // truncated pretty value and let the executor-side decode surface
+      // any real error
+      val headParses =
+        try { ZsonParser.parseAll(head); true }
+        catch { case _: Exception => false }
+      val firstCh = head.linesIterator
+        .map(_.trim).filterNot(l => l.isEmpty || l.startsWith("//"))
+        .flatMap(_.headOption).nextOption()
+      // container/quote/number starts can be truncated pretty values;
+      // bare prose cannot (only true/false/null/NaN keywords open with
+      // a letter, and those parse fully above)
+      val plausibleStart = firstCh.exists(c =>
+        c == '{' || c == '[' || c == '|' || c == '<' || c == '"' ||
+        c == '-' || c == '+' || c == '(' || c.isDigit)
+      if (head.trim.nonEmpty && !headParses && !plausibleStart)
+        throw new IllegalArgumentException(
+          new java.io.File(path).getName + ": format detection error")
+      ZsonReader.fromRDD(spark, perFileValues(spark, path))
+    }
+  }
+
+  /** Whether a frame `read` returned holds any value: its discovery
+    * records a shape for every value it sees, so only an empty read
+    * comes back without the tag column's shape list.
+    */
+  def readHasValues(df: DataFrame): Boolean =
+    df.schema.find(_.name == graft.operators.Het.typeTag)
+      .exists(_.metadata.contains("shapes"))
+
+  /** What `read`'s one discovery pass learns about one text partition.
+    * `firstParses`: whether its first non-blank, non-comment line parses
+    * alone (None when it has none). `typedefs`: some line holds `(=`.
+    * `shapes`: the line route's shape texts keyed by first (partition,
+    * row), plus the ns sentinel when a time has sub-µs digits; None when
+    * the line parse threw, or was skipped because the first line does not
+    * parse alone.
+    */
+  private final case class LineScan(firstParses: Option[Boolean], typedefs: Boolean,
+      shapes: Option[Array[(String, Long)]])
+
+  private def scanLines(pid: Int, lines0: Iterator[String]): LineScan = {
+    var typedefs = false
+    // every line, parsed or skipped, passes the typedef check
+    val lines = lines0.map { l => if (l.contains("(=")) typedefs = true; l }.buffered
+    def content(l: String): Boolean = { val t = l.trim; t.nonEmpty && !t.startsWith("//") }
+    while (lines.hasNext && !content(lines.head)) lines.next()
+    val firstParses = lines.headOption.map(l =>
+      try { ZsonParser.parseAll(l); true } catch { case _: Exception => false })
+    // a typedef routes the whole read to whole-file decode: stop parsing
+    val shapes =
+      if (!firstParses.forall(identity)) None
+      else try Some(ZsonReader.discoverShapes(pid, parseLineIter(lines).takeWhile(_ => !typedefs)))
+           catch { case scala.util.control.NonFatal(_) => None }
+    while (!typedefs && lines.hasNext) lines.next()
+    LineScan(firstParses, typedefs, shapes)
   }
 
   /** Parse a partition's lines into values, accumulating continuation
     * lines so multi-line values inside a partition still decode (text
     * splits are line-aligned, so only a value spanning >1 split breaks —
-    * the probe routes those files to whole-file decode instead).
+    * `read` routes files whose first line is not a whole value to
+    * whole-file decode instead).
     */
   private[sources] def parseLineIter(lines: Iterator[String]): Iterator[ZValue] = new Iterator[ZValue] {
     private var queue: Iterator[ZValue] = Iterator.empty
@@ -701,17 +751,6 @@ object ZsonIO {
     }
     def hasNext: Boolean = { if (!queue.hasNext) fill(); queue.hasNext }
     def next(): ZValue = { if (!hasNext) throw new NoSuchElementException; queue.next() }
-  }
-
-  /** Probe the head of the input: line-oriented iff the first non-blank,
-    * non-comment line is one-or-more complete values on its own.
-    */
-  private def probeLineOriented(spark: SparkSession, path: String): Boolean = {
-    try {
-      val head = spark.read.textFile(path).filter(
-        (l: String) => l.trim.nonEmpty && !l.trim.startsWith("//")).head(1)
-      head.isEmpty || (try { ZsonParser.parseAll(head(0)); true } catch { case _: Exception => false })
-    } catch { case _: Exception => true }
   }
 
   /** Whole-file typed decode, one task per file (for pretty-printed

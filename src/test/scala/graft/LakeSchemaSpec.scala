@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
@@ -167,35 +166,7 @@ class LakeSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
     assertPlannedLikeInference(root, "tagged")
   }
 
-  /** Spark jobs started while `body` runs. Listener events arrive
-    * asynchronously, so a marker job before and after `body` brackets
-    * them: once the closing marker's start is seen, every earlier job's
-    * start has been delivered.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    def marker(name: String): Unit = {
-      sc.setJobDescription(name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!seen.contains(name) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(name), s"listener never saw marker job $name")
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("graft-jobs-open")
-      body
-      marker("graft-jobs-close")
-      val all = scala.jdk.CollectionConverters.CollectionHasAsScala(seen).asScala.toSeq
-      all.indexOf("graft-jobs-close") - all.indexOf("graft-jobs-open") - 1
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsDuring(body: => Unit): Int = SparkJobs.during(spark)(body).jobs
 
   test("compiling a lake query runs no Spark job") {
     val root = newRoot("lakeschema-jobs")

@@ -77,6 +77,35 @@ class ServiceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(graft.sources.Lake.scan(spark, root, "svc").count() == 5)
   }
 
+  test("a branch load leaves no spooled body behind: loaded, empty or malformed") {
+    val root = java.nio.file.Files.createTempDirectory("graft-svc-spool").toString
+    graft.sources.Lake.create(root, "p", Some("ts"), "desc")
+    val lake = new Service(spark, root, 0, lakeRootOpt = Some(root))
+    val lakePort = lake.start()
+    val tmpdir = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def spools(): Set[String] = Option(tmpdir.listFiles()).getOrElse(Array.empty)
+      .map(_.getName).filter(_.startsWith("svcload")).toSet
+    def load(body: String): (Int, String) = {
+      val req = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$lakePort/pool/p/branch/main"))
+        .header("Content-Type", "application/x-zson")
+        .POST(HttpRequest.BodyPublishers.ofString(body)).build()
+      val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
+      (resp.statusCode(), resp.body())
+    }
+    val before = spools()
+    try {
+      val ok = load("{ts:2024-01-01T00:00:00Z,a:1}\n{ts:2024-01-01T00:00:01Z,a:2}\n")
+      assert(ok._1 == 200 && ok._2.contains("commit"), ok)
+      // comments only: read, found empty
+      val empty = load("// no values here\n")
+      assert(empty._1 == 400 && empty._2.contains("no records in request"), empty)
+      val bad = load("{ts:2024-01-01T00:00:00Z,a:1}\n{ts:2024-01-01T00:00:01Z,a:\n")
+      assert(bad._1 == 400, bad)
+    } finally lake.stop()
+    assert(graft.sources.Lake.scan(spark, root, "p").count() == 2)
+    assert(spools() -- before == Set.empty[String])
+  }
+
   test("GET /status answers") {
     val (code, body) = get("/status")
     assert(code == 200 && body.contains("ok"))

@@ -71,6 +71,19 @@ class TypedZsonSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out(boxed, "yield f") == Seq("3e+38(float32)", "\"x\"", "0.1(float32)"))
   }
 
+  test("a bare float32 stream keeps its type through yield this, bare and in arrays") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-float32")
+    def yielded(text: String): Seq[String] = {
+      val f = dir.resolve(s"f${text.hashCode}.zson")
+      java.nio.file.Files.write(f, text.getBytes("UTF-8"))
+      ZsonIO.toZson(graft.lang.Graft.queryOn(ZsonIO.read(spark, f.toString), "yield this"))
+        .collect().toSeq
+    }
+    assert(yielded("3e38(float32)\n0.1(float32)\n") == Seq("3e+38(float32)", "0.1(float32)"))
+    assert(yielded("[3e38(float32),0.1(float32)]\n") == Seq("[3e+38(float32),0.1(float32)]"))
+    assert(yielded("|[3e38(float32)]|\n") == Seq("|[3e+38(float32)]|"))
+  }
+
   test("union member order is canonical at type creation (LookupTypeUnion)") {
     // context.go:200 sorts members with CompareTypes on every lookup, so
     // declared (string,int32) IS (int32,string) — same type, same
