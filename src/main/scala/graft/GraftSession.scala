@@ -15,11 +15,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * nested-column pruning decides the parquet ReadSchema. The
   * experimental.extraOptimizations registration in [[GraftSession.ready]]
   * runs in the LAST batch and stays as the idempotent safety net for
-  * sessions created without this config.
+  * sessions created without this config. It also injects the AQE
+  * query-stage preparation rule [[graft.operators.OneTaskSort]], which has
+  * no such fallback: a session without this config keeps Spark's plan.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit =
+  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => graft.functions.CollapseVariantAccess)
+    e.injectQueryStagePrepRule(_ => graft.operators.OneTaskSort)
+  }
 }
 
 object GraftSession {

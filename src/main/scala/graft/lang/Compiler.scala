@@ -1102,6 +1102,18 @@ final class Compiler(spark: SparkSession, dir: String) {
         // metadata on the agg output: typeof keys are TYPE-valued, count
         // family aggs are uint64 (writer fidelity — zjson/zson decorators)
         val zedTypeMd: Map[String, org.apache.spark.sql.types.Metadata] = (
+          // a field key keeps its input zed type where the carrier can't
+          // say it (uint16 on a long, float32 on a double, ip on a
+          // string, named types): the field's marker, else its shapes
+          keys.flatMap {
+            case (n, Expr.Path(Seq(cn))) if df.columns.contains(cn) &&
+                !isVariant(df.schema(cn).dataType) =>
+              fieldZedType(df, cn)
+                .filter(_ != Shaper.zedTypeOf(df.schema(cn).dataType))
+                .map(t => n -> new org.apache.spark.sql.types.MetadataBuilder()
+                  .putString("graft.zedType", t).build())
+            case _ => None
+          } ++
           keys.collect { case (n, Expr.Call("typeof" | "typeunder", _)) =>
             n -> new org.apache.spark.sql.types.MetadataBuilder()
               .putString("graft.zedType", "type").build()
@@ -1262,8 +1274,11 @@ final class Compiler(spark: SparkSession, dir: String) {
               }: _*)
             else out
           // the reference's groupby emits KEY-SORTED output (sam/op/
-          // groupby sorts its table on emit) — order by the group keys;
-          // post-agg cardinality makes this cheap at any input scale
+          // groupby sorts its table on emit) — order by the group keys.
+          // Spark meets this global sort with a range exchange (a
+          // sampling job and a map stage); when AQE reads the aggregate's
+          // shuffle as one partition, graft.operators.OneTaskSort sorts
+          // in the final aggregate's task instead
           val keyNames = keys.map(_._1).filter(restored.columns.contains)
           def keySorted(d: DataFrame): DataFrame =
             if (lateral || keyNames.isEmpty ||
@@ -1807,9 +1822,11 @@ final class Compiler(spark: SparkSession, dir: String) {
                 // (named/decorated containers, float32 over a double, its
                 // arrays and sets) marks the bare value so the writer
                 // decorates it (vng no-dict: Dict's typed null)
-                staticZedName(df, p).orElse(bareValueType(df, p))
-                  .filter(t => dtypeOf(df, p)
+                // A bare stream keeps its type even where the carrier
+                // implies it: its nulls are typed (null(int64) beside 1)
+                staticZedName(df, p).filter(t => dtypeOf(df, p)
                     .forall(dt2 => Shaper.zedTypeOf(dt2) != t))
+                  .orElse(bareValueType(df, p))
                   .map(t => new org.apache.spark.sql.types.MetadataBuilder()
                     .putString("graft.zedType", t).build())
                   .getOrElse(org.apache.spark.sql.types.Metadata.empty)
@@ -4176,6 +4193,23 @@ final class Compiler(spark: SparkSession, dir: String) {
         if (ts.size == 1) Some(ts.head) else None
       }
     case _ => None
+  }
+
+  /** The zed type of top-level field `cn`, names kept: its marker, else
+    * the one type every shape gives it. None when a shape lacks the field
+    * (its rows carry error("missing")) or the shapes disagree.
+    */
+  private def fieldZedType(df: DataFrame, cn: String): Option[String] = {
+    val f = df.schema(cn)
+    if (f.metadata.contains("graft.zedType")) Some(f.metadata.getString("graft.zedType"))
+    else {
+      val ts = shapesOf(df).map { case (_, t) => graft.sources.ZType.strip(t) match {
+        case graft.sources.ZType.Rec(fs) =>
+          fs.collectFirst { case (`cn`, ft) => graft.sources.ZType.fullText(ft) }
+        case _ => None
+      } }.distinct
+      if (ts.size == 1) ts.head else None
+    }
   }
 
   /** `this` over a bare-value stream (one `this` column, non-record

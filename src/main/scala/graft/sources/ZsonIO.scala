@@ -217,7 +217,9 @@ object ZsonIO {
   private def zsonOfTyped0(c: Column, dt: DataType, zt: Option[ZType]): Column =
     (dt, zt.map(ZType.strip)) match {
       case (LongType, Some(ZType.Prim("duration"))) =>
-        when(c.isNull, lit("null")).otherwise(concat(c.cast(StringType), lit("ns")))
+        // an ns-count carrier prints zed's duration text (1s, 1h2m3.5s)
+        when(c.isNull, lit("null")).otherwise(graft.functions.Bridge.column(
+          graft.functions.DurationText(graft.functions.Bridge.expression(c))))
       case (LongType, Some(ZType.Prim("time"))) =>
         // ns-domain long carrier → ISO with trailing zeros trimmed
         val secs = graft.functions.Bridge.intDiv(c, lit(1000000000L))
@@ -297,7 +299,7 @@ object ZsonIO {
       .filterNot(f => f.name == het.typeTag || f.metadata.contains("graft.scopeVar"))
     import df.sparkSession.implicits._
     // zed-type-aware formatting: durations travel as ns longs — the
-    // shape tag says which longs are durations (emitted as `<ns>ns`)
+    // shape tag says which longs are durations (emitted as `1h2m3.5s`)
     def zsonOfZ(c: Column, dt: DataType, zt: Option[ZType],
         top: Boolean = false): Column =
       ZsonIO.zsonOfTyped(c, dt, zt, top)

@@ -47,6 +47,18 @@ class ServiceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(lines.head.matches("""\{event_type:"click",count:\d+(\(uint64\))?\}"""))
   }
 
+  test("a small keyed count then a sort runs no range exchange's jobs") {
+    var res: (Int, String) = null
+    val seen = SparkJobs.during(spark) {
+      res = post("/query", "from events | count() by event_type | sort event_type")
+    }
+    assert(res._1 == 200 && res._2.trim.split("\n").length == 5, res)
+    // the table read's schema job, the aggregate's map stage and the
+    // result stage; a range exchange adds its sampling job and its map
+    // stage (5 jobs)
+    assert(seen.jobs <= 3, s"ran ${seen.jobs} Spark jobs")
+  }
+
   test("POST /query honors fmt=text and limit") {
     val (code, body) = post("/query?fmt=text&limit=3", "from nation | sort n_nationkey | cut n_nationkey, n_name")
     assert(code == 200)

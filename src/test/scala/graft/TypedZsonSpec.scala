@@ -84,6 +84,46 @@ class TypedZsonSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(yielded("|[3e38(float32)]|\n") == Seq("|[3e+38(float32)]|"))
   }
 
+  /** Each query's ZSON lines over `text` read as a ZSON file. */
+  private def zsonOut(text: String, queries: String*): Seq[Seq[String]] = {
+    val f = java.nio.file.Files.createTempFile("graft-typed", ".zson")
+    java.nio.file.Files.write(f, text.getBytes("UTF-8"))
+    val in = ZsonIO.read(spark, f.toString)
+    queries.map(q => ZsonIO.toZson(graft.lang.Graft.queryOn(in, q)).collect().toSeq)
+  }
+
+  test("group-by keys keep narrow and named zed types") {
+    val ttl = "{ttl:2(uint16),x:1}\n{ttl:1(uint16),x:2}\n{ttl:2(uint16),x:3}\n"
+    assert(zsonOut(ttl, "count() by ttl", "sum(x) by ttl") == Seq(
+      Seq("{ttl:1(uint16),count:1(uint64)}", "{ttl:2(uint16),count:2(uint64)}"),
+      Seq("{ttl:1(uint16),sum:2}", "{ttl:2(uint16),sum:4}")))
+    assert(zsonOut(ttl, "by ttl").head.toSet == Set("{ttl:1(uint16)}", "{ttl:2(uint16)}"))
+    assert(zsonOut("{p:443(port=uint16)}\n{p:80(port=uint16)}\n{p:80(port=uint16)}\n",
+      "count() by p") == Seq(Seq(
+        "{p:80(port=uint16),count:2(uint64)}", "{p:443(port=uint16),count:1(uint64)}")))
+    assert(zsonOut("{f:1.5(float32)}\n{f:0.1(float32)}\n", "count() by f") == Seq(Seq(
+      "{f:0.1(float32),count:1(uint64)}", "{f:1.5(float32),count:1(uint64)}")))
+    // a shape without the key groups it as error("missing"), untyped
+    assert(zsonOut("{ttl:1(uint16),x:1}\n{x:2}\n", "count() by ttl").head.toSet == Set(
+      "{ttl:error(\"missing\"),count:1(uint64)}", "{ttl:1(uint16),count:1(uint64)}"))
+  }
+
+  test("durations print zed's duration text, bare and in records") {
+    val values = Seq("1s", "2ms", "0s", "-1500ms", "1h2m3.5s", "null(duration)")
+    val text = Seq("1s", "2ms", "0s", "-1.5s", "1h2m3.5s", "null(duration)")
+    assert(zsonOut(values.mkString("", "\n", "\n"), "pass", "yield this") == Seq(text, text))
+    val records = text.map(t => s"{d:$t}")
+    assert(zsonOut(values.map(v => s"{d:$v}").mkString("", "\n", "\n"), "pass", "yield this") ==
+      Seq(records, records))
+  }
+
+  test("a typed null beside a value keeps its type through yield this") {
+    assert(zsonOut("null(int64)\n1\n", "pass", "yield this") ==
+      Seq(Seq("null(int64)", "1"), Seq("null(int64)", "1")))
+    // an untyped null is of type null: it stays bare
+    assert(zsonOut("null\n1\n", "yield this") == Seq(Seq("null", "1")))
+  }
+
   test("union member order is canonical at type creation (LookupTypeUnion)") {
     // context.go:200 sorts members with CompareTypes on every lookup, so
     // declared (string,int32) IS (int32,string) — same type, same

@@ -182,6 +182,14 @@ class ZsonReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ts.toSeq == ts.sorted.toSeq)
   }
 
+  test("a multi-partition load keeps its range exchange at run time") {
+    val root = tmp("zsonread-range").toString
+    val f = write(tmp("zsonread-range-batch"), "b.zson", batch(300))
+    Lake.create(root, "p", Some("ts"), "desc")
+    val seen = SparkJobs.during(spark) { Lake.load(ZsonIO.read(spark, f).repartition(3), root, "p") }
+    assert(seen.finalPlans.exists(_.contains("rangepartitioning")), seen.finalPlans.mkString("\n"))
+  }
+
   test("a keyed service load runs at most five Spark jobs; compact and delete where no more than before") {
     val root = tmp("zsonread-svc").toString
     Lake.create(root, "p", Some("ts"), "desc")
