@@ -28,9 +28,18 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
 
 object GraftSession {
 
-  /** Shared config applied to every session the engine creates. */
+  /** Shared config applied to every session the engine creates.
+    *
+    * `file:` paths go through [[graft.sources.NioLocalFileSystem]]: where
+    * Hadoop's native library is absent, the stock local filesystem forks a
+    * `chmod` for every file, `.crc` and directory it creates (15 per lake
+    * load), and this one sets the same modes in-process. The setting
+    * reaches tasks through the session's Hadoop configuration (and
+    * `HadoopFs.confMap`); it covers the `file:` scheme only.
+    */
   def configure(b: SparkSession.Builder, cores: String): SparkSession.Builder =
     b.config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NioLocalFileSystem].getName)
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -116,7 +125,31 @@ object GraftSession {
     s
   }
 
-  /** Load one of the driver-provided TPC-H-ish tables from an sf dir. */
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Load one of the driver-provided TPC-H-ish tables from an sf dir. The
+    * schema comes from the footer of the table's first data file, read on
+    * the driver and cached per (file, mtime), so opening a table starts no
+    * Spark job (schema inference reads that same footer in a job).
+    */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(tableSchema(spark, path)).parquet(path)
+  }
+
+  private val schemaCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, org.apache.spark.sql.types.StructType)]
+
+  private def tableSchema(spark: SparkSession, path: String): org.apache.spark.sql.types.StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val first = graft.sources.HadoopFs.listDataFiles(spark, path).headOption.getOrElse(
+      throw new IllegalArgumentException(s"$path: no data files"))
+    val p = new org.apache.hadoop.fs.Path(first)
+    val mtime = p.getFileSystem(conf).getFileStatus(p).getModificationTime
+    val cached = schemaCache.get(first)
+    if (cached != null && cached._1 == mtime) cached._2
+    else {
+      val schema = org.apache.spark.sql.graftshim.SchemaBridge.footerSchema(conf, first)
+      schemaCache.put(first, (mtime, schema))
+      schema
+    }
+  }
 }

@@ -475,15 +475,24 @@ final class Compiler(spark: SparkSession, dir: String) {
             dtypeOf(df, p).isEmpty && !variantPrefix(p)
           case _ => false
         }
+        // a top-level field keeps its zed type (cutter.go copies values
+        // with their types: `count() by ttl | cut ttl` prints 1(uint16))
+        def typeMd(parts: Seq[String]): org.apache.spark.sql.types.Metadata =
+          df.schema.fields.find(f => parts == Seq(f.name) && f.metadata.contains("graft.zedType"))
+            .map(f => new org.apache.spark.sql.types.MetadataBuilder()
+              .putString("graft.zedType", f.metadata.getString("graft.zedType")).build())
+            .getOrElse(org.apache.spark.sql.types.Metadata.empty)
         val cols = kept.map {
           case (name, Some(e @ Expr.Call("typeof" | "typeunder", _))) =>
             outExpr(df, e).as(name, new org.apache.spark.sql.types.MetadataBuilder()
               .putString("graft.zedType", "type").build())
+          case (name, Some(e @ Expr.Path(parts))) =>
+            outExpr(df, e).as(name, typeMd(parts))
           case (name, Some(e)) =>
             outExpr(df, e).as(name, org.apache.spark.sql.types.Metadata.empty)
           case (name, None) =>
-            outExpr(df, Expr.Path(name.split('.').toSeq))
-              .as(name, org.apache.spark.sql.types.Metadata.empty)
+            val parts = name.split('.').toSeq
+            outExpr(df, Expr.Path(parts)).as(name, typeMd(parts))
         }
         val flat0 = df.select(cols: _*)
         // a row where EVERY quiet() field is missing leaves the stream
@@ -1222,12 +1231,28 @@ final class Compiler(spark: SparkSession, dir: String) {
           if ((keys.map(_._1) ++ aggs.map(_._1)).exists(_.contains('.')))
             Shaper.nestDotted(d)
           else d
+        // the reference's groupby emits KEY-SORTED output (sam/op/
+        // groupby sorts its table on emit) — order by the group keys.
+        // Spark meets this global sort with a range exchange (a sampling
+        // job and a map stage); when AQE reads the aggregate's shuffle as
+        // one partition, graft.operators.OneTaskSort sorts in the final
+        // aggregate's task instead
+        def keySorted(d: DataFrame): DataFrame = {
+          val keyNames = keys.map(_._1).filter(d.columns.contains)
+          if (lateral || keyNames.isEmpty ||
+              keyNames.exists(n => graft.sources.ZsonIO.isVariantType(
+                d.schema(n).dataType))) d
+          // nulls LAST: the groupby emit comparator is nullsMax
+          // (sam/op/groupby NewComparator(true, ...)), matching the
+          // sort stage's asc_nulls_last convention
+          else d.orderBy(keyNames.map(n => col(s"`$n`").asc_nulls_last): _*)
+        }
         val bareAgg = keys.isEmpty && aggs.length == 1 && !aggs.head._2.named
         if (aggs.isEmpty)
           // keys-only `by` keeps the zed-type markers too (typeof keys
           // are TYPE values — union-cast ztest renders {typeof:<…>})
-          Seq(nestIfDotted(markZedTypes(graft.operators.Het.canonicalRows(
-            df.select(keyCols0.map { case (n, c) => c.as(n) }: _*)).distinct())))
+          Seq(nestIfDotted(markZedTypes(keySorted(graft.operators.Het.canonicalRows(
+            df.select(keyCols0.map { case (n, c) => c.as(n) }: _*)).distinct()))))
         else if (bareAgg && !lateral) {
           // a lone unnamed aggregate emits the bare value (summarize.md:
           // `count()` → 3, not {count:3})
@@ -1273,21 +1298,6 @@ final class Compiler(spark: SparkSession, dir: String) {
                 else col(s"`${f.name}`")
               }: _*)
             else out
-          // the reference's groupby emits KEY-SORTED output (sam/op/
-          // groupby sorts its table on emit) — order by the group keys.
-          // Spark meets this global sort with a range exchange (a
-          // sampling job and a map stage); when AQE reads the aggregate's
-          // shuffle as one partition, graft.operators.OneTaskSort sorts
-          // in the final aggregate's task instead
-          val keyNames = keys.map(_._1).filter(restored.columns.contains)
-          def keySorted(d: DataFrame): DataFrame =
-            if (lateral || keyNames.isEmpty ||
-                keyNames.exists(n => graft.sources.ZsonIO.isVariantType(
-                  d.schema(n).dataType))) d
-            // nulls LAST: the groupby emit comparator is nullsMax
-            // (sam/op/groupby NewComparator(true, ...)), matching the
-            // sort stage's asc_nulls_last convention
-            else d.orderBy(keyNames.map(n => col(s"`$n`").asc_nulls_last): _*)
           Seq(nestIfDotted(markZedTypes(keySorted(if (lateral) {
             // re-mark the scope vars and the surviving row id (metadata
             // does not survive groupBy); per-OUTER-ROW results come back

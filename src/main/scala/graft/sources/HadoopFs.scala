@@ -1,7 +1,8 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.jdk.CollectionConverters._
@@ -12,6 +13,12 @@ import scala.jdk.CollectionConverters._
   * `Configuration` from it so writes go through `FileSystem.create` — on a
   * real cluster the part files land on the shared filesystem (HDFS, S3A,
   * file: on NFS), not executor-local disk as `java.nio.file` would.
+  *
+  * `file:` paths resolve to [[NioLocalFileSystem]] in every session
+  * `GraftSession.configure` builds (`fs.file.impl`). Without Hadoop's
+  * native library, the stock local filesystem sets the mode of every file,
+  * checksum file and directory it creates by forking `chmod`; this one
+  * sets it in-process. Every other scheme keeps its stock filesystem.
   */
 object HadoopFs {
 
@@ -129,4 +136,39 @@ object HadoopFs {
       buf
     } finally in.close()
   }
+}
+
+/** Hadoop's checksummed local filesystem over [[NioRawLocalFileSystem]]:
+  * same files, same `.crc` checksums, same modes, but no process per
+  * `setPermission`. Registered for the `file:` scheme only.
+  */
+class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
+
+/** `RawLocalFileSystem` whose `setPermission` calls
+  * `Files.setPosixFilePermissions` where that sets the mode `chmod` would.
+  * Without the native library the stock version runs `chmod` in a child
+  * process for each file and directory it creates (and for each `.crc`).
+  * It defers to that version for a sticky bit, for a directory carrying
+  * setuid/setgid bits (GNU `chmod` keeps them under a four-digit mode,
+  * `chmod(2)` clears them) and on a file store without POSIX attributes.
+  */
+class NioRawLocalFileSystem extends RawLocalFileSystem {
+  override def setPermission(p: Path, permission: FsPermission): Unit =
+    if (permission.getStickyBit || !setInProcess(pathToFile(p).toPath, permission.toString))
+      super.setPermission(p, permission)
+
+  /** Set `rwx` (e.g. `rw-r--r--`) unless `chmod` must: false, and nothing
+    * set, for a directory with setuid/setgid bits or a non-POSIX store.
+    */
+  private def setInProcess(file: java.nio.file.Path, rwx: String): Boolean =
+    try {
+      val mode = java.nio.file.Files.getAttribute(file, "unix:mode").asInstanceOf[Int]
+      val dirWithIdBits = (mode & 0xf000) == 0x4000 && (mode & 0xc00) != 0
+      if (!dirWithIdBits)
+        java.nio.file.Files.setPosixFilePermissions(file,
+          java.nio.file.attribute.PosixFilePermissions.fromString(rwx))
+      !dirWithIdBits
+    } catch {
+      case _: UnsupportedOperationException | _: IllegalArgumentException => false
+    }
 }

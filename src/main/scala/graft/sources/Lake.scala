@@ -327,116 +327,29 @@ object Lake {
     // the object just written (cheap: one directory)
     val files = Option(dataDir.toFile.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+    val footprint = (files.map(_.length()).sum, -1L, Seq.empty[(Long, Long, String, String, Long, Long)])
     // "data bytes" is the zng-equivalent size like the reference's (log
     // ztest pins it); computed exactly for small objects, approximated by
     // the parquet footprint for big ones (a second serialization pass at
     // scale would double the write cost)
     val (bytes, vbytes, windows) =
-      if (rows >= 0 && rows <= 100000) {
-        try {
-          val tmp = Files.createTempDirectory("zngsize")
-          try {
-            // serialize the ORIGINAL tagged frame (shape metadata intact),
-            // pool-key sorted, then RE-frame it into seek-index streams:
-            // the reference cuts a stream (EndStream + seek entry) when the
-            // cumulative KEY body bytes reach the pool's stride
-            // (lake/data/writer.go writeIndex); each stream re-emits its
-            // types frame and ends with EOS, so per-stream byte lengths —
-            // and the object's total "data bytes" — are byte-exact.
-            val desc = poolOrder(root, pool) == "desc"
-            // cached: the zng write and the key-text collect below must
-            // see ONE ordering — rows with equal pool keys have no stable
-            // tiebreak, so two executions could misalign the per-stream
-            // min/max/vbytes
-            val sortedOne = (key match {
-              case Some(k) =>
-                // compaction's merge order: equal keys tiebreak by zng
-                // body bytes (zbuf comparator valueAsBytes)
-                val tb =
-                  if (bodyTiebreak) ZngBody.tiebreak(df).toSeq
-                  else Seq.empty
-                val cols =
-                  (if (desc) Seq(desc_nulls_first(k)) else Seq(asc_nulls_last(k))) ++
-                    (if (desc) tb.map(_.desc) else tb.map(_.asc))
-                df.coalesce(1).sortWithinPartitions(cols: _*)
-              case None => df.coalesce(1)
-            }).cache()
-            // released on every path: an exception in the size block must
-            // not leave the frame in the cache manager
-            try {
-              ZngIO.write(sortedOne, tmp.toString)
-              val (typesPayload, values) = ZngIO.parseStream(tmp.toString)
-              val keyInfo: Seq[(String, Int)] = key match {
-                case Some(k) =>
-                  val kc = col(k)
-                  sortedOne.select(keyTextOf(df, k)(kc).as("t"), kc.as("r"))
-                    .collect().toSeq.map { r =>
-                      (Option(r.get(0)).map(_.toString).getOrElse(""),
-                        zngBodyLen(r.get(1), df.schema(k).dataType))
-                    }
-                case None => values.map(_ => ("", 0))
-              }
-              val stride = seekStride(root, pool)
-              // windows: (count, vbytes, minText, maxText, offset, length)
-              val wins = Vector.newBuilder[(Long, Long, String, String, Long, Long)]
-              var off = 0L; var valOff = 0L
-              var i = 0
-              while (i < values.length) {
-                var trigger = 0L; var cnt = 0L; var vb = 0L
-                val first = keyInfo(i)._1
-                var last = first
-                val raw = new java.io.ByteArrayOutputStream()
-                while (i < values.length && (cnt == 0L || trigger < stride)) {
-                  trigger += keyInfo(i)._2
-                  vb += values(i)._2
-                  raw.write(values(i)._1)
-                  last = keyInfo(i)._1
-                  cnt += 1; i += 1
-                }
-                val tf = ZngIO.frame(0, typesPayload)
-                val vf = ZngIO.frame(1, raw.toByteArray)
-                val len = tf.length + vf.length + 1L // + EOS
-                val (mn, mx) = if (desc) (last, first) else (first, last)
-                wins += ((cnt, vb, mn, mx, off, len))
-                off += len; valOff += cnt
-              }
-              val ws = wins.result()
-              // the physical seek index (<id>-seek.zng, lake/seekindex):
-              // readable with plain `super query` like the reference's
-              if (key.isDefined && ws.nonEmpty) {
-                try {
-                  val isStr = df.schema(key.get).dataType ==
-                    org.apache.spark.sql.types.StringType
-                  def kv(s: String): String =
-                    if (s.isEmpty) "null"
-                    else if (isStr) "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-                    else s
-                  var vo = 0L
-                  val zson = ws.map { case (cnt, _, mn, mx, o, len) =>
-                    val line = s"{min:${kv(mn)},max:${kv(mx)},val_off:$vo(uint64),val_cnt:$cnt(uint64),offset:$o(uint64),length:$len(uint64)}"
-                    vo += cnt; line
-                  }.mkString("\n")
-                  val seekTmp = Files.createTempDirectory("seekzng")
-                  try {
-                    ZngIO.write(ZsonReader.fromText(df.sparkSession, zson,
-                      tag = false), seekTmp.toString)
-                    Option(seekTmp.toFile.listFiles()).getOrElse(Array.empty)
-                      .find(f => f.isFile && f.getName.startsWith("part-"))
-                      .foreach { p =>
-                        Files.copy(p.toPath,
-                          poolDir(root, pool).resolve("data").resolve(s"$id-seek.zng"),
-                          java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-                      }
-                  } finally org.apache.commons.io.FileUtils.deleteQuietly(seekTmp.toFile): Unit
-                } catch { case _: Exception => () }
-              }
-              (ws.map(_._6).sum, ws.map(_._2).sum, ws)
-            } finally sortedOne.unpersist(blocking = false): Unit
-          } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile): Unit
-        } catch { case _: Exception =>
-          (files.map(_.length()).sum, -1L, Seq.empty[(Long, Long, String, String, Long, Long)]) }
-      } else (files.map(_.length()).sum, -1L,
-        Seq.empty[(Long, Long, String, String, Long, Long)])
+      if (rows < 0 || rows > 100000) footprint
+      else try {
+        val ws = sizeWindows(df, key, poolOrder(root, pool) == "desc",
+          seekStride(root, pool), bodyTiebreak)
+        // the physical seek index (<id>-seek.zng, lake/seekindex):
+        // readable with plain `super query` like the reference's
+        if (key.isDefined && ws.nonEmpty) {
+          try Files.write(poolDir(root, pool).resolve("data").resolve(s"$id-seek.zng"),
+            seekIndex(ws, df.schema(key.get).dataType == org.apache.spark.sql.types.StringType)): Unit
+          catch { case e: Exception =>
+            logger.warn(s"pool $pool object $id: no seek index: $e") }
+        }
+        (ws.map(_._6).sum, ws.map(_._2).sum, ws)
+      } catch { case e: Exception =>
+        logger.warn(s"pool $pool object $id: data bytes fall back to the parquet footprint: $e")
+        footprint
+      }
     val metaJson = if (meta.isEmpty) "" else s""","meta":"${esc(meta)}""""
     // a TAGGED frame keeps per-row shapes through the lake: the tag
     // column is stored in parquet and the shape list rides the journal so
@@ -455,6 +368,90 @@ object Lake {
     appendRec(root, pool,
       s"""{"id":"$id","kind":"commit","branch":"$branch","author":"${author.replace("\"", "'")}","message":"${message.replace("\"", "'")}"$rangeJson$metaJson$shapesJson,"rows":$rows,"bytes":$bytes,"vbytes":$vbytes$winsJson,"ts":${System.currentTimeMillis()}}""")
     id
+  }
+
+  private lazy val logger = org.slf4j.LoggerFactory.getLogger("graft.sources.Lake")
+
+  /** The size pass: serialize the ORIGINAL tagged frame (shape metadata
+    * intact), pool-key sorted, as one ZNG stream in one Spark job, then
+    * RE-frame it into seek-index streams on the driver. The reference
+    * cuts a stream (EndStream + seek entry) when the cumulative KEY body
+    * bytes reach the pool's stride (lake/data/writer.go writeIndex); each
+    * stream re-emits its types frame and ends with EOS, so per-stream byte
+    * lengths — and the object's total "data bytes" — are byte-exact. The
+    * key texts ride the same job as a trailing column, so they follow the
+    * encoded rows' order even where equal keys have no stable tiebreak.
+    * Windows: (count, vbytes, minText, maxText, offset, length).
+    */
+  private def sizeWindows(df: DataFrame, key: Option[String], desc: Boolean,
+                          stride: Long, bodyTiebreak: Boolean)
+      : Seq[(Long, Long, String, String, Long, Long)] = {
+    import org.apache.spark.sql.functions.{asc_nulls_last, col, desc_nulls_first}
+    val sortedOne = key match {
+      case Some(k) =>
+        // compaction's merge order: equal keys tiebreak by zng body bytes
+        // (zbuf comparator valueAsBytes)
+        val tb = if (bodyTiebreak) ZngBody.tiebreak(df).toSeq else Seq.empty
+        val cols =
+          (if (desc) Seq(desc_nulls_first(k)) else Seq(asc_nulls_last(k))) ++
+            (if (desc) tb.map(_.desc) else tb.map(_.asc))
+        val sorted = df.coalesce(1).sortWithinPartitions(cols: _*)
+        sorted.select(col("*"), keyTextOf(df, k)(col(k)).as("graft.keyText"))
+      case None => df
+    }
+    val width = df.schema.length
+    val probe: org.apache.spark.sql.catalyst.InternalRow => (String, Int) = key match {
+      case Some(k) =>
+        val ki = df.schema.fieldIndex(k)
+        val dt = df.schema(k).dataType
+        val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(dt)
+        r => (if (r.isNullAt(width)) "" else r.getUTF8String(width).toString,
+          zngBodyLen(if (r.isNullAt(ki)) null else toScala(r.get(ki, dt)), dt))
+      case None => _ => ("", 0)
+    }
+    val (stream, keyInfo) = ZngIO.encodeInMemory(sortedOne, width)(probe)
+    val (typesPayload, values) = ZngIO.parseStream(stream)
+    val tf = ZngIO.frame(0, typesPayload)
+    val wins = Vector.newBuilder[(Long, Long, String, String, Long, Long)]
+    var off = 0L
+    var i = 0
+    while (i < values.length) {
+      var trigger = 0L; var cnt = 0L; var vb = 0L
+      val first = keyInfo(i)._1
+      var last = first
+      val raw = new java.io.ByteArrayOutputStream()
+      while (i < values.length && (cnt == 0L || trigger < stride)) {
+        trigger += keyInfo(i)._2
+        vb += values(i)._2
+        raw.write(values(i)._1)
+        last = keyInfo(i)._1
+        cnt += 1; i += 1
+      }
+      val len = tf.length + ZngIO.frame(1, raw.toByteArray).length + 1L // + EOS
+      val (mn, mx) = if (desc) (last, first) else (first, last)
+      wins += ((cnt, vb, mn, mx, off, len))
+      off += len
+    }
+    wins.result()
+  }
+
+  /** The `<id>-seek.zng` stream of an object's windows, built on the
+    * driver: one record per window, typed as a ZSON read of the records'
+    * text types them (an empty key text is a null bound).
+    */
+  private def seekIndex(ws: Seq[(Long, Long, String, String, Long, Long)],
+                        stringKey: Boolean): Array[Byte] = {
+    def kv(s: String): String =
+      if (s.isEmpty) "null"
+      else if (stringKey) "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+      else s
+    var vo = 0L
+    val zson = ws.map { case (cnt, _, mn, mx, o, len) =>
+      val line = s"{min:${kv(mn)},max:${kv(mx)},val_off:$vo(uint64),val_cnt:$cnt(uint64),offset:$o(uint64),length:$len(uint64)}"
+      vo += cnt; line
+    }.mkString("\n")
+    val (schema, rows) = ZsonReader.localFrame(ZsonParser.parseAll(zson), tag = false)
+    ZngIO.encodeRows(rows, schema)
   }
 
   /** Journal string escaping (backslash and quote) and its inverse. */
@@ -615,12 +612,8 @@ object Lake {
     * writer; ztest-scale only (the caller bounds input size).
     */
   def bodyStats(df: DataFrame): (Long, Long) = {
-    val tmp = Files.createTempDirectory("zstats")
-    try {
-      ZngIO.write(df.coalesce(1), tmp.toString)
-      val vals = ZngIO.parseStream(tmp.toString)._2
-      (vals.length.toLong, vals.map(_._2.toLong).sum)
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile): Unit
+    val vals = ZngIO.parseStream(ZngIO.encodeInMemory(df))._2
+    (vals.length.toLong, vals.map(_._2.toLong).sum)
   }
 
   def scanStats(root: String, pool: String, branch: String = "main",

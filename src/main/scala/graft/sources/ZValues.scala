@@ -2257,17 +2257,22 @@ object ZsonReader {
   }
 
   def fromValues(spark: SparkSession, values0: Seq[ZValue], tag: Boolean): DataFrame = {
-    require(values0.nonEmpty, "empty zson input")
-    val shapeTexts = values0.map(v => recordify(v)._2).distinct
-    val nsTime = values0.exists(hasSubMicroTime)
-    val (cleaned, full) = frameSchema(shapeTexts, tag, nsTime)
-    val rows = values0.map(rowOf(_, cleaned, tag))
+    val (full, rows) = localFrame(values0, tag)
     // one partition: createDataFrame's default parallelism split makes
     // downstream writes multi-part, and Spark orders read splits by SIZE
     // — a 2-row stdin frame would come back reordered after a lake
     // round-trip. Driver-materialized values are small by construction.
     spark.createDataFrame(new java.util.ArrayList[Row](scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), full)
       .coalesce(1)
+  }
+
+  /** The schema and external rows `fromValues` builds its frame from. */
+  def localFrame(values0: Seq[ZValue], tag: Boolean): (StructType, Seq[Row]) = {
+    require(values0.nonEmpty, "empty zson input")
+    val shapeTexts = values0.map(v => recordify(v)._2).distinct
+    val nsTime = values0.exists(hasSubMicroTime)
+    val (cleaned, full) = frameSchema(shapeTexts, tag, nsTime)
+    (full, values0.map(rowOf(_, cleaned, tag)))
   }
 
   /** Distributed typed frame: two passes over the value RDD (shape

@@ -178,40 +178,84 @@ object ZngIO {
     * Hadoop FileSystem API so the parts land on the shared filesystem
     * (HDFS/S3A/file:) rather than executor-local disk. Encodes straight
     * from the physical plan's InternalRows (queryExecution.toRdd) — no
-    * per-row InternalRow→Row deconversion, strings stay UTF-8 bytes from
-    * Tungsten memory to the wire.
+    * per-row InternalRow→Row deconversion on the typed routes, strings
+    * stay UTF-8 bytes from Tungsten memory to the wire.
     */
-  def write(df: DataFrame, path: String): Unit = {
+  def write(df: DataFrame, path: String): Unit =
+    writeParts(df, path, streamEncoder(df.schema, path))
+
+  private def writeParts(df: DataFrame, path: String, encode: StreamEncoder): Unit = {
     HadoopFs.prepareDir(df.sparkSession, path)
-    // TAGGED frames write per-row TYPED values: each row re-types against
-    // its shape so zed types (ip/time/named, per-row shapes) hit the wire
-    // — and the engine's tag column itself never leaks into the file
-    if (df.columns.contains(graft.operators.Het.typeTag)) {
-      writeTagged(df, path)
-      return
-    }
-    // Untagged frames carrying RUNTIME-typed (variant) columns — e.g. a
-    // boxed het scalar stream (`yield 1,[1,2,3]`) — must write each row's
-    // runtime value with its own type; the internal encoders below would
-    // leak the engine's union carrier onto the wire. And a this-only
-    // frame is the BARE-VALUE carrier: the wire sees the value itself,
-    // never a {this:…} wrapper (zq.md's concat + hexdump doc examples
-    // pin both).
-    val dataNames = df.schema.fields.toIndexedSeq
-      .filterNot(f => f.metadata.contains("graft.scopeVar")).map(_.name)
-    if (dataNames == Seq("this") ||
-        df.schema.fields.exists(f => !f.metadata.contains("graft.scopeVar") &&
-          ZsonIO.isVariantType(f.dataType))) {
-      writeValues(df, path)
-      return
-    }
-    val schema = df.schema
     val confMap = HadoopFs.confMap(df.sparkSession)
     df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
       val out = HadoopFs.create(confMap, path, f"part-$pid%05d.zng")
-      try encodeInternalStreamTo(out, rows, schema) finally out.close()
+      try encode(rows, out) finally out.close()
       Iterator.empty
     }.count(): Unit
+  }
+
+  /** Encodes one partition's internal rows as one ZNG stream (EOS
+    * included). Rows may carry columns past the schema the encoder was
+    * built for; no encoder reads them.
+    */
+  private[sources] type StreamEncoder = (Iterator[InternalRow], OutputStream) => Unit
+
+  /** The one route a frame takes to the wire, decided on the driver from
+    * its schema; `what` names the frame in the log line of a fallback.
+    * TAGGED frames write per-row TYPED values: each row re-types against
+    * its shape so zed types (ip/time/named, per-row shapes) hit the wire,
+    * and the engine's tag column itself never leaks into the file.
+    * Untagged frames carrying RUNTIME-typed (variant) columns — e.g. a
+    * boxed het scalar stream (`yield 1,[1,2,3]`) — write each row's
+    * runtime value with its own type; the internal encoders would leak the
+    * engine's union carrier onto the wire. And a this-only frame is the
+    * BARE-VALUE carrier: the wire sees the value itself, never a
+    * {this:…} wrapper (zq.md's concat + hexdump doc examples pin both).
+    * Every other frame encodes through its schema's internal encoders.
+    */
+  private[sources] def streamEncoder(schema: StructType, what: String): StreamEncoder = {
+    val dataNames = schema.fields.toIndexedSeq
+      .filterNot(f => f.metadata.contains("graft.scopeVar")).map(_.name)
+    if (schema.fieldNames.contains(graft.operators.Het.typeTag)) taggedEncoder(schema, what)
+    else if (dataNames == Seq("this") ||
+        schema.fields.exists(f => !f.metadata.contains("graft.scopeVar") &&
+          ZsonIO.isVariantType(f.dataType))) valueEncoder(schema)
+    else (rows, out) => encodeInternalStreamTo(out, rows, schema)
+  }
+
+  /** A frame as ONE ZNG stream held in memory, built in one Spark job:
+    * the frame coalesces to one task, which encodes its rows through the
+    * route `write` takes and hands each row to `probe` as it passes. The
+    * first `width` columns are the frame; columns past them ride along for
+    * `probe` only. Returns the stream and the probe results in row order.
+    * For small frames: the stream and the results come to the driver.
+    */
+  private[graft] def encodeInMemory[A: scala.reflect.ClassTag](df: DataFrame, width: Int)(
+      probe: InternalRow => A): (Array[Byte], Array[A]) = {
+    val encode = streamEncoder(StructType(df.schema.fields.take(width)), "in-memory stream")
+    val Array(one) = df.coalesce(1).queryExecution.toRdd.mapPartitions { rows =>
+      val out = new ByteArrayOutputStream()
+      val probed = Array.newBuilder[A]
+      encode(rows.map { r => probed += probe(r); r }, out)
+      Iterator((out.toByteArray, probed.result()))
+    }.collect()
+    one
+  }
+
+  private[graft] def encodeInMemory(df: DataFrame): Array[Byte] =
+    encodeInMemory(df, df.schema.length)(_ => ())._1
+
+  /** Driver-local rows of `schema` as one ZNG stream, through the route a
+    * one-partition frame of them (`createDataFrame(rows, schema)`) takes
+    * in `write`; no Spark job runs.
+    */
+  private[graft] def encodeRows(rows: Seq[Row], schema: StructType): Array[Byte] = {
+    val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(schema)
+    val out = new ByteArrayOutputStream()
+    streamEncoder(schema, "driver rows")(
+      rows.iterator.map(r => toInternal(r).asInstanceOf[InternalRow]), out)
+    out.toByteArray
   }
 
   private[graft] type FieldEnc = (ByteBuf, SpecializedGetters, Int) => Unit
@@ -481,29 +525,25 @@ object ZngIO {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.sources.ZngIO")
 
-  /** The tagged-frame writer. FAST route: every shape compiles to typed
+  /** The tagged-frame encoder. FAST route: every shape compiles to typed
     * internal-row encoders (shapeEncoders) — one pass over internal rows,
     * no external Row and no per-row value. Frames read from Zeek or from
     * ZNG take it: every scalar zeek type, the dotted id record, sets and
     * vectors of numbers, addresses and strings. Any other frame (maps,
     * unions, errors, zeek vectors with string-element carriers) takes the
-    * value-model route, and the driver logs why once per write at INFO.
+    * value-model route, and the driver logs why once per frame at INFO.
     */
-  private def writeTagged(df: DataFrame, path: String): Unit = {
-    val schema = df.schema
+  private def taggedEncoder(schema: StructType, what: String): StreamEncoder = {
     val tagIdx = schema.fieldIndex(graft.operators.Het.typeTag)
     val shapes = tagShapes(schema)
     shapeEncoders(shapes, schema) match {
       case Left(why) =>
-        log.info(s"zng write $path: value-model route: $why")
-        writeValues(df, path)
-        return
+        log.info(s"zng write $what: value-model route: $why")
+        return valueEncoder(schema)
       case Right(_) =>
     }
-    val confMap = HadoopFs.confMap(df.sparkSession)
-    df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
+    (rows, out) => {
       val encMap = shapeEncoders(shapes, schema).toOption.get
-      val out = HadoopFs.create(confMap, path, f"part-$pid%05d.zng")
       val fw = new FrameWriter(out)
       // tag dispatch stays in the byte domain: the String-keyed form
       // re-decoded and re-hashed the tag text per ROW (toString + two
@@ -520,32 +560,29 @@ object ZngIO {
       var lastTag: UTF8String = null
       var lastE: (Long, Encs) = null
       val buf = new ByteBuf(1 << 12)
-      try {
-        rows.foreach { r =>
-          val tagU = r.getUTF8String(tagIdx)
-          if (lastTag == null || !lastTag.equals(tagU)) {
-            val e = encByTag.get(tagU)
-            if (e == null) throw new NoSuchElementException(tagU.toString)
-            lastTag = tagU.clone() // the scan buffer behind tagU is reused
-            lastE = e
-          }
-          val encs = lastE._2
-          fw.values.writeUvarint(lastE._1)
-          buf.reset()
-          var k = 0
-          while (k < encs.length) {
-            val (ci, enc) = encs(k)
-            if (r.isNullAt(ci)) buf.writeNullTag() else enc(buf, r, ci)
-            k += 1
-          }
-          fw.values.writeUvarint(buf.size + 1L)
-          buf.writeTo(fw.values)
-          fw.endValue()
+      rows.foreach { r =>
+        val tagU = r.getUTF8String(tagIdx)
+        if (lastTag == null || !lastTag.equals(tagU)) {
+          val e = encByTag.get(tagU)
+          if (e == null) throw new NoSuchElementException(tagU.toString)
+          lastTag = tagU.clone() // the scan buffer behind tagU is reused
+          lastE = e
         }
-        fw.finish()
-      } finally out.close()
-      Iterator.empty
-    }.count(): Unit
+        val encs = lastE._2
+        fw.values.writeUvarint(lastE._1)
+        buf.reset()
+        var k = 0
+        while (k < encs.length) {
+          val (ci, enc) = encs(k)
+          if (r.isNullAt(ci)) buf.writeNullTag() else enc(buf, r, ci)
+          k += 1
+        }
+        fw.values.writeUvarint(buf.size + 1L)
+        buf.writeTo(fw.values)
+        fw.endValue()
+      }
+      fw.finish()
+    }
   }
 
   /** Row → typed value for the value-model routes: rebuilds each row's
@@ -627,31 +664,34 @@ object ZngIO {
     }
   }
 
-  /** The value-model writer route: each row becomes one typed ZValue
-    * (RowValue) written with its own type. Serves untagged frames with
-    * runtime-typed columns, this-only frames, and tagged frames whose
-    * shapes don't compile to the typed encoders. The specs use it as the
-    * oracle of the fast route's bytes.
+  /** The value-model route: each row becomes one typed ZValue (RowValue)
+    * written with its own type. Serves untagged frames with runtime-typed
+    * columns, this-only frames, and tagged frames whose shapes don't
+    * compile to the typed encoders. Internal rows become external Rows
+    * through the frame's row deserializer, the one `Dataset.rdd` runs.
     */
-  private[graft] def writeValues(df: DataFrame, path: String): Unit = {
-    val toValue = new RowValue(df.schema)
-    val confMap = HadoopFs.confMap(df.sparkSession)
-    df.rdd.mapPartitionsWithIndex { (pid, rows) =>
-      val out = HadoopFs.create(confMap, path, f"part-$pid%05d.zng")
+  private def valueEncoder(schema: StructType): StreamEncoder = {
+    val toValue = new RowValue(schema)
+    val rowEnc = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(schema).resolveAndBind()
+    (rows, out) => {
+      val toRow = rowEnc.createDeserializer()
       val fw = new FrameWriter(out)
-      try {
-        rows.foreach { row =>
-          val v = toValue(row)
-          val t = toZT(ZValue.typeOf(v))
-          fw.values.writeUvarint(fw.table.idOf(t).toLong)
-          encodeZTagged(fw.values, v, t)
-          fw.endValue()
-        }
-        fw.finish()
-      } finally out.close()
-      Iterator.empty
-    }.count(): Unit
+      rows.foreach { r =>
+        val v = toValue(toRow(r))
+        val t = toZT(ZValue.typeOf(v))
+        fw.values.writeUvarint(fw.table.idOf(t).toLong)
+        encodeZTagged(fw.values, v, t)
+        fw.endValue()
+      }
+      fw.finish()
+    }
   }
+
+  /** `write` forced onto the value-model route; the specs use it as the
+    * oracle of the typed routes' bytes.
+    */
+  private[graft] def writeValues(df: DataFrame, path: String): Unit =
+    writeParts(df, path, valueEncoder(df.schema))
 
   // ---- InternalRow-native encoding (the data-path writer) -------------------
 
@@ -787,37 +827,25 @@ object ZngIO {
   /** The type a named type wraps (named types share their inner's tag). */
   private def unnamed(t: ZT): ZT = t match { case ZNamed(_, i) => unnamed(i); case o => o }
 
-  /** Decode a zng file (or directory of part files) into its typedef
-    * payload and the raw per-value slices (`type-id uvarint + tag + body`,
-    * exactly as they sit in the values frames) plus each value's body
-    * length. Used by the lake's seek-index builder to RE-frame a
-    * single-stream object into per-stride streams with byte-exact lengths
-    * (reference lake/data/writer.go cuts streams with zngio EndStream;
-    * each stream re-emits its types frame).
+  /** Split a zng stream into its typedef payload and the raw per-value
+    * slices (`type-id uvarint + tag + body`, exactly as they sit in the
+    * values frames) plus each value's body length. The lake's size pass
+    * RE-frames a single-stream object into per-stride streams with
+    * byte-exact lengths from it (reference lake/data/writer.go cuts
+    * streams with zngio EndStream; each stream re-emits its types frame).
     */
-  private[graft] def parseStream(path: String): (Array[Byte], Seq[(Array[Byte], Int)]) = {
-    val f = new java.io.File(path)
-    val files: Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).toSeq
-          .filter(p => p.isFile && !p.getName.startsWith("_") &&
-            !p.getName.startsWith("."))
-          .sortBy(_.getName)
-      else Seq(f)
+  private[graft] def parseStream(bytes: Array[Byte]): (Array[Byte], Seq[(Array[Byte], Int)]) = {
     val types = new ByteArrayOutputStream()
     val values = Vector.newBuilder[(Array[Byte], Int)]
-    for (file <- files) {
-      val bytes = java.nio.file.Files.readAllBytes(file.toPath)
-      foreachFrame(bytes, p => types.write(p, 0, p.length)) { (payload, _) =>
-        val vc = new Cursor(payload, 0)
-        while (!vc.done) {
-          val start = vc.pos
-          vc.uvarint() // type id
-          val tag = vc.uvarint()
-          val bodyLen = if (tag > 0) (tag - 1).toInt else 0
-          vc.pos += bodyLen
-          values += java.util.Arrays.copyOfRange(payload, start, vc.pos) -> bodyLen
-        }
+    foreachFrame(bytes, p => types.write(p, 0, p.length)) { (payload, _) =>
+      val vc = new Cursor(payload, 0)
+      while (!vc.done) {
+        val start = vc.pos
+        vc.uvarint() // type id
+        val tag = vc.uvarint()
+        val bodyLen = if (tag > 0) (tag - 1).toInt else 0
+        vc.pos += bodyLen
+        values += java.util.Arrays.copyOfRange(payload, start, vc.pos) -> bodyLen
       }
     }
     (types.toByteArray, values.result())

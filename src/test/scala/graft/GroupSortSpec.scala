@@ -61,7 +61,9 @@ class GroupSortSpec extends AnyFunSuite with BeforeAndAfterAll {
         // a string max aggregates sort-based
         "max(p) by k" -> expected("k", max(col("p"))),
         // the filter runs below the sort, over the aggregate
-        "count() by k | where count > 66" -> counts.filter(_.getLong(1) > 66))) {
+        "count() by k | where count > 66" -> counts.filter(_.getLong(1) > 66),
+        // a keys-only `by` is key-sorted the same way
+        "by k" -> counts.map(r => Row(r.get(0))))) {
       val (rows, seen) = run(q)
       // the map stage and the result stage; a range exchange adds a
       // sampling job and its own map stage (4 jobs)

@@ -59,6 +59,17 @@ class ServiceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(seen.jobs <= 3, s"ran ${seen.jobs} Spark jobs")
   }
 
+  test("a small keyed count then a sort over a table runs two Spark jobs") {
+    var res: (Int, String) = null
+    val seen = SparkJobs.during(spark) {
+      res = post("/query", "from events | count() by event_type | sort event_type")
+    }
+    assert(res._1 == 200 && res._2.trim.split("\n").length == 5, res)
+    // the aggregate's map stage and its result stage: the table opens
+    // from its footer's schema, with no schema job
+    assert(seen.jobs == 2, s"ran ${seen.jobs} Spark jobs")
+  }
+
   test("POST /query honors fmt=text and limit") {
     val (code, body) = post("/query?fmt=text&limit=3", "from nation | sort n_nationkey | cut n_nationkey, n_name")
     assert(code == 200)

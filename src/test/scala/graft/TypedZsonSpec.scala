@@ -92,6 +92,13 @@ class TypedZsonSpec extends AnyFunSuite with BeforeAndAfterAll {
     queries.map(q => ZsonIO.toZson(graft.lang.Graft.queryOn(in, q)).collect().toSeq)
   }
 
+  test("a keys-only by is key-sorted like a keyed aggregate") {
+    val ttl = "{ttl:2(uint16),x:1}\n{ttl:1(uint16),x:2}\n{ttl:2(uint16),x:3}\n"
+    val Seq(keysOnly, keyed) = zsonOut(ttl, "by ttl", "count() by ttl | cut ttl")
+    assert(keysOnly == Seq("{ttl:1(uint16)}", "{ttl:2(uint16)}"))
+    assert(keysOnly == keyed)
+  }
+
   test("group-by keys keep narrow and named zed types") {
     val ttl = "{ttl:2(uint16),x:1}\n{ttl:1(uint16),x:2}\n{ttl:2(uint16),x:3}\n"
     assert(zsonOut(ttl, "count() by ttl", "sum(x) by ttl") == Seq(

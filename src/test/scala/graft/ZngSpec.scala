@@ -744,12 +744,10 @@ class ZngSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.schema("r1").dataType != df.schema("r2").dataType)
     assert(df.schema("a1").dataType != df.schema("a2").dataType)
     val bytes = writtenPart(df, "nullability")
-    val file = java.nio.file.Files.createTempFile("graft-nullability", ".zng")
-    java.nio.file.Files.write(file, bytes)
     // 30 = {x:int64}, 31 = [int64], 32 = the row record over them
     val expectedTypes = Seq(0, 1, 1, 'x', 9, 1, 9,
       0, 4, 2, 'r', '1', 30, 2, 'r', '2', 30, 2, 'a', '1', 31, 2, 'a', '2', 31).map(_.toByte)
-    assert(ZngIO.parseStream(file.toString)._1.toSeq == expectedTypes)
+    assert(ZngIO.parseStream(bytes)._1.toSeq == expectedTypes)
     assert(ZngIO.decodeToZson(bytes).toSeq == Seq(
       "{r1:{x:0},r2:{x:null},a1:[0],a2:[null]}",
       "{r1:{x:1},r2:{x:1},a1:[1],a2:[1]}",
@@ -786,8 +784,6 @@ class ZngSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(frameCodes(s1).exists(c => ((c >> 4) & 3) == 1 && (c & 0x40) != 0), "LZ4 values frame")
     assert(frameCodes(s2).forall(c => (c & 0x40) == 0) && frameCodes(s2).contains(0x23))
     val all = s1 ++ s2
-    val file = java.nio.file.Files.createTempFile("graft-readers", ".zng")
-    java.nio.file.Files.write(file, all)
 
     def typeText(v: ZValue): String = ZType.fullText(ZValue.typeOf(v))
     val expected = zvals(lines1 ++ lines2).map(typeText)
@@ -796,7 +792,7 @@ class ZngSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (shapes, count, _) = ZngIO.scanMeta(all, 0L)
     assert(count == expected.size && shapes.map(_._1) == expected.distinct)
     // parseStream's output is what the lake re-frames into one stream
-    val (typesPayload, slices) = ZngIO.parseStream(file.toString)
+    val (typesPayload, slices) = ZngIO.parseStream(all)
     val out = new java.io.ByteArrayOutputStream()
     for ((t, p) <- Seq(0 -> typesPayload, 1 -> slices.flatMap(_._1).toArray)) {
       out.write((t << 4) | (p.length & 0xf)); ZngIO.uvarint(out, (p.length >> 4).toLong)
@@ -806,19 +802,16 @@ class ZngSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ZngIO.decodeToZValues(out.toByteArray).map(typeText).toSeq == expected)
 
     val bad = s1 ++ s2.updated(0, (s2(0) | 0x80).toByte)
-    java.nio.file.Files.write(file, bad)
     intercept[IllegalArgumentException](ZngIO.decodeToZson(bad).size)
     intercept[IllegalArgumentException](ZngIO.decodeToZValues(bad).size)
     intercept[IllegalArgumentException](ZngIO.scanMeta(bad, 0L))
-    intercept[IllegalArgumentException](ZngIO.parseStream(file.toString))
+    intercept[IllegalArgumentException](ZngIO.parseStream(bad))
   }
 
   test("the lake tiebreak sorts on the record-body bytes the writer stores") {
     for ((name, df) <- Seq("fast" -> taggedFastFrame(300), "slow" -> taggedSlowFrame(300))) {
       val one = df.coalesce(1)
-      val path = tmp(s"tiebreak-$name")
-      ZngIO.write(one, path)
-      val stored = ZngIO.parseStream(path)._2.map { case (slice, n) => slice.takeRight(n).toSeq }
+      val stored = ZngIO.parseStream(ZngIO.encodeInMemory(one))._2.map { case (slice, n) => slice.takeRight(n).toSeq }
       val tb = graft.sources.ZngBody.tiebreak(one).getOrElse(fail(s"$name: no tiebreak"))
       val keys = one.select(tb).collect().map(r => r.getAs[Array[Byte]](0).toSeq).toSeq
       assert(keys == stored, name)

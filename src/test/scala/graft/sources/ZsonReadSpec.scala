@@ -190,6 +190,32 @@ class ZsonReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(seen.finalPlans.exists(_.contains("rangepartitioning")), seen.finalPlans.mkString("\n"))
   }
 
+  test("a keyed service load runs three Spark jobs: discovery, the commit write and the size pass") {
+    val root = tmp("zsonread-svc3").toString
+    Lake.create(root, "p", Some("ts"), "desc")
+    val svc = new Service(spark, root, 0, lakeRootOpt = Some(root))
+    val port = svc.start()
+    val client = java.net.http.HttpClient.newHttpClient()
+    try {
+      for (part <- batch(1500).split("\n").toSeq.grouped(500)) {
+        var code = 0
+        val seen = SparkJobs.during(spark) {
+          val req = java.net.http.HttpRequest.newBuilder(
+              java.net.URI.create(s"http://127.0.0.1:$port/pool/p/branch/main"))
+            .header("Content-Type", "application/x-zson")
+            .POST(java.net.http.HttpRequest.BodyPublishers.ofString(part.mkString("", "\n", "\n")))
+            .build()
+          code = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString()).statusCode()
+        }
+        assert(code == 200)
+        assert(seen.jobs == 3, s"a service load ran ${seen.jobs} Spark jobs")
+      }
+      val cs = Lake.commits(root, "p").filter(_.kind == "commit")
+      assert(cs.length == 3 && cs.forall(c => c.rows == 500 && c.vbytes > 0 && c.wins.nonEmpty))
+      assert(cs.forall(c => Files.exists(java.nio.file.Paths.get(root, "p", "data", s"${c.id}-seek.zng"))))
+    } finally svc.stop()
+  }
+
   test("a keyed service load runs at most five Spark jobs; compact and delete where no more than before") {
     val root = tmp("zsonread-svc").toString
     Lake.create(root, "p", Some("ts"), "desc")
