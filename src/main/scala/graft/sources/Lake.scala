@@ -437,7 +437,8 @@ object Lake {
 
   /** The `<id>-seek.zng` stream of an object's windows, built on the
     * driver: one record per window, typed as a ZSON read of the records'
-    * text types them (an empty key text is a null bound).
+    * text types them (an empty key text is a null bound), except that
+    * time bounds stay `time` at ns precision too.
     */
   private def seekIndex(ws: Seq[(Long, Long, String, String, Long, Long)],
                         stringKey: Boolean): Array[Byte] = {
@@ -450,8 +451,19 @@ object Lake {
       val line = s"{min:${kv(mn)},max:${kv(mx)},val_off:$vo(uint64),val_cnt:$cnt(uint64),offset:$o(uint64),length:$len(uint64)}"
       vo += cnt; line
     }.mkString("\n")
-    val (schema, rows) = ZsonReader.localFrame(ZsonParser.parseAll(zson), tag = false)
-    ZngIO.encodeRows(rows, schema)
+    val values = ZsonParser.parseAll(zson)
+    val (schema, rows) = ZsonReader.localFrame(values, tag = false)
+    // sub-µs key times ride the ns-long carrier; the marker types the
+    // bounds time, as a µs key's are
+    val typed =
+      if (!values.exists(ZValue.hasSubMicroTime)) schema
+      else {
+        val time = new org.apache.spark.sql.types.MetadataBuilder()
+          .putString("graft.zedType", "time").build()
+        org.apache.spark.sql.types.StructType(schema.fields.map(f =>
+          if (f.name == "min" || f.name == "max") f.copy(metadata = time) else f))
+      }
+    ZngIO.encodeRows(rows, typed)
   }
 
   /** Journal string escaping (backslash and quote) and its inverse. */

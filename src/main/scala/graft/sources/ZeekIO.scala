@@ -3,17 +3,20 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Zeek TSV log format (reference: zio/zeekio/ — parser.go header
   * directives, format.go value syntax; the reference performance baseline
   * runs over exactly this data).
   *
-  * Reader: the directive header (#separator/#fields/#types/#path/…) is
-  * parsed once from the file head on the driver; data lines decode
-  * DISTRIBUTED with plain split/cast expressions — `-` (unset) → null,
-  * `(empty)` → empty, `time` as epoch seconds with µs fraction, sets and
-  * vectors split on the set_separator. `_path` materializes as the leading
-  * column like the reference.
+  * Reader: when every file holds one leading directive block and all
+  * share it (#separator/#fields/#types/#path/…), the header is parsed once
+  * on the driver and data lines decode DISTRIBUTED by one byte-level
+  * splitter straight into InternalRows — `-` (unset) → null, `(empty)` →
+  * empty, `time` as epoch seconds with µs fraction, sets and vectors split
+  * on the set_separator; separators of any length and script match as
+  * their UTF-8 bytes. Other inputs decode per file through the value
+  * model. `_path` materializes as the leading column like the reference.
   *
   * Writer: emits a single header block from the schema then tab-separated
   * rows (flat schemas; nested data should be flattened first, matching
@@ -30,9 +33,6 @@ object ZeekIO {
       fields: Seq[String],
       types: Seq[String])
 
-  private def unescapeSep(s: String): String =
-    if (s.startsWith("\\x")) Integer.parseInt(s.drop(2), 16).toChar.toString else s
-
   /** Cumulative directive state (zeekio parser.go): the separator starts
     * as a SPACE until `#separator` declares one; `#fields`/`#types`
     * replace the schema; `#path -` clears the path; directives may appear
@@ -43,10 +43,17 @@ object ZeekIO {
     var path: Option[String] = None
     var fields = Seq.empty[String]; var types = Seq.empty[String]
     def update(l: String): Unit = {
-      if (l.startsWith("#separator")) { sep = unescapeSep(l.drop(10).trim); return }
+      if (l.startsWith("#separator")) {
+        // written as one \xNN escape per byte (`\x09`, `\x7c\x7c`)
+        sep = unescapeZeek(l.drop(10).trim)
+        require(sep.nonEmpty, "zeek: #separator is empty")
+        return
+      }
       val t = l.drop(1).split(sepPattern(sep))
       t.head match {
-        case "set_separator" => setSep = t(1)
+        case "set_separator" =>
+          setSep = if (t.length > 1) t(1) else ""
+          require(setSep.nonEmpty, "zeek: #set_separator is empty")
         case "unset_field" => unset = t(1)
         case "empty_field" => empty = t(1)
         case "path" => path = if (t(1) == "-") None else Some(t(1))
@@ -68,8 +75,8 @@ object ZeekIO {
 
   /** Literal separator → split pattern that keeps java.util.regex's
     * single-char fast path: Pattern.quote's \\Q…\\E wrapper forces a full
-    * Pattern.compile PER ROW inside String.split (and the codegen'd
-    * split expression), which dominates the decode of tab-separated logs.
+    * Pattern.compile PER CALL inside String.split, once per row of an
+    * interleaved-directive log.
     */
   private def sepPattern(sep: String): String =
     if (sep.length == 1 && ".$|()[{^?*+\\".indexOf(sep.charAt(0)) < 0) sep
@@ -297,21 +304,23 @@ object ZeekIO {
     }
   }
 
-  /** Executor-side buffered line reader with gzip auto-detection —
-    * streaming, never a whole-file buffer.
+  /** A file's bytes, gunzipped when its first two bytes are the gzip
+    * magic — streaming, never a whole-file buffer.
     */
-  private def lineReader(conf: Map[String, String],
-      file: String): java.io.BufferedReader = {
+  private def openMaybeGzip(conf: Map[String, String], file: String): java.io.InputStream = {
     val raw = new java.io.BufferedInputStream(HadoopFs.open(conf, file), 1 << 16)
     raw.mark(2)
     val m0 = raw.read(); val m1 = raw.read()
     raw.reset()
-    val in =
-      if (m0 == 0x1f && m1 == 0x8b) new java.util.zip.GZIPInputStream(raw, 1 << 16)
-      else raw
-    new java.io.BufferedReader(new java.io.InputStreamReader(in,
-      java.nio.charset.StandardCharsets.UTF_8), 1 << 16)
+    if (m0 == 0x1f && m1 == 0x8b) new java.util.zip.GZIPInputStream(raw, 1 << 16)
+    else raw
   }
+
+  /** Executor-side buffered line reader with gzip auto-detection. */
+  private def lineReader(conf: Map[String, String],
+      file: String): java.io.BufferedReader =
+    new java.io.BufferedReader(new java.io.InputStreamReader(openMaybeGzip(conf, file),
+      java.nio.charset.StandardCharsets.UTF_8), 1 << 16)
 
   /** One buffered BYTE scan of a file for (leading directive block, total
     * directive-line count) — the uniform-header check's input. Data lines
@@ -323,13 +332,7 @@ object ZeekIO {
     */
   private def directiveStats(conf: Map[String, String],
       file: String): (Vector[String], Int) = {
-    val raw = new java.io.BufferedInputStream(HadoopFs.open(conf, file), 1 << 16)
-    raw.mark(2)
-    val m0 = raw.read(); val m1 = raw.read()
-    raw.reset()
-    val in: java.io.InputStream =
-      if (m0 == 0x1f && m1 == 0x8b) new java.util.zip.GZIPInputStream(raw, 1 << 16)
-      else raw
+    val in = openMaybeGzip(conf, file)
     val lead = Vector.newBuilder[String]
     var total = 0
     var leading = true
@@ -396,9 +399,9 @@ object ZeekIO {
     // Per-FILE directive stats (one cheap text scan, no value building):
     // when every file is a single leading directive block and all files
     // share the SAME header — the normal shape of a written log set —
-    // decode runs fully native in codegen (split + typed casts), one
-    // pass, no value-model detour. Only genuinely interleaved or
-    // mixed-header inputs take the two-pass typed route.
+    // decode runs in one byte-level pass straight to InternalRows, no
+    // value-model detour. Only genuinely interleaved or mixed-header
+    // inputs take the two-pass typed route.
     val statFiles = HadoopFs.listDataFiles(spark, path)
     val statsConf = HadoopFs.confMap(spark)
     // one STREAMING pass per file — constant memory per task (never a
@@ -447,14 +450,34 @@ object ZeekIO {
     }
   }
 
-  /** Uniform-header decode: one imperative pass per line straight into
-    * InternalRows. The expression form of this decode (split + per-field
-    * when/cast chains) re-evaluated `element_at`/`when` subtrees per
-    * branch — codegen does no cross-branch subexpression elimination — and
-    * cost ~3.5 s for 2M conn rows; a hand-rolled splitter writing
-    * UTF8String/primitive cells directly costs a fraction of that and
-    * feeds downstream operators with zero conversion (same contract as the
-    * zng DataSource V2 scan).
+  /** A separator longer than one byte, past the decoder's scan for its
+    * first byte: from `e` (that byte, or `nb`), the index of the first
+    * whole `sep` (its UTF-8 bytes) in `u`, or `nb` when none follows.
+    * UTF-8 is self-synchronizing, so a byte match of a whole separator is
+    * a match of its characters.
+    */
+  private def wholeSepFrom(u: UTF8String, e0: Int, nb: Int, sep: Array[Byte]): Int = {
+    var e = e0
+    while (e < nb && !restAt(u, e, nb, sep)) {
+      e += 1
+      while (e < nb && u.getByte(e) != sep(0)) e += 1
+    }
+    e
+  }
+
+  /** Does all of `sep` sit at `e` in `u`'s first `nb` bytes? (its first byte does) */
+  private def restAt(u: UTF8String, e: Int, nb: Int, sep: Array[Byte]): Boolean =
+    e + sep.length <= nb && {
+      var k = 1
+      while (k < sep.length && u.getByte(e + k) == sep(k)) k += 1
+      k == sep.length
+    }
+
+  /** Uniform-header decode: one pass per line straight into InternalRows
+    * (same contract as the zng DataSource V2 scan). Lines stay UTF8String
+    * end-to-end — no UTF-16 decode, no substring per cell; cells are
+    * zero-copy VIEWS into the scan buffer, and only stored strings clone
+    * their bytes (the scan's UnsafeRow buffer is reused across rows).
     *
     * Semantics mirror the zeek value syntax (zio/zeekio/format.go) with
     * Spark's non-ANSI cast edges: unset (`-`) → null anywhere, `(empty)`
@@ -470,7 +493,6 @@ object ZeekIO {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import org.apache.spark.unsafe.types.UTF8String
 
     val withPath = h.path.isDefined && !h.fields.contains("_path")
     def innerOf(t: String): String = t.dropWhile(_ != '[').drop(1).takeWhile(_ != ']')
@@ -478,7 +500,7 @@ object ZeekIO {
       if (Set("count", "int", "port")(inner)) LongType
       else if (inner == "double") DoubleType else StringType
     def sqlTypeOf(t: String): DataType = t match {
-      case "time" => TimestampType // µs carrier, like the expression path
+      case "time" => TimestampType // µs carrier
       case "interval" => LongType // seconds → ns (zed duration domain)
       case "count" | "int" | "port" => LongType
       case "double" => DoubleType
@@ -498,21 +520,13 @@ object ZeekIO {
         fieldsArr.indices.map(i => StructField(fieldsArr(i), sqlTypeOf(typesArr(i)))) ++
         Seq(StructField(graft.operators.Het.typeTag, StringType, nullable = false, md)))
 
-    val sep = h.separator
-    val setSep = h.setSeparator
     val unset = h.unset
     val emptyMark = h.empty
     val pathStr = if (withPath) h.path.get else null
     val nFields = fieldsArr.length
-
-    // Byte-level decode (the normal case: single-ASCII separators): lines
-    // stay UTF8String end-to-end — no whole-line UTF-16 decode, no String
-    // substring per cell, no fromString re-encode for string columns. Cells
-    // are zero-copy VIEWS into the scan buffer; only stored strings clone
-    // their bytes (the scan's UnsafeRow buffer is reused across rows).
-    val fastBytes = sep.length == 1 && sep.charAt(0) < 0x80 &&
-      setSep.length == 1 && setSep.charAt(0) < 0x80
-    val rdd = if (fastBytes) lines.queryExecution.toRdd.mapPartitions { iter =>
+    val sepB = h.separator.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val setSepB = h.setSeparator.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val rdd = lines.queryExecution.toRdd.mapPartitions { iter =>
       val tagU = UTF8String.fromString(tagText)
       val pathU = if (pathStr != null) UTF8String.fromString(pathStr) else null
       val base = if (pathU != null) 1 else 0
@@ -522,8 +536,8 @@ object ZeekIO {
       val emptyU = UTF8String.fromString(emptyMark)
       val tU = UTF8String.fromString("T")
       val fU = UTF8String.fromString("F")
-      val sepB = sep.charAt(0).toByte
-      val setSepB = setSep.charAt(0).toByte
+      val sep0 = sepB(0); val sepLen = sepB.length
+      val setSep0 = setSepB(0); val setSepLen = setSepB.length
 
       def view(u: UTF8String, s: Int, e: Int): UTF8String =
         UTF8String.fromAddress(u.getBaseObject, u.getBaseOffset + s, e - s)
@@ -564,15 +578,19 @@ object ZeekIO {
           else {
             val nb = cu.numBytes
             var n = 1; var i = 0
-            while (i < nb) { if (cu.getByte(i) == setSepB) n += 1; i += 1 }
+            while (i < nb) {
+              if (cu.getByte(i) != setSep0 || !(setSepLen == 1 || restAt(cu, i, nb, setSepB))) i += 1
+              else { n += 1; i += setSepLen }
+            }
             val items = new Array[Any](n)
-            var start = 0; var k = 0; i = 0
+            var start = 0; var k = 0
             while (k < n) {
               var e = start
-              while (e < nb && cu.getByte(e) != setSepB) e += 1
+              while (e < nb && cu.getByte(e) != setSep0) e += 1
+              if (setSepLen > 1) e = wholeSepFrom(cu, e, nb, setSepB)
               val p = view(cu, start, e)
               items(k) = if (p.equals(unsetU)) null else elem(p)
-              k += 1; start = e + 1
+              k += 1; start = e + setSepLen
             }
             if (isSet) {
               // zed set values are deduped + ordered (zson.md §2.5.2):
@@ -614,113 +632,11 @@ object ZeekIO {
           // columns past the line's last cell stay null (as before)
           while (ci < nFields && start <= nb) {
             var e = start
-            while (e < nb && u.getByte(e) != sepB) e += 1
+            while (e < nb && u.getByte(e) != sep0) e += 1
+            if (sepLen > 1) e = wholeSepFrom(u, e, nb, sepB)
             val cu = view(u, start, e)
             values(base + ci) = if (cu.equals(unsetU)) null else decoders(ci)(cu)
-            ci += 1; start = e + 1
-          }
-          values(width - 1) = tagU
-          Some(new GenericInternalRow(values): InternalRow)
-        }
-      }
-    } else lines.rdd.mapPartitions { iter =>
-      val tagU = UTF8String.fromString(tagText)
-      val pathU = if (pathStr != null) UTF8String.fromString(pathStr) else null
-      val base = if (pathU != null) 1 else 0
-      val width = base + nFields + 1
-      val longWrap = new UTF8String.LongWrapper
-
-      def splitOn(s: String, d: String): Array[String] =
-        if (d.length == 1) { // manual split keeping trailing empties
-          val c = d.charAt(0)
-          var n = 1; var i = 0
-          while (i < s.length) { if (s.charAt(i) == c) n += 1; i += 1 }
-          val out = new Array[String](n)
-          var start = 0; var k = 0; i = 0
-          while (i < s.length) {
-            if (s.charAt(i) == c) { out(k) = s.substring(start, i); k += 1; start = i + 1 }
-            i += 1
-          }
-          out(k) = s.substring(start)
-          out
-        } else s.split(java.util.regex.Pattern.quote(d), -1)
-
-      // Spark's own non-ANSI string→long ("12.9" truncates, junk → null)
-      def toLongOrNull(s: String): Any =
-        if (UTF8String.fromString(s).toLong(longWrap)) java.lang.Long.valueOf(longWrap.value)
-        else null
-      // Spark's castToDouble: scala toDouble, then the special literals
-      def toDoubleOrNull(s: String): Any =
-        try java.lang.Double.valueOf(s.trim.toDouble)
-        catch {
-          case _: NumberFormatException =>
-            s.trim.toLowerCase match {
-              case "inf" | "+inf" | "infinity" | "+infinity" =>
-                java.lang.Double.valueOf(Double.PositiveInfinity)
-              case "-inf" | "-infinity" => java.lang.Double.valueOf(Double.NegativeInfinity)
-              case "nan" => java.lang.Double.valueOf(Double.NaN)
-              case _ => null
-            }
-        }
-      def toEpoch(s: String, unitPerSec: Double): Any = toDoubleOrNull(s) match {
-        case d: java.lang.Double => java.lang.Long.valueOf((d.doubleValue() * unitPerSec).toLong)
-        case _ => null
-      }
-      def stringCell(s: String): UTF8String =
-        if (s == emptyMark) UTF8String.EMPTY_UTF8
-        else if (s.indexOf('\\') >= 0) UTF8String.fromString(unescapeZeek(s))
-        else UTF8String.fromString(s)
-
-      def cell(raw: String, t: String): Any = {
-        if (raw == null || raw == unset) return null
-        t match {
-          case "time" => toEpoch(raw, 1e6)
-          case "interval" => toEpoch(raw, 1e9)
-          case "count" | "int" | "port" => toLongOrNull(raw)
-          case "double" => toDoubleOrNull(raw)
-          case "bool" =>
-            if (raw == "T") java.lang.Boolean.TRUE
-            else if (raw == "F") java.lang.Boolean.FALSE else null
-          case c if c.startsWith("set[") || c.startsWith("vector[") =>
-            if (raw == emptyMark) return new GenericArrayData(Array.empty[Any])
-            val inner = innerOf(c)
-            val parts = splitOn(raw, setSep)
-            val items = new Array[Any](parts.length)
-            var i = 0
-            while (i < parts.length) {
-              val p = parts(i)
-              items(i) =
-                if (p == unset) null
-                else if (inner == "count" || inner == "int" || inner == "port") toLongOrNull(p)
-                else if (inner == "double") toDoubleOrNull(p)
-                else UTF8String.fromString(p) // raw: elements don't unescape
-              i += 1
-            }
-            if (c.startsWith("set[")) {
-              // zed set values are deduped + ordered (zson.md §2.5.2):
-              // array_distinct keeps one null, array_sort puts it last
-              val seen = new java.util.LinkedHashSet[Any]
-              var hasNull = false
-              items.foreach(v => if (v == null) hasNull = true else seen.add(v))
-              val sorted = seen.toArray.sortWith { (a, b) =>
-                a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
-              }
-              new GenericArrayData(if (hasNull) sorted :+ (null: Any) else sorted)
-            } else new GenericArrayData(items)
-          case _ => stringCell(raw)
-        }
-      }
-
-      iter.flatMap { line =>
-        if (line.isEmpty || line.charAt(0) == '#') None
-        else {
-          val cells = splitOn(line, sep)
-          val values = new Array[Any](width)
-          if (pathU != null) values(0) = pathU
-          var i = 0
-          while (i < nFields) {
-            values(base + i) = cell(if (i < cells.length) cells(i) else null, typesArr(i))
-            i += 1
+            ci += 1; start = e + sepLen
           }
           values(width - 1) = tagU
           Some(new GenericInternalRow(values): InternalRow)

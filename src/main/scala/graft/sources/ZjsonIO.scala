@@ -1,8 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
@@ -14,114 +12,24 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
   * subsequent values use `{"kind":"ref","id":N}`. Record/array values are
   * JSON arrays; primitives are strings in their ZSON form.
   *
-  * Writer: the per-row value encoding is a Catalyst string expression
-  * (codegen, distributed); only the first-line type swap runs in
-  * mapPartitions. Reader: per-line Jackson decode (same row-wise cost
+  * Writer: every frame, tagged or not, encodes through one typed writer
+  * (zio/zjsonio/writer.go): each row converts to a zed value against its
+  * shape and column markers, and a per-stream type encoder assigns the
+  * ids — distributed per partition for files, one stream for the CLI and
+  * the service. Reader: per-line Jackson decode (same row-wise cost
   * class as the reference's zjsonio) into ZSON text, then per-partition
   * typed parse into the shared tagged/variant frame (ZsonReader.fromRDD)
   * — fully distributed, no driver materialization.
   */
 object ZjsonIO extends Serializable {
 
-  // ---- type encoding ---------------------------------------------------------
-
-  private def primName(dt: DataType): String = dt match {
-    case ByteType => "int8"
-    case ShortType => "int16"
-    case IntegerType => "int32"
-    case LongType => "int64"
-    case FloatType => "float32"
-    case DoubleType => "float64"
-    case BooleanType => "bool"
-    case BinaryType => "bytes"
-    case StringType => "string"
-    case TimestampType | TimestampNTZType | DateType => "time"
-    case NullType => "null"
-    case other => throw new IllegalArgumentException(s"zjson: unsupported $other")
-  }
-
-  /** Full type-tree JSON with record ids assigned depth-first from 30. */
-  private def typeJson(dt: DataType, nextId: () => Int): String = dt match {
-    case st: StructType =>
-      val fields = st.fields.map { f =>
-        s"""{"name":${quote(f.name)},"type":${typeJson(f.dataType, nextId)}}"""
-      }.mkString(",")
-      // ids are assigned after children in the reference's depth-first walk;
-      // we assign before for simplicity — readers key on the id value only
-      s"""{"kind":"record","id":${nextId()},"fields":[$fields]}"""
-    case ArrayType(et, _) =>
-      s"""{"kind":"array","type":${typeJson(et, nextId)}}"""
-    case MapType(kt, vt, _) =>
-      s"""{"kind":"map","key_type":${typeJson(kt, nextId)},"val_type":${typeJson(vt, nextId)}}"""
-    case other => s"""{"kind":"primitive","name":"${primName(other)}"}"""
-  }
-
   private[sources] def quote(s: String): String =
     "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
       .replace("\n", "\\n").replace("\t", "\\t").replace("\r", "\\r") + "\""
 
-  // ---- value encoding (Catalyst expressions) ---------------------------------
-
-  private def jsonEscape(c: Column): Column =
-    regexp_replace(regexp_replace(c, "\\\\", "\\\\\\\\"), "\"", "\\\\\"")
-
-  /** One value as a ZJSON fragment (JSON string or nested array text). */
-  private def valueOf(c: Column, dt: DataType): Column = {
-    val encoded: Column = dt match {
-      case st: StructType =>
-        concat(lit("["),
-          concat_ws(",", st.fields.toIndexedSeq.map(f =>
-            valueOf(c.getField(f.name), f.dataType)): _*),
-          lit("]"))
-      case ArrayType(et, _) =>
-        concat(lit("["), array_join(transform(c, x => valueOf(x, et)), ","), lit("]"))
-      case MapType(kt, vt, _) =>
-        concat(lit("["),
-          array_join(transform(map_entries(c), e =>
-            concat(lit("["), valueOf(e.getField("key"), kt), lit(","),
-              valueOf(e.getField("value"), vt), lit("]"))), ","),
-          lit("]"))
-      case TimestampType | TimestampNTZType =>
-        concat(lit("\""), date_format(c, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"), lit("\""))
-      case BinaryType => concat(lit("\"0x"), lower(hex(c)), lit("\""))
-      case StringType => concat(lit("\""), jsonEscape(c), lit("\""))
-      case _ => concat(lit("\""), c.cast(StringType), lit("\""))
-    }
-    when(c.isNull, lit("null")).otherwise(encoded)
-  }
-
-  def toZjson(df: DataFrame): Dataset[String] = {
-    import df.sparkSession.implicits._
-    val st = df.schema
-    var id = 29
-    val fullType = typeJson(st, () => { id += 1; id })
-    val rootId = id // children assign first (depth-first), root id is last
-    val valueExpr = concat(lit("["),
-      concat_ws(",", st.fields.toIndexedSeq.map(f => valueOf(col(f.name), f.dataType)): _*),
-      lit("]"))
-    val refLine = concat(
-      lit(s"""{"type":{"kind":"ref","id":$rootId},"value":"""),
-      valueExpr, lit("}"))
-    val lines = df.select(refLine.as("value")).as[String]
-    // first line of each partition carries the full typedef (each written
-    // file is an independent, self-describing ZJSON stream)
-    lines.mapPartitions { it =>
-      var first = true
-      it.map { l =>
-        if (first) {
-          first = false
-          l.replaceFirst(
-            java.util.regex.Pattern.quote(s"""{"kind":"ref","id":$rootId}"""),
-            java.util.regex.Matcher.quoteReplacement(fullType))
-        } else l
-      }
-    }
-  }
-
+  /** One self-describing typed stream per written file (see typedStream). */
   def write(df: DataFrame, path: String): Unit =
-    if (df.columns.contains(graft.operators.Het.typeTag))
-      typedStream(df).write.mode("overwrite").text(path)
-    else toZjson(df).write.mode("overwrite").text(path)
+    typedStream(df).write.mode("overwrite").text(path)
 
   // ---- typed writer (zio/zjsonio/writer.go) ----------------------------------
 

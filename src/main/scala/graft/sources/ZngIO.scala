@@ -82,7 +82,11 @@ object ZngIO {
     // other decimals have no zed type and ride as float64
     case dt: DecimalType if dt.precision == 20 && dt.scale == 0 => ZPrim(3)
     case _: DecimalType => ZPrim(ID_FLOAT64)
-    case st: StructType => ZRecord(st.fields.toSeq.map(f => f.name -> ztOf(f.dataType)))
+    // a long marked time is the ns time carrier, as the value route types it
+    case st: StructType => ZRecord(st.fields.toSeq.map(f => f.name -> (
+      if (f.dataType == LongType && f.metadata.contains("graft.zedType") &&
+          f.metadata.getString("graft.zedType") == "time") ZPrim(ID_TIME)
+      else ztOf(f.dataType))))
     case ArrayType(et, _) => ZArray(ztOf(et))
     case MapType(kt, vt, _) => ZMap(ztOf(kt), ztOf(vt))
     case other => throw new IllegalArgumentException(s"zng: unsupported type $other")

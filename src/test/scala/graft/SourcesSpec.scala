@@ -157,7 +157,7 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = GraftSession.table(spark, dir, "nation")
       .select(col("n_nationkey"), fstruct(col("n_name"), col("n_regionkey")).as("r"))
       .coalesce(1)
-    val lines = graft.sources.ZjsonIO.toZjson(df).collect()
+    val lines = graft.sources.ZjsonIO.typedStream(df).collect()
     assert(lines.head.contains(""""kind":"record""""))   // first: full typedef
     assert(lines.head.contains(""""name":"n_name""""))
     assert(lines(1).contains(""""kind":"ref"""")) // rest: refs
@@ -168,6 +168,26 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(back.select(sum("n_nationkey")).collect()(0).getLong(0) == (0 until 25).sum)
     assert(back.select(sum("r.n_regionkey")).collect()(0).getLong(0) ==
       df.select(sum("r.n_regionkey")).collect()(0).getLong(0))
+  }
+
+  test("zjson files of an untagged frame hold the typed writer's lines") {
+    import org.apache.spark.sql.types.{DecimalType, MetadataBuilder}
+    val u64 = new MetadataBuilder().putString("graft.zedType", "uint64").build()
+    val df = spark.range(0, 3, 1, 1).select(
+      col("id"),
+      (lit("18446744073709551613").cast(DecimalType(20, 0)) + col("id"))
+        .cast(DecimalType(20, 0)).as("u", u64),
+      lit(java.sql.Timestamp.from(java.time.Instant.parse("2024-03-01T00:00:00Z"))).as("ts"),
+      (col("id") * 1.5).as("f"))
+    val path = tmp("zjson-untagged")
+    graft.sources.ZjsonIO.write(df, path)
+    val parts = new java.io.File(path).listFiles().filter(_.getName.startsWith("part-"))
+    val written = parts.toSeq.flatMap(f =>
+      java.nio.file.Files.readAllLines(f.toPath).toArray.toSeq.map(_.toString))
+    val typed = graft.sources.ZjsonIO.typedLines(df)
+    assert(written == typed)
+    assert(typed.head.contains(""""name":"uint64"""") && typed.head.contains(""""2024-03-01T00:00:00Z""""))
+    assert(typed.last.contains(""""18446744073709551615""""))
   }
 
   test("lake-lite: load commits and merge-on-read scan") {
