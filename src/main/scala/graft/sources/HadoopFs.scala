@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -59,12 +59,66 @@ object HadoopFs {
     * object store. (Replaces the old retryListing glob-and-retry, whose
     * FileNotFoundException rescue papered over the race.)
     */
-  def dataFiles(spark: SparkSession, path: String): Seq[String] = {
+  def dataFiles(spark: SparkSession, path: String): Seq[String] =
+    dataStatuses(spark, path).map(_._1)
+
+  /** [[dataFiles]] with each file's status from the same listing. */
+  private def dataStatuses(spark: SparkSession, path: String): Seq[(String, FileStatus)] = {
     val first =
-      try listDataFiles(spark, path)
-      catch { case _: java.io.FileNotFoundException => Seq.empty[String] }
+      try listStatuses(spark, path)
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
     if (first.nonEmpty) first
-    else { Thread.sleep(500); listDataFiles(spark, path) }
+    else { Thread.sleep(500); listStatuses(spark, path) }
+  }
+
+  private final case class Entry[M](len: Long, mtime: Long, meta: M)
+
+  /** Per-file discovery with a driver-side cache: `scan` runs on the
+    * executors, one task per file, for the files whose (length, mtime)
+    * changed since the last call — re-reading a path (interactive
+    * sessions, a service, repeated queries over the same objects) lists
+    * it and runs no job, like a metastore's file-statistics cache. A
+    * rewrite under the same name replaces its entry; `share` maps each
+    * fresh record on the driver before it is kept (to share equal parts
+    * between files).
+    */
+  final class Discovery[M: scala.reflect.ClassTag](scan: (Map[String, String], String) => M,
+      share: M => M = (m: M) => m) {
+    private val cache = new java.util.concurrent.ConcurrentHashMap[String, Entry[M]]
+
+    /** Each data file under `path` with its length and record, in listing
+      * order ([[dataFiles]], one retry on an empty listing).
+      */
+    def apply(spark: SparkSession, path: String): Seq[(String, Long, M)] = {
+      val listed = dataStatuses(spark, path).map { case (f, st) =>
+        (f, st.getLen, st.getModificationTime)
+      }
+      val hits = listed.map { case (f, len, mt) =>
+        Option(cache.get(f)).filter(e => e.len == len && e.mtime == mt)
+      }
+      val missing = listed.zip(hits).collect { case (f, None) => f }
+      val fresh = if (missing.isEmpty) Map.empty[String, Entry[M]] else {
+        val conf = confMap(spark)
+        val run = scan
+        val scanned = spark.sparkContext.parallelize(missing.map(_._1), missing.length)
+          .map(run(conf, _))
+          .collect()
+        // bound the cache for long-lived sessions (service): evict only
+        // entries outside the current listing
+        if (cache.size > 200000) {
+          val keep = listed.iterator.map(_._1).toSet
+          cache.keySet.removeIf(k => !keep.contains(k)): Unit
+        }
+        missing.iterator.zip(scanned).map { case ((f, len, mt), m) =>
+          val e = Entry(len, mt, share(m))
+          cache.put(f, e)
+          f -> e
+        }.toMap
+      }
+      listed.zip(hits).map { case ((f, len, _), hit) =>
+        (f, len, hit.getOrElse(fresh(f)).meta)
+      }
+    }
   }
 
   /** Binary contents of a path's data files, loaded by explicit file
@@ -84,15 +138,18 @@ object HadoopFs {
     * marker/hidden entries (_SUCCESS, .crc) skipped, name-sorted for
     * deterministic planning.
     */
-  def listDataFiles(spark: SparkSession, path: String): Seq[String] = {
+  def listDataFiles(spark: SparkSession, path: String): Seq[String] =
+    listStatuses(spark, path).map(_._1)
+
+  private def listStatuses(spark: SparkSession, path: String): Seq[(String, FileStatus)] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val st = fs.getFileStatus(p)
-    if (!st.isDirectory) Seq(path)
+    if (!st.isDirectory) Seq(path -> st)
     else fs.listStatus(p).toSeq
       .filter(s => s.isFile && s.getLen > 0 &&
         !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-      .map(_.getPath.toString).sorted
+      .map(s => s.getPath.toString -> s).sortBy(_._1)
   }
 
   /** Executor-side positioned reads — the columnar segment fetch for VNG:

@@ -27,22 +27,12 @@ class VngDataSource extends TableProvider {
   override def supportsExternalMetadata(): Boolean = true
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    VngIO.inferSingleShape(SparkSession.active, VngDataSource.filesOf(options))
+    throw new UnsupportedOperationException(
+      "vng data source: read VNG through VngIO.read, which discovers the schema")
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table =
     new VngTable(schema, new CaseInsensitiveStringMap(properties))
-}
-
-private object VngDataSource {
-  def filesOf(options: CaseInsensitiveStringMap): Seq[String] =
-    Option(options.get("files")) match {
-      case Some(fs) => fs.split('\n').toIndexedSeq.filter(_.nonEmpty)
-      case None =>
-        val path = Option(options.get("path")).getOrElse(
-          throw new IllegalArgumentException("vng data source: no files/path option"))
-        HadoopFs.listDataFiles(SparkSession.active, path)
-    }
 }
 
 private class VngTable(fullSchema: StructType, options: CaseInsensitiveStringMap)
@@ -74,12 +64,10 @@ private class VngScanBuilder(full: StructType, options: CaseInsensitiveStringMap
     ok
   }
   override def build(): Scan = {
-    val files = VngDataSource.filesOf(options)
+    val files = ZngDataSource.filesOf(options)
     if (countAggs > 0)
-      new VngCountScan(files,
-        Option(options.get("counts"))
-          .map(_.split('\n').toIndexedSeq.filter(_.nonEmpty).map(_.toLong)),
-        countAggs, HadoopFs.confMap(SparkSession.active))
+      new CountScan(ZngDataSource.countsOf(options, files), countAggs,
+        s"vng files=${files.length} count-pushdown")
     else new VngScan(
       files = files,
       shapes = Option(options.get("shapes"))
@@ -88,43 +76,6 @@ private class VngScanBuilder(full: StructType, options: CaseInsensitiveStringMap
       required = required,
       confMap = HadoopFs.confMap(SparkSession.active),
       stats = ZngDataSource.statsOf(options, files))
-  }
-}
-
-/** count(*) pushdown twin of ZngCountScan: per-file partial counts from
-  * the `counts` option (discovery already knows them) or one metadata
-  * read — the data section is never touched.
-  */
-private case class VngCountPartition(file: String, count: Long) extends InputPartition
-
-private class VngCountScan(files: Seq[String], counts: Option[Seq[Long]], nAggs: Int,
-    confMap: Map[String, String]) extends Scan with Batch {
-  private val aligned = counts.filter(_.length == files.length)
-  override def readSchema(): StructType =
-    StructType((1 to nAggs).map(i =>
-      org.apache.spark.sql.types.StructField(s"count$i",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-  override def toBatch: Batch = this
-  override def description(): String = s"vng files=${files.length} count-pushdown"
-  override def planInputPartitions(): Array[InputPartition] =
-    files.zipWithIndex.map { case (f, i) =>
-      VngCountPartition(f, aligned.map(_(i)).getOrElse(-1L)): InputPartition
-    }.toArray
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = confMap
-    val n = nAggs
-    (partition: InputPartition) => {
-      val p = partition.asInstanceOf[VngCountPartition]
-      val c = if (p.count >= 0) p.count else VngIO.fileRowCount(conf, p.file)
-      new PartitionReader[InternalRow] {
-        private var emitted = false
-        override def next(): Boolean = { val first = !emitted; emitted = true; first }
-        override def get(): InternalRow =
-          new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-            Array.fill[Any](n)(c))
-        override def close(): Unit = ()
-      }
-    }
   }
 }
 

@@ -779,13 +779,12 @@ object VngIO {
     * homogeneous stream, several for a Dynamic (heterogeneous) root, in
     * the stream's first-appearance order.
     */
-  private[sources] final case class FileMeta(len: Long, mtime: Long,
-      shapes: Option[Vector[String]], count: Long, ns: Boolean)
+  private[sources] final case class FileMeta(shapes: Option[Vector[String]], count: Long,
+      ns: Boolean)
 
-  private val metaCache = new java.util.concurrent.ConcurrentHashMap[String, FileMeta]()
+  private val discovery = new HadoopFs.Discovery[FileMeta](scanFileMeta)
 
-  private def scanFileMeta(conf: Map[String, String], path: String,
-      len: Long, mtime: Long): FileMeta = {
+  private def scanFileMeta(conf: Map[String, String], path: String): FileMeta = {
     val h = Handle.open(conf, path)
     try {
       val members = rootMembers(h.meta)
@@ -804,7 +803,7 @@ object VngIO {
       }
       val shapes = if (texts.contains(null)) None else Some(texts)
       val ns = members.exists(hasSubMicroTimeMeta(_, h.fetch))
-      FileMeta(len, mtime, shapes, metaLen(h.meta), ns)
+      FileMeta(shapes, metaLen(h.meta), ns)
     } finally h.close()
   }
 
@@ -1032,46 +1031,13 @@ object VngIO {
     } catch { case e: Throwable => h.close(); throw e }
   }
 
-  /** Row count of one file from its metadata section alone (count(*)
-    * pushdown fallback when the discovery counts weren't passed).
-    */
-  private[sources] def fileRowCount(conf: Map[String, String], path: String): Long = {
-    val h = Handle.open(conf, path)
-    try metaLen(h.meta) finally h.close()
-  }
-
-  /** Schema inference for direct `spark.read.format(VngDataSource)` users
-    * (VngIO.read supplies the schema itself after its distributed scan).
-    */
-  private[sources] def inferSingleShape(spark: SparkSession, files: Seq[String]): StructType = {
-    val conf = HadoopFs.confMap(spark)
-    val metas = files.map(f => scanFileMeta(conf, f, -1L, -1L))
-    require(metas.forall(_.shapes.isDefined),
-      "vng data source handles record-shape streams; use VngIO.read")
-    val shapes = metas.flatMap(_.shapes.get).distinct
-    ZsonReader.frameSchema(shapes, tag = true, metas.exists(_.ns))._2
-  }
-
   /** Structured-Streaming source over a growing directory of VNG
     * objects — the columnar twin of ZngIO.readStream: schema locks from
     * the files present at start, each newly-landed object decodes
     * executor-side into the locked frame.
     */
-  def readStream(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val schema = read(spark, path).schema
-    val cleaned = StructType(schema.fields.filterNot(_.name == graft.operators.Het.typeTag))
-    spark.readStream.format("binaryFile")
-      .schema(new StructType()
-        .add("path", StringType).add("modificationTime", TimestampType)
-        .add("length", LongType).add("content", BinaryType))
-      .load(path)
-      .select("content").as[Array[Byte]]
-      .flatMap(bytes => decodeToZValues(Gzip.maybeGunzip(bytes))
-        .map(v => ZsonReader.rowOf(v, cleaned, tag = true)))(
-        org.apache.spark.sql.Encoders.row(schema))
-      .toDF()
-  }
+  def readStream(spark: SparkSession, path: String): DataFrame =
+    ZsonReader.tail(spark, path, read(spark, path).schema)(decodeToZValues)
 
   /** Read a VNG file or directory of part files into the typed frame.
     *
@@ -1090,33 +1056,10 @@ object VngIO {
     */
   def read(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dataFiles = HadoopFs.dataFiles(spark, path)
-    if (dataFiles.isEmpty) // empty directory → empty frame, not a failed load()
+    val files = discovery(spark, path)
+    if (files.isEmpty) // empty directory → empty frame, not a failed load()
       return ZsonReader.fromShapes(spark, spark.sparkContext.emptyRDD[ZValue], Array.empty)
-    val statuses = dataFiles.map { p =>
-      val st = fs.getFileStatus(new org.apache.hadoop.fs.Path(p))
-      (p, st.getLen, st.getModificationTime)
-    }
-    val missing = statuses.filter { case (p, len, mt) =>
-      Option(metaCache.get(p)).forall(m => m.len != len || m.mtime != mt)
-    }
-    if (missing.nonEmpty) {
-      val conf = HadoopFs.confMap(spark)
-      val scanned = spark.sparkContext.parallelize(missing, missing.length)
-        .map { case (p, len, mt) => (p, scanFileMeta(conf, p, len, mt)) }
-        .collect()
-      // bound the cache for long-lived sessions (service): evict only
-      // entries outside the current file list — a full clear would drop
-      // fresh entries that the metas read below still needs
-      if (metaCache.size > 200000) {
-        val keep = statuses.iterator.map(_._1).toSet
-        metaCache.keySet.removeIf(k => !keep.contains(k)): Unit
-      }
-      scanned.foreach { case (p, m) => metaCache.put(p, m) }
-    }
-    val metas = statuses.map { case (p, _, _) => metaCache.get(p) }
+    val metas = files.map(_._3)
     if (metas.forall(_.shapes.isDefined)) {
       // shape texts keep first-appearance order: file order, then member
       // order within the file's Dynamic root
@@ -1127,15 +1070,15 @@ object VngIO {
       spark.read.format(classOf[VngDataSource].getName)
         .schema(full)
         .option("shapes", shapes.mkString("\n"))
-        .option("files", dataFiles.mkString("\n"))
+        .option("files", files.map(_._1).mkString("\n"))
         // per-file row counts from discovery: count(*) answers from
-        // these without touching the files again (VngCountScan), and
-        // the scan reports them as statistics for join sizing
+        // these without touching the files again, and the scan reports
+        // them as statistics for join sizing
         .option("counts", metas.map(_.count).mkString("\n"))
-        .option("sizes", statuses.map(_._2).mkString("\n"))
+        .option("sizes", files.map(_._2).mkString("\n"))
         .load()
     } else
-      ZsonReader.fromRDD(spark, spark.read.format("binaryFile").load(dataFiles: _*)
+      ZsonReader.fromRDD(spark, spark.read.format("binaryFile").load(files.map(_._1): _*)
         .select("content").as[Array[Byte]].rdd
         .flatMap(bytes => decodeToZValues(Gzip.maybeGunzip(bytes))))
   }

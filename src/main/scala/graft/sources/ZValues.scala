@@ -2256,6 +2256,28 @@ object ZsonReader {
     if (tag) Row.fromSeq(base.toSeq :+ t) else base
   }
 
+  /** Structured-Streaming source over a growing directory: `schema` is
+    * locked from the files present at start (a batch read's frame), and
+    * each file that lands is gunzipped when it carries the magic, decoded
+    * executor-side by `decode` and fitted into that frame. New fields in
+    * late shapes need a restart — the schema is part of the query plan,
+    * as with every Structured Streaming file source.
+    */
+  def tail(spark: SparkSession, path: String, schema: StructType)(
+      decode: Array[Byte] => Iterator[ZValue]): DataFrame = {
+    import spark.implicits._
+    val cleaned = StructType(schema.fields.filterNot(_.name == Het.typeTag))
+    spark.readStream.format("binaryFile")
+      .schema(new StructType()
+        .add("path", StringType).add("modificationTime", TimestampType)
+        .add("length", LongType).add("content", BinaryType))
+      .load(path)
+      .select("content").as[Array[Byte]]
+      .flatMap(bytes => decode(Gzip.maybeGunzip(bytes)).map(rowOf(_, cleaned, tag = true)))(
+        org.apache.spark.sql.Encoders.row(schema))
+      .toDF()
+  }
+
   def fromValues(spark: SparkSession, values0: Seq[ZValue], tag: Boolean): DataFrame = {
     val (full, rows) = localFrame(values0, tag)
     // one partition: createDataFrame's default parallelism split makes

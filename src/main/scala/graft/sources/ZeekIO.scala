@@ -9,14 +9,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * directives, format.go value syntax; the reference performance baseline
   * runs over exactly this data).
   *
-  * Reader: when every file holds one leading directive block and all
-  * share it (#separator/#fields/#types/#path/…), the header is parsed once
-  * on the driver and data lines decode DISTRIBUTED by one byte-level
-  * splitter straight into InternalRows — `-` (unset) → null, `(empty)` →
-  * empty, `time` as epoch seconds with µs fraction, sets and vectors split
-  * on the set_separator; separators of any length and script match as
-  * their UTF-8 bytes. Other inputs decode per file through the value
-  * model. `_path` materializes as the leading column like the reference.
+  * Reader: when all files share one leading directive block
+  * (#separator/#fields/#types/#path/…) and no data line follows a change
+  * of that header (a later `#close` or repeated identical header is
+  * fine), the header is parsed once on the driver and data lines decode
+  * DISTRIBUTED by one byte-level splitter straight into InternalRows —
+  * `-` (unset) → null, `(empty)` → empty, `time` as epoch seconds with µs
+  * fraction, sets and vectors split on the set_separator; separators of
+  * any length and script match as their UTF-8 bytes. Other inputs decode
+  * per file through the value model. `_path` materializes as the leading
+  * column like the reference.
   *
   * Writer: emits a single header block from the schema then tab-separated
   * rows (flat schemas; nested data should be flattened first, matching
@@ -66,6 +68,8 @@ object ZeekIO {
         case _ => // open/close dates etc.
       }
     }
+    /** Everything a data line reads under, as one comparable value. */
+    def key: AnyRef = (sep, setSep, unset, empty, path, fields, types)
     def header: Header = {
       require(fields.nonEmpty && fields.length == types.length,
         "zeek: missing or mismatched #fields/#types")
@@ -322,32 +326,45 @@ object ZeekIO {
     new java.io.BufferedReader(new java.io.InputStreamReader(openMaybeGzip(conf, file),
       java.nio.charset.StandardCharsets.UTF_8), 1 << 16)
 
-  /** One buffered BYTE scan of a file for (leading directive block, total
-    * directive-line count) — the uniform-header check's input. Data lines
-    * are skipped byte-by-byte without materializing a String per line;
-    * only directive lines in the leading block build text. Semantics match
-    * the readLine form exactly: empty lines are ignored (they neither end
-    * the leading block nor count), a line "is a directive" iff its first
-    * byte is '#', and \r, \n, \r\n all terminate a line.
+  /** One file's discovery record: its leading directive block, and
+    * whether every data line reads under that block's header. A directive
+    * after data — `#close`, `#open`, a repeated identical header (two
+    * logs joined with `cat`) — keeps the file uniform; a data line after a
+    * change of separators, unset/empty marks, path, fields or types does
+    * not.
     */
-  private def directiveStats(conf: Map[String, String],
-      file: String): (Vector[String], Int) = {
+  private final case class FileHead(lead: Vector[String], uniform: Boolean)
+
+  /** One buffered BYTE scan of a file for its [[FileHead]]. Data lines
+    * are skipped byte-by-byte without materializing a String per line;
+    * only directive lines build text. Empty lines are ignored (they
+    * neither end the leading block nor read a header), a line "is a
+    * directive" iff its first byte is '#', and \r, \n, \r\n all terminate
+    * a line.
+    * The scan stops at the first data line read under a changed header.
+    */
+  private def fileHead(conf: Map[String, String], file: String): FileHead = {
     val in = openMaybeGzip(conf, file)
     val lead = Vector.newBuilder[String]
-    var total = 0
-    var leading = true
-    var started = false    // current line has seen its first byte
-    var collecting = false // current line is a leading directive
+    val st = new DirectiveState // the state the next data line reads under
+    var leadKey: AnyRef = null  // st's header at the first data line
+    var changed = false         // a directive came after data
+    var uniform = true
+    var started = false         // current line has seen its first byte
+    var directive = false       // current line is a directive
     val line = new java.io.ByteArrayOutputStream()
     val buf = new Array[Byte](1 << 16)
     def endLine(): Unit = {
-      if (collecting)
-        lead += new String(line.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-      started = false; collecting = false; line.reset()
+      if (directive) {
+        val l = new String(line.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
+        st.update(l)
+        if (leadKey == null) lead += l else changed = true
+      }
+      started = false; directive = false; line.reset()
     }
     try {
       var n = in.read(buf)
-      while (n > 0) {
+      while (n > 0 && uniform) {
         var i = 0
         while (i < n) {
           val b = buf(i)
@@ -355,19 +372,27 @@ object ZeekIO {
           else {
             if (!started) {
               started = true
-              if (b == '#') { total += 1; collecting = leading }
-              else leading = false
+              if (b == '#') directive = true
+              else if (leadKey == null) leadKey = st.key
+              else if (changed) { uniform = st.key == leadKey; changed = false }
             }
-            if (collecting) line.write(b.toInt)
+            if (directive) line.write(b.toInt)
           }
           i += 1
         }
         n = in.read(buf)
       }
-      if (started) endLine()
+      if (started && uniform) endLine()
     } finally in.close()
-    (lead.result(), total)
+    FileHead(lead.result(), uniform)
   }
+
+  /** Identical leading blocks share one record on the driver, so the
+    * cache grows with the distinct headers, not with the files.
+    */
+  private val heads = new java.util.concurrent.ConcurrentHashMap[FileHead, FileHead]
+  private val discovery =
+    new HadoopFs.Discovery[FileHead](fileHead, h => heads.computeIfAbsent(h, _ => h))
 
   /** Structured-Streaming source tailing a growing directory of zeek
     * logs — the canonical zeek deployment (a live zeek writes and
@@ -375,68 +400,39 @@ object ZeekIO {
     * present at start; each newly-landed file decodes executor-side
     * through the same per-file directive-state parser.
     */
-  def readStream(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val schema = read(spark, path).schema
-    val cleaned = StructType(schema.fields.filterNot(_.name == graft.operators.Het.typeTag))
-    spark.readStream.format("binaryFile")
-      .schema(new StructType()
-        .add("path", StringType).add("modificationTime", TimestampType)
-        .add("length", LongType).add("content", BinaryType))
-      .load(path)
-      .select("content").as[Array[Byte]]
-      .flatMap { bytes =>
-        val text = new String(Gzip.maybeGunzip(bytes),
-          java.nio.charset.StandardCharsets.UTF_8)
-        interleavedValues(text).map(v => ZsonReader.rowOf(v, cleaned, tag = true))
-      }(org.apache.spark.sql.Encoders.row(schema))
-      .toDF()
-  }
+  def readStream(spark: SparkSession, path: String): DataFrame =
+    ZsonReader.tail(spark, path, read(spark, path).schema)(bytes =>
+      interleavedValues(new String(bytes, java.nio.charset.StandardCharsets.UTF_8)))
 
+  /** When every file is uniform ([[FileHead]]) and all share one leading
+    * block — the normal shape of a written log set — the header is
+    * parsed once on the driver and data lines decode in one byte-level
+    * pass straight to InternalRows, no value-model detour. Other inputs
+    * take the two-pass typed route. Discovery is one streaming byte scan
+    * per file (constant memory per task; never a whole-file array, since
+    * multi-GB rotated logs are normal), cached per file.
+    */
   def read(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
     val lines = spark.read.textFile(path)
-    // Per-FILE directive stats (one cheap text scan, no value building):
-    // when every file is a single leading directive block and all files
-    // share the SAME header — the normal shape of a written log set —
-    // decode runs in one byte-level pass straight to InternalRows, no
-    // value-model detour. Only genuinely interleaved or mixed-header
-    // inputs take the two-pass typed route.
-    val statFiles = HadoopFs.listDataFiles(spark, path)
-    val statsConf = HadoopFs.confMap(spark)
-    // one STREAMING pass per file — constant memory per task (never a
-    // whole-file byte array: multi-GB rotated logs are normal), and
-    // byte-level: only directive lines materialize as Strings (a
-    // readLine-per-row pass built 2M throwaway Strings at sf0.1 and was
-    // ~40% of a uniform read's cost)
-    val statsRdd = spark.sparkContext
-      .parallelize(statFiles, math.max(1, statFiles.length))
-      .map(f => directiveStats(statsConf, f))
-    // distributive uniformity fold: the driver receives ONE
-    // (header, flag) pair — O(header size) regardless of file count
-    // (a collect of every file's leading block scales with the lake)
-    val (headLead, uniform) =
-      if (statFiles.isEmpty) (Vector.empty[String], false)
-      else statsRdd
-        .map { case (lead, total) => (lead, total == lead.length) }
-        .reduce { case ((la, ua), (lb, ub)) => (la, ua && ub && la == lb) }
-    if (uniform) {
-      val h = parseHeader(headLead)
-      decodeBlockNative(spark, h, lines)
-    } else {
+    val files = discovery(spark, path)
+    val uniform = files.nonEmpty &&
+      files.forall { case (_, _, h) => h.uniform && h.lead == files.head._3.lead }
+    if (uniform) decodeBlockNative(spark, parseHeader(files.head._3.lead), lines)
+    else {
       // directives interleave with data (schema/path changes mid-stream —
       // zeekio parser.go keeps cumulative state). A file is the
       // parallelism unit: rows decode EXECUTOR-side through the value
       // model, one task per file, fused by the two-pass shape discovery —
       // no driver materialization (concatenated multi-schema zeek streams
       // are common in the wild).
+      val conf = HadoopFs.confMap(spark)
       val rdd = spark.sparkContext
-        .parallelize(statFiles, math.max(1, statFiles.length))
+        .parallelize(files.map(_._1), math.max(1, files.length))
         .flatMap { f =>
           // streamed per line; close on drain AND on task completion so an
           // early-terminating consumer (limit/take) or a decode exception
           // can't leak the Hadoop stream + GZIP buffer
-          val rdr = lineReader(statsConf, f)
+          val rdr = lineReader(conf, f)
           var closed = false
           def closeOnce(): Unit = if (!closed) { closed = true; rdr.close() }
           Option(org.apache.spark.TaskContext.get()).foreach(

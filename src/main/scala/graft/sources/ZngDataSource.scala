@@ -42,41 +42,21 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 class ZngDataSource extends TableProvider {
   override def supportsExternalMetadata(): Boolean = true
 
-  // ZngIO.read always supplies the schema (its pass 1 is distributed);
-  // direct format() users without .schema() get a serial driver-side
-  // inference over the same scanMeta pass
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val spark = SparkSession.active
-    val files = ZngDataSource.filesOf(options)
-    val conf = HadoopFs.confMap(spark)
-    val seen = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    var ns = false
-    var i = 0L
-    files.foreach { f =>
-      val (shapes, count, fileNs) =
-        ZngIO.scanMeta(Gzip.maybeGunzip(HadoopFs.readAll(conf, f)), i)
-      shapes.foreach { case (t, idx) => if (!seen.contains(t)) seen(t) = idx }
-      ns ||= fileNs
-      i += count
-    }
-    require(seen.nonEmpty, "zng data source: empty stream set")
-    ZsonReader.frameSchema(seen.toSeq.sortBy(_._2).map(_._1), tag = true, ns)._2
-  }
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    throw new UnsupportedOperationException(
+      "zng data source: read ZNG through ZngIO.read, which discovers the schema")
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table =
     new ZngTable(schema, new CaseInsensitiveStringMap(properties))
 }
 
+/** The options ZngIO.read and VngIO.read pass their DataSource. */
 private object ZngDataSource {
   def filesOf(options: CaseInsensitiveStringMap): Seq[String] =
-    Option(options.get("files")) match {
-      case Some(fs) => fs.split('\n').toIndexedSeq.filter(_.nonEmpty)
-      case None =>
-        val path = Option(options.get("path")).getOrElse(
-          throw new IllegalArgumentException("zng data source: no files/path option"))
-        HadoopFs.listDataFiles(SparkSession.active, path)
-    }
+    Option(options.get("files")).getOrElse(
+      throw new IllegalArgumentException("no files option: read through ZngIO.read or VngIO.read"))
+      .split('\n').toIndexedSeq.filter(_.nonEmpty)
 
   def longsOf(options: CaseInsensitiveStringMap, key: String,
       n: Int): Option[Seq[Long]] =
@@ -84,26 +64,20 @@ private object ZngDataSource {
       .map(_.split('\n').toIndexedSeq.filter(_.nonEmpty).map(_.toLong))
       .filter(_.length == n)
 
-  /** (numRows, sizeInBytes) for Catalyst's cost model — rows come from
-    * the discovery counts, bytes from the files themselves (like
-    * parquet's file-size estimate), so a small dim table read from
-    * zng/vng still gets broadcast in joins.
+  /** (numRows, sizeInBytes) for Catalyst's cost model, from discovery's
+    * per-file counts and the listing's byte lengths (like parquet's
+    * file-size estimate), so a small dim table read from zng/vng still
+    * gets broadcast in joins.
     */
   def statsOf(options: CaseInsensitiveStringMap,
-      files: Seq[String]): (Option[Long], Option[Long]) = {
-    val rows = longsOf(options, "counts", files.length).map(_.sum)
-    val bytes = longsOf(options, "sizes", files.length).map(_.sum).orElse {
-      try {
-        val spark = SparkSession.active
-        val conf = spark.sparkContext.hadoopConfiguration
-        Some(files.map { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          p.getFileSystem(conf).getFileStatus(p).getLen
-        }.sum)
-      } catch { case _: Exception => None }
-    }
-    (rows, bytes)
-  }
+      files: Seq[String]): (Option[Long], Option[Long]) =
+    (longsOf(options, "counts", files.length).map(_.sum),
+      longsOf(options, "sizes", files.length).map(_.sum))
+
+  /** The per-file row counts count(*) pushdown answers from. */
+  def countsOf(options: CaseInsensitiveStringMap, files: Seq[String]): Seq[Long] =
+    longsOf(options, "counts", files.length).getOrElse(
+      throw new IllegalArgumentException("no counts option: read through ZngIO.read or VngIO.read"))
 }
 
 private class ZngTable(fullSchema: StructType, options: CaseInsensitiveStringMap)
@@ -133,8 +107,8 @@ private class ZngScanBuilder(full: StructType, options: CaseInsensitiveStringMap
     filters
   }
   override def pushedFilters(): Array[Filter] = pushed
-  // count(*) with no filters answers from the discovery metadata the
-  // reader already cached — zero data bytes read (the reference must
+  // count(*) with no filters answers from the discovery counts the
+  // reader passed — zero data bytes read (the reference must
   // still stream the whole file; zed has no count shortcut either).
   // Residual filters block this automatically (Spark only pushes
   // aggregates when every filter was consumed by the scan).
@@ -147,13 +121,10 @@ private class ZngScanBuilder(full: StructType, options: CaseInsensitiveStringMap
     ok
   }
   override def build(): Scan = {
-    if (countAggs > 0) {
-      val files = ZngDataSource.filesOf(options)
-      val counts = Option(options.get("counts"))
-        .map(_.split('\n').toIndexedSeq.filter(_.nonEmpty).map(_.toLong))
-        .filter(_.length == files.length)
-      return new ZngCountScan(files, counts, countAggs, HadoopFs.confMap(SparkSession.active))
-    }
+    val files = ZngDataSource.filesOf(options)
+    if (countAggs > 0)
+      return new CountScan(ZngDataSource.countsOf(options, files), countAggs,
+        s"graft zng (${files.length} files, count pushdown)")
     val enabled = SparkSession.active.conf
       .getOption("graft.zng.prefilter").forall(_.toBoolean)
     // only genuine zed `string` fields qualify: their UTF-8 bytes sit
@@ -178,7 +149,6 @@ private class ZngScanBuilder(full: StructType, options: CaseInsensitiveStringMap
       val all = perShape.flatMap(_.keys).toSet
       all.filter(n => perShape.forall(m => m.getOrElse(n, true)))
     }
-    val files = ZngDataSource.filesOf(options)
     new ZngScan(
       files = files,
       splits = Option(options.get("splits"))
@@ -256,32 +226,25 @@ private class ZngScan(files: Seq[String], splits: Option[Seq[String]],
     new ZngReaderFactory(cleaned, required, prefilter, confMap)
 }
 
-/** count(*) pushdown: one partial-count row per file. Counts come free
-  * from the `counts` option (the discovery pass already tallied them);
-  * a direct format() user without the option pays one metadata scan.
+/** count(*) pushdown: one partial-count row per file, from the counts
+  * discovery already tallied — no data byte is read.
   */
-private case class ZngCountPartition(file: String, count: Long) extends InputPartition
+private case class CountPartition(count: Long) extends InputPartition
 
-private class ZngCountScan(files: Seq[String], counts: Option[Seq[Long]], nAggs: Int,
-    confMap: Map[String, String]) extends Scan with Batch {
+private class CountScan(counts: Seq[Long], nAggs: Int, desc: String)
+    extends Scan with Batch {
   override def readSchema(): StructType =
     StructType((1 to nAggs).map(i =>
       org.apache.spark.sql.types.StructField(s"count$i",
         org.apache.spark.sql.types.LongType, nullable = false)))
   override def toBatch: Batch = this
-  override def description(): String = s"graft zng (${files.length} files, count pushdown)"
+  override def description(): String = desc
   override def planInputPartitions(): Array[InputPartition] =
-    files.zipWithIndex.map { case (f, i) =>
-      ZngCountPartition(f, counts.map(_(i)).getOrElse(-1L)): InputPartition
-    }.toArray
+    counts.map(CountPartition(_): InputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = confMap
     val n = nAggs
     (partition: InputPartition) => {
-      val p = partition.asInstanceOf[ZngCountPartition]
-      val c =
-        if (p.count >= 0) p.count
-        else ZngIO.scanMeta(Gzip.maybeGunzip(HadoopFs.readAll(conf, p.file)), 0L)._2
+      val c = partition.asInstanceOf[CountPartition].count
       new PartitionReader[InternalRow] {
         private var emitted = false
         override def next(): Boolean = { val first = !emitted; emitted = true; first }

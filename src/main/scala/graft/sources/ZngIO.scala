@@ -2096,20 +2096,24 @@ object ZngIO {
     (it, () => batch.close())
   }
 
-  /** Per-file discovery result, cached driver-side keyed by the file's
-    * (length, mtime): re-reading a path — interactive sessions, repeated
-    * queries over the same objects — skips the pass-1 discovery I/O for
-    * unchanged files and scans only new or rewritten ones, like a
-    * metastore's file-statistics cache. Without this, every read of
-    * 100 TB costs 200 TB of I/O (discovery reads each byte a second
-    * time). A rewrite under the same name self-evicts (the key is the
-    * path; stale length/mtime mismatches replace the entry).
+  /** Per-file discovery result: shapes with their first value index,
+    * value count, sub-µs time presence, and the stream start offsets (the
+    * split points; one split for gzip). Cached per file by [[discovery]],
+    * so a re-read skips the pass-1 I/O for unchanged files — without it,
+    * every read of 100 TB costs 200 TB of I/O.
     */
-  private final case class FileMeta(len: Long, mtime: Long,
-      shapes: Vector[(String, Long)], count: Long, ns: Boolean,
-      streams: Vector[Long], gz: Boolean)
-  private val metaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, FileMeta]
+  private final case class FileMeta(shapes: Vector[(String, Long)], count: Long,
+      ns: Boolean, streams: Vector[Long], gz: Boolean)
+
+  private val discovery = new HadoopFs.Discovery[FileMeta]((conf, p) => {
+    val raw = HadoopFs.readAll(conf, p)
+    val gz = raw.length >= 2 && (raw(0) & 0xff) == 0x1f && (raw(1) & 0xff) == 0x8b
+    val bytes = Gzip.maybeGunzip(raw)
+    checkReadMax(p.substring(p.lastIndexOf('/') + 1), bytes)
+    val (shapes, count, fileNs) = scanMeta(bytes, 0L)
+    // gzip can't be range-read — such a file stays one split
+    FileMeta(shapes.toVector, count, fileNs, if (gz) Vector(0L) else streamOffsets(bytes), gz)
+  })
 
   /** Byte offsets where an independent stream starts (0, and after each
     * end-of-stream marker with data remaining) — the split points a huge
@@ -2141,21 +2145,8 @@ object ZngIO {
     * Structured Streaming file source). Compose with StreamOps
     * (watermarks, windowed `every`, dedup, commit-per-batch load).
     */
-  def readStream(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val schema = read(spark, path).schema // discovery over current contents
-    val cleaned = StructType(schema.fields.filterNot(_.name == graft.operators.Het.typeTag))
-    val bin = spark.readStream.format("binaryFile")
-      .schema(new StructType()
-        .add("path", StringType).add("modificationTime", TimestampType)
-        .add("length", LongType).add("content", BinaryType))
-      .load(path)
-    bin.select("content").as[Array[Byte]]
-      .flatMap(bytes => decodeToZValues(Gzip.maybeGunzip(bytes))
-        .map(v => ZsonReader.rowOf(v, cleaned, tag = true)))(
-        org.apache.spark.sql.Encoders.row(schema))
-      .toDF()
-  }
+  def readStream(spark: SparkSession, path: String): DataFrame =
+    ZsonReader.tail(spark, path, read(spark, path).schema)(decodeToZValues)
 
   /** Read a ZNG file or directory of part files into a typed DataFrame —
     * per-file typed decode on the executors (streams are self-contained,
@@ -2167,49 +2158,13 @@ object ZngIO {
     * roots.
     */
   def read(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dataFiles = HadoopFs.dataFiles(spark, path)
-    if (dataFiles.isEmpty) // empty directory → empty frame, not a failed load()
-      return ZsonReader.fromShapes(spark, spark.sparkContext.emptyRDD[ZValue], Array.empty)
-    val statuses = dataFiles.map { p =>
-      val st = fs.getFileStatus(new org.apache.hadoop.fs.Path(p))
-      (p, st.getLen, st.getModificationTime)
-    }
-    val missing = statuses.filter { case (p, len, mt) =>
-      Option(metaCache.get(p)).forall(m => m.len != len || m.mtime != mt)
-    }
-    if (missing.nonEmpty) {
-      val conf = HadoopFs.confMap(spark)
-      val scanned = spark.sparkContext
-        .parallelize(missing, missing.length)
-        .map { case (p, len, mt) =>
-          val raw = HadoopFs.readAll(conf, p)
-          val gz = raw.length >= 2 && (raw(0) & 0xff) == 0x1f && (raw(1) & 0xff) == 0x8b
-          val bytes = Gzip.maybeGunzip(raw)
-          checkReadMax(p.substring(p.lastIndexOf('/') + 1), bytes)
-          val (shapes, count, fileNs) = scanMeta(bytes, 0L)
-          // gzip can't be range-read — such a file stays one split
-          val streams = if (gz) Vector(0L) else streamOffsets(bytes)
-          (p, FileMeta(len, mt, shapes.toVector, count, fileNs, streams, gz))
-        }.collect()
-      // bound the cache for long-lived sessions (service): evict only
-      // entries outside the current file list — a full clear would drop
-      // fresh entries this very call reads back in the merge loop below
-      if (metaCache.size > 200000) {
-        val keep = statuses.iterator.map(_._1).toSet
-        metaCache.keySet.removeIf(k => !keep.contains(k)): Unit
-      }
-      scanned.foreach { case (p, m) => metaCache.put(p, m) }
-    }
+    val files = discovery(spark, path)
     // merge per-file results in file order — exact global
     // first-appearance ordering of shapes across the stream set
     val seen = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     var nsTime = false
     var offset = 0L
-    statuses.foreach { case (p, _, _) =>
-      val m = metaCache.get(p)
+    files.foreach { case (_, _, m) =>
       m.shapes.foreach { case (t, idx) =>
         if (!seen.contains(t)) seen(t) = offset + idx
       }
@@ -2217,15 +2172,10 @@ object ZngIO {
       offset += m.count
     }
     val shapeTexts = seen.toArray.sortBy(_._2).map(_._1).toIndexedSeq
-    if (shapeTexts.isEmpty) {
-      val discovered = (seen.toArray: Array[(String, Long)]) ++
-        (if (nsTime) Array(ZsonReader.nsSentinelKey -> Long.MaxValue)
-         else Array.empty[(String, Long)])
-      val rdd = spark.read.format("binaryFile").load(dataFiles: _*)
-        .select("content").as[Array[Byte]].rdd
-        .flatMap(bytes => decodeToZValues(Gzip.maybeGunzip(bytes)))
-      ZsonReader.fromShapes(spark, rdd, discovered)
-    } else {
+    // no files, or no values in them → empty frame, not a failed load()
+    if (shapeTexts.isEmpty)
+      ZsonReader.fromShapes(spark, spark.sparkContext.emptyRDD[ZValue], Array.empty)
+    else {
       // every stream — homogeneous or heterogeneous — scans through the
       // DataSource V2 table: wire→column-vector decode (each record shape
       // gets its own appender projecting by name into the merged frame)
@@ -2244,8 +2194,7 @@ object ZngIO {
         try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v)
         catch { case _: Exception => 128L << 20 }
       }
-      val splits = statuses.map { case (p, len, _) =>
-        val m = metaCache.get(p)
+      val splits = files.map { case (_, len, m) =>
         if (m.gz) "-1"
         else if (m.streams.length <= 1) "0"
         else {
@@ -2263,15 +2212,14 @@ object ZngIO {
       spark.read.format(classOf[ZngDataSource].getName)
         .schema(full)
         .option("shapes", shapeTexts.mkString("\n"))
-        .option("files", dataFiles.mkString("\n"))
+        .option("files", files.map(_._1).mkString("\n"))
         .option("splits", splits)
         // per-file row counts from discovery: count(*) answers from these
-        // without touching the data again (ZngCountScan), and the scan
+        // without touching the data again (count pushdown), and the scan
         // reports them as statistics so Catalyst sizes joins correctly
         // (small zng dims broadcast instead of defaulting to "huge")
-        .option("counts", statuses.map { case (p, _, _) => metaCache.get(p).count }
-          .mkString("\n"))
-        .option("sizes", statuses.map(_._2).mkString("\n"))
+        .option("counts", files.map(_._3.count).mkString("\n"))
+        .option("sizes", files.map(_._2).mkString("\n"))
         .load()
     }
   }
