@@ -78,12 +78,9 @@ object HadoopFs {
     * changed since the last call — re-reading a path (interactive
     * sessions, a service, repeated queries over the same objects) lists
     * it and runs no job, like a metastore's file-statistics cache. A
-    * rewrite under the same name replaces its entry; `share` maps each
-    * fresh record on the driver before it is kept (to share equal parts
-    * between files).
+    * rewrite under the same name replaces its entry.
     */
-  final class Discovery[M: scala.reflect.ClassTag](scan: (Map[String, String], String) => M,
-      share: M => M = (m: M) => m) {
+  final class Discovery[M: scala.reflect.ClassTag](scan: (Map[String, String], String) => M) {
     private val cache = new java.util.concurrent.ConcurrentHashMap[String, Entry[M]]
 
     /** Each data file under `path` with its length and record, in listing
@@ -110,7 +107,7 @@ object HadoopFs {
           cache.keySet.removeIf(k => !keep.contains(k)): Unit
         }
         missing.iterator.zip(scanned).map { case ((f, len, mt), m) =>
-          val e = Entry(len, mt, share(m))
+          val e = Entry(len, mt, m)
           cache.put(f, e)
           f -> e
         }.toMap

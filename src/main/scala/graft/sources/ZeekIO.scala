@@ -341,7 +341,9 @@ object ZeekIO {
     * neither end the leading block nor read a header), a line "is a
     * directive" iff its first byte is '#', and \r, \n, \r\n all terminate
     * a line.
-    * The scan stops at the first data line read under a changed header.
+    * The scan stops at the first data line read under a changed header:
+    * once that line clears `uniform`, neither loop reads another byte, so
+    * a later return to the leading header cannot set it again.
     */
   private def fileHead(conf: Map[String, String], file: String): FileHead = {
     val in = openMaybeGzip(conf, file)
@@ -366,7 +368,7 @@ object ZeekIO {
       var n = in.read(buf)
       while (n > 0 && uniform) {
         var i = 0
-        while (i < n) {
+        while (i < n && uniform) {
           val b = buf(i)
           if (b == '\n' || b == '\r') { if (started) endLine() }
           else {
@@ -387,12 +389,7 @@ object ZeekIO {
     FileHead(lead.result(), uniform)
   }
 
-  /** Identical leading blocks share one record on the driver, so the
-    * cache grows with the distinct headers, not with the files.
-    */
-  private val heads = new java.util.concurrent.ConcurrentHashMap[FileHead, FileHead]
-  private val discovery =
-    new HadoopFs.Discovery[FileHead](fileHead, h => heads.computeIfAbsent(h, _ => h))
+  private val discovery = new HadoopFs.Discovery[FileHead](fileHead)
 
   /** Structured-Streaming source tailing a growing directory of zeek
     * logs — the canonical zeek deployment (a live zeek writes and

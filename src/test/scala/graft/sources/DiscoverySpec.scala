@@ -143,6 +143,18 @@ class DiscoverySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(jobs { df = ZeekIO.read(spark, log) } == 1) // shape discovery only
   }
 
+  test("a return to the leading header after a mid-file change still takes the value route") {
+    val a = "#fields\ta\tb\n#types\tint\tstring\n"
+    val log = zeekFile("abaa.log", "#separator \\x09\n" + a + "1\tx\n" +
+      "#fields\tc\n#types\tcount\n7\n" + a + "3\ty\n")
+    var df: DataFrame = null
+    assert(jobs { df = ZeekIO.read(spark, log) } == 2) // file discovery, then shape discovery
+    assert(rowTexts(df) == Seq(
+      "[1,x,null,{a:int64,b:string}]",
+      "[3,y,null,{a:int64,b:string}]",
+      "[null,null,7,{c:uint64}]"))
+  }
+
   test("a direct format() load names the reader to use") {
     val zng = fresh("direct-zng")
     ZngIO.write(spark.range(0, 3).toDF("id"), zng)
