@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.lang.Graft
-import graft.sources.{Formats, ZsonIO}
+import graft.sources.{Formats, ZFormat, ZsonIO}
 
 /** CLI entry (reference: cmd/super — the `super` surface):
   *
@@ -178,8 +178,8 @@ object Cli {
         case None =>
           val lines = format match {
             case "zson" => ZsonIO.toZson(df).limit(maxRows).collect()
-            case "text" => Formats.textLines(df).limit(maxRows).collect()
-            case "table" => Formats.tableLines(df.limit(maxRows)).collect()
+            case "text" => ZFormat.textLines(df.limit(maxRows)).toArray
+            case "table" => ZFormat.tableLines(df.limit(maxRows)).collect()
             case other =>
               throw new IllegalArgumentException(s"stdout format must be zson|text|table, got $other")
           }

@@ -196,19 +196,22 @@ final class Service(spark: SparkSession, defaultDir: String, port: Int,
             case None => Graft.query(spark, dir, body)
           }
           val df = if (limit > 0) df0.limit(limit) else df0
-          val it = (fmt match {
-            case "text" => Formats.textLines(df)
-            case _ => ZsonIO.toZson(df)
-          }).toLocalIterator()
-          ex.getResponseHeaders.add("Content-Type", "application/x-zson")
-          ex.sendResponseHeaders(200, 0) // 0 = chunked transfer encoding
-          val os = new java.io.BufferedOutputStream(ex.getResponseBody, 64 * 1024)
-          while (it.hasNext) {
-            os.write(it.next().getBytes(StandardCharsets.UTF_8))
-            os.write('\n')
+          def send(it: Iterator[String]): Unit = {
+            ex.getResponseHeaders.add("Content-Type", "application/x-zson")
+            ex.sendResponseHeaders(200, 0) // 0 = chunked transfer encoding
+            val os = new java.io.BufferedOutputStream(ex.getResponseBody, 64 * 1024)
+            while (it.hasNext) {
+              os.write(it.next().getBytes(StandardCharsets.UTF_8))
+              os.write('\n')
+            }
+            os.flush()
+            ex.getResponseBody.close()
           }
-          os.flush()
-          ex.getResponseBody.close()
+          fmt match {
+            case "text" => graft.sources.ZFormat.lines(df, "text")(send)
+            case _ => send(scala.jdk.CollectionConverters.IteratorHasAsScala(
+              ZsonIO.toZson(df).toLocalIterator()).asScala)
+          }
         } catch {
           case e: Exception =>
             val msg = (s"""{error:"${Service.esc(String.valueOf(e.getMessage))}"}""" + "\n")
@@ -782,23 +785,25 @@ final class Service(spark: SparkSession, defaultDir: String, port: Int,
         return
       }
       val ctrl = ctrlRaw.exists(boolTrue)
-      // every format streams chunked off toLocalIterator (or part files
-      // on disk) — driver memory stays one partition regardless of
-      // result size, like the reference's paged ZNG-over-HTTP. csv/tsv
-      // stay buffered: their single-shape error must be known up front.
+      // every format streams chunked, one partition at a time (rendered
+      // parts, toLocalIterator or part files on disk) — driver memory
+      // stays one partition regardless of result size, like the
+      // reference's paged ZNG-over-HTTP. csv/tsv stay buffered: their
+      // single-shape error must be known up front.
       fmt match {
         case "application/json" | "text/plain" =>
-          val itr = graft.sources.ZFormat.jsonIter(df)
-          val os = openChunked(ex, "application/json")
-          os.write('[')
-          var first = true
-          while (itr.hasNext) {
-            if (!first) os.write(',')
-            os.write(itr.next().getBytes(StandardCharsets.UTF_8))
-            first = false
+          graft.sources.ZFormat.jsonIter(df) { itr =>
+            val os = openChunked(ex, "application/json")
+            os.write('[')
+            var first = true
+            while (itr.hasNext) {
+              if (!first) os.write(',')
+              os.write(itr.next().getBytes(StandardCharsets.UTF_8))
+              first = false
+            }
+            os.write(']'); os.write('\n')
+            os.flush(); ex.getResponseBody.close()
           }
-          os.write(']'); os.write('\n')
-          os.flush(); ex.getResponseBody.close()
         case "text/csv" =>
           respond(ex, 200,
             graft.sources.ZFormat.csvLines(df).mkString("", "\n", "\n"), "text/csv")
@@ -806,15 +811,11 @@ final class Service(spark: SparkSession, defaultDir: String, port: Int,
           val lines = graft.sources.ZFormat.csvLines(df, "\t")
           respond(ex, 200, lines.mkString("", "\n", "\n"), "text/tab-separated-values")
         case "application/x-ndjson" =>
-          streamLines(ex, "application/x-ndjson",
-            graft.sources.ZFormat.jsonIter(df), emptyNewline = true)
+          graft.sources.ZFormat.jsonIter(df)(
+            streamLines(ex, "application/x-ndjson", _, emptyNewline = true))
         case "application/x-zeek" =>
-          val it = graft.sources.ZFormat.zeekLines(df).toLocalIterator()
-          streamLines(ex, "application/x-zeek",
-            new Iterator[String] {
-              def hasNext: Boolean = it.hasNext
-              def next(): String = it.next()
-            }, emptyNewline = true)
+          graft.sources.ZFormat.lines(df, "zeek")(
+            streamLines(ex, "application/x-zeek", _, emptyNewline = true))
         case "application/x-zjson" =>
           // the control-capable format: channel framing + end-of-query
           // stats ride as typed control messages (api.go QueryChannelSet/

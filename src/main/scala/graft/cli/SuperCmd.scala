@@ -612,7 +612,7 @@ final class SuperCmd(spark: SparkSession, host: SuperCmd.Host) {
                 e.partial.mkString("", "\n", if (e.partial.isEmpty) "" else "\n"),
                 e.getMessage)
           }
-        case "zeek" => graft.sources.ZFormat.zeekLines(res).collect().toSeq
+        case "zeek" => graft.sources.ZFormat.zeekLines(res)
         case "zjson" => graft.sources.ZjsonIO.typedLines(res)
         case "json" => graft.sources.ZFormat.jsonLines(res)
         case "json-pretty" =>
@@ -634,8 +634,8 @@ final class SuperCmd(spark: SparkSession, host: SuperCmd.Host) {
             } else n.toString
           }
           graft.sources.ZFormat.jsonLines(res).map(l => pp(mapper.readTree(l), ""))
-        case "table" => Formats.tableLines(res).collect().toSeq
-        case "text" => Formats.textLines(res).collect().toSeq
+        case "table" => graft.sources.ZFormat.tableLines(res).collect().toSeq
+        case "text" => graft.sources.ZFormat.textLines(res)
         case "parquet" | "zng" | "vng" | "zst" | "arrows" | "arrow" =>
           if (f.format != "zng" && f.format != "vng" && f.format != "zst")
             validateColumnarOut(res, f.format)
@@ -770,7 +770,7 @@ final class SuperCmd(spark: SparkSession, host: SuperCmd.Host) {
         for (p <- paths) {
           val part = res.filter(col("_path") === p)
           val lines =
-            if (f.format == "zeek") graft.sources.ZFormat.zeekLines(part).collect().toSeq
+            if (f.format == "zeek") graft.sources.ZFormat.zeekLines(part)
             else ZsonIO.toZson(part).collect().toSeq
           writeGroup(p, lines)
         }

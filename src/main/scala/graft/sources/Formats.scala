@@ -7,14 +7,16 @@ import org.apache.spark.sql.functions._
   *
   * Reads auto-detect by file extension — parquet/csv/tsv/json/zson/line —
   * mirroring zio/anyio's reader auto-detection; Spark's built-in sources
-  * handle parquet/csv/json with distributed schema inference, ZSON goes
-  * through ZsonIO.
+  * read parquet and csv with distributed schema inference, JSON goes
+  * through JsonIO and ZSON through ZsonIO.
   *
-  * Writers add zed's text output surface: `zson`, `text` (tab-separated
-  * values), and `table` (aligned columns, header row). `text` formats
-  * distributed; `table` alignment is inherently sequential (widths are
-  * per-block maxima) so rows pass the driver one block at a time,
-  * spooled to disk — human-facing output, not a data path.
+  * Writers are zed's: parquet through Spark's writer, each binary format
+  * through its own IO object, and zeek/json/csv/tsv/text through the one
+  * text renderer (TextWriter) that the CLI and service streams also use,
+  * so a file and a stream print the same bytes. `table` alignment is
+  * inherently sequential (widths are per-block maxima) so rows pass the
+  * driver one block at a time, spooled to disk — human-facing output, not
+  * a data path.
   */
 object Formats {
 
@@ -365,30 +367,13 @@ object Formats {
         throw new IllegalArgumentException(
           "parquetio: unsupported type: empty record")
       dataDf.write.mode("overwrite").parquet(path)
-    case "csv" => df.write.mode("overwrite").option("header", "true").csv(path)
-    case "tsv" => df.write.mode("overwrite").option("header", "true")
-      .option("sep", "\t").csv(path)
-    case "json" => df.write.mode("overwrite").json(path)
+    case "csv" | "tsv" | "json" | "text" | "zeek" => TextWriter.write(df, path, TextWriter.of(format))
     case "zson" => ZsonIO.write(df, path)
     case "zng" => ZngIO.write(df, path)
     case "vng" => VngIO.write(df, path)
-    case "zeek" => ZeekIO.write(df, path)
     case "zjson" => ZjsonIO.write(df, path)
     case "arrow" | "arrows" => ArrowIO.write(df, path)
-    case "text" => textLines(df).write.mode("overwrite").text(path)
-    case "table" => tableLines(df).write.mode("overwrite").text(path)
+    case "table" => ZFormat.tableLines(df).write.mode("overwrite").text(path)
     case other => throw new IllegalArgumentException(s"unknown write format: $other")
   }
-
-  /** `text` output (zio/textio/writer.go): flattened leaf columns joined by
-    * tabs, zeek-formatted values, times as RFC3339Nano. Distributed.
-    */
-  def textLines(df: DataFrame): org.apache.spark.sql.Dataset[String] =
-    ZFormat.textLines(df)
-
-  /** `table` output (zio/tableio/writer.go): per-type headers + Go
-    * tabwriter alignment (block-buffered like the reference).
-    */
-  def tableLines(df: DataFrame): org.apache.spark.sql.Dataset[String] =
-    ZFormat.tableLines(df)
 }

@@ -731,8 +731,8 @@ object VngIO {
     val schema = df.schema
     HadoopFs.prepareDir(df.sparkSession, path)
     val confMap = HadoopFs.confMap(df.sparkSession)
-    df.rdd.mapPartitionsWithIndex { (pid, rows) =>
-      val toV = ZFormat.rowValueFn(schema)
+    df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
+      val toV = TextWriter.values(schema)
       val bytes = encodeObject(rows.map(toV))
       val out = HadoopFs.create(confMap, path, f"part-$pid%05d.vng")
       try out.write(bytes) finally out.close()

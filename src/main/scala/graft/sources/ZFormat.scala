@@ -1,11 +1,13 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 
-/** Faithful renderers for the reference's human-facing output formats —
-  * zeek, text, table, csv and json — all built on one per-row typed-value
-  * reconstruction. The semantics mirror the PUBLIC writers:
+/** The zed text rules of the reference's human-facing output formats —
+  * zeek, text, table, csv and json — over typed values. The semantics
+  * mirror the PUBLIC writers:
   *   - zeek/text/table share zeekio's value formatter
   *     (zio/zeekio/format.go formatAny: T/F bools, base64 bytes,
   *     epoch-decimal times, `-` nulls, `(empty)` containers, \xNN escapes)
@@ -16,9 +18,11 @@ import org.apache.spark.sql.types._
   *   - json keeps every field, humanizes durations, renders error values
   *     as {"error":…} and maps via decorated-key text (zio/jsonio/writer.go)
   *
-  * Reconstruction runs per partition (no driver round-trip except the
-  * table writer, which — like the reference's tabwriter — must buffer a
-  * block to compute column widths).
+  * The one renderer of zeek, text, csv/tsv and json (TextWriter) runs per
+  * partition on the executors and prints through these rules wherever a
+  * value has no typed writer; the stream names below are its driver-side
+  * entry points. The table writer, which — like the reference's tabwriter
+  * — must buffer a block to compute column widths, renders here.
   */
 object ZFormat {
   import ZValue._
@@ -28,108 +32,24 @@ object ZFormat {
   final class CsvShapeError(val partial: Seq[String]) extends RuntimeException(
     "CSV output requires uniform records but multiple types encountered (consider 'fuse')")
 
-  // ---- per-row typed-value reconstruction ----------------------------------
+  // ---- per-row typed values ----------------------------------------------------
 
-  /** Build a serializable Row => ZValue for df's schema: per-row shape from
-    * the __type tag when present (operator-added columns appended when
-    * non-null, mirroring ZsonIO.toZson), else the Spark schema's zed type.
+  /** A serializable Row => ZValue for rows of `schema` (a row may carry
+    * columns past it): the value model's one reading of a frame's rows,
+    * TextWriter.values — per-row shape from the __type tag when present
+    * (operator-added columns appended when non-null, mirroring
+    * ZsonIO.toZson), else the Spark schema's zed type. Each thread reads
+    * through its own compiled shapes.
     */
-  def rowValueFn(schema: StructType): Row => ZValue = {
-    val het = graft.operators.Het
-    val tagIdx = schema.fieldNames.indexOf(het.typeTag)
-    val fields = schema.fields.toIndexedSeq.zipWithIndex
-      .filterNot { case (f, _) => f.name == het.typeTag || f.metadata.contains("graft.scopeVar") }
-    val shapeFieldNames: Set[String] = {
-      val shapes = schema.fields.find(_.name == het.typeTag)
-        .filter(_.metadata.contains("shapes"))
-        .map(_.metadata.getStringArray("shapes").toSeq).getOrElse(Seq.empty)
-      shapes.flatMap { t =>
-        try ZType.strip(ZsonParser.parseType(ZType.stripNullWrap(t))) match {
-          case Rec(fs) => fs.map(_._1)
-          case _ => Seq("this")
-        } catch { case _: Exception => fields.map(_._1.name) }
-      }.toSet
-    }
-    val fallback: ZType = {
-      val fs = fields.map { case (f, _) =>
-        f.name -> (
-          // typeof-produced columns are TYPE-VALUED (field metadata)
-          if (f.metadata.contains("graft.zedType"))
-            Prim(f.metadata.getString("graft.zedType"))
-          else try ZsonParser.parseType(graft.functions.Shaper.zedTypeOf(f.dataType))
-          catch { case _: Exception => Prim("string") })
-      }
-      if (fields.map(_._1.name) == Seq("this")) {
-        // a boxed carrier decodes from its OWN runtime type — the Spark
-        // struct is the engine's union carrier, never a record shape
-        if (ZsonIO.isVariantType(fields.head._1.dataType)) Prim("null")
-        else fs.head._2
-      } else Rec(fs.toVector)
-    }
+  def rowValueFn(schema: StructType): Row => ZValue = new RowValues(schema)
 
-    (row: Row) => {
-      val cache = ZFormat.typeCache.get()
-      val tagText =
-        if (tagIdx < 0 || row.isNullAt(tagIdx)) null else row.getString(tagIdx)
-      if (tagText != null && ZType.isNullWrap(tagText)) {
-        // top-level typed-null record: the whole row IS null(<rec>)
-        val inner = cache.getOrElseUpdate(tagText,
-          try ZsonParser.parseType(ZType.stripNullWrap(tagText))
-          catch { case _: Exception => fallback })
-        VNull(inner)
-      } else {
-      val rowT: ZType =
-        if (tagText == null) fallback
-        else cache.getOrElseUpdate(tagText,
-          try ZsonParser.parseType(tagText) catch { case _: Exception => fallback })
-      ZType.strip(rowT) match {
-        case Rec(shapeFs) =>
-          // shape fields in shape order …
-          val own = shapeFs.flatMap { case (n, ft) =>
-            fields.find(_._1.name == n).map { case (f, i) =>
-              n -> (if (row.isNullAt(i)) VNull(ft) else fromExternal(row.get(i), f.dataType, ft))
-            }
-          }
-          // … plus operator-added columns when non-null (`this` is the
-          // empty-record carrier on record shapes, never data)
-          val added = fields.filterNot(f => shapeFieldNames(f._1.name) ||
-              shapeFs.exists(_._1 == f._1.name) || f._1.name == "this")
-            .flatMap { case (f, i) =>
-              if (row.isNullAt(i)) None
-              else Some(f.name -> fromExternal(row.get(i), f.dataType,
-                // typeof-produced columns are TYPE-VALUED (field metadata)
-                if (f.metadata.contains("graft.zedType"))
-                  Prim(f.metadata.getString("graft.zedType"))
-                else try ZsonParser.parseType(graft.functions.Shaper.zedTypeOf(f.dataType))
-                catch { case _: Exception => Prim("string") }))
-            }
-          // a NAMED record type keeps its name on the value (vng/zng
-          // writers group and encode by the value's own type)
-          rowT match {
-            case nm @ Named(_, _) => VTyped(VRec(own ++ added), nm)
-            case _ => VRec(own ++ added)
-          }
-        case _ =>
-          // bare (non-record) value row: the payload travels in `this`
-          fields.find(_._1.name == "this") match {
-            case Some((f, i)) =>
-              if (row.isNullAt(i)) VNull(rowT) else fromExternal(row.get(i), f.dataType, rowT)
-            case None =>
-              VRec(fields.map { case (f, i) =>
-                f.name -> (if (row.isNullAt(i)) VNull(Prim("null"))
-                           else fromExternal(row.get(i), f.dataType,
-                             try ZsonParser.parseType(graft.functions.Shaper.zedTypeOf(f.dataType))
-                             catch { case _: Exception => Prim("string") }))
-              }.toVector)
-          }
-      }
-      }
-    }
-  }
-
-  // per-thread parse cache for shape-tag type texts
-  private val typeCache = new ThreadLocal[scala.collection.mutable.HashMap[String, ZType]] {
-    override def initialValue() = scala.collection.mutable.HashMap.empty
+  private final class RowValues(schema: StructType) extends (Row => ZValue) with Serializable {
+    @transient private lazy val reader =
+      ThreadLocal.withInitial[InternalRow => ZValue](() => TextWriter.values(schema))
+    @transient private lazy val toInternal =
+      schema.fields.map(f => CatalystTypeConverters.createToCatalystConverter(f.dataType))
+    def apply(row: Row): ZValue =
+      reader.get()(new GenericInternalRow(Array.tabulate[Any](toInternal.length)(i => toInternal(i)(row.get(i)))))
   }
 
   // ---- number / time formatting --------------------------------------------
@@ -319,9 +239,7 @@ object ZFormat {
   def rfc3339Nano(ns: Long): String = {
     val sec = Math.floorDiv(ns, 1000000000L)
     val nano = Math.floorMod(ns, 1000000000L)
-    val inst = java.time.Instant.ofEpochSecond(sec, 0)
-    val base = java.time.format.DateTimeFormatter.ofPattern("uuuu-MM-dd'T'HH:mm:ss")
-      .withZone(java.time.ZoneOffset.UTC).format(inst)
+    val base = rfc3339Seconds.format(java.time.Instant.ofEpochSecond(sec, 0))
     if (nano == 0) base + "Z"
     else {
       val frac = f"$nano%09d".reverse.dropWhile(_ == '0').reverse
@@ -329,18 +247,24 @@ object ZFormat {
     }
   }
 
+  private val rfc3339Seconds = java.time.format.DateTimeFormatter
+    .ofPattern("uuuu-MM-dd'T'HH:mm:ss").withZone(java.time.ZoneOffset.UTC)
+
   /** Zeek epoch-decimal time (zio/zeekio/time.go formatTime): precision 6,
-    * raised to 9 when sub-microsecond precision would be lost.
+    * raised to 9 when sub-microsecond precision would be lost; the digits
+    * are the exact ones, in integer arithmetic.
     */
   def zeekTime(ns0: Long): String = {
-    var sec = ns0 / 1000000000L
-    var ns = ns0 % 1000000000L
-    val precision = if ((ns / 1000) * 1000 != ns) 9 else 6
-    var negative = false
-    if (sec < 0) { sec = -sec; negative = true }
-    if (ns < 0) { ns = -ns; negative = true }
-    val frac = String.format("%." + precision + "f", Double.box(ns.toDouble / 1e9)).drop(1)
-    (if (negative) "-" else "") + sec.toString + frac
+    val sec = math.abs(ns0 / 1000000000L)
+    val ns = math.abs(ns0 % 1000000000L)
+    val (frac, width) = if (ns % 1000 == 0) (ns / 1000, 6) else (ns, 9)
+    val digits = frac.toString
+    val sb = new StringBuilder(32)
+    if (ns0 < 0) sb.append('-')
+    sb.append(sec).append('.')
+    var k = digits.length
+    while (k < width) { sb.append('0'); k += 1 }
+    sb.append(digits).toString
   }
 
   /** Compound duration text (pkg/nano/duration.go String): y/d/h/m units
@@ -412,7 +336,7 @@ object ZFormat {
     case other => zeekTypeOf(other)
   }
 
-  private def zeekEscapeString(s: String, inContainer: Boolean): String = {
+  private[sources] def zeekEscapeString(s: String, inContainer: Boolean): String = {
     if (s == "-") return "\\x2d"
     if (s == "(empty)") return "\\x28empty)"
     val sb = new StringBuilder
@@ -505,7 +429,7 @@ object ZFormat {
     }
   }
 
-  private def leafType(v: ZValue): ZType = v match {
+  private[sources] def leafType(v: ZValue): ZType = v match {
     case VNull(t) => t
     case VTyped(_, t) => t
     case other => ZValue.typeOf(other)
@@ -514,27 +438,29 @@ object ZFormat {
   /** One text/table cell: times as RFC3339Nano (the writers' override),
     * everything else zeek-formatted.
     */
-  private def cellText(v: ZValue, emptyNullTime: Boolean): String = unwrap(v) match {
+  private[sources] def cellText(v: ZValue, emptyNullTime: Boolean): String = unwrap(v) match {
     case VTime(ns) => rfc3339Nano(ns)
     case VNull(t) if ZType.strip(t) == Prim("time") => if (emptyNullTime) "" else "-"
     case other => zeekFormat(other)
   }
 
-  // ---- text writer (zio/textio/writer.go) ----------------------------------
+  // ---- text and zeek streams (TextWriter renders them) ------------------------
 
-  def textLines(df: DataFrame): Dataset[String] = {
-    import df.sparkSession.implicits._
-    val fn = rowValueFn(df.schema)
-    df.mapPartitions { it =>
-      it.map { row =>
-        fn(row) match {
-          case r @ VRec(_) => flatten(r).map(f => cellText(f._2, emptyNullTime = false)).mkString("\t")
-          case VTyped(r: VRec, _) => flatten(r).map(f => cellText(f._2, emptyNullTime = false)).mkString("\t")
-          case other => zeekFormat(other)
-        }
-      }
-    }(org.apache.spark.sql.Encoders.STRING)
-  }
+  /** `df` in text format `format` (zeek, json, csv, tsv or text) as one
+    * stream of lines, handed to `use` while the frame's query runs: each
+    * partition renders on the executors, and the parts come to the driver
+    * one at a time, in order, stitched as one sequential writer's output.
+    */
+  def lines[A](df: DataFrame, format: String)(use: Iterator[String] => A): A =
+    TextWriter.lines(df, TextWriter.of(format))(use)
+
+  /** text (zio/textio/writer.go): flattened leaves joined by tabs. */
+  def textLines(df: DataFrame): Seq[String] = lines(df, "text")(_.toVector)
+
+  /** zeek (zio/zeekio/writer.go): one preamble, `#path` on a path change,
+    * `#fields`/`#types` on a flattened-type change, `_path` not a column.
+    */
+  def zeekLines(df: DataFrame): Seq[String] = lines(df, "zeek")(_.toVector)
 
   // ---- table writer (zio/tableio/writer.go) --------------------------------
 
@@ -595,125 +521,49 @@ object ZFormat {
     df.sparkSession.read.textFile(spool.toString)
   }
 
-  // ---- zeek writer (zio/zeekio/writer.go) ----------------------------------
+  // ---- csv (zio/csvio/writer.go): the stream and the cell rules ---------------
 
-  /** Faithful sequential zeek stream: one preamble, `#path` re-emitted on
-    * path change (empty → `-`), `#fields`/`#types` re-emitted on flattened
-    * type change, `_path` excluded from columns, all values (incl. times)
-    * zeek-formatted.
+  /** csv/tsv: the first record's header, then its rows; another record
+    * type ends the output with CsvShapeError carrying the lines before it.
     */
-  def zeekLines(df: DataFrame): Dataset[String] = {
-    val fn = rowValueFn(df.schema)
-    // bounded driver memory: lines spool to disk as they stream (same
-    // block-spool treatment as tableLines); callers read the spool as a
-    // dataset — no unbounded driver buffer
-    val spool = java.nio.file.Files.createTempFile("graft-zeek-", ".txt")
-    spool.toFile.deleteOnExit()
-    val sink = java.nio.file.Files.newBufferedWriter(spool,
-      java.nio.charset.StandardCharsets.UTF_8)
-    val out = new scala.collection.mutable.ArrayBuffer[String](0) {
-      override def addOne(s: String): this.type = {
-        sink.write(s); sink.write('\n'); this
-      }
-    }
-    var preambleDone = false
-    var curPath: String = ""
-    var curSig: Vector[(String, String)] = null
-    val it = df.toLocalIterator()
-    while (it.hasNext) {
-      unwrap(fn(it.next())) match {
-        case rec @ VRec(_) =>
-          val leaves = flatten(rec)
-          val path = leaves.find(_._1 == "_path").map(f => unwrap(f._2) match {
-            case VStr(s) => s
-            case _ => ""
-          }).getOrElse("")
-          val cols = leaves.filterNot(_._1 == "_path")
-          val sig = leaves.map { case (n, lv) => n -> ZType.text(leafType(lv)) }
-          if (sig != curSig || path != curPath) {
-            if (!preambleDone) {
-              out += "#separator \\x09"
-              out += "#set_separator\t,"
-              out += "#empty_field\t(empty)"
-              out += "#unset_field\t-"
-              preambleDone = true
-            }
-            if (path != curPath) {
-              out += "#path\t" + (if (path.isEmpty) "-" else path)
-              curPath = path
-            }
-            if (sig != curSig) {
-              out += "#fields\t" + cols.map(_._1).mkString("\t")
-              out += "#types\t" + cols.map(c => zeekTypeOfNamed(leafType(c._2))).mkString("\t")
-              curSig = sig
-            }
-          }
-          out += cols.map(c => zeekFormat(c._2)).mkString("\t")
-        case other =>
-          out += zeekFormat(other) // reference errors; emit the value text
-      }
-    }
-    sink.close()
-    df.sparkSession.read.textFile(spool.toString)
-  }
-
-  // ---- csv writer (zio/csvio/writer.go) ------------------------------------
-
   def csvLines(df: DataFrame, sep: String = ","): Seq[String] = {
-    val fn = rowValueFn(df.schema)
-    def cell(v: ZValue): String = unwrap(v) match {
-      case VNull(_) => ""
-      case VBytes(b) if b.isEmpty => ""
-      case VStr(s) => s
-      case VFloat(d, t) =>
-        val s = goG(d, if (t == "float64") 64 else 32)
-        if (s.endsWith(".")) s.dropRight(1) else s
-      case VInt(n, _) => n.toString
-      case VUint64(n) => n.toBigInt.toString
-      case VBool(b) => b.toString
-      case VTime(ns) => rfc3339Nano(ns)
-      case VDur(ns) => durHuman(ns)
-      case VBytes(b) => "0x" + b.map(x => f"$x%02x").mkString
-      case VIp(s) => s
-      case VNet(s) => s
-      case VEnum(s) => s
-      case VTypeVal(t) => s"<$t>"
-      case other => zsonText(other) // complex values as zson (FormatValue)
-    }
-    def csvQuote(s: String): String =
-      if (s.contains(sep) || s.contains("\"") || s.contains("\n") || s.contains("\r"))
-        "\"" + s.replace("\"", "\"\"") + "\""
-      else s
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var header: Vector[String] = null
-    val it = df.toLocalIterator()
-    while (it.hasNext) {
-      unwrap(fn(it.next())) match {
-        case rec @ VRec(_) =>
-          val leaves = flatten(rec)
-          if (header == null) {
-            header = leaves.map(_._1)
-            out += header.map(csvQuote).mkString(sep)
-          }
-          if (leaves.map(_._1) == header)
-            out += leaves.map(f => csvQuote(cell(f._2))).mkString(sep)
-          else
-            // the reference csv writer takes the FIRST record's type and
-            // fails on any other (zio/csvio/writer.go) — partial output
-            // already rendered rides the error
-            throw new CsvShapeError(out.toSeq)
-        case _ => // non-record: reference raises an error (stderr); skipped
-      }
-    }
-    if (header == null && df.schema.fields.nonEmpty) {
-      // header even for empty inputs with a static schema
-      val names = df.schema.fieldNames.filterNot(_ == graft.operators.Het.typeTag)
-      out += names.mkString(sep)
-    }
-    out.toSeq
+    val out = Vector.newBuilder[String]
+    try lines(df, if (sep == "\t") "tsv" else "csv")(_.foreach(out += _))
+    catch { case _: CsvShapeError => throw new CsvShapeError(out.result()) }
+    out.result()
   }
 
-  // ---- json writer (zio/jsonio/writer.go) ----------------------------------
+  /** One csv cell's text, before quoting. */
+  private[sources] def csvCell(v: ZValue): String = unwrap(v) match {
+    case VNull(_) => ""
+    case VBytes(b) if b.isEmpty => ""
+    case VStr(s) => s
+    case VFloat(d, t) => csvFloat(d, if (t == "float64") 64 else 32)
+    case VInt(n, _) => n.toString
+    case VUint64(n) => n.toBigInt.toString
+    case VBool(b) => b.toString
+    case VTime(ns) => rfc3339Nano(ns)
+    case VDur(ns) => durHuman(ns)
+    case VBytes(b) => "0x" + b.map(x => f"$x%02x").mkString
+    case VIp(s) => s
+    case VNet(s) => s
+    case VEnum(s) => s
+    case VTypeVal(t) => s"<$t>"
+    case other => zsonText(other) // complex values as zson (FormatValue)
+  }
+
+  /** Go-style shortest 'g' with the trailing '.' trimmed. */
+  private[sources] def csvFloat(d: Double, bits: Int): String = {
+    val s = goG(d, bits)
+    if (s.endsWith(".")) s.dropRight(1) else s
+  }
+
+  private[sources] def csvQuote(s: String, sep: Char): String =
+    if (s.indexOf(sep) >= 0 || s.contains("\"") || s.contains("\n") || s.contains("\r"))
+      "\"" + s.replace("\"", "\"\"") + "\""
+    else s
+
+  // ---- json (zio/jsonio/writer.go): the value rules and the stream ----------
 
   def jsonQuote(s: String): String = {
     val sb = new StringBuilder("\"")
@@ -737,12 +587,7 @@ object ZFormat {
     case VBool(b) => b.toString
     case VInt(n, _) => n.toString
     case VUint64(n) => n.toBigInt.toString
-    case VFloat(d, _) =>
-      if (d.isNaN || d.isInfinity) jsonQuote(goG(d)) // json can't carry non-finite
-      else {
-        val a = math.abs(d)
-        if (a != 0 && (a < 1e-6 || a >= 1e21)) goG(d) else goF(d)
-      }
+    case VFloat(d, _) => jsonFloat(d)
     case VStr(s) => jsonQuote(s)
     case VTime(ns) => jsonQuote(rfc3339Nano(ns))
     case VDur(ns) => jsonQuote(durHuman(ns))
@@ -764,6 +609,13 @@ object ZFormat {
     case VErr(inner) => "{" + jsonQuote("error") + ":" + jsonText(inner) + "}"
     case VTyped(i, _) => jsonText(i)
   }
+
+  private[sources] def jsonFloat(d: Double): String =
+    if (d.isNaN || d.isInfinity) jsonQuote(goG(d)) // json can't carry non-finite
+    else {
+      val a = math.abs(d)
+      if (a != 0 && (a < 1e-6 || a >= 1e21)) goG(d) else goF(d)
+    }
 
   /** Map keys: strings bare, other primitives in zson primitive text,
     * complex keys as decorated zson (jsonio writer.go mapKey).
@@ -798,20 +650,13 @@ object ZFormat {
     }
   }
 
-  def jsonLines(df: DataFrame): Seq[String] = jsonIter(df).toSeq
+  def jsonLines(df: DataFrame): Seq[String] = jsonIter(df)(_.toVector)
 
-  /** Incremental form of [[jsonLines]]: one partition on the driver at a
-    * time (toLocalIterator), so a large response can stream chunked
-    * instead of materializing on the driver.
+  /** Incremental form of [[jsonLines]]: rendered partitions reach the
+    * driver one at a time, so a large response can stream chunked instead
+    * of materializing on the driver.
     */
-  def jsonIter(df: DataFrame): Iterator[String] = {
-    val fn = rowValueFn(df.schema)
-    val it = df.toLocalIterator()
-    new Iterator[String] {
-      def hasNext: Boolean = it.hasNext
-      def next(): String = jsonText(fn(it.next()))
-    }
-  }
+  def jsonIter[A](df: DataFrame)(use: Iterator[String] => A): A = lines(df, "json")(use)
 
   /** Pretty-print one compact ZSON value with the reference's `-Z` layout
     * (zson/formatter.go, pretty=tab): containers expand one element per

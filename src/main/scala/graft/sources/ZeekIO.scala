@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -9,20 +8,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * directives, format.go value syntax; the reference performance baseline
   * runs over exactly this data).
   *
-  * Reader: when all files share one leading directive block
-  * (#separator/#fields/#types/#path/…) and no data line follows a change
+  * Reader: when all files share one header (#separator/#fields/#types/
+  * #path/…; `#open` dates may differ) and no data line follows a change
   * of that header (a later `#close` or repeated identical header is
   * fine), the header is parsed once on the driver and data lines decode
   * DISTRIBUTED by one byte-level splitter straight into InternalRows —
   * `-` (unset) → null, `(empty)` → empty, `time` as epoch seconds with µs
-  * fraction, sets and vectors split on the set_separator; separators of
+  * fraction and `interval` to ns, both parsed exactly (epochUnits), sets and vectors split on the set_separator; separators of
   * any length and script match as their UTF-8 bytes. Other inputs decode
   * per file through the value model. `_path` materializes as the leading
   * column like the reference.
   *
-  * Writer: emits a single header block from the schema then tab-separated
-  * rows (flat schemas; nested data should be flattened first, matching
-  * zeekio's own restriction).
+  * Writer: zed's zeek writer, rendered per partition by TextWriter.
   */
 object ZeekIO {
 
@@ -227,19 +224,11 @@ object ZeekIO {
     val zt = try ZsonParser.parseType(zedTypeText(zeekType))
              catch { case _: Exception => ZType.Prim("string") }
     if (raw0 == h.unset) return VNull(zt)
-    def epochNs(s: String): Long = {
-      val neg = s.startsWith("-")
-      val body = if (neg) s.drop(1) else s
-      val dot = body.indexOf('.')
-      val (sec, frac) = if (dot < 0) (body, "") else (body.substring(0, dot), body.substring(dot + 1))
-      val ns = BigInt(if (sec.isEmpty) "0" else sec) * 1000000000L +
-        BigInt((frac + "000000000").take(9))
-      val v = if (neg) -ns else ns
-      v.toLong
-    }
+    def epochNs(s: String): Option[Long] =
+      Option(epochUnits(UTF8String.fromString(s), 9)).map(_.longValue)
     zeekType match {
-      case "time" => VTime(epochNs(raw0))
-      case "interval" => VDur(epochNs(raw0))
+      case "time" => epochNs(raw0).fold[ZValue](VNull(zt))(VTime(_))
+      case "interval" => epochNs(raw0).fold[ZValue](VNull(zt))(VDur(_))
       case "count" => VUint64(BigDecimal(raw0))
       case "int" => VInt(raw0.toLong, "int64")
       case "port" => VTyped(VInt(raw0.toLong, "uint16"), ZType.Named("port", ZType.Prim("uint16")))
@@ -326,14 +315,16 @@ object ZeekIO {
     new java.io.BufferedReader(new java.io.InputStreamReader(openMaybeGzip(conf, file),
       java.nio.charset.StandardCharsets.UTF_8), 1 << 16)
 
-  /** One file's discovery record: its leading directive block, and
-    * whether every data line reads under that block's header. A directive
+  /** One file's discovery record: its leading directive block, the
+    * header its data reads under (DirectiveState.key: `#open` and other
+    * dates are not part of it, so logs Zeek rotated share it), and
+    * whether every data line reads under that header. A directive
     * after data — `#close`, `#open`, a repeated identical header (two
     * logs joined with `cat`) — keeps the file uniform; a data line after a
     * change of separators, unset/empty marks, path, fields or types does
     * not.
     */
-  private final case class FileHead(lead: Vector[String], uniform: Boolean)
+  private final case class FileHead(lead: Vector[String], key: AnyRef, uniform: Boolean)
 
   /** One buffered BYTE scan of a file for its [[FileHead]]. Data lines
     * are skipped byte-by-byte without materializing a String per line;
@@ -386,7 +377,7 @@ object ZeekIO {
       }
       if (started && uniform) endLine()
     } finally in.close()
-    FileHead(lead.result(), uniform)
+    FileHead(lead.result(), if (leadKey != null) leadKey else st.key, uniform)
   }
 
   private val discovery = new HadoopFs.Discovery[FileHead](fileHead)
@@ -401,8 +392,8 @@ object ZeekIO {
     ZsonReader.tail(spark, path, read(spark, path).schema)(bytes =>
       interleavedValues(new String(bytes, java.nio.charset.StandardCharsets.UTF_8)))
 
-  /** When every file is uniform ([[FileHead]]) and all share one leading
-    * block — the normal shape of a written log set — the header is
+  /** When every file is uniform ([[FileHead]]) and all share one header
+    * — the normal shape of a written log set — the header is
     * parsed once on the driver and data lines decode in one byte-level
     * pass straight to InternalRows, no value-model detour. Other inputs
     * take the two-pass typed route. Discovery is one streaming byte scan
@@ -413,7 +404,7 @@ object ZeekIO {
     val lines = spark.read.textFile(path)
     val files = discovery(spark, path)
     val uniform = files.nonEmpty &&
-      files.forall { case (_, _, h) => h.uniform && h.lead == files.head._3.lead }
+      files.forall { case (_, _, h) => h.uniform && h.key == files.head._3.key }
     if (uniform) decodeBlockNative(spark, parseHeader(files.head._3.lead), lines)
     else {
       // directives interleave with data (schema/path changes mid-stream —
@@ -441,6 +432,43 @@ object ZeekIO {
         }
       ZsonReader.fromRDD(spark, rdd)
     }
+  }
+
+  /** A zeek epoch-decimal cell (`[+-]sec[.frac]`, surrounding blanks
+    * allowed) in units of 10^-digits s, read from its bytes in long
+    * arithmetic: fraction digits past `digits` are cut, as the value is
+    * truncated toward zero. Null when the cell is not one, or its seconds
+    * would not fit.
+    */
+  private def epochUnits(u: UTF8String, digits: Int): java.lang.Long = {
+    var unit = 1L
+    var k = 0
+    while (k < digits) { unit *= 10; k += 1 }
+    var i = 0
+    var n = u.numBytes
+    while (i < n && u.getByte(i) <= ' ') i += 1
+    while (n > i && u.getByte(n - 1) <= ' ') n -= 1
+    val neg = i < n && u.getByte(i) == '-'
+    if (i < n && (neg || u.getByte(i) == '+')) i += 1
+    var sec = 0L
+    var seen = 0
+    while (i < n && u.getByte(i) >= '0' && u.getByte(i) <= '9') {
+      sec = sec * 10 + (u.getByte(i) - '0')
+      if (sec >= Long.MaxValue / unit) return null
+      seen += 1; i += 1
+    }
+    var frac = 0L
+    var scale = unit
+    if (i < n && u.getByte(i) == '.') {
+      i += 1
+      while (i < n && u.getByte(i) >= '0' && u.getByte(i) <= '9') {
+        if (scale > 1) { scale /= 10; frac += (u.getByte(i) - '0') * scale }
+        seen += 1; i += 1
+      }
+    }
+    if (i < n || seen == 0) return null
+    val v = sec * unit + frac
+    java.lang.Long.valueOf(if (neg) -v else v)
   }
 
   /** A separator longer than one byte, past the decoder's scan for its
@@ -550,10 +578,6 @@ object ZeekIO {
               case _ => null
             }
         }
-      def toEpoch(s: String, unitPerSec: Double): Any = toDoubleOrNull(s) match {
-        case d: java.lang.Double => java.lang.Long.valueOf((d.doubleValue() * unitPerSec).toLong)
-        case _ => null
-      }
       def stringCell(cu: UTF8String): UTF8String =
         if (cu.equals(emptyU)) UTF8String.EMPTY_UTF8
         else {
@@ -601,8 +625,8 @@ object ZeekIO {
       }
       // per-column decoders compiled once — no per-cell type-string match
       val decoders: Array[UTF8String => Any] = typesArr.map {
-        case "time" => cu => toEpoch(cu.toString, 1e6)
-        case "interval" => cu => toEpoch(cu.toString, 1e9)
+        case "time" => epochUnits(_, 6)
+        case "interval" => epochUnits(_, 9)
         case "count" | "int" | "port" => toLongOrNull _
         case "double" => cu => toDoubleOrNull(cu.toString)
         case "bool" => cu =>
@@ -645,156 +669,21 @@ object ZeekIO {
 
   // ---- writer ----------------------------------------------------------------
 
-  private def zeekTypeOf(dt: DataType): String = dt match {
-    case LongType | IntegerType | ShortType | ByteType => "int"
-    case DoubleType | FloatType => "double"
-    case BooleanType => "bool"
-    case TimestampType | TimestampNTZType => "time"
-    case ArrayType(_, _) => "vector[string]"
-    case _ => "string"
-  }
-
-  /** zed → zeek type names (zeekio writer.go zeekTypeOfZed). */
-  private def zeekTypeOfZ(t: ZType): String = t match {
-    case ZType.Named("port", _) => "port"
-    case ZType.Named(_, inner) => zeekTypeOfZ(inner)
-    case ZType.Prim("ip") => "addr"
-    case ZType.Prim("net") => "subnet"
-    case ZType.Prim("time") => "time"
-    case ZType.Prim("duration") => "interval"
-    case ZType.Prim("bool") => "bool"
-    case ZType.Prim(p) if p.startsWith("uint") => "count"
-    case ZType.Prim(p) if p.startsWith("int") => "int"
-    case ZType.Prim(p) if p.startsWith("float") || p == "decimal" => "double"
-    case ZType.SetT(e) => s"set[${zeekTypeOfZ(e)}]"
-    case ZType.Arr(e) => s"vector[${zeekTypeOfZ(e)}]"
-    case ZType.EnumT(_) => "enum"
-    case _ => "string"
-  }
-
-  /** "%.6f" of `us` microseconds as seconds, integer-rendered: sign,
-    * seconds, '.', zero-padded 6-digit µs — no java.util.Formatter in the
-    * per-row path (it was ~40% of write_zeek's samples). Byte-equal to
-    * `format_string("%.6f", us/1e6)` while |us| < 4e15: the exact value
-    * sits ON the 1e-6 grid and the double's representation error there is
-    * under half a grid step, so the Formatter's rounded rendering IS the
-    * grid point. Beyond the guard the Formatter fallback keeps parity.
+  /** zed's zeek writer (zio/zeekio/writer.go) through the one text
+    * renderer (TextWriter): one part file per partition, each opening with
+    * its own directive header — zeek tooling and this reader (a repeated
+    * identical header keeps the byte-level route) accept multi-file logs,
+    * so the write stays fully parallel. Nested records flatten to dotted
+    * `#fields`; each record type and `_path` gets its header when it
+    * changes.
     */
-  private def micros6(us: Column): Column = {
-    def pos(u: Column): Column = {
-      val frac = pmod(u, lit(1000000L))
-      // u - frac is an exact multiple of 1e6 within the guard, so the
-      // double division is exact and the long cast loses nothing
-      concat(((u - frac) / lit(1e6)).cast(LongType).cast(StringType),
-        lit("."), lpad(frac.cast(StringType), 6, "0"))
-    }
-    val safe = abs(us) < lit(4000000000000000L)
-    when(safe && us >= 0, pos(us))
-      .when(safe, concat(lit("-"), pos(-us)))
-      .otherwise(format_string("%.6f", us.cast(DoubleType) / 1e6))
-  }
-
-  private def encodeCol(c: Column, dt: DataType): Column = {
-    val enc = dt match {
-      case TimestampType | TimestampNTZType =>
-        micros6(unix_micros(c))
-      case BooleanType => when(c, "T").otherwise("F")
-      case ArrayType(_, _) =>
-        when(size(c) === 0, lit("(empty)")).otherwise(array_join(c.cast(ArrayType(StringType)), ","))
-      case st: StructType if ZsonIO.isVariantType(st) => graft.operators.Het.render(c)
-      case _ => c.cast(StringType)
-    }
-    coalesce(enc, lit("-"))
-  }
-
-  /** Leaf (column, dotted name, type) triples — nested records flatten to
-    * dotted #fields names (zeekio writer.go).
-    */
-  private def leaves(prefix: String, c: Column, dt: DataType): Seq[(String, Column, DataType)] =
-    dt match {
-      case st: StructType if !ZsonIO.isVariantType(st) =>
-        st.fields.toIndexedSeq.flatMap(f =>
-          leaves(s"$prefix.${f.name}", c.getField(f.name), f.dataType))
-      case _ => Seq((prefix, c, dt))
-    }
+  def write(df: DataFrame, path: String): Unit = TextWriter.write(df, path, TextWriter.Zeek)
 
   /** Gzip-compressed twin of [[write]] — the reader auto-detects gzip
     * per file (lineReader), so a compressed log set reads back through
     * the same path. Used where the text form would exceed disk (the
     * sf10 scale smoke's 30 GB fixture).
     */
-  def writeGzip(df: DataFrame, path: String): Unit = write(df, path, gzip = true)
-
-  def write(df: DataFrame, path: String): Unit = write(df, path, gzip = false)
-
-  private def write(df: DataFrame, path: String, gzip: Boolean): Unit = {
-    import df.sparkSession.implicits._
-    val het = graft.operators.Het
-    val hasPath = df.columns.contains("_path")
-    val fields = df.schema.fields.toIndexedSeq
-      .filterNot(f => f.name == het.typeTag || f.name == "_path")
-    val cols = fields.flatMap(f => leaves(f.name, col(s"`${f.name}`"), f.dataType))
-    // zed types from the shape tag (first shape) give faithful zeek
-    // #types (addr/port/interval); fall back to the Spark type mapping
-    val zedTypes: Map[String, ZType] = df.schema.fields.find(_.name == het.typeTag)
-      .filter(_.metadata.contains("shapes"))
-      .flatMap(f => f.metadata.getStringArray("shapes").headOption)
-      .flatMap { t =>
-        try ZType.strip(ZsonParser.parseType(ZType.stripNullWrap(t))) match {
-          case r: ZType.Rec =>
-            def walk(prefix: String, zt: ZType): Seq[(String, ZType)] =
-              ZType.strip(zt) match {
-                case ZType.Rec(fs) => fs.flatMap { case (n, ft) =>
-                  walk(if (prefix.isEmpty) n else s"$prefix.$n", ft)
-                }
-                case other => Seq(prefix -> zt)
-              }
-            Some(walk("", r).toMap)
-          case _ => None
-        } catch { case _: Exception => None }
-      }.getOrElse(Map.empty)
-    def typeName(name: String, dt: DataType): String =
-      zedTypes.get(name).map(zeekTypeOfZ).getOrElse(zeekTypeOf(dt))
-    def encode(name: String, c: Column, dt: DataType): Column =
-      if (zedTypes.get(name).map(ZType.strip).contains(ZType.Prim("duration")) && dt == LongType) {
-        // ns → interval seconds. µs-aligned ns (the common case) render on
-        // the exact integer path; sub-µs ns keep the Formatter so its
-        // double-rounding of the 7th-9th decimals stays byte-identical
-        val sub = pmod(c, lit(1000L))
-        // 9e15 < 2^53: ns values beyond that lose integer exactness in the
-        // double division, so they stay on the Formatter path
-        val intOk = sub === 0 && abs(c) < lit(9000000000000000L)
-        coalesce(
-          when(intOk, micros6(((c - sub) / lit(1e3)).cast(LongType)))
-            .otherwise(format_string("%.6f", c.cast(DoubleType) / 1e9)),
-          lit("-"))
-      } else encodeCol(c, dt)
-    val pathVal: Option[String] =
-      if (hasPath)
-        try Option(df.select(col("_path")).limit(1).collect()).flatMap(_.headOption)
-          .map(_.getString(0))
-        catch { case _: Exception => None }
-      else None
-    val header = Seq(
-      "#separator \\x09",
-      "#set_separator\t,",
-      "#empty_field\t(empty)",
-      "#unset_field\t-") ++
-      pathVal.map(p => s"#path\t$p").toSeq ++ Seq(
-      "#fields\t" + cols.map(_._1).mkString("\t"),
-      "#types\t" + cols.map(c => typeName(c._1, c._3)).mkString("\t"))
-    val body = df.select(concat_ws("\t",
-      cols.map(c => encode(c._1, c._2, c._3)): _*).as("value")).as[String]
-    // each PART carries its own directive header — zeek tooling (and this
-    // engine's reader, whose interleaved-directive path handles repeated
-    // headers) accepts multi-file logs, so the write stays fully
-    // parallel instead of serializing behind one task
-    val rdd = body.rdd.mapPartitions { it =>
-      if (it.hasNext) header.iterator ++ it else it
-    }
-    val writer = df.sparkSession
-      .createDataset(rdd)(org.apache.spark.sql.Encoders.STRING)
-      .write.mode("overwrite")
-    (if (gzip) writer.option("compression", "gzip") else writer).text(path)
-  }
+  def writeGzip(df: DataFrame, path: String): Unit =
+    TextWriter.write(df, path, TextWriter.Zeek, gzip = true)
 }

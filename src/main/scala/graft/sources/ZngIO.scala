@@ -490,24 +490,33 @@ object ZngIO {
         .toLeft(shapes.zip(built.collect { case Right(e) => e }).toMap)
     }
 
-  private def compileShape(tag: String, sch: StructType)
-      : Either[String, (ZT, Array[(Int, FieldEnc)])] =
+  /** A record shape's fields in shape order, each with its zed type and
+    * its column's ordinal in `sch` (-1: no column). Left names why the tag
+    * is not one. The ZNG encoders and the text renderer (TextWriter) both
+    * compile shapes from it.
+    */
+  private[graft] def shapeColumns(tag: String, sch: StructType)
+      : Either[String, (ZType, Vector[(String, ZType, Int)])] =
     try {
       val zt0 = ZsonParser.parseType(ZType.stripNullWrap(tag))
       ZType.strip(zt0) match {
-        case ZType.Rec(fs) =>
-          val colEncs = fs.map { case (n, ft) =>
-            val ci = sch.fieldNames.indexOf(n)
-            if (ci < 0) Left(s"field $n has no column")
-            else {
-              val dt = sch.fields(ci).dataType
-              shapeFieldEncoder(ft, dt).map(ci -> _).toRight(encoderGap(n, ft, dt))
-            }
-          }
-          colEncs.collectFirst { case Left(why) => why }
-            .toLeft(toZT(zt0) -> colEncs.collect { case Right(e) => e }.toArray)
+        case ZType.Rec(fs) => Right(zt0 -> fs.map { case (n, ft) => (n, ft, sch.fieldNames.indexOf(n)) })
         case _ => Left("not a record")
       }
+    } catch { case e: Exception => Left(s"does not compile: ${e.getMessage}") }
+
+  private def compileShape(tag: String, sch: StructType)
+      : Either[String, (ZT, Array[(Int, FieldEnc)])] =
+    try shapeColumns(tag, sch).flatMap { case (zt0, fs) =>
+      val colEncs = fs.map { case (n, ft, ci) =>
+        if (ci < 0) Left(s"field $n has no column")
+        else {
+          val dt = sch.fields(ci).dataType
+          shapeFieldEncoder(ft, dt).map(ci -> _).toRight(encoderGap(n, ft, dt))
+        }
+      }
+      colEncs.collectFirst { case Left(why) => why }
+        .toLeft(toZT(zt0) -> colEncs.collect { case Right(e) => e }.toArray)
     } catch { case e: Exception => Left(s"does not compile: ${e.getMessage}") }
 
   /** The innermost field under `name` whose (zed type, Spark type) pair

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.functions._
 
-import graft.sources.{Formats, Lake, ZsonIO}
+import graft.sources.{Formats, Lake, ZFormat, ZsonIO}
 
 /** I/O surface tests: ZSON round-trip, format auto-detect, table/text
   * writers, lake-lite load/scan (reference: zio/, lake/).
@@ -83,9 +83,9 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("table/text writers format rows") {
     val region = GraftSession.table(spark, dir, "region").orderBy("r_regionkey")
-    val text = Formats.textLines(region).collect()
+    val text = ZFormat.textLines(region)
     assert(text.exists(_.startsWith("0\tAFRICA")))
-    val table = Formats.tableLines(region).collect()
+    val table = ZFormat.tableLines(region).collect()
     assert(table.head.startsWith("r_regionkey"))
     // Go-tabwriter alignment: non-final columns pad to block width + 1,
     // so every value column starts at the same offset

@@ -79,11 +79,11 @@ object ZtestHarness {
     val res = Graft.queryOn(df, c.zed)
     val f = c.outputFlags
     if (f.contains("-f csv")) graft.sources.ZFormat.csvLines(res)
-    else if (f.contains("-f zeek")) graft.sources.ZFormat.zeekLines(res).collect().toSeq
+    else if (f.contains("-f zeek")) graft.sources.ZFormat.zeekLines(res)
     else if (f.contains("-f zjson")) graft.sources.ZjsonIO.typedLines(res)
     else if (f.contains("-f json")) graft.sources.ZFormat.jsonLines(res)
-    else if (f.contains("-f table")) graft.sources.Formats.tableLines(res).collect().toSeq
-    else if (f.contains("-f text")) graft.sources.Formats.textLines(res).collect().toSeq
+    else if (f.contains("-f table")) graft.sources.ZFormat.tableLines(res).collect().toSeq
+    else if (f.contains("-f text")) graft.sources.ZFormat.textLines(res)
     else ZsonIO.toZson(res).collect().toSeq
   }
 
