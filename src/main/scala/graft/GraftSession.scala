@@ -16,13 +16,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * experimental.extraOptimizations registration in [[GraftSession.ready]]
   * runs in the LAST batch and stays as the idempotent safety net for
   * sessions created without this config. It also injects the AQE
-  * query-stage preparation rule [[graft.operators.OneTaskSort]], which has
-  * no such fallback: a session without this config keeps Spark's plan.
+  * query-stage preparation rule [[graft.operators.OneTaskSort]] and the
+  * resolution rule [[graft.functions.VariantNumericCast]], which have no
+  * such fallback: a session without this config keeps Spark's plan and
+  * refuses a numeric cast of a variant column.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => graft.functions.CollapseVariantAccess)
     e.injectQueryStagePrepRule(_ => graft.operators.OneTaskSort)
+    e.injectResolutionRule(_ => graft.functions.VariantNumericCast)
   }
 }
 

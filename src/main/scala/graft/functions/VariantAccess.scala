@@ -1,13 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{CaseWhen, CreateNamedStruct, Expression, GenericInternalRow, GetStructField, Literal, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{And, CaseWhen, Cast, CreateNamedStruct, Expression, GenericInternalRow, GetStructField, If, IsNotNull, Literal, Or, StartsWith, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import org.apache.spark.sql.types.{DataType, NumericType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.Het
@@ -1077,6 +1077,29 @@ object VariantAccess {
       case 2 | 4 | 5 => full.getUTF8String(ordinal)
       case _ => full.getArray(ordinal)
     }
+  }
+}
+
+/** A Spark cast of a boxed variant to a number reads the boxed number:
+  * the exact digits in `z` for an integer past double precision, else
+  * `n`; a value that is no number casts to null, as any failed cast does
+  * here. Without it the analyzer refuses to cast the carrier struct, so a
+  * column holding int64 in some rows and float64 in others (a JSON float
+  * field that zed prints as `73` where the value is whole) could not be
+  * read as one numeric type. Registered as a resolution rule
+  * (GraftExtensions).
+  */
+object VariantNumericCast extends Rule[LogicalPlan] {
+  private def part(v: Expression, name: String): Expression =
+    GetStructField(v, Het.variantType.fieldIndex(name), Some(name))
+
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveExpressions {
+    case c @ Cast(v, _: NumericType, _, _)
+        if v.resolved && graft.sources.ZsonIO.isVariantType(v.dataType) =>
+      val t = part(v, "t")
+      val integer = Or(StartsWith(t, Literal("int")), StartsWith(t, Literal("uint")))
+      If(And(IsNotNull(part(v, "z")), integer), c.copy(child = part(v, "z")),
+        c.copy(child = part(v, "n")))
   }
 }
 

@@ -8,10 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * pretty-printed or not — into the typed value model, then hands off to
   * the same shape-merging frame builder as ZSON:
   *   - numbers become int64 when they parse exactly as one, else float64
-  *     (reader.go:58-64); within one stream (a file, or the text given),
-  *     a record field holding a float64 in any record reads its integer
-  *     literals as float64 too, so a float column that zed's JSON writer
-  *     prints with whole values as integers (`73`) reads back as floats
+  *     (reader.go:58-64)
   *   - object keys keep first-seen order; a duplicated key keeps its LAST
   *     value at the FIRST position (builder.go removeDuplicateItems, the
   *     ECMAScript 2015 / jq rule)
@@ -81,29 +78,7 @@ object JsonIO {
   }
 
   def fromText(spark: SparkSession, text: String): DataFrame =
-    ZsonReader.fromValues(spark, floatFields(parse(text)), tag = true)
-
-  /** One stream's values with every int64 of a record field that holds a
-    * float64 somewhere in the stream as float64 (fields by name path).
-    */
-  private def floatFields(vs: Vector[ZValue]): Vector[ZValue] = {
-    def paths(v: ZValue, at: Vector[String]): Iterator[Vector[String]] = v match {
-      case VRec(fs) => fs.iterator.flatMap {
-        case (n, VFloat(_, _)) => Iterator.single(at :+ n)
-        case (n, x) => paths(x, at :+ n)
-      }
-      case _ => Iterator.empty
-    }
-    val floats = vs.iterator.flatMap(paths(_, Vector.empty)).toSet
-    def widen(v: ZValue, at: Vector[String]): ZValue = v match {
-      case VRec(fs) => VRec(fs.map {
-        case (n, VInt(i, _)) if floats(at :+ n) => n -> VFloat(i.toDouble, "float64")
-        case (n, x) => n -> widen(x, at :+ n)
-      })
-      case other => other
-    }
-    if (floats.isEmpty) vs else vs.map(widen(_, Vector.empty))
-  }
+    ZsonReader.fromValues(spark, parse(text), tag = true)
 
   /** Distributed zed-typed JSON read: each file parses executor-side
     * (files are self-contained JSON streams, so they distribute one task
@@ -116,8 +91,8 @@ object JsonIO {
     import spark.implicits._
     val rdd = spark.read.format("binaryFile").load(path)
       .select("content").as[Array[Byte]].rdd
-      .flatMap(b => floatFields(parse(new String(Gzip.maybeGunzip(b),
-        java.nio.charset.StandardCharsets.UTF_8))))
+      .flatMap(b => parse(new String(Gzip.maybeGunzip(b),
+        java.nio.charset.StandardCharsets.UTF_8)))
     ZsonReader.fromRDD(spark, rdd)
   }
 }

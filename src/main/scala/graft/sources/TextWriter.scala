@@ -3,7 +3,7 @@ package graft.sources
 import java.io.OutputStream
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.execution.SQLExecution
@@ -79,20 +79,16 @@ private[graft] object TextWriter {
   private final case class ZeekHead(path: String, sig: Vector[(String, String)])(
       val fields: String, val types: String)
 
-  private def zeekHead(path: String, leaves: Seq[(String, ZType)]): ZeekHead = {
-    val cols = leaves.filterNot(_._1 == "_path")
-    ZeekHead(path, leaves.map { case (n, t) => n -> ZType.text(t) }.toVector)(
-      "#fields\t" + cols.map(_._1).mkString("\t"),
-      "#types\t" + cols.map(c => ZFormat.zeekTypeOfNamed(c._2)).mkString("\t"))
-  }
-
   // ---- compiled shapes -------------------------------------------------------
 
   private type Put = (ByteBuf, SpecializedGetters, Int) => Unit
 
-  /** A compiled value; `value` is the value model's reading of it. */
+  /** A compiled value; `value` is the value model's reading of it from
+    * an InternalRow or an external Row.
+    */
   private sealed abstract class Node(val zt: ZType) {
     def value(g: SpecializedGetters, i: Int): ZValue
+    def value(r: Row, i: Int): ZValue
   }
 
   /** A record carried by a Spark struct: its fields with their ordinals
@@ -104,14 +100,20 @@ private[graft] object TextWriter {
     def struct(g: SpecializedGetters, i: Int): InternalRow = g.getStruct(i, width)
     def value(g: SpecializedGetters, i: Int): ZValue =
       if (g.isNullAt(i)) VNull(zt) else record(struct(g, i), names.length)
+    def value(r: Row, i: Int): ZValue =
+      if (r.isNullAt(i)) VNull(zt) else record(r.getStruct(i), names.length)
     /** The first `own` fields, then the others that are non-null; a named
       * record keeps its name.
       */
-    def record(r: InternalRow, own: Int): ZValue = {
+    def record(r: InternalRow, own: Int): ZValue =
+      build(own, r.isNullAt, k => kids(k).value(r, ords(k)))
+    def record(r: Row, own: Int): ZValue =
+      build(own, r.isNullAt, k => kids(k).value(r, ords(k)))
+    private def build(own: Int, isNull: Int => Boolean, kid: Int => ZValue): ZValue = {
       val v = VRec(names.indices.toVector.flatMap { k =>
         val o = ords(k)
-        if (k >= own && r.isNullAt(o)) None
-        else Some(names(k) -> (if (o < 0) VNull(kids(k).zt) else kids(k).value(r, o)))
+        if (k >= own && isNull(o)) None
+        else Some(names(k) -> (if (o < 0) VNull(kids(k).zt) else kid(k)))
       })
       zt match { case n: ZType.Named => VTyped(v, n); case _ => v }
     }
@@ -124,6 +126,8 @@ private[graft] object TextWriter {
     private val toScala = CatalystTypeConverters.createToScalaConverter(dt)
     def value(g: SpecializedGetters, i: Int): ZValue =
       if (g.isNullAt(i)) VNull(zt) else ZValue.fromExternal(toScala(g.get(i, dt)), dt, zt)
+    def value(r: Row, i: Int): ZValue =
+      if (r.isNullAt(i)) VNull(zt) else ZValue.fromExternal(r.get(i), dt, zt)
   }
 
   private def ascii(o: ByteBuf, s: String): Unit = {
@@ -231,16 +235,29 @@ private[graft] object TextWriter {
     case _ => new Leaf(zt, dt, if (fmt == null) null else put(fmt, zt, dt, top = true))
   }
 
-  /** A typed leaf of a record row: its dotted name, and the records and
-    * ordinals on the way to it from the row.
+  /** One printed column of a record row, flattened: a leaf of the row's
+    * shape (FlatLeaf) or a value that prints through ZFormat's rules
+    * (ValueCol). `zt` is the column's type in a zeek header.
     */
-  private final class FlatLeaf(val name: String, val leaf: Leaf, recs: Array[RecN],
-      ords: Array[Int]) {
+  private sealed abstract class Col(val name: String, val zt: ZType)
+
+  private final class ValueCol(name: String, zt: ZType, val v: ZValue) extends Col(name, zt)
+
+  /** A leaf of a record row: its dotted name, and the records and
+    * ordinals on the way to it from the row (a last ordinal of -1: the
+    * struct has no such field). `optional`: under a column that prints
+    * only when non-null.
+    */
+  private final class FlatLeaf(name: String, val leaf: Leaf, recs: Array[RecN],
+      ords: Array[Int], val optional: Boolean) extends Col(name, leaf.zt) {
     val ord: Int = ords.last
+    val top: Int = ords(0)
+    val isString: Boolean = ZType.strip(zt) == ZType.Prim("string")
     /** The struct holding the leaf in row `r`; null when it, or a record
       * above it, is null.
       */
     def holder(r: InternalRow): SpecializedGetters = {
+      if (ord < 0) return null
       var g: SpecializedGetters = r
       var d = 0
       while (d < ords.length - 1) {
@@ -252,39 +269,72 @@ private[graft] object TextWriter {
     }
   }
 
+  /** A record row's columns and the headers they make. */
+  private final class Cols(val cols: Array[Col], sep: Char) {
+    val pathAt: Int = cols.indexWhere(_.name == "_path")
+    lazy val zeekSig: Vector[(String, String)] = cols.map(c => c.name -> ZType.text(c.zt)).toVector
+    lazy val zeek: ZeekHead = {
+      val own = cols.filterNot(_.name == "_path")
+      ZeekHead("", zeekSig)("#fields\t" + own.map(_.name).mkString("\t"),
+        "#types\t" + own.map(c => ZFormat.zeekTypeOfNamed(c.zt)).mkString("\t"))
+    }
+    lazy val csv: String = cols.map(c => ZFormat.csvQuote(c.name, sep)).mkString(sep.toString)
+  }
+
+  private def valueCols(leaves: Seq[(String, ZValue)], sep: Char): Cols =
+    new Cols(leaves.map { case (n, v) => new ValueCol(n, ZFormat.leafType(v), v): Col }.toArray, sep)
+
   /** A row's plan: a record over the row's columns (`own` fields, then
     * columns printed only when non-null), a bare value in one column, or
     * a typed null.
     */
-  private final class Shape(fmt: Fmt, val rec: RecN, val own: Int, bare: Node, bareOrd: Int,
+  private final class Shape(sep: Char, val rec: RecN, val own: Int, bare: Node, bareOrd: Int,
       nullRow: ZValue) {
     def value(r: InternalRow): ZValue =
       if (nullRow != null) nullRow
       else if (bare != null) bare.value(r, bareOrd)
       else rec.record(r, own)
 
-    /** The flattened leaves, when the row is a record with no optional
-      * column and every leaf prints typed; else null.
-      */
-    val flat: Array[FlatLeaf] = {
-      def go(prefix: String, n: RecN, recs: Array[RecN], ords: Array[Int]): Seq[FlatLeaf] =
+    def value(r: Row): ZValue =
+      if (nullRow != null) nullRow
+      else if (bare != null) bare.value(r, bareOrd)
+      else rec.record(r, own)
+
+    /** A record row's leaves, flattened. */
+    private val flat: Array[FlatLeaf] = {
+      def go(prefix: String, n: RecN, recs: Array[RecN], ords: Array[Int], opt: Boolean): Seq[FlatLeaf] =
         n.names.indices.flatMap { k =>
+          val o = opt || recs.length == 1 && k >= own
           (n.kids(k), n.ords(k)) match {
-            case (r: RecN, o) if o >= 0 => go(s"$prefix${n.names(k)}.", r, recs :+ r, ords :+ o)
-            case (l: Leaf, o) if o >= 0 && l.put != null => Seq(new FlatLeaf(prefix + n.names(k), l, recs, ords :+ o))
-            case _ => Seq(null)
+            case (r: RecN, i) => go(s"$prefix${n.names(k)}.", r, recs :+ r, ords :+ i, o)
+            case (l: Leaf, i) => Seq(new FlatLeaf(prefix + n.names(k), l, recs, ords :+ i, o))
           }
         }
-      val all = if (rec == null || own < rec.names.length) Seq(null) else go("", rec, Array(rec), Array.empty)
-      if (all.contains(null)) null else all.toArray
+      if (rec == null) null else go("", rec, Array(rec), Array.empty, opt = false).toArray
     }
-    val pathLeaf: Int = if (flat == null) -1 else flat.indexWhere(_.name == "_path")
-    val pathIsString: Boolean = pathLeaf >= 0 && ZType.strip(flat(pathLeaf).leaf.zt) == ZType.Prim("string")
-    lazy val zeek: ZeekHead = zeekHead("", flat.map(l => l.name -> l.leaf.zt).toSeq)
-    lazy val csv: String = fmt match {
-      case Csv(sep) => flat.map(l => ZFormat.csvQuote(l.name, sep)).mkString(sep.toString)
-      case _ => null
-    }
+
+    /** The columns of a shape whose leaves all print typed and print in
+      * every row; null when the columns depend on the row.
+      */
+    val fixed: Cols =
+      if (flat == null || flat.exists(l => l.optional || l.leaf.put == null)) null
+      else new Cols(flat.toArray[Col], sep)
+
+    /** Row `r`'s columns: a typed leaf as itself, an untyped one as its
+      * value, flattened (its type is its value's), and an optional column
+      * only when non-null.
+      */
+    def cols(r: InternalRow): Cols =
+      if (fixed != null) fixed
+      else new Cols(flat.flatMap { l =>
+        if (l.optional && r.isNullAt(l.top)) Nil
+        else if (l.leaf.put != null) Seq(l)
+        else {
+          val g = l.holder(r)
+          val v = if (g == null) VNull(l.zt) else l.leaf.value(g, l.ord)
+          valueCols(ZFormat.flatten(VRec(Vector(l.name -> v))), sep).cols.toSeq
+        }
+      }, sep)
   }
 
   /** Compiles each distinct shape of one frame as the value model reads
@@ -293,7 +343,9 @@ private[graft] object TextWriter {
     * tag as a typed null; a non-record tag as the `this` column; an
     * untagged frame as its schema's zed type. One per partition.
     */
-  private final class Shapes(fmt: Fmt, schema: StructType) {
+  private final class Shapes(fmt: Fmt, schema: StructType, typed: Boolean) {
+    private val sep = fmt match { case Csv(c) => c; case _ => '\t' }
+    private val writers = if (typed) fmt else null
     private val tagIdx = schema.fieldNames.indexOf(graft.operators.Het.typeTag)
     private val fields = schema.fields.toIndexedSeq.zipWithIndex.filterNot { case (f, _) =>
       f.name == graft.operators.Het.typeTag || f.metadata.contains("graft.scopeVar") }
@@ -320,16 +372,16 @@ private[graft] object TextWriter {
           val own = cols.getOrElse(fs.flatMap { case (n, ft) => fields.find(_._1.name == n).map(c => (n, ft, c._2)) })
           val added = fields.filterNot { case (f, _) => inShapes(f.name) || f.name == "this" ||
             fs.exists(_._1 == f.name) }.map { case (f, i) => (f.name, colType(f), i) }
-          val all = (own ++ added).map { case (n, ft, i) => (n, node(fmt, ft, schema.fields(i).dataType), i) }
-          new Shape(fmt, new RecN(zt, all.map(_._1).toArray, all.map(_._3).toArray, all.map(_._2).toArray,
+          val all = (own ++ added).map { case (n, ft, i) => (n, node(writers, ft, schema.fields(i).dataType), i) }
+          new Shape(sep, new RecN(zt, all.map(_._1).toArray, all.map(_._3).toArray, all.map(_._2).toArray,
             schema.length), own.length, null, -1, null)
-        case (_, Some((f, i))) => new Shape(fmt, null, 0, node(fmt, zt, f.dataType), i, null)
+        case (_, Some((f, i))) => new Shape(sep, null, 0, node(writers, zt, f.dataType), i, null)
         case _ => shapeOf(ZType.Rec(fields.map { case (f, _) => f.name -> colType(f) }.toVector))
       }
 
     private def compile(tag: String): Shape =
       if (tag == null) shapeOf(untagged)
-      else if (ZType.isNullWrap(tag)) new Shape(fmt, null, 0, null, -1, VNull(
+      else if (ZType.isNullWrap(tag)) new Shape(sep, null, 0, null, -1, VNull(
         try ZsonParser.parseType(ZType.stripNullWrap(tag)) catch { case _: Exception => untagged }))
       else ZngIO.shapeColumns(tag, schema) match {
         case Right((zt, cols)) =>
@@ -344,23 +396,34 @@ private[graft] object TextWriter {
     private lazy val noTag = compile(null)
 
     def apply(r: InternalRow): Shape =
-      if (tagIdx < 0 || r.isNullAt(tagIdx)) noTag
-      else {
-        val t = r.getUTF8String(tagIdx)
-        if (lastTag == null || !lastTag.equals(t)) {
-          lastTag = t.clone() // the scan buffer behind t is reused
-          last = byTag.get(lastTag)
-          if (last == null) { last = compile(lastTag.toString); byTag.put(lastTag, last) }
-        }
-        last
+      if (tagIdx < 0 || r.isNullAt(tagIdx)) noTag else tagged(r.getUTF8String(tagIdx))
+
+    def apply(r: Row): Shape =
+      if (tagIdx < 0 || r.isNullAt(tagIdx)) noTag else tagged(UTF8String.fromString(r.getString(tagIdx)))
+
+    private def tagged(t: UTF8String): Shape = {
+      if (lastTag == null || !lastTag.equals(t)) {
+        lastTag = t.clone() // the scan buffer behind t is reused
+        last = byTag.get(lastTag)
+        if (last == null) { last = compile(lastTag.toString); byTag.put(lastTag, last) }
       }
+      last
+    }
   }
 
   /** The value model's reading of rows of `schema` (tag and scope
     * variables left out); one reader per thread.
     */
   def values(schema: StructType): InternalRow => ZValue = {
-    val shapes = new Shapes(null, schema)
+    val shapes = new Shapes(null, schema, typed = false)
+    r => shapes(r).value(r)
+  }
+
+  /** [[values]] for external Rows, read as they are (a row may carry
+    * columns past `schema`); one reader per thread.
+    */
+  def rowValues(schema: StructType): Row => ZValue = {
+    val shapes = new Shapes(null, schema, typed = false)
     r => shapes(r).value(r)
   }
 
@@ -373,8 +436,8 @@ private[graft] object TextWriter {
   final class Part(val lead: AnyRef, val leadFrom: Int, val leadTo: Int, val end: AnyRef,
       val failure: Throwable) extends Serializable
 
-  private final class Renderer(fmt: Fmt, schema: StructType, out: OutputStream) {
-    private val shapes = new Shapes(fmt, schema)
+  private final class Renderer(fmt: Fmt, schema: StructType, out: OutputStream, typed: Boolean) {
+    private val shapes = new Shapes(fmt, schema, typed)
     private val line = new ByteBuf(1 << 12)
     private var written = 0L
     private var cur: AnyRef = null
@@ -406,9 +469,17 @@ private[graft] object TextWriter {
 
     def row(r: InternalRow): Unit = {
       val s = shapes(r)
-      if (fmt == Json && s.rec != null) { jsonRec(s.rec, r, s.own); emit() }
-      else if (s.flat != null) flatRow(s, r)
-      else valueRow(s.value(r))
+      if (fmt == Json) {
+        if (s.rec != null) jsonRec(s.rec, r, s.own) else utf8(line, ZFormat.jsonText(s.value(r)))
+        emit()
+      } else if (s.rec != null) record(s.cols(r), r)
+      else {
+        val v = s.value(r)
+        if (unwrap(v).isInstanceOf[VRec]) record(valueCols(ZFormat.flatten(v), sep), r)
+        // zed's zeek writer errors on a non-record and the value prints;
+        // its csv writer errors and the row is skipped
+        else if (!fmt.isInstanceOf[Csv]) { utf8(line, ZFormat.zeekFormat(v)); emit() }
+      }
     }
 
     private def jsonRec(n: RecN, r: InternalRow, own: Int): Unit = {
@@ -431,56 +502,47 @@ private[graft] object TextWriter {
       line.writeByte('}')
     }
 
-    /** A record row whose leaves all print typed (zeek, csv, text). */
-    private def flatRow(s: Shape, r: InternalRow): Unit = {
-      val leaves = s.flat
+    /** A record row in zeek, csv or text: the header its columns make,
+      * then a typed leaf through its writer and any other column through
+      * the format's ZFormat rule.
+      */
+    private def record(c: Cols, r: InternalRow): Unit = {
       fmt match {
         case Zeek =>
-          val g = if (s.pathIsString) leaves(s.pathLeaf).holder(r) else null
-          val path = if (g == null) UTF8String.EMPTY_UTF8 else g.getUTF8String(leaves(s.pathLeaf).ord)
-          val c = cur.asInstanceOf[ZeekHead]
-          if (c == null || !curPath.equals(path) || (c.sig ne s.zeek.sig) && c.sig != s.zeek.sig) {
-            curPath = path.clone()
-            head(ZeekHead(curPath.toString, s.zeek.sig)(s.zeek.fields, s.zeek.types))
+          val path = if (c.pathAt < 0) UTF8String.EMPTY_UTF8 else c.cols(c.pathAt) match {
+            case l: FlatLeaf if l.isString =>
+              val g = l.holder(r)
+              if (g == null) UTF8String.EMPTY_UTF8 else g.getUTF8String(l.ord)
+            case v: ValueCol => unwrap(v.v) match {
+              case VStr(p) => UTF8String.fromString(p)
+              case _ => UTF8String.EMPTY_UTF8
+            }
+            case _ => UTF8String.EMPTY_UTF8
           }
-        case Csv(_) => head(s.csv)
+          val h = cur.asInstanceOf[ZeekHead]
+          if (h == null || !curPath.equals(path) || (h.sig ne c.zeekSig) && h.sig != c.zeekSig) {
+            curPath = path.clone()
+            head(ZeekHead(curPath.toString, c.zeekSig)(c.zeek.fields, c.zeek.types))
+          }
+        case Csv(_) => head(c.csv)
         case _ =>
       }
       var first = true
-      for (k <- leaves.indices if k != s.pathLeaf || fmt != Zeek) {
+      for (k <- c.cols.indices if k != c.pathAt || fmt != Zeek) {
         if (!first) line.writeByte(sep)
         first = false
-        val l = leaves(k)
-        val g = l.holder(r)
-        if (g == null) ascii(line, nul) else l.leaf.put(line, g, l.ord)
+        c.cols(k) match {
+          case l: FlatLeaf =>
+            val g = l.holder(r)
+            if (g == null) ascii(line, nul) else l.leaf.put(line, g, l.ord)
+          case v: ValueCol => utf8(line, fmt match {
+            case Zeek => ZFormat.zeekFormat(v.v)
+            case Csv(_) => ZFormat.csvQuote(ZFormat.csvCell(v.v), sep)
+            case _ => ZFormat.cellText(v.v, emptyNullTime = false)
+          })
+        }
       }
       emit()
-    }
-
-    /** Any other row: its ZValue through ZFormat's rules. */
-    private def valueRow(v: ZValue): Unit = {
-      val text: Option[String] = (fmt, unwrap(v)) match {
-        case (Json, _) => Some(ZFormat.jsonText(v))
-        case (Text, _) => Some(v match {
-          case VRec(_) | VTyped(_: VRec, _) =>
-            ZFormat.flatten(v).map(f => ZFormat.cellText(f._2, emptyNullTime = false)).mkString("\t")
-          case other => ZFormat.zeekFormat(other)
-        })
-        case (Zeek, rec @ VRec(_)) =>
-          val leaves = ZFormat.flatten(rec)
-          val path = leaves.collectFirst { case ("_path", p) => unwrap(p) }
-            .collect { case VStr(p) => p }.getOrElse("")
-          curPath = UTF8String.fromString(path)
-          head(zeekHead(path, leaves.map { case (n, lv) => n -> ZFormat.leafType(lv) }))
-          Some(leaves.filterNot(_._1 == "_path").map(c => ZFormat.zeekFormat(c._2)).mkString("\t"))
-        case (Zeek, other) => Some(ZFormat.zeekFormat(other)) // zed errors here; the value prints
-        case (Csv(c), rec @ VRec(_)) =>
-          val leaves = ZFormat.flatten(rec)
-          head(leaves.map(l => ZFormat.csvQuote(l._1, c)).mkString(c.toString))
-          Some(leaves.map(l => ZFormat.csvQuote(ZFormat.csvCell(l._2), c)).mkString(c.toString))
-        case _ => None // zed's csv writer errors on a non-record; it is skipped
-      }
-      text.foreach { t => utf8(line, t); emit() }
     }
   }
 
@@ -489,8 +551,8 @@ private[graft] object TextWriter {
     * the task as before.
     */
   private def render(fmt: Fmt, schema: StructType, rows: Iterator[InternalRow],
-      out: OutputStream): Part = {
-    val r = new Renderer(fmt, schema, out)
+      out: OutputStream, typed: Boolean = true): Part = {
+    val r = new Renderer(fmt, schema, out, typed)
     var failure: Throwable = null
     while (failure == null && rows.hasNext) {
       val row = rows.next()
@@ -545,17 +607,22 @@ private[graft] object TextWriter {
   }
 
   /** The frame's output as one stream of lines, handed to `use` while
-    * the frame's own query execution runs: partitions render on the
-    * executors and come to the driver one at a time, in order.
+    * the frame's own query execution runs. Partitions render on the
+    * executors; `oneJob` fetches them all in one job, else they come to
+    * the driver one at a time, in order, for a caller that streams.
+    * `typed` false prints every leaf through its value (a check of the
+    * typed writers against ZFormat's rules).
     */
-  def lines[A](df: DataFrame, fmt: Fmt)(use: Iterator[String] => A): A = {
+  def lines[A](df: DataFrame, fmt: Fmt, oneJob: Boolean = false, typed: Boolean = true)(
+      use: Iterator[String] => A): A = {
     val schema = df.schema
     SQLExecution.withNewExecutionId(df.queryExecution, Some("render")) {
-      use(stitch(fmt, schema, df.queryExecution.toRdd.mapPartitions { rows =>
+      val parts = df.queryExecution.toRdd.mapPartitions { rows =>
         val bytes = new java.io.ByteArrayOutputStream()
-        val p = render(fmt, schema, rows, bytes)
+        val p = render(fmt, schema, rows, bytes, typed)
         Iterator.single((p, bytes.toByteArray))
-      }.toLocalIterator))
+      }
+      use(stitch(fmt, schema, if (oneJob) parts.collect().iterator else parts.toLocalIterator))
     }
   }
 

@@ -1,8 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 
 /** The zed text rules of the reference's human-facing output formats —
@@ -36,20 +34,17 @@ object ZFormat {
 
   /** A serializable Row => ZValue for rows of `schema` (a row may carry
     * columns past it): the value model's one reading of a frame's rows,
-    * TextWriter.values — per-row shape from the __type tag when present
-    * (operator-added columns appended when non-null, mirroring
-    * ZsonIO.toZson), else the Spark schema's zed type. Each thread reads
-    * through its own compiled shapes.
+    * through the shape plans of TextWriter.values — per-row shape from
+    * the __type tag when present (operator-added columns appended when
+    * non-null, mirroring ZsonIO.toZson), else the Spark schema's zed type.
+    * Each thread reads through its own compiled shapes.
     */
   def rowValueFn(schema: StructType): Row => ZValue = new RowValues(schema)
 
   private final class RowValues(schema: StructType) extends (Row => ZValue) with Serializable {
     @transient private lazy val reader =
-      ThreadLocal.withInitial[InternalRow => ZValue](() => TextWriter.values(schema))
-    @transient private lazy val toInternal =
-      schema.fields.map(f => CatalystTypeConverters.createToCatalystConverter(f.dataType))
-    def apply(row: Row): ZValue =
-      reader.get()(new GenericInternalRow(Array.tabulate[Any](toInternal.length)(i => toInternal(i)(row.get(i)))))
+      ThreadLocal.withInitial[Row => ZValue](() => TextWriter.rowValues(schema))
+    def apply(row: Row): ZValue = reader.get()(row)
   }
 
   // ---- number / time formatting --------------------------------------------
@@ -454,13 +449,17 @@ object ZFormat {
   def lines[A](df: DataFrame, format: String)(use: Iterator[String] => A): A =
     TextWriter.lines(df, TextWriter.of(format))(use)
 
+  /** All of `df`'s lines in `format`, rendered in one job. */
+  private def allLines[A](df: DataFrame, format: String)(use: Iterator[String] => A): A =
+    TextWriter.lines(df, TextWriter.of(format), oneJob = true)(use)
+
   /** text (zio/textio/writer.go): flattened leaves joined by tabs. */
-  def textLines(df: DataFrame): Seq[String] = lines(df, "text")(_.toVector)
+  def textLines(df: DataFrame): Seq[String] = allLines(df, "text")(_.toVector)
 
   /** zeek (zio/zeekio/writer.go): one preamble, `#path` on a path change,
     * `#fields`/`#types` on a flattened-type change, `_path` not a column.
     */
-  def zeekLines(df: DataFrame): Seq[String] = lines(df, "zeek")(_.toVector)
+  def zeekLines(df: DataFrame): Seq[String] = allLines(df, "zeek")(_.toVector)
 
   // ---- table writer (zio/tableio/writer.go) --------------------------------
 
@@ -528,7 +527,7 @@ object ZFormat {
     */
   def csvLines(df: DataFrame, sep: String = ","): Seq[String] = {
     val out = Vector.newBuilder[String]
-    try lines(df, if (sep == "\t") "tsv" else "csv")(_.foreach(out += _))
+    try allLines(df, if (sep == "\t") "tsv" else "csv")(_.foreach(out += _))
     catch { case _: CsvShapeError => throw new CsvShapeError(out.result()) }
     out.result()
   }
@@ -650,7 +649,7 @@ object ZFormat {
     }
   }
 
-  def jsonLines(df: DataFrame): Seq[String] = jsonIter(df)(_.toVector)
+  def jsonLines(df: DataFrame): Seq[String] = allLines(df, "json")(_.toVector)
 
   /** Incremental form of [[jsonLines]]: rendered partitions reach the
     * driver one at a time, so a large response can stream chunked instead
