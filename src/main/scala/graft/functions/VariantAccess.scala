@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{DataType, NumericType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -1093,14 +1094,15 @@ object VariantNumericCast extends Rule[LogicalPlan] {
   private def part(v: Expression, name: String): Expression =
     GetStructField(v, Het.variantType.fieldIndex(name), Some(name))
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveExpressions {
-    case c @ Cast(v, _: NumericType, _, _)
-        if v.resolved && graft.sources.ZsonIO.isVariantType(v.dataType) =>
-      val t = part(v, "t")
-      val integer = Or(StartsWith(t, Literal("int")), StartsWith(t, Literal("uint")))
-      If(And(IsNotNull(part(v, "z")), integer), c.copy(child = part(v, "z")),
-        c.copy(child = part(v, "n")))
-  }
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.resolveExpressionsWithPruning(_.containsPattern(TreePattern.CAST)) {
+      case c @ Cast(v, _: NumericType, _, _)
+          if v.resolved && graft.sources.ZsonIO.isVariantType(v.dataType) =>
+        val t = part(v, "t")
+        val integer = Or(StartsWith(t, Literal("int")), StartsWith(t, Literal("uint")))
+        If(And(IsNotNull(part(v, "z")), integer), c.copy(child = part(v, "z")),
+          c.copy(child = part(v, "n")))
+    }
 }
 
 /** Optimizer rule: when only one field of a variant access result is
