@@ -179,7 +179,7 @@ object Cli {
           val lines = format match {
             case "zson" => ZsonIO.toZson(df).limit(maxRows).collect()
             case "text" => ZFormat.textLines(df.limit(maxRows)).toArray
-            case "table" => ZFormat.tableLines(df.limit(maxRows)).collect()
+            case "table" => ZFormat.tableLines(df.limit(maxRows))(_.toArray)
             case other =>
               throw new IllegalArgumentException(s"stdout format must be zson|text|table, got $other")
           }

@@ -634,7 +634,7 @@ final class SuperCmd(spark: SparkSession, host: SuperCmd.Host) {
             } else n.toString
           }
           graft.sources.ZFormat.jsonLines(res).map(l => pp(mapper.readTree(l), ""))
-        case "table" => graft.sources.ZFormat.tableLines(res).collect().toSeq
+        case "table" => graft.sources.ZFormat.tableLines(res)(_.toVector)
         case "text" => graft.sources.ZFormat.textLines(res)
         case "parquet" | "zng" | "vng" | "zst" | "arrows" | "arrow" =>
           if (f.format != "zng" && f.format != "vng" && f.format != "zst")

@@ -584,8 +584,6 @@ object FuseReshape {
 
 object VariantAccess {
 
-  private val W = Het.variantType.fields.length // 9: k,n,s,b,t,z,a,m,d
-
   /** zed error("missing") as a variant row (complex.go:28-40). */
   val errMissingRow: InternalRow = new GenericInternalRow(Array[Any](
     5, null, null, null, UTF8String.fromString("error(string)"),

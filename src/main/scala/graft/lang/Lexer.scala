@@ -42,7 +42,6 @@ object Lexer {
   // a trailing dot makes a float ("1." — zson.md implied float64) unless
   // it starts a field access / another dot
   private val numRe = """\d+(\.\d*)?([eE][+-]?\d+)?""".r
-  private val idRe = """[A-Za-z_][A-Za-z0-9_]*""".r
 
   /** A '/' can start a regex literal only where a value may begin. */
   private def regexCanStart(sofar: Vector[Token]): Boolean =

@@ -504,7 +504,6 @@ final class Parser(tokens: Vector[Token], source: String,
           })
         } else Stage.Fork(branches.result())
       case "from" | "file" | "get" =>
-        val kindTok = peek
         val kind = next().text
         val targetTok = peek
         val text0 = parseFromTarget()

@@ -825,7 +825,6 @@ object Zfmt {
         Expr.Call("__dagsearch", Seq(Expr.StringLit(quoteTerm(t))))
       case Expr.Call("__glob", Seq(Expr.StringLit(t))) =>
         Expr.Call("__dagsearch", Seq(Expr.StringLit(quoteTerm(t))))
-      case Expr.Path(Seq(w)) if false => e // bare paths stay field refs
       case Expr.Call("grep", Seq(Expr.StringLit(t))) =>
         Expr.Call("__dagsearch", Seq(Expr.StringLit(quoteTerm(t))))
       case Expr.Call("cast", Seq(x, Expr.StringLit(t))) =>

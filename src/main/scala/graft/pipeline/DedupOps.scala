@@ -57,13 +57,6 @@ object DedupOps {
         .otherwise(array().cast("array<bigint>"))
     }
 
-  /** One MinHash value: min over shingles of a salted 64-bit hash. The salt
-    * (hash index) is mixed in as an extra xxhash64 input — cheaper than a
-    * true permutation family and standard practice.
-    */
-  private def minhash(sh: Column, h: Int): Column =
-    array_min(transform(sh, s => xxhash64(lit(h), s)))
-
   /** (id, band, band_hash) rows: `bands` bands of `numHashes/bands` MinHash
     * rows each, each band collapsed to one 64-bit hash. This is the ONLY
     * table the candidate join touches — 2 longs + 1 int per doc per band.

@@ -373,7 +373,11 @@ object Formats {
     case "vng" => VngIO.write(df, path)
     case "zjson" => ZjsonIO.write(df, path)
     case "arrow" | "arrows" => ArrowIO.write(df, path)
-    case "table" => ZFormat.tableLines(df).write.mode("overwrite").text(path)
+    case "table" =>
+      HadoopFs.prepareDir(df.sparkSession, path)
+      val out = new java.io.PrintStream(HadoopFs.create(HadoopFs.confMap(df.sparkSession), path, "part-00000.txt"),
+        false, "UTF-8")
+      try ZFormat.tableLines(df)(_.foreach(l => out.print(l + "\n"))) finally out.close()
     case other => throw new IllegalArgumentException(s"unknown write format: $other")
   }
 }

@@ -3,7 +3,7 @@ package graft.sources
 import java.io.OutputStream
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.execution.SQLExecution
@@ -13,15 +13,18 @@ import org.apache.spark.unsafe.types.UTF8String
 import ZValue._
 import ZngIO.ByteBuf
 
-/** The one renderer of each text output format — zeek, json (one value
-  * per line), csv/tsv and text — behind every file write and every
+/** The one renderer of each text output format — zson, zeek, json (one
+  * value per line), csv/tsv and text — behind every file write and every
   * stream. It runs per partition on the executors over the frame's
   * InternalRows. Each row's shape (its tag, else the schema's zed type)
   * compiles once per partition to a plan whose leaves print typed; a leaf
   * with no typed writer (a boxed variant, a map, a union, a net, …) reads
   * as a ZValue and prints through ZFormat's rules, so those rules stay in
-  * one place. The same plans are the value model's one reading of a
-  * frame's rows ([[values]], behind ZFormat.rowValueFn).
+  * one place. ZSON has no typed leaves: each row reads as a ZValue and
+  * ZsonFormatter prints it against the plan's type, so the formatter alone
+  * decides its decorators. The same plans are the value model's one
+  * reading of a frame's rows ([[values]], behind ZFormat.rowValueFn); they
+  * drop `error("quiet")` fields, and the caller drops a quiet row.
   *
   * Framing is zed's rule for each format, carried by the renderer: zeek
   * prints the preamble, then `#path` whenever the path changes and
@@ -54,6 +57,7 @@ private[graft] object TextWriter {
     }
   }
 
+  case object Zson extends Fmt("zson")
   case object Json extends Fmt("json")
   case object Text extends Fmt("txt")
 
@@ -67,6 +71,7 @@ private[graft] object TextWriter {
   }
 
   def of(format: String): Fmt = format match {
+    case "zson" => Zson
     case "zeek" => Zeek
     case "json" => Json
     case "text" => Text
@@ -97,13 +102,21 @@ private[graft] object TextWriter {
   private final class RecN(zt: ZType, val names: Array[String], val ords: Array[Int],
       val kids: Array[Node], width: Int) extends Node(zt) {
     val quoted: Array[Array[Byte]] = names.map(n => (ZFormat.jsonQuote(n) + ":").getBytes(UTF_8))
+    /** The type of the records it reads: its fields (a named type when
+      * they are the name's).
+      */
+    val recType: ZType = {
+      val r = ZType.Rec(names.toVector.zip(kids.map(_.zt)))
+      if (ZType.strip(zt) == r) zt else r
+    }
     def struct(g: SpecializedGetters, i: Int): InternalRow = g.getStruct(i, width)
     def value(g: SpecializedGetters, i: Int): ZValue =
       if (g.isNullAt(i)) VNull(zt) else record(struct(g, i), names.length)
     def value(r: Row, i: Int): ZValue =
       if (r.isNullAt(i)) VNull(zt) else record(r.getStruct(i), names.length)
-    /** The first `own` fields, then the others that are non-null; a named
-      * record keeps its name.
+    /** The first `own` fields, then the others that are non-null, less
+      * any `error("quiet")` (zed drops one from a record); a named record
+      * keeps its name.
       */
     def record(r: InternalRow, own: Int): ZValue =
       build(own, r.isNullAt, k => kids(k).value(r, ords(k)))
@@ -113,7 +126,7 @@ private[graft] object TextWriter {
       val v = VRec(names.indices.toVector.flatMap { k =>
         val o = ords(k)
         if (k >= own && isNull(o)) None
-        else Some(names(k) -> (if (o < 0) VNull(kids(k).zt) else kid(k)))
+        else Some(names(k) -> (if (o < 0) VNull(kids(k).zt) else kid(k))).filterNot(f => isQuiet(f._2))
       })
       zt match { case n: ZType.Named => VTyped(v, n); case _ => v }
     }
@@ -128,6 +141,18 @@ private[graft] object TextWriter {
       if (g.isNullAt(i)) VNull(zt) else ZValue.fromExternal(toScala(g.get(i, dt)), dt, zt)
     def value(r: Row, i: Int): ZValue =
       if (r.isNullAt(i)) VNull(zt) else ZValue.fromExternal(r.get(i), dt, zt)
+  }
+
+  /** A value of this type reads as `v` in every row. */
+  private final class ConstN(v: ZValue) extends Node(ZValue.typeOf(v)) {
+    def value(g: SpecializedGetters, i: Int): ZValue = v
+    def value(r: Row, i: Int): ZValue = v
+  }
+
+  /** zed's `error("quiet")`: writers drop it as a value and as a field. */
+  private def isQuiet(v: ZValue): Boolean = unwrap(v) match {
+    case VErr(e) => unwrap(e) == VStr("quiet")
+    case _ => false
   }
 
   private def ascii(o: ByteBuf, s: String): Unit = {
@@ -185,7 +210,7 @@ private[graft] object TextWriter {
           if (p == "float64") == (dt == DoubleType) =>
         val bits = if (dt == DoubleType) 64 else 32
         val f: Double => String =
-          if (json) ZFormat.jsonFloat else if (csv) ZFormat.csvFloat(_, bits) else ZFormat.goF(_, bits)
+          if (json) ZFormat.jsonFloat(_, bits) else if (csv) ZFormat.csvFloat(_, bits) else ZFormat.goF(_, bits)
         if (bits == 64) (o, g, i) => ascii(o, f(g.getDouble(i)))
         else (o, g, i) => ascii(o, f(g.getFloat(i).toDouble))
       case (ZType.Prim("bool"), BooleanType) =>
@@ -284,21 +309,39 @@ private[graft] object TextWriter {
   private def valueCols(leaves: Seq[(String, ZValue)], sep: Char): Cols =
     new Cols(leaves.map { case (n, v) => new ValueCol(n, ZFormat.leafType(v), v): Col }.toArray, sep)
 
-  /** A row's plan: a record over the row's columns (`own` fields, then
-    * columns printed only when non-null), a bare value in one column, or
-    * a typed null.
+  /** How a row reads: a record over the row's columns (`own` fields, then
+    * columns read only when non-null), or a value in column `ord` (a
+    * typed null in no column). `zt` is the type of what it reads; the
+    * null type when each value is typed by itself.
     */
-  private final class Shape(sep: Char, val rec: RecN, val own: Int, bare: Node, bareOrd: Int,
-      nullRow: ZValue) {
-    def value(r: InternalRow): ZValue =
-      if (nullRow != null) nullRow
-      else if (bare != null) bare.value(r, bareOrd)
-      else rec.record(r, own)
+  private final class Plan(val rec: RecN, val own: Int, node: Node, ord: Int, selfTyped: Boolean = false) {
+    val zt: ZType = if (selfTyped) ZType.nullT else if (rec != null) rec.recType else node.zt
+    def value(r: InternalRow): ZValue = if (rec != null) rec.record(r, own) else node.value(r, ord)
+    def value(r: Row): ZValue = if (rec != null) rec.record(r, own) else node.value(r, ord)
+  }
 
-    def value(r: Row): ZValue =
-      if (nullRow != null) nullRow
-      else if (bare != null) bare.value(r, bareOrd)
-      else rec.record(r, own)
+  /** A row's plans: `main`, or `alt` in a row where `useAlt` holds of its
+    * null columns.
+    */
+  private final class Shape(sep: Char, main: Plan, alt: Plan, useAlt: (Int => Boolean) => Boolean) {
+    val rec: RecN = main.rec
+    val own: Int = main.own
+
+    def plan(r: InternalRow): Plan = if (alt == null || !useAlt(r.isNullAt)) main else alt
+    def plan(r: Row): Plan = if (alt == null || !useAlt(r.isNullAt)) main else alt
+
+    /** Does row `r` read through the record's typed leaves? */
+    def typed(r: InternalRow): Boolean = rec != null && (plan(r) eq main)
+
+    def value(r: InternalRow): ZValue = plan(r).value(r)
+    def value(r: Row): ZValue = plan(r).value(r)
+
+    /** Row `r` in ZSON, or null when it is a quiet error. */
+    def zson(r: InternalRow): String = {
+      val p = plan(r)
+      val v = p.value(r)
+      if (isQuiet(v)) null else ZsonFormatter.format(p.zt, v)
+    }
 
     /** A record row's leaves, flattened. */
     private val flat: Array[FlatLeaf] = {
@@ -308,6 +351,7 @@ private[graft] object TextWriter {
           (n.kids(k), n.ords(k)) match {
             case (r: RecN, i) => go(s"$prefix${n.names(k)}.", r, recs :+ r, ords :+ i, o)
             case (l: Leaf, i) => Seq(new FlatLeaf(prefix + n.names(k), l, recs, ords :+ i, o))
+            case _ => Nil // a record's fields are records and leaves
           }
         }
       if (rec == null) null else go("", rec, Array(rec), Array.empty, opt = false).toArray
@@ -321,8 +365,8 @@ private[graft] object TextWriter {
       else new Cols(flat.toArray[Col], sep)
 
     /** Row `r`'s columns: a typed leaf as itself, an untyped one as its
-      * value, flattened (its type is its value's), and an optional column
-      * only when non-null.
+      * value, flattened (its type is its value's), and an optional or a
+      * quiet column only when non-null and not quiet.
       */
     def cols(r: InternalRow): Cols =
       if (fixed != null) fixed
@@ -332,7 +376,7 @@ private[graft] object TextWriter {
         else {
           val g = l.holder(r)
           val v = if (g == null) VNull(l.zt) else l.leaf.value(g, l.ord)
-          valueCols(ZFormat.flatten(VRec(Vector(l.name -> v))), sep).cols.toSeq
+          if (isQuiet(v)) Nil else valueCols(ZFormat.flatten(VRec(Vector(l.name -> v))), sep).cols.toSeq
         }
       }, sep)
   }
@@ -340,19 +384,39 @@ private[graft] object TextWriter {
   /** Compiles each distinct shape of one frame as the value model reads
     * it: a tag's record fields (ZngIO.shapeColumns) in shape order, then
     * the frame's columns no shape names, when non-null; a `null(<type>)`
-    * tag as a typed null; a non-record tag as the `this` column; an
-    * untagged frame as its schema's zed type. One per partition.
+    * tag as a typed null; a non-record tag as the `this` column, in a
+    * record with the columns no shape names in a row where one of them is
+    * non-null; an untagged frame as its schema's zed type. A record row
+    * whose columns other than a boxed `this` carrier are all null reads
+    * as the carrier's value, and a frame of a boxed `this` alone reads
+    * each row as its boxed value, whatever its tag. A boxed column has
+    * no static type (the null type): its value is typed by itself. One
+    * per partition.
     */
   private final class Shapes(fmt: Fmt, schema: StructType, typed: Boolean) {
     private val sep = fmt match { case Csv(c) => c; case _ => '\t' }
-    private val writers = if (typed) fmt else null
-    private val tagIdx = schema.fieldNames.indexOf(graft.operators.Het.typeTag)
+    private val writers = if (typed && fmt != Zson) fmt else null
     private val fields = schema.fields.toIndexedSeq.zipWithIndex.filterNot { case (f, _) =>
       f.name == graft.operators.Het.typeTag || f.metadata.contains("graft.scopeVar") }
+    private def boxed(f: StructField): Boolean = ZsonIO.isVariantType(f.dataType)
+    private val thisOnly = if (fields.length == 1 && fields.head._1.name == "this") Some(fields.head) else None
+    private val boxedThis = thisOnly.exists(t => boxed(t._1))
+    private val tagIdx = if (boxedThis) -1 else schema.fieldNames.indexOf(graft.operators.Het.typeTag)
     private def colType(f: StructField): ZType =
-      if (f.metadata.contains("graft.zedType")) ZType.Prim(f.metadata.getString("graft.zedType"))
-      else try ZsonParser.parseType(graft.functions.Shaper.zedTypeOf(f.dataType))
-      catch { case _: Exception => ZType.Prim("string") }
+      if (f.metadata.contains("graft.zedType")) {
+        val t = f.metadata.getString("graft.zedType")
+        try ZsonParser.parseType(t) catch { case _: Exception => ZType.Prim(t) }
+      } else zedType(f.dataType)
+    /** A Spark carrier's zed type; a boxed value has none (the null type). */
+    private def zedType(dt: DataType): ZType = dt match {
+      case st: StructType if ZsonIO.isVariantType(st) => ZType.nullT
+      case st: StructType => ZType.Rec(st.fields.toVector.map(f => f.name -> colType(f)))
+      case d: DecimalType if d.precision == 20 && d.scale == 0 => ZType.Prim("uint64")
+      case ArrayType(e, _) => ZType.Arr(zedType(e))
+      case MapType(k, v, _) => ZType.MapT(zedType(k), zedType(v))
+      case _ => try ZsonParser.parseType(graft.functions.Shaper.zedTypeOf(dt))
+                catch { case _: Exception => ZType.Prim("string") }
+    }
     private val inShapes: Set[String] =
       (if (tagIdx < 0) Nil else ZngIO.tagShapes(schema)).flatMap { t =>
         try ZType.strip(ZsonParser.parseType(ZType.stripNullWrap(t))) match {
@@ -361,10 +425,26 @@ private[graft] object TextWriter {
         } catch { case _: Exception => fields.map(_._1.name) }
       }.toSet
     private val untagged: ZType =
-      if (fields.map(_._1.name) == Seq("this"))
-        // a boxed carrier decodes from its own runtime type
-        if (ZsonIO.isVariantType(fields.head._1.dataType)) ZType.Prim("null") else colType(fields.head._1)
-      else ZType.Rec(fields.map { case (f, _) => f.name -> colType(f) }.toVector)
+      thisOnly.fold[ZType](ZType.Rec(fields.map { case (f, _) => f.name -> colType(f) }.toVector))(t => colType(t._1))
+
+    /** The record plan of `zt`'s fields in columns `own`, then the columns
+      * `added` when non-null.
+      */
+    private def record(zt: ZType, own: Seq[(String, ZType, Int)], added: Seq[(String, ZType, Int)]): Plan = {
+      val all = (own ++ added).map { case (n, ft, i) => (n, node(writers, ft, schema.fields(i).dataType), i) }
+      new Plan(new RecN(zt, all.map(_._1).toArray, all.map(_._3).toArray, all.map(_._2).toArray,
+        schema.length), own.length, null, -1)
+    }
+
+    // a boxed `this` beside other columns: a record row with them all
+    // null is the carrier's value (a record FIELD named this has live
+    // siblings)
+    private val (carrier, carrierWins) = fields.collectFirst {
+      case (f, i) if f.name == "this" && boxed(f) && fields.length > 1 =>
+        val others = fields.map(_._2).filter(_ != i)
+        (new Plan(null, 0, node(null, ZType.nullT, f.dataType), i),
+          (isNull: Int => Boolean) => !isNull(i) && others.forall(isNull))
+    }.getOrElse((null, null))
 
     private def shapeOf(zt: ZType, cols: Option[Seq[(String, ZType, Int)]] = None): Shape =
       (ZType.strip(zt), fields.find(_._1.name == "this")) match {
@@ -372,17 +452,32 @@ private[graft] object TextWriter {
           val own = cols.getOrElse(fs.flatMap { case (n, ft) => fields.find(_._1.name == n).map(c => (n, ft, c._2)) })
           val added = fields.filterNot { case (f, _) => inShapes(f.name) || f.name == "this" ||
             fs.exists(_._1 == f.name) }.map { case (f, i) => (f.name, colType(f), i) }
-          val all = (own ++ added).map { case (n, ft, i) => (n, node(writers, ft, schema.fields(i).dataType), i) }
-          new Shape(sep, new RecN(zt, all.map(_._1).toArray, all.map(_._3).toArray, all.map(_._2).toArray,
-            schema.length), own.length, null, -1, null)
-        case (_, Some((f, i))) => new Shape(sep, null, 0, node(writers, zt, f.dataType), i, null)
+          new Shape(sep, record(zt, own, added), carrier, carrierWins)
+        case (_, Some((f, i))) => bare(zt, f, i)
         case _ => shapeOf(ZType.Rec(fields.map { case (f, _) => f.name -> colType(f) }.toVector))
       }
 
+    /** Column `i` (`this`) as a value of type `zt` (`selfTyped`: each
+      * value of its own type, as is an error whose payload type holds a
+      * query's union of what the payload may be).
+      */
+    private def bare(zt: ZType, f: StructField, i: Int, selfTyped: Boolean = false): Shape = {
+      val err = ZType.strip(zt).isInstanceOf[ZType.ErrT] && ZType.hasUnion(zt)
+      val plan = new Plan(null, 0, node(writers, zt, f.dataType), i, selfTyped || err)
+      val extras = fields.filterNot { case (g, _) => g.name == "this" || inShapes(g.name) }
+      if (extras.isEmpty) new Shape(sep, plan, null, null)
+      else new Shape(sep, plan, record(ZType.Rec(("this" -> zt) +: extras.map(e => e._1.name -> colType(e._1)).toVector),
+        Seq(("this", zt, i)), extras.map { case (g, j) => (g.name, colType(g), j) }),
+        isNull => extras.exists(e => !isNull(e._2)))
+    }
+
     private def compile(tag: String): Shape =
-      if (tag == null) shapeOf(untagged)
-      else if (ZType.isNullWrap(tag)) new Shape(sep, null, 0, null, -1, VNull(
-        try ZsonParser.parseType(ZType.stripNullWrap(tag)) catch { case _: Exception => untagged }))
+      // an untagged, unmarked `this` has no static type: its Spark type
+      // may merge a null's with other values' (a null stays untyped)
+      if (tag == null) thisOnly.fold(shapeOf(untagged))(t =>
+        bare(untagged, t._1, t._2, selfTyped = !t._1.metadata.contains("graft.zedType")))
+      else if (ZType.isNullWrap(tag)) new Shape(sep, new Plan(null, 0, new ConstN(VNull(
+        try ZsonParser.parseType(ZType.stripNullWrap(tag)) catch { case _: Exception => untagged })), -1), null, null)
       else ZngIO.shapeColumns(tag, schema) match {
         case Right((zt, cols)) =>
           val data = fields.map(_._2).toSet
@@ -469,16 +564,18 @@ private[graft] object TextWriter {
 
     def row(r: InternalRow): Unit = {
       val s = shapes(r)
-      if (fmt == Json) {
-        if (s.rec != null) jsonRec(s.rec, r, s.own) else utf8(line, ZFormat.jsonText(s.value(r)))
-        emit()
-      } else if (s.rec != null) record(s.cols(r), r)
-      else {
+      if (fmt == Zson) {
+        val z = s.zson(r)
+        if (z != null) { utf8(line, z); emit() }
+      } else if (s.typed(r)) {
+        if (fmt == Json) { jsonRec(s.rec, r, s.own); emit() } else record(s.cols(r), r)
+      } else {
         val v = s.value(r)
-        if (unwrap(v).isInstanceOf[VRec]) record(valueCols(ZFormat.flatten(v), sep), r)
+        if (fmt == Json) { if (!isQuiet(v)) { utf8(line, ZFormat.jsonText(v)); emit() } }
+        else if (unwrap(v).isInstanceOf[VRec]) record(valueCols(ZFormat.flatten(v), sep), r)
         // zed's zeek writer errors on a non-record and the value prints;
         // its csv writer errors and the row is skipped
-        else if (!fmt.isInstanceOf[Csv]) { utf8(line, ZFormat.zeekFormat(v)); emit() }
+        else if (!fmt.isInstanceOf[Csv] && !isQuiet(v)) { utf8(line, ZFormat.zeekFormat(v)); emit() }
       }
     }
 
@@ -488,14 +585,20 @@ private[graft] object TextWriter {
       for (k <- n.names.indices) {
         val o = n.ords(k)
         if (k < own || !r.isNullAt(o)) {
-          if (!first) line.writeByte(',')
-          first = false
-          line.writeBytes(n.quoted(k))
-          if (o < 0 || r.isNullAt(o)) ascii(line, "null")
-          else n.kids(k) match {
-            case rn: RecN => jsonRec(rn, rn.struct(r, o), rn.names.length)
-            case l: Leaf if l.put != null => l.put(line, r, o)
-            case l => utf8(line, ZFormat.jsonText(l.value(r, o)))
+          val v = n.kids(k) match {
+            case l: Leaf if l.put == null && o >= 0 && !r.isNullAt(o) => l.value(r, o)
+            case _ => null
+          }
+          if (v == null || !isQuiet(v)) {
+            if (!first) line.writeByte(',')
+            first = false
+            line.writeBytes(n.quoted(k))
+            if (o < 0 || r.isNullAt(o)) ascii(line, "null")
+            else n.kids(k) match {
+              case rn: RecN => jsonRec(rn, rn.struct(r, o), rn.names.length)
+              case l: Leaf if l.put != null => l.put(line, r, o)
+              case _ => utf8(line, ZFormat.jsonText(v))
+            }
           }
         }
       }
@@ -569,6 +672,18 @@ private[graft] object TextWriter {
   }
 
   // ---- files and streams -----------------------------------------------------
+
+  /** The frame as ZSON lines, one per value, rendered per partition on
+    * the executors when the dataset runs.
+    */
+  def zson(df: DataFrame): Dataset[String] = {
+    val schema = df.schema
+    val lines = df.queryExecution.toRdd.mapPartitions { rows =>
+      val shapes = new Shapes(Zson, schema, typed = false)
+      rows.flatMap(r => Option(shapes(r).zson(r)))
+    }
+    df.sparkSession.createDataset(lines)(Encoders.STRING)
+  }
 
   /** One part file per non-empty partition (`part-NNNNN.<ext>`, gzip
     * members when `gzip`). Fails as the stream of the frame fails, after

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 /** The zed text rules of the reference's human-facing output formats —
@@ -463,61 +463,36 @@ object ZFormat {
 
   // ---- table writer (zio/tableio/writer.go) --------------------------------
 
-  /** Header + aligned columns; a new header per flattened-type change, Go
+  /** Header + aligned columns, handed to `use` as one stream of lines; a
+    * new header per flattened-type change and every 999 rows, Go
     * tabwriter alignment (width = block max + 1, last column unpadded).
-    * Alignment is inherently sequential (widths = block maxima), so rows
-    * pass the driver — but memory stays ONE block (cap 1000 rows): each
-    * flushed block spools to local disk and the result re-reads as a
-    * distributed text scan. Human-facing format; not a data path.
+    * Alignment is sequential (widths are block maxima), so rows pass the
+    * driver, one block in memory at a time. Non-record values are skipped
+    * (the reference errors on them). Human-facing format; not a data path.
     */
-  def tableLines(df: DataFrame): Dataset[String] = {
+  def tableLines[A](df: DataFrame)(use: Iterator[String] => A): A = {
     val fn = rowValueFn(df.schema)
-    val spool = java.nio.file.Files.createTempFile("graft-table-", ".txt")
-    spool.toFile.deleteOnExit()
-    val sink = java.nio.file.Files.newBufferedWriter(spool,
-      java.nio.charset.StandardCharsets.UTF_8)
-    def emit(s: String): Unit = { sink.write(s); sink.write('\n') }
-    var block = scala.collection.mutable.ArrayBuffer.empty[Vector[String]]
-    var blockType: Vector[(String, String)] = null // (name, ztype text)
-
-    def flushBlock(): Unit = {
-      if (block.isEmpty) return
-      val n = block.map(_.length).max
-      val widths = (0 until n).map { i =>
+    val recs = scala.jdk.CollectionConverters.IteratorHasAsScala(df.toLocalIterator()).asScala
+      .map(fn).collect { case rec @ VRec(_) =>
+        val leaves = flatten(rec)
+        (leaves.map { case (name, lv) => name -> ZType.text(leafType(lv)) }, leaves)
+      }.buffered
+    def aligned(block: Seq[Vector[String]]): Seq[String] = {
+      val widths = (0 until block.map(_.length).max).map { i =>
         block.map(r => if (i < r.length) r(i).length else 0).max
       }
-      for (r <- block) {
-        val line = r.zipWithIndex.map { case (cell, i) =>
-          if (i == r.length - 1) cell else cell.padTo(widths(i) + 1, ' ')
-        }.mkString
-        emit(line.replaceAll("\\s+$", ""))
-      }
-      block = scala.collection.mutable.ArrayBuffer.empty[Vector[String]]
+      block.map(r => r.zipWithIndex.map { case (cell, i) =>
+        if (i == r.length - 1) cell else cell.padTo(widths(i) + 1, ' ')
+      }.mkString.replaceAll("\\s+$", ""))
     }
-
-    val it = df.toLocalIterator()
-    while (it.hasNext) {
-      val row = it.next()
-      fn(row) match {
-        case rec @ VRec(_) =>
-          val leaves = flatten(rec)
-          val tSig = leaves.map { case (name, lv) => name -> ZType.text(leafType(lv)) }
-          if (tSig != blockType) {
-            flushBlock()
-            blockType = tSig
-            block += leaves.map(_._1)
-          } else if (block.length >= 1000) {
-            flushBlock()
-            block += leaves.map(_._1)
-          }
-          block += leaves.map(f => cellText(f._2, emptyNullTime = true))
-        case _ => // reference: error on non-record values (stderr); rows skipped
-      }
-    }
-    flushBlock()
-    sink.close()
-    import df.sparkSession.implicits._
-    df.sparkSession.read.textFile(spool.toString)
+    def cells(leaves: Vector[(String, ZValue)]): Vector[String] =
+      leaves.map(f => cellText(f._2, emptyNullTime = true))
+    use(Iterator.continually(recs).takeWhile(_.hasNext).flatMap { it =>
+      val (sig, first) = it.next()
+      val block = scala.collection.mutable.ArrayBuffer(first.map(_._1), cells(first))
+      while (block.length < 1000 && it.hasNext && it.head._1 == sig) block += cells(it.next()._2)
+      aligned(block.toSeq)
+    })
   }
 
   // ---- csv (zio/csvio/writer.go): the stream and the cell rules ---------------
@@ -586,7 +561,7 @@ object ZFormat {
     case VBool(b) => b.toString
     case VInt(n, _) => n.toString
     case VUint64(n) => n.toBigInt.toString
-    case VFloat(d, _) => jsonFloat(d)
+    case VFloat(d, t) => jsonFloat(d, if (t == "float64") 64 else 32)
     case VStr(s) => jsonQuote(s)
     case VTime(ns) => jsonQuote(rfc3339Nano(ns))
     case VDur(ns) => jsonQuote(durHuman(ns))
@@ -609,11 +584,12 @@ object ZFormat {
     case VTyped(i, _) => jsonText(i)
   }
 
-  private[sources] def jsonFloat(d: Double): String =
+  /** A json number: the shortest digits of `d` at its width `bits`. */
+  private[sources] def jsonFloat(d: Double, bits: Int): String =
     if (d.isNaN || d.isInfinity) jsonQuote(goG(d)) // json can't carry non-finite
     else {
       val a = math.abs(d)
-      if (a != 0 && (a < 1e-6 || a >= 1e21)) goG(d) else goF(d)
+      if (a != 0 && (a < 1e-6 || a >= 1e21)) goG(d, bits) else goF(d, bits)
     }
 
   /** Map keys: strings bare, other primitives in zson primitive text,

@@ -71,6 +71,20 @@ object ZType extends Serializable {
 
   def strip(t: ZType): ZType = t match { case Named(_, i) => strip(i); case other => other }
 
+  /** Does `p` hold of `t` or of a type inside it? */
+  def exists(t: ZType)(p: ZType => Boolean): Boolean = p(t) || (t match {
+    case Rec(fs) => fs.exists(f => exists(f._2)(p))
+    case Arr(e) => exists(e)(p)
+    case SetT(e) => exists(e)(p)
+    case MapT(k, v) => exists(k)(p) || exists(v)(p)
+    case Union(as) => as.exists(a => exists(a)(p))
+    case ErrT(i) => exists(i)(p)
+    case Named(_, i) => exists(i)(p)
+    case _ => false
+  })
+
+  def hasUnion(t: ZType): Boolean = exists(t)(_.isInstanceOf[Union])
+
   /** zson/zson.go Implied: types whose values never need a decorator. */
   def implied(t: ZType): Boolean = t match {
     case Prim("int64" | "duration" | "time" | "float64" | "bool" | "bytes" |
@@ -395,11 +409,6 @@ object ZValue {
     val v = try new ZsonParser(zsonText).parseOne()
             catch { case _: Exception => return zsonText.getBytes("UTF-8") }
     val out = new java.io.ByteArrayOutputStream()
-    def tagged(x: ZValue): Unit = {
-      val b = body(x)
-      if (b == null) out.write(0) // null: tag 0
-      else { out.write(uvarintLE(b.length + 1)); out.write(b) }
-    }
     def body(x: ZValue): Array[Byte] = unwrap(x) match {
       case VRec(fs) =>
         val o = new java.io.ByteArrayOutputStream()
@@ -575,11 +584,7 @@ object ZValue {
     sb.toString
   }
 
-  def timeText(ns: Long): String = {
-    val inst = java.time.Instant.ofEpochSecond(Math.floorDiv(ns, 1000000000L), Math.floorMod(ns, 1000000000L))
-    val base = java.time.format.DateTimeFormatter.ISO_INSTANT.format(inst)
-    base
-  }
+  def timeText(ns: Long): String = ZFormat.rfc3339Nano(ns)
 
   /** Canonical duration text — the reference has ONE formatter
     * (pkg/nano/duration.go String) used for values and map keys alike.
@@ -1201,8 +1206,15 @@ object ZValue {
     if (r == null) return VNull(ZType.Prim("null"))
     def parsedT: Option[ZType] = {
       val t = r.getAs[String]("t")
+      // a t naming a Spark carrier ("decimal", the variant struct) is not
+      // a zed type: the value's own stands
+      def carrier(ty: ZType): Boolean = ZType.exists(ty) {
+        case ZType.Prim(p) => p == "decimal"
+        case ZType.Rec(fs) => fs.map(_._1).startsWith(graft.operators.Het.leafType.fieldNames)
+        case _ => false
+      }
       if (t == null) None
-      else try Some(new ZsonParser(t).parseTypeText()) catch { case _: Exception => None }
+      else try Some(new ZsonParser(t).parseTypeText()).filterNot(carrier) catch { case _: Exception => None }
     }
     val n = r.getAs[Any]("n"); val s = r.getAs[String]("s")
     val b = r.getAs[Any]("b"); val z = r.getAs[String]("z")
@@ -1226,7 +1238,12 @@ object ZValue {
     val core = k match {
       case 5 =>
         val payload = try new ZsonParser(z).parseOne() catch { case _: Exception => VStr(z) }
-        VErr(payload)
+        // the error's declared type types its payload (an ns count as a
+        // duration), unless it is a query's union of what the payload may
+        // be: a value is of its own type, not a member of that union
+        parsedT.collect { case et: ZType.ErrT if !ZType.hasUnion(et) => et }
+          .flatMap(et => try Some(ZsonParser.retype(VErr(payload), et)) catch { case _: Exception => None })
+          .getOrElse(VErr(payload))
       case 0 =>
         val d = n.asInstanceOf[Double]
         tName match {
@@ -1257,7 +1274,8 @@ object ZValue {
           case "type" => VTypeVal(s)
           case "bytes" if s != null && s.startsWith("0x") =>
             VBytes(s.drop(2).sliding(2, 2).map(h => Integer.parseInt(h, 16).toByte).toArray)
-          case t if t.startsWith("enum") => VEnum(s)
+          case t if t.startsWith("enum") =>
+            parsedT.collect { case e: ZType.EnumT => VTyped(VEnum(s), e) }.getOrElse(VEnum(s))
           case _ if z == null && aCache != null =>
             // lazy-z container: rebuild elements from the native cache —
             // leaf t restores widths/named types the text couldn't carry
@@ -1380,8 +1398,10 @@ object ZValue {
         VArr(v.asInstanceOf[scala.collection.Seq[Any]].toVector.map(x =>
           fromExternal(x, et, ZType.Prim("string"))), false)
       case (MapType(kt, vt, _), ZType.MapT(k2, v2)) =>
-        VMap(v.asInstanceOf[scala.collection.Map[Any, Any]].toVector.map { case (k, x) =>
-          (fromExternal(k, kt, k2), fromExternal(x, vt, v2)) })
+        val es = v.asInstanceOf[scala.collection.Map[Any, Any]].toVector.map { case (k, x) =>
+          (fromExternal(k, kt, k2), fromExternal(x, vt, v2)) }
+        // an empty map keeps the declared key/value types, as arrays do
+        if (es.isEmpty) VTyped(VMap(es), stripped) else VMap(es)
       case (_, ZType.Prim(p)) => primFromExternal(v, p)
       case (_, e: ZType.EnumT) => v match {
         case s: String => VTyped(VEnum(s), e)
@@ -2059,6 +2079,9 @@ final class ZsonParser(s: String,
       case (VArr(itemsV, _), SetT(et)) =>
         if (itemsV.isEmpty) VTyped(VArr(itemsV, isSet = true), ZType.strip(t))
         else VArr(ZValue.normSet(itemsV.map(applyType(_, et))), isSet = true)
+      case (VMap(es), MapT(kt, vt)) =>
+        if (es.isEmpty) VTyped(VMap(es), ZType.strip(t)) // keep declared key/value types
+        else VMap(es.map { case (k, x) => (applyType(k, kt), applyType(x, vt)) })
       case (VErr(inner), ErrT(et)) => VErr(applyType(inner, et))
       case (inner, _) => inner
     }

@@ -16,10 +16,11 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
   * (zio/zjsonio/writer.go): each row converts to a zed value against its
   * shape and column markers, and a per-stream type encoder assigns the
   * ids — distributed per partition for files, one stream for the CLI and
-  * the service. Reader: per-line Jackson decode (same row-wise cost
-  * class as the reference's zjsonio) into ZSON text, then per-partition
-  * typed parse into the shared tagged/variant frame (ZsonReader.fromRDD)
-  * — fully distributed, no driver materialization.
+  * the service. Reader: each file decodes as one stream, one task per
+  * file (type ids are defined once per stream): per-line Jackson decode
+  * (same row-wise cost class as the reference's zjsonio) into ZSON text,
+  * then a typed parse into the shared tagged/variant frame
+  * (ZsonReader.fromRDD) — no driver materialization.
   */
 object ZjsonIO extends Serializable {
 
@@ -338,44 +339,47 @@ object ZjsonIO extends Serializable {
     }
   }
 
-  def read(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val lines = spark.read.textFile(path).filter(_.trim.nonEmpty)
-    val zson = lines.mapPartitions { it =>
-      val mapper = new ObjectMapper()
-      val typesById = scala.collection.mutable.Map.empty[Int, JsonNode]
-      def register(t: JsonNode): Unit = {
-        if (t.get("kind").asText() == "ref") return // refs don't (re)define ids
-        if (t.has("id")) typesById(t.get("id").asInt()) = t
-        if (t.has("fields")) {
-          val fs = t.get("fields")
-          (0 until fs.size()).foreach(i => register(fs.get(i).get("type")))
-        }
-        if (t.has("types")) { // union members
-          val ts = t.get("types")
-          (0 until ts.size()).foreach(i => register(ts.get(i)))
-        }
-        if (t.has("key_type")) register(t.get("key_type"))
-        if (t.has("val_type")) register(t.get("val_type"))
-        if (t.has("type")) register(t.get("type"))
+  /** Each file decodes as one stream, one task per file: a `ref` may
+    * name a type id defined any number of lines before it, so a text
+    * split of the file cannot decode on its own.
+    */
+  def read(spark: SparkSession, path: String): DataFrame =
+    ZsonReader.fromRDD(spark, ZsonIO.perFile(spark, path)(text =>
+      ZsonIO.parseLineIter(zsonLines(text.linesIterator.filter(_.trim.nonEmpty)))))
+
+  /** One stream's ZJSON lines as ZSON text, the type ids in force carried
+    * from line to line.
+    */
+  private def zsonLines(it: Iterator[String]): Iterator[String] = {
+    val mapper = new ObjectMapper()
+    val typesById = scala.collection.mutable.Map.empty[Int, JsonNode]
+    def register(t: JsonNode): Unit = {
+      if (t.get("kind").asText() == "ref") return // refs don't (re)define ids
+      if (t.has("id")) typesById(t.get("id").asInt()) = t
+      if (t.has("fields")) {
+        val fs = t.get("fields")
+        (0 until fs.size()).foreach(i => register(fs.get(i).get("type")))
       }
-      it.map { line =>
-        val node = mapper.readTree(line)
-        var t = node.get("type")
-        if (t != null && t.isTextual)
-          // control message ({"type":"QueryChannelEnd",...}): surfaces as
-          // a plain record value, like reading the json as data
-          JsonIO.parse(line).map(ZValue.zsonText).mkString(" ")
-        else {
-          if (t.get("kind").asText() == "ref") t = typesById(t.get("id").asInt())
-          else register(t)
-          toZson(t, node.get("value"), typesById)
-        }
+      if (t.has("types")) { // union members
+        val ts = t.get("types")
+        (0 until ts.size()).foreach(i => register(ts.get(i)))
+      }
+      if (t.has("key_type")) register(t.get("key_type"))
+      if (t.has("val_type")) register(t.get("val_type"))
+      if (t.has("type")) register(t.get("type"))
+    }
+    it.map { line =>
+      val node = mapper.readTree(line)
+      var t = node.get("type")
+      if (t != null && t.isTextual)
+        // control message ({"type":"QueryChannelEnd",...}): surfaces as
+        // a plain record value, like reading the json as data
+        JsonIO.parse(line).map(ZValue.zsonText).mkString(" ")
+      else {
+        if (t.get("kind").asText() == "ref") t = typesById(t.get("id").asInt())
+        else register(t)
+        toZson(t, node.get("value"), typesById)
       }
     }
-    // typed decode (unions → variants, shape tags), fully distributed:
-    // each line is one complete value, parsed per-partition on the
-    // executors — no driver materialization
-    ZsonReader.fromRDD(spark, zson.rdd.mapPartitions(ZsonIO.parseLineIter))
   }
 }

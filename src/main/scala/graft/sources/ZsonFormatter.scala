@@ -58,18 +58,26 @@ final class ZsonFormatter {
     result
   }
 
-  def formatValueAndDecorate(typ: ZType, v: ZValue): Unit = {
+  def formatValueAndDecorate(typ0: ZType, v: ZValue): Unit = {
+    val typ = selfTyped(typ0, v)
     val known = hasName(typ)
     formatValue(typ, v, known, ZType.implied(typ), dec = false)
     decorate(typ, known = false, isNull = isNullV(v))
   }
 
+  /** A non-null value declared of the null type (a boxed value with no
+    * static type) is typed by itself.
+    */
+  private def selfTyped(typ: ZType, v: ZValue): ZType =
+    if (typ == ZType.nullT && !isNullV(v)) ZValue.typeOf(v) else typ
+
   /** formatter.go formatValue: renders v guided by typ; `dec` appends the
     * decorator afterwards. Returns the "renders as null" flag (typed null
     * or empty container) the caller's decorate needs.
     */
-  private def formatValue(typ: ZType, v0: ZValue,
+  private def formatValue(typ0: ZType, v0: ZValue,
       parentKnown: Boolean, parentImplied: Boolean, dec: Boolean): Unit = {
+    val typ = selfTyped(typ0, v0)
     val known = parentKnown || hasName(typ)
     val v = ZValue.unwrap(v0)
     if (isNullV(v)) {
@@ -361,21 +369,6 @@ final class ZsonFormatter {
 }
 
 object ZsonFormatter {
-
-  /** Decorated text for (canonical value text, zed type text) — the
-    * variant-at-output-boundary form. Falls back to the canonical text on
-    * any parse/shape mismatch.
-    */
-  def formatText(text: String, typeText: String): String = {
-    if (text == null) return "null"
-    try {
-      val v = new ZsonParser(text).parseOne()
-      val typ =
-        if (typeText == null) ZValue.typeOf(v)
-        else ZsonParser.parseType(typeText)
-      format(typ, v)
-    } catch { case _: Exception => text }
-  }
 
   def format(typ: ZType, v: ZValue): String = {
     val f = new ZsonFormatter

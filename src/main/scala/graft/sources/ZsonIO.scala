@@ -6,11 +6,12 @@ import org.apache.spark.sql.types._
 
 /** ZSON text format read/write (reference: docs/formats/zson.md, zio/zsonio/).
   *
-  * Writer: a schema-driven Catalyst Column — every value formats via
-  * built-in string expressions (whole-stage codegen, fully distributed; no
-  * UDFs, no driver formatting). Implied types (zson.md §2.3.1) keep output
-  * minimal: int64/float64/string/bool/time/null carry no decorator; narrower
-  * numerics get `(int32)`-style decorators.
+  * Writer: the one text renderer (TextWriter, per partition on the
+  * executors): each row reads through its shape's plan as a ZValue and
+  * ZsonFormatter prints it, decorating what its type does not imply
+  * (zson/formatter.go). `zsonOf`/`zsonOfTyped` are Catalyst columns of a
+  * value's ZSON text for the compiler's in-query text (string conversion
+  * of a value, not output).
   *
   * Reader: typed per-partition parsing of the text scan into the tagged
   * frame `ZsonReader` builds (see `read`).
@@ -103,45 +104,22 @@ object ZsonIO {
   private def zsonName(n: String): String =
     if (identRe.matches(n)) n else "\"" + n.replace("\"", "\\\"") + "\""
 
-  /** zed-type-aware zson rendering: the optional ZType refines the
-    * Spark carrier (sets vs arrays, durations/time on longs, type
-    * values, decorators). Public: boxing and writers reuse it.
-    */
-  /** Does a type need the per-value ZsonFormatter at the output boundary?
-    * Unions (member resolution) and named types (per-value typedef state)
-    * can't decorate through the codegen'd column renderer.
-    */
-  private[sources] def needsFormatter(t: ZType): Boolean = t match {
-    case ZType.Named(_, _) => true
-    case ZType.Union(_) => true
-    case ZType.EnumT(_) => true // %sym never implies the symbol list
-    case ZType.Rec(fs) => fs.exists { case (_, ft) => needsFormatter(ft) }
-    case ZType.Arr(e) => needsFormatter(e)
-    case ZType.SetT(e) => needsFormatter(e)
-    case ZType.MapT(k, v) => needsFormatter(k) || needsFormatter(v)
-    case ZType.ErrT(i) => needsFormatter(i)
-    case _ => false
-  }
-
-  def zsonOfTyped(c: Column, dt: DataType, zt: Option[ZType]): Column =
-    zsonOfTyped(c, dt, zt, top = false)
-
   /** Number types whose values never imply themselves (zson spec:
     * 371(uint16)) — they always carry their decorator.
     */
   private val decoratedNums = Set("uint8", "uint16", "uint32", "uint64",
     "int8", "int16", "int32", "float16", "float32")
 
-  /** `top`: a TOP-LEVEL value decorates like formatter.go FormatValue —
-    * empty containers of an implied type stay bare (`[]`), while nested
-    * fields decorate them like nulls (formatVector's nullish rule).
+  /** zed-type-aware ZSON text of a column, as a field's value: the
+    * optional ZType refines the Spark carrier (sets vs arrays,
+    * durations/time on longs, type values, decorators); an empty
+    * container decorates like a null (formatter.go formatVector).
     */
-  def zsonOfTyped(c: Column, dt: DataType, zt: Option[ZType], top: Boolean): Column = {
+  def zsonOfTyped(c: Column, dt: DataType, zt: Option[ZType]): Column = {
     val base = zsonOfTyped0(c, dt, zt)
     zt match {
       // a typed NULL riding a variant carrier still decorates (null(int64));
-      // non-null variant values render canonically (decorWrap re-formats
-      // union/named shapes at the output boundary)
+      // non-null variant values render canonically
       case Some(t) if isVariantType(dt) =>
         val stripped = ZType.strip(t)
         if (stripped == ZType.Prim("null")) base
@@ -196,15 +174,11 @@ object ZsonIO {
               // an EMPTY container cannot imply its type — it decorates
               // like a null (zson/formatter.go formatVector null return)
               case (ZType.Arr(_) | ZType.SetT(_)) if dt.isInstanceOf[ArrayType] =>
-                if (top && ZType.implied(stripped))
-                  when(c.isNull, lit(s"null($txt)")).otherwise(base)
-                else when(c.isNull, lit(s"null($txt)"))
+                when(c.isNull, lit(s"null($txt)"))
                   .when(size(c) === 0, concat(base, lit(s"($txt)")))
                   .otherwise(base)
               case ZType.MapT(_, _) if dt.isInstanceOf[MapType] =>
-                if (top && ZType.implied(stripped))
-                  when(c.isNull, lit(s"null($txt)")).otherwise(base)
-                else when(c.isNull, lit(s"null($txt)"))
+                when(c.isNull, lit(s"null($txt)"))
                   .when(size(map_keys(c)) === 0, concat(base, lit(s"($txt)")))
                   .otherwise(base)
               case _ => when(c.isNull, lit(s"null($txt)")).otherwise(base)
@@ -281,200 +255,15 @@ object ZsonIO {
       case _ => zsonOf(c, dt)
     }
 
-  /** Whole row → one ZSON record line (the `__type` shape tag is engine
-    * metadata, not data — excluded; a bare `this` column unwraps to the
-    * top-level value, zed's non-record stream form).
-    *
-    * On a tagged heterogeneous frame each row is re-emitted in ITS OWN
-    * shape (zed output preserves per-value types): the shape decides which
-    * fields exist and their order; columns added by operators after
-    * ingestion (absent from every shape) are appended when non-null. The
-    * dispatch is a static CASE over the distinct shapes — fully codegen'd,
-    * no row-level type machinery.
+  /** The frame's values as ZSON lines, one per value, in each row's own
+    * shape (the `__type` tag and scope variables are engine metadata, not
+    * data; a bare `this` column is the top-level value). Rendered per
+    * partition by the one text renderer, TextWriter.
     */
-  def toZson(df: DataFrame): Dataset[String] = {
-    val het = graft.operators.Het
-    val st = df.schema
-    val fields = st.fields.toIndexedSeq
-      .filterNot(f => f.name == het.typeTag || f.metadata.contains("graft.scopeVar"))
-    import df.sparkSession.implicits._
-    // zed-type-aware formatting: durations travel as ns longs — the
-    // shape tag says which longs are durations (emitted as `1h2m3.5s`)
-    def zsonOfZ(c: Column, dt: DataType, zt: Option[ZType],
-        top: Boolean = false): Column =
-      ZsonIO.zsonOfTyped(c, dt, zt, top)
-    def fieldFmt(f: StructField, zt: Option[ZType] = None): Column = {
-      // zed types relational columns can't express (uint64 counts, sets,
-      // type values) ride as field metadata from the compiler
-      val zt2 = zt.orElse(
-        if (f.metadata.contains("graft.zedType"))
-          try Some(ZsonParser.parseType(f.metadata.getString("graft.zedType")))
-          catch { case _: Exception => None }
-        else None)
-      val c = col(s"`${f.name}`")
-      val value = zsonOfZ(c, f.dataType, zt2)
-      // a boxed number with no shape type decorates from its own t slot
-      val base = concat(lit(zsonName(f.name) + ":"),
-        if (zt2.isEmpty && isVariantType(f.dataType))
-          when(c.getField("k") === 0 && value =!= "null" &&
-            c.getField("t").isin(decoratedNums.toSeq: _*),
-            concat(value, lit("("), c.getField("t"), lit(")"))).otherwise(value)
-        else value)
-      // error("quiet") fields are OMITTED from output (cut.md quiet)
-      if (isVariantType(f.dataType)) {
-        when(graft.operators.Het.isError(c) &&
-          c.getField("z") === lit("\"quiet\""), lit(null).cast(StringType))
-          .otherwise(base)
-      } else base
-    }
-    def recordFmt(fs: Seq[StructField]): Column =
-      concat(lit("{"), concat_ws(",", fs.map(f => fieldFmt(f)): _*), lit("}"))
+  def toZson(df: DataFrame): Dataset[String] = TextWriter.zson(df)
 
-    // output-boundary decorated re-format: shapes containing unions or
-    // named types can't decorate through the codegen'd per-field renderer
-    // (member resolution + per-value typedef state, zson/formatter.go) —
-    // those rows re-format their canonical text against the shape's type
-    val decorU = udf((text: String, t: String) => ZsonFormatter.formatText(text, t))
-    def decorWrap(rowCol: Column, shapeText: String): Column =
-      (try Some(ZsonParser.parseType(ZType.stripNullWrap(shapeText)))
-       catch { case _: Exception => None }) match {
-        case Some(zt) if ZsonIO.needsFormatter(zt) => decorU(rowCol, lit(shapeText))
-        case _ => rowCol
-      }
-
-    val tagF = st.fields.find(_.name == het.typeTag)
-    val shapes: Seq[String] = tagF
-      .filter(_.metadata.contains("shapes"))
-      .map(_.metadata.getStringArray("shapes").toSeq)
-      .getOrElse(Seq.empty)
-
-    // a this-only VARIANT frame renders each row from the boxed value —
-    // its per-row type is runtime data (e.g. a spread over unflatten),
-    // not a static shape list
-    if (fields.map(_.name) == Seq("this") && isVariantType(fields.head.dataType)) {
-      // writers DROP top-level error("quiet") values (function/quiet.go;
-      // data-types.md: `yield quiet(x)` emits nothing for missing x)
-      val v = col("this")
-      val quiet = coalesce(graft.operators.Het.isError(v) &&
-        v.getField("z") === lit("\"quiet\""), lit(false))
-      // output boundary: re-render DECORATED from the boxed value's own
-      // type (zson/formatter.go — named typedefs at first use, non-implied
-      // primitives, typed nulls); canonical render is the fallback
-      val decor = udf((text: String, t: String) => ZsonFormatter.formatText(text, t))
-      return df.filter(v.isNull || !quiet)
-        .select(when(v.isNull, lit("null"))
-          .otherwise(decor(graft.operators.Het.render(v), v.getField("t")))
-          .as("value")).as[String]
-    }
-    if (fields.map(_.name) == Seq("this") && shapes.forall(!_.startsWith("{"))) {
-      // bare (non-record) value stream: the shape tag carries each row's
-      // zed type — render type-aware (sets as |[…]|, ips bare, …)
-      val dt = fields.head.dataType
-      val metaZt =
-        if (fields.head.metadata.contains("graft.zedType"))
-          try Some(ZsonParser.parseType(fields.head.metadata.getString("graft.zedType")))
-          catch { case _: Exception => None }
-        else None
-      // a marked `this` (a projection dropped the tag) renders like the
-      // tagged shape below
-      val base = metaZt match {
-        case Some(z) => decorWrap(zsonOfZ(col("this"), dt, Some(z), top = true), ZType.fullText(z))
-        case None => zsonOf(col("this"), dt)
-      }
-      val line = shapes.foldLeft(base) { (acc, t) =>
-        if (ZType.isNullWrap(t))
-          // typed top-level null: the tag text IS zed's output (null(int64))
-          when(col(het.typeTag) === t, lit(t)).otherwise(acc)
-        else (try Some(ZsonParser.parseType(t)) catch { case _: Exception => None }) match {
-          case Some(z) =>
-            when(col(het.typeTag) === t,
-              decorWrap(zsonOfZ(col("this"), dt, Some(z), top = true), t)).otherwise(acc)
-          case None => acc
-        }
-      }
-      return df.select(line.as("value")).as[String]
-    }
-
-    // mixed static/boxed frames (branch combines): a row whose value
-    // lives in a variant `this` carrier renders FROM the carrier — but
-    // ONLY when every sibling column is null on that row (carrier rows'
-    // statics are union artifacts; a record FIELD named "this" always
-    // has live siblings and keeps the record form)
-    val carrier: Option[Column] = fields.find(f =>
-      f.name == "this" && isVariantType(f.dataType) && fields.length > 1)
-      .map(_ => col("this"))
-    def carrierWins(c: Column): Column = carrier match {
-      case Some(th) =>
-        val othersNull = fields.filter(_.name != "this")
-          .map(f => col(s"`${f.name}`").isNull).reduce(_ && _)
-        when(th.isNotNull && othersNull, graft.operators.Het.render(th))
-          .otherwise(c)
-      case None => c
-    }
-
-    val default = carrierWins(recordFmt(fields))
-    if (shapes.isEmpty)
-      return df.select(default.as("value")).as[String]
-
-    val inAnyShape: Set[String] = shapes.flatMap { t =>
-      try ZType.strip(ZsonParser.parseType(ZType.stripNullWrap(t))) match {
-        case ZType.Rec(fs) => fs.map(_._1)
-        case _ => Seq("this")
-      } catch { case _: Exception => fields.map(_.name) }
-    }.toSet
-
-    val line = shapes.foldLeft(default) { (acc, t) =>
-      val zt =
-        if (ZType.isNullWrap(t)) None // handled below: renders as tag text
-        else try Some(ZType.strip(ZsonParser.parseType(t))) catch { case _: Exception => None }
-      val fmt: Option[Column] =
-        if (ZType.isNullWrap(t))
-          // top-level typed-null record: the whole row IS null(<rec>) —
-          // the tag text is exactly zed's output form
-          Some(lit(t))
-        else zt match {
-        case Some(ZType.Rec(shapeFields)) =>
-          // shape fields (in shape order, zed-typed) that survived …
-          val own = shapeFields.flatMap { case (n, ft) =>
-            fields.find(_.name == n).map(f => fieldFmt(f, Some(ft)))
-          }
-          // … plus operator-added columns, emitted when non-null (`this`
-          // is the empty-record carrier on record shapes, never data)
-          val added = fields.filterNot(f => inAnyShape(f.name) || f.name == "this")
-            .map { f => when(col(s"`${f.name}`").isNotNull, fieldFmt(f)) }
-          val row = concat(lit("{"), concat_ws(",", own ++ added: _*), lit("}"))
-          // STALE shape tags (an operator renamed/dropped columns without
-          // rewriting tags) must not reach the formatter — its positional
-          // fallback would mislabel fields; engage only when the shape's
-          // fields all exist physically and nothing was added beside them
-          val shapeMatches =
-            own.length == shapeFields.length && added.isEmpty
-          Some(carrierWins(
-            if (shapeMatches) decorWrap(row, t) else row))
-        case Some(z) if fields.exists(_.name == "this") =>
-          // bare (non-record) value stream row; operator-added columns
-          // (e.g. a sibling branch's put) wrap into a record ONLY when
-          // one is non-null on this row — else the value stays bare
-          val thisF = fields.find(_.name == "this").get
-          val bare = decorWrap(zsonOfZ(col("this"), thisF.dataType, Some(z), top = true), t)
-          val extras = fields.filterNot(f => f.name == "this" || inAnyShape(f.name))
-          if (extras.isEmpty) Some(bare)
-          else {
-            val anyExtra = extras.map(f => col(s"`${f.name}`").isNotNull).reduce(_ || _)
-            val withExtras = concat(lit("{"), concat_ws(",",
-              fieldFmt(thisF) +: extras.map(f =>
-                when(col(s"`${f.name}`").isNotNull, fieldFmt(f))): _*), lit("}"))
-            Some(when(anyExtra, withExtras).otherwise(bare))
-          }
-        case _ => None
-      }
-      fmt.map(c => when(col(het.typeTag) === t, c).otherwise(acc)).getOrElse(acc)
-    }
-    df.select(line.as("value")).as[String]
-  }
-
-  def write(df: DataFrame, path: String): Unit =
-    toZson(df).write.mode("overwrite").text(path)
+  /** One ZSON part file per non-empty partition (TextWriter.write). */
+  def write(df: DataFrame, path: String): Unit = TextWriter.write(df, path, TextWriter.Zson)
 
   // ---- reader ----------------------------------------------------------------
 
@@ -682,7 +471,7 @@ object ZsonIO {
       if (head.trim.nonEmpty && !headParses && !plausibleStart)
         throw new IllegalArgumentException(
           new java.io.File(path).getName + ": format detection error")
-      ZsonReader.fromRDD(spark, perFileValues(spark, path))
+      ZsonReader.fromRDD(spark, perFile(spark, path)(ZsonParser.parseAll(_).iterator))
     }
   }
 
@@ -755,14 +544,16 @@ object ZsonIO {
     def next(): ZValue = { if (!hasNext) throw new NoSuchElementException; queue.next() }
   }
 
-  /** Whole-file typed decode, one task per file (for pretty-printed
-    * multi-line ZSON where values may span line splits).
+  /** Whole-file typed decode, one task per file: `decode` reads one
+    * file's text as one stream (pretty-printed ZSON whose values span
+    * line splits; a ZJSON stream whose type ids are defined once).
     */
-  private def perFileValues(spark: SparkSession, path: String): org.apache.spark.rdd.RDD[ZValue] = {
+  private[sources] def perFile(spark: SparkSession, path: String)(
+      decode: String => Iterator[ZValue]): org.apache.spark.rdd.RDD[ZValue] = {
     import spark.implicits._
     spark.read.format("binaryFile")
       .load(if (HadoopFs.isDirectory(spark, path)) s"$path/*" else path)
       .select("content").as[Array[Byte]].rdd
-      .flatMap(bytes => ZsonParser.parseAll(new String(Gzip.maybeGunzip(bytes), "UTF-8")))
+      .flatMap(bytes => decode(new String(Gzip.maybeGunzip(bytes), "UTF-8")))
   }
 }

@@ -85,7 +85,7 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val region = GraftSession.table(spark, dir, "region").orderBy("r_regionkey")
     val text = ZFormat.textLines(region)
     assert(text.exists(_.startsWith("0\tAFRICA")))
-    val table = ZFormat.tableLines(region).collect()
+    val table = ZFormat.tableLines(region)(_.toArray)
     assert(table.head.startsWith("r_regionkey"))
     // Go-tabwriter alignment: non-final columns pad to block width + 1,
     // so every value column starts at the same offset

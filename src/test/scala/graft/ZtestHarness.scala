@@ -82,7 +82,7 @@ object ZtestHarness {
     else if (f.contains("-f zeek")) graft.sources.ZFormat.zeekLines(res)
     else if (f.contains("-f zjson")) graft.sources.ZjsonIO.typedLines(res)
     else if (f.contains("-f json")) graft.sources.ZFormat.jsonLines(res)
-    else if (f.contains("-f table")) graft.sources.ZFormat.tableLines(res).collect().toSeq
+    else if (f.contains("-f table")) graft.sources.ZFormat.tableLines(res)(_.toVector)
     else if (f.contains("-f text")) graft.sources.ZFormat.textLines(res)
     else ZsonIO.toZson(res).collect().toSeq
   }

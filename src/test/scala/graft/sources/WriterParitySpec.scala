@@ -12,7 +12,7 @@ import graft.GraftSession
 
 /** One renderer per text format: a file written with `Formats.write` and
   * the stream of the same frame (`ZFormat.lines`, which the CLI and the
-  * service print) hold the same bytes in zeek, json, csv, tsv and text. A
+  * service print) hold the same bytes in zson, zeek, json, csv, tsv and text. A
   * multi-partition stream is its part files stitched: a part's leading
   * header lines drop when they repeat the header already in force. The
   * typed leaf writers print what ZFormat's value rules print for the same
@@ -27,7 +27,7 @@ class WriterParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val root: Path = Files.createTempDirectory("graft-writer-parity")
   private var n = 0
 
-  private val formats = Seq("zeek", "json", "csv", "tsv", "text")
+  private val formats = Seq("zson", "zeek", "json", "csv", "tsv", "text")
 
   private def frame(zson: String): DataFrame = ZsonReader.fromText(spark, zson).coalesce(1)
 
@@ -74,11 +74,11 @@ class WriterParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("a one-partition file and the stream hold the same bytes in every format") {
     val frames = Seq(
       "conn" -> (conn.mkString("\n"), formats),
-      "conn and dns" -> ((conn :+ dns).mkString("\n"), Seq("zeek", "json", "text")),
+      "conn and dns" -> ((conn :+ dns).mkString("\n"), Seq("zson", "zeek", "json", "text")),
       "variant" -> (variant, formats),
       "untyped leaves" -> (untyped, formats),
-      "bytes and a map" -> (noZeek, formats.tail),
-      "a variant record" -> (variantRecord, Seq("zeek", "json", "text")))
+      "bytes and a map" -> (noZeek, formats.filter(_ != "zeek")),
+      "a variant record" -> (variantRecord, Seq("zson", "zeek", "json", "text")))
     for ((name, (zson, fs)) <- frames; f <- fs) {
       val df = frame(zson)
       val file = parts(df, f)
@@ -140,9 +140,9 @@ class WriterParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("the typed leaf writers print what ZFormat's value rules print") {
     val frames = Seq(
       "conn" -> (conn.mkString("\n"), formats),
-      "conn and dns" -> ((conn :+ dns).mkString("\n"), Seq("zeek", "json", "text")),
+      "conn and dns" -> ((conn :+ dns).mkString("\n"), Seq("zson", "zeek", "json", "text")),
       "untyped leaves" -> (untyped, formats),
-      "bytes and a map" -> (noZeek, formats.tail))
+      "bytes and a map" -> (noZeek, formats.filter(_ != "zeek")))
     for ((name, (zson, fs)) <- frames; f <- fs) {
       val df = frame(zson)
       assert(stream(df, f) == byValue(df, f), s"$name $f")
@@ -162,6 +162,23 @@ class WriterParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     val big = JsonIO.fromText(spark, """{"id":9007199254740993} {"id":1.5}""")
     assert(ZsonIO.toZson(big).collect().toSeq == Seq("{id:9007199254740993}", "{id:1.5}"))
     assert(big.select(col("id").cast("long")).collect().map(_.getLong(0)).toSeq == Seq(9007199254740993L, 1L))
+  }
+
+  test("a float32 prints its own shortest digits in json, in a file and in a stream") {
+    val df = frame("{f:0.1(float32),g:0.1}")
+    assert(parts(df, "json") == Seq("{\"f\":0.1,\"g\":0.1}\n"))
+    assert(stream(df, "json") == "{\"f\":0.1,\"g\":0.1}\n")
+    assert(stream(frame("{v:0.1(float32)} {v:\"x\"}"), "json") == "{\"v\":0.1}\n{\"v\":\"x\"}\n")
+  }
+
+  test("a table render leaves no spool file behind") {
+    val tmp = Path.of(System.getProperty("java.io.tmpdir"))
+    def spools(): Set[String] = Files.list(tmp).toArray.toSeq.map(_.asInstanceOf[Path].getFileName.toString)
+      .filter(_.startsWith("graft-table-")).toSet
+    val before = spools()
+    val lines = ZFormat.tableLines(frame(conn.mkString("\n")))(_.toVector)
+    assert(lines.head.startsWith("_path"))
+    assert(spools() == before)
   }
 
   test("csv refuses a second record type after the output before it") {
