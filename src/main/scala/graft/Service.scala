@@ -7,7 +7,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.SparkSession
 
 import graft.lang.Graft
-import graft.sources.{Formats, Lake, ZsonIO}
+import graft.sources.{Formats, Lake, ZsonIO, ZsonReader}
 
 /** REST query service (reference: service/core.go:171-206 — POST /query,
   * pool listing; responses stream ZSON lines like zed's ZNG-over-HTTP).
@@ -598,23 +598,40 @@ final class Service(spark: SparkSession, defaultDir: String, port: Int,
             return
           }
         }
-        // the body's spool outlives the read: the frame reads it lazily,
-        // so it goes once the load has returned or failed
-        val d = java.nio.file.Files.createTempDirectory("svcload")
+        // a ZSON body a file read would take as one text split decodes on
+        // the driver from the bytes in hand: no spool, no discovery job
+        val zson = ext == "zson" ||
+          ((ext == "auto" || ext == "json") && Formats.sniffHead(raw) == "zson")
+        val inMemory = if (zson) ZsonIO.valuesInMemory(spark, raw) else None
+        var spool: Option[java.nio.file.Path] = None
         try {
-          val p = if (ext == "auto") d.resolve("in") else d.resolve(s"in.$ext")
-          java.nio.file.Files.write(p, raw)
-          val params = query(ex)
-          val df =
-            if (ext == "csv")
-              Formats.readCsv(spark, p.toString, params.getOrElse("csv.delim", ","))
-            else Formats.read(spark, p.toString)
-          // a ZSON read has already discovered its shapes: no separate
-          // emptiness job
-          val empty = if (ext == "zson") !ZsonIO.readHasValues(df) else df.isEmpty
-          if (empty) {
-            jerr(ex, 400, "invalid operation", "no records in request")
-            return
+          val df = inMemory match {
+            case Some(values) =>
+              if (values.isEmpty) {
+                jerr(ex, 400, "invalid operation", "no records in request")
+                return
+              }
+              ZsonReader.fromValues(spark, values, tag = true)
+            case None =>
+              // any other body spools to a file, which outlives the read:
+              // the frame reads it lazily, so it goes once the load has
+              // returned or failed
+              val d = java.nio.file.Files.createTempDirectory("svcload")
+              spool = Some(d)
+              val p = if (ext == "auto") d.resolve("in") else d.resolve(s"in.$ext")
+              java.nio.file.Files.write(p, raw)
+              val df =
+                if (ext == "csv")
+                  Formats.readCsv(spark, p.toString, query(ex).getOrElse("csv.delim", ","))
+                else Formats.read(spark, p.toString)
+              // a ZSON read has already discovered its shapes: no separate
+              // emptiness job
+              val empty = if (ext == "zson") !ZsonIO.readHasValues(df) else df.isEmpty
+              if (empty) {
+                jerr(ex, 400, "invalid operation", "no records in request")
+                return
+              }
+              df
           }
           // the reference's branch-load endpoint reads the commit message
           // from a Zed-Commit header (api/queryio, service/handlers.go)
@@ -633,7 +650,7 @@ final class Service(spark: SparkSession, defaultDir: String, port: Int,
           event(s"""{kind:"commit",pool:"${Service.esc(pool)}",commit:"$id"}""")
           respond(ex, 200, commitResponse(ex, id))
         } finally
-          org.apache.commons.io.FileUtils.deleteQuietly(d.toFile): Unit
+          spool.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile): Unit)
       case _ => legacyPool.handle(ex)
     }
   }

@@ -1571,7 +1571,7 @@ final class SuperCmd(spark: SparkSession, host: SuperCmd.Host) {
           }
           val (pool, branch) = headTarget(target)
           requirePool(pool)
-          val frames = rest.map {
+          def frames = rest.map {
             case "-" =>
               val text = stdin.getOrElse("")
               if (viaHttp && text.trim.isEmpty)
@@ -1591,24 +1591,39 @@ final class SuperCmd(spark: SparkSession, host: SuperCmd.Host) {
               buildStdinFrame(text, None)
             case fn => Formats.read(spark, filePath(fn))
           }
+          def commit(df: DataFrame): String = lk.load(df, root, pool,
+            author = author, message = message, branch = branch, meta = meta)
           // several text files of one format load as ONE concatenated
           // stream (the reference cli concatenates its inputs), so type
           // inference (ns-time carriers, shapes) sees the whole corpus
-          val df =
+          val id =
             if (rest.length > 1 && rest.forall(f => f != "-" &&
                 (f.endsWith(".zson") || f.endsWith(".json")))) {
-              val cat = java.nio.file.Files.createTempFile("loadcat", ".zson")
-              val bos = new java.io.ByteArrayOutputStream()
-              rest.foreach { f =>
-                bos.write(java.nio.file.Files.readAllBytes(
-                  java.nio.file.Paths.get(filePath(f))))
-                bos.write('\n')
+              val paths = rest.map(filePath)
+              // a file's own read reports its error, as each file was read
+              // before the concatenation
+              def fileErrors(e: Throwable): Nothing = {
+                paths.foreach(Formats.read(spark, _))
+                throw e
               }
-              java.nio.file.Files.write(cat, bos.toByteArray)
-              graft.sources.ZsonIO.read(spark, cat.toString)
-            } else combineFrames(frames)
-          val id = lk.load(df, root, pool,
-            author = author, message = message, branch = branch, meta = meta)
+              val bos = new java.io.ByteArrayOutputStream()
+              try paths.foreach { p =>
+                bos.write(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)))
+                bos.write('\n')
+              } catch { case scala.util.control.NonFatal(e) => fileErrors(e) }
+              val bytes = bos.toByteArray
+              ZsonIO.valuesInMemory(spark, bytes).filter(_.nonEmpty) match {
+                case Some(values) => commit(ZsonReader.fromValues(spark, values, tag = true))
+                case None =>
+                  // the spool outlives the read: the frame reads it lazily
+                  val cat = java.nio.file.Files.createTempFile("loadcat", ".zson")
+                  try {
+                    java.nio.file.Files.write(cat, bytes)
+                    commit(try ZsonIO.read(spark, cat.toString)
+                      catch { case scala.util.control.NonFatal(e) => fileErrors(e) })
+                  } finally java.nio.file.Files.deleteIfExists(cat): Unit
+              }
+            } else commit(combineFrames(frames))
           if (quiet) "" else s"$id committed\n"
         case "query" =>
           // `-use <pool[@branch]>` scopes THIS query's default source

@@ -205,13 +205,21 @@ object Formats {
   /** Content-based format detection on the head bytes of the first file
     * (anyio/reader.go order: binary magics first, then text probes).
     */
-  private[sources] def sniff(spark: SparkSession, path: String): String = {
-    val head = headBytes(spark, path)
+  private[sources] def sniff(spark: SparkSession, path: String): String =
+    sniffHead(headBytes(spark, path))
+
+  /** What `sniff` says of a file that holds `bytes`: it reads the same
+    * head window.
+    */
+  private[graft] def sniffHead(bytes: Array[Byte]): String = {
+    val head = bytes.take(headWindow)
     // Nothing to sniff (empty file / markers only): preserve the historical
     // default for extensionless paths, which was spark.read.parquet.
     if (head.isEmpty) "parquet"
     else sniffBytes(Gzip.maybeGunzip(head))
   }
+
+  private val headWindow = 8192
 
   private[graft] def sniffBytes(head0: Array[Byte]): String = {
     val head = head0
@@ -285,7 +293,7 @@ object Formats {
     val file = fileOpt.getOrElse(return Array.emptyByteArray)
     val in = fs.open(file)
     try {
-      val buf = new Array[Byte](8192)
+      val buf = new Array[Byte](headWindow)
       var n = 0
       var r = 0
       while (n < buf.length && { r = in.read(buf, n, buf.length - n); r > 0 }) n += r

@@ -236,10 +236,14 @@ object Lake {
   }
 
   /** `load` — commit a query result into a pool (load.go:11-30). The data
-    * write is a distributed parquet write; only the tiny journal append is
-    * driver-side, mirroring zed's commit-journal design. The commit record
-    * carries the object's row count and key range, observed on the write
-    * job.
+    * write is one parquet write job (distributed for a multi-partition
+    * frame; a one-partition frame sorts in place); only the tiny journal
+    * append is driver-side, mirroring zed's commit-journal design. The
+    * commit record carries the object's row count and key range, observed
+    * on the write job, and the exact data bytes and seek index of the size
+    * pass (see [[sizeWindows]]), which runs no job of its own for a frame
+    * of driver-held rows (a service or CLI load of in-memory ZSON): then
+    * the write is the load's one Spark job.
     */
   def load(df: DataFrame, root: String, pool: String,
            author: String = "graft", message: String = "",
@@ -341,7 +345,8 @@ object Lake {
         // readable with plain `super query` like the reference's
         if (key.isDefined && ws.nonEmpty) {
           try Files.write(poolDir(root, pool).resolve("data").resolve(s"$id-seek.zng"),
-            seekIndex(ws, df.schema(key.get).dataType == org.apache.spark.sql.types.StringType)): Unit
+            seekIndex(df.sparkSession, ws,
+              df.schema(key.get).dataType == org.apache.spark.sql.types.StringType)): Unit
           catch { case e: Exception =>
             logger.warn(s"pool $pool object $id: no seek index: $e") }
         }
@@ -373,7 +378,8 @@ object Lake {
   private lazy val logger = org.slf4j.LoggerFactory.getLogger("graft.sources.Lake")
 
   /** The size pass: serialize the ORIGINAL tagged frame (shape metadata
-    * intact), pool-key sorted, as one ZNG stream in one Spark job, then
+    * intact), pool-key sorted, as one ZNG stream (`ZngIO.encodeInMemory`:
+    * on the driver for driver-held rows, else in one Spark job), then
     * RE-frame it into seek-index streams on the driver. The reference
     * cuts a stream (EndStream + seek entry) when the cumulative KEY body
     * bytes reach the pool's stride (lake/data/writer.go writeIndex); each
@@ -436,11 +442,12 @@ object Lake {
   }
 
   /** The `<id>-seek.zng` stream of an object's windows, built on the
-    * driver: one record per window, typed as a ZSON read of the records'
-    * text types them (an empty key text is a null bound), except that
-    * time bounds stay `time` at ns precision too.
+    * driver (a local frame, encoded without a Spark job): one record per
+    * window, typed as a ZSON read of the records' text types them (an
+    * empty key text is a null bound), except that time bounds stay `time`
+    * at ns precision too.
     */
-  private def seekIndex(ws: Seq[(Long, Long, String, String, Long, Long)],
+  private def seekIndex(spark: SparkSession, ws: Seq[(Long, Long, String, String, Long, Long)],
                         stringKey: Boolean): Array[Byte] = {
     def kv(s: String): String =
       if (s.isEmpty) "null"
@@ -463,7 +470,8 @@ object Lake {
         org.apache.spark.sql.types.StructType(schema.fields.map(f =>
           if (f.name == "min" || f.name == "max") f.copy(metadata = time) else f))
       }
-    ZngIO.encodeRows(rows, typed)
+    ZngIO.encodeInMemory(spark.createDataFrame(
+      scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, typed))
   }
 
   /** Journal string escaping (backslash and quote) and its inverse. */
@@ -690,30 +698,59 @@ object Lake {
     * inference runs, in the order it runs it (file paths sorted, so by
     * object id), so the frame has the schema inference would give without
     * the Spark job that reads every file's footer. A tagged frame's shape
-    * list, stored in the journal, re-attaches to its tag column.
+    * list, stored in the journal, re-attaches to its tag column. With
+    * `ownShapes` (a compaction's read), the rows of an untagged object
+    * merged into a tagged frame take that object's own shape as their
+    * tag, and the shape joins the list: no row is written untagged.
     */
   private def readObjects(spark: SparkSession, root: String, pool: String,
-                          ids: Seq[String], byId: Map[String, Commit]): DataFrame = {
+                          ids: Seq[String], byId: Map[String, Commit],
+                          ownShapes: Boolean = false): DataFrame = {
     val data = poolDir(root, pool).resolve("data")
     val caseSensitive = spark.conf.get("spark.sql.caseSensitive").toBoolean
-    val schema = ids.sortBy(_ + "/").flatMap(id => objectSchema(spark, data.resolve(id)))
+    val schemas = ids.map(id => id -> objectSchema(spark, data.resolve(id)))
+    val schema = schemas.sortBy(_._1 + "/").flatMap(_._2)
       .reduceOption(org.apache.spark.sql.graftshim.SchemaBridge.merge(_, _, caseSensitive))
       .getOrElse(throw new IllegalStateException(
         s"pool $pool: no data files under objects ${ids.mkString(", ")}"))
     val df0 = spark.read.schema(schema).parquet(ids.map(id => data.resolve(id).toString): _*)
     val tagName = graft.operators.Het.typeTag
-    val allShapes = ids.flatMap(byId.get).flatMap(_.shapes).distinct
+    val own: Map[String, String] =
+      if (!ownShapes || !schema.fieldNames.contains(tagName)) Map.empty
+      else schemas.collect { case (id, Some(st)) if !st.fieldNames.contains(tagName) =>
+        untaggedShape(st).map(id -> _)
+      }.flatten.toMap
+    val allShapes = ids.flatMap(id =>
+      own.get(id).map(Seq(_)).getOrElse(byId.get(id).toSeq.flatMap(_.shapes))).distinct
     if (!df0.columns.contains(tagName) || allShapes.isEmpty) df0
     else {
-      import org.apache.spark.sql.functions.col
+      import org.apache.spark.sql.functions.{col, lit, when}
       val md = new org.apache.spark.sql.types.MetadataBuilder()
         .putStringArray("shapes", allShapes.toArray).build()
+      val file = col("_metadata.file_path")
+      val tag = own.foldLeft(col(s"`$tagName`")) { case (t, (id, shape)) =>
+        when(file.contains(s"/$id/"), lit(shape)).otherwise(t)
+      }
       df0.select(df0.schema.fields.toIndexedSeq.map { f =>
-        if (f.name == tagName) col(s"`${f.name}`").as(f.name, md)
+        if (f.name == tagName) tag.as(f.name, md)
         else col(s"`${f.name}`")
       }: _*)
     }
   }
+
+  /** The shape text of an untagged object's rows: its record type, or
+    * the `this` column's type for a bare-value object. None when a boxed
+    * column types each row by itself.
+    */
+  private def untaggedShape(st: org.apache.spark.sql.types.StructType): Option[String] =
+    if (st.fields.exists(f => ZsonIO.isVariantType(f.dataType))) None
+    else try {
+      val t = ZsonParser.parseType(graft.functions.Shaper.zedTypeOf(st))
+      Some(ZType.fullText(ZType.strip(t) match {
+        case ZType.Rec(Seq(("this", inner))) => inner
+        case other => other
+      }))
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** `from <pool>[@commit|@branch]` — merge-on-read scan of the live
     * commits: a branch sees ancestors up to its fork plus its own
@@ -724,7 +761,12 @@ object Lake {
     */
   def scan(spark: SparkSession, root: String, pool: String,
            asOf: Option[String] = None,
-           keyRange: Option[(String, String)] = None): DataFrame = {
+           keyRange: Option[(String, String)] = None): DataFrame =
+    scanObjects(spark, root, pool, asOf, keyRange, ownShapes = false)
+
+  /** `scan`; with `ownShapes`, as a compaction reads (see [[readObjects]]). */
+  private def scanObjects(spark: SparkSession, root: String, pool: String,
+      asOf: Option[String], keyRange: Option[(String, String)], ownShapes: Boolean): DataFrame = {
     val all = commits(root, pool)
     val branchNames = all.filter(_.kind == "branch").map(_.id).toSet
     val (branch, upTo) = asOf match {
@@ -768,7 +810,7 @@ object Lake {
         if (kept.nonEmpty) kept else live.take(1) // keep a scannable frame for schema
       case _ => live
     }
-    val df1 = readObjects(spark, root, pool, pruned, byId)
+    val df1 = readObjects(spark, root, pool, pruned, byId, ownShapes)
     val allShapes = df1.schema.fields.find(_.name == graft.operators.Het.typeTag)
       .filter(_.metadata.contains("shapes"))
       .map(_.metadata.getStringArray("shapes").toSeq).getOrElse(Seq.empty)
@@ -958,7 +1000,7 @@ object Lake {
                  vectors: Boolean = false): String = {
     val byId = commits(root, pool).filter(_.kind == "commit")
       .map(c => c.id -> c).toMap
-    val df = readObjects(spark, root, pool, ids, byId)
+    val df = readObjects(spark, root, pool, ids, byId, ownShapes = true)
     val id = load(df, root, pool, "compact", s"compact ${ids.length} objects",
       branch, bodyTiebreak = true)
     ids.foreach(cid => delete(root, pool, cid, branch))
@@ -1023,7 +1065,7 @@ object Lake {
 
   def compact(spark: SparkSession, root: String, pool: String,
               branch: String = "main"): String = {
-    val df = scan(spark, root, pool, Some(branch))
+    val df = scanObjects(spark, root, pool, Some(branch), None, ownShapes = true)
     val all = commits(root, pool)
     // Everything the branch sees — its own objects AND fork ancestors — is
     // folded into the compact object, so all of it leaves this branch's

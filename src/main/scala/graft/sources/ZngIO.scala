@@ -227,39 +227,100 @@ object ZngIO {
     else (rows, out) => encodeInternalStreamTo(out, rows, schema)
   }
 
-  /** A frame as ONE ZNG stream held in memory, built in one Spark job:
-    * the frame coalesces to one task, which encodes its rows through the
-    * route `write` takes and hands each row to `probe` as it passes. The
-    * first `width` columns are the frame; columns past them ride along for
-    * `probe` only. Returns the stream and the probe results in row order.
-    * For small frames: the stream and the results come to the driver.
+  /** A frame as ONE ZNG stream held in memory: its rows, coalesced to
+    * one partition, encode through the route `write` takes, and each row
+    * goes to `probe` as it passes. The first `width` columns are the
+    * frame; columns past them ride along for `probe` only. Returns the
+    * stream and the probe results in row order. A frame whose rows are
+    * already on the driver (see [[driverRows]]) encodes there without a
+    * Spark job; any other frame encodes in one job of one task. For small
+    * frames: the stream and the results come to the driver.
     */
   private[graft] def encodeInMemory[A: scala.reflect.ClassTag](df: DataFrame, width: Int)(
       probe: InternalRow => A): (Array[Byte], Array[A]) = {
     val encode = streamEncoder(StructType(df.schema.fields.take(width)), "in-memory stream")
-    val Array(one) = df.coalesce(1).queryExecution.toRdd.mapPartitions { rows =>
-      val out = new ByteArrayOutputStream()
-      val probed = Array.newBuilder[A]
-      encode(rows.map { r => probed += probe(r); r }, out)
-      Iterator((out.toByteArray, probed.result()))
-    }.collect()
-    one
+    val one = df.coalesce(1)
+    val radixSort = df.sparkSession.conf.get(
+      org.apache.spark.sql.internal.SQLConf.RADIX_SORT_ENABLED.key).toBoolean
+    driverRows(one.queryExecution.optimizedPlan, radixSort) match {
+      case Some(rows) => encodeProbed(encode, probe, rows.iterator)
+      case None =>
+        val Array(out) = one.queryExecution.toRdd
+          .mapPartitions(rows => Iterator(encodeProbed(encode, probe, rows))).collect()
+        out
+    }
   }
 
   private[graft] def encodeInMemory(df: DataFrame): Array[Byte] =
     encodeInMemory(df, df.schema.length)(_ => ())._1
 
-  /** Driver-local rows of `schema` as one ZNG stream, through the route a
-    * one-partition frame of them (`createDataFrame(rows, schema)`) takes
-    * in `write`; no Spark job runs.
-    */
-  private[graft] def encodeRows(rows: Seq[Row], schema: StructType): Array[Byte] = {
-    val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToCatalystConverter(schema)
+  private def encodeProbed[A: scala.reflect.ClassTag](encode: StreamEncoder,
+      probe: InternalRow => A, rows: Iterator[InternalRow]): (Array[Byte], Array[A]) = {
     val out = new ByteArrayOutputStream()
-    streamEncoder(schema, "driver rows")(
-      rows.iterator.map(r => toInternal(r).asInstanceOf[InternalRow]), out)
-    out.toByteArray
+    val probed = Array.newBuilder[A]
+    encode(rows.map { r => probed += probe(r); r }, out)
+    (out.toByteArray, probed.result())
+  }
+
+  /** The rows of an optimized plan that Spark would run as one partition
+    * over rows the driver already holds, evaluated on the driver with
+    * Catalyst's own operators: a chain of deterministic projections
+    * (`UnsafeProjection`) and partition-local sorts (in the order Spark's
+    * sorter gives, see [[sortedAsSpark]]) over a shuffle-free coalesce to
+    * one partition of a `LocalRelation`. A sort is taken only above that
+    * coalesce (or over at most one row), where its partition is the
+    * whole frame. None for any other plan.
+    */
+  private def driverRows(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+      radixSort: Boolean): Option[Seq[InternalRow]] = {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, PlanExpression, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.plans.logical._
+    def local(e: Expression): Boolean = e.deterministic && !e.exists(_.isInstanceOf[PlanExpression[_]])
+    // (rows, whether they form one partition)
+    def rows(p: LogicalPlan): Option[(Seq[InternalRow], Boolean)] = p match {
+      case l: LocalRelation if !l.isStreaming => Some((l.data, l.data.length <= 1))
+      case Repartition(1, false, child) => rows(child).map { case (rs, _) => (rs, true) }
+      case Project(list, child) if list.forall(local) =>
+        rows(child).map { case (rs, one) =>
+          val project = UnsafeProjection.create(list, child.output)
+          (rs.map(r => project(r).copy()), one)
+        }
+      case Sort(order, false, child, _) if order.forall(local) =>
+        rows(child).collect { case (rs, true) => (sortedAsSpark(rs, order, child.output, radixSort), true) }
+      case _ => None
+    }
+    rows(plan).collect { case (rs, true) => rs }
+  }
+
+  /** `rows` in the order Spark's sorter (`SortExec`) gives them under
+    * `order`. It sorts stably, except in a radix sort (one sort key whose
+    * prefix orders it fully): there each row with a null key takes the
+    * place of the first non-null row, which moves to the end. The same
+    * moves before a stable sort give its order.
+    */
+  private def sortedAsSpark(rows: Seq[InternalRow],
+      order: Seq[org.apache.spark.sql.catalyst.expressions.SortOrder],
+      input: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
+      radixSort: Boolean): Seq[InternalRow] = {
+    import org.apache.spark.sql.catalyst.expressions.{BindReferences, InterpretedOrdering}
+    val bound = order.map(BindReferences.bindReference(_, input))
+    val arranged =
+      if (!(radixSort && bound.length == 1 &&
+          org.apache.spark.sql.execution.SortPrefixUtils.canSortFullyWithPrefix(bound.head))) rows
+      else {
+        val key = bound.head.child
+        val nulls = Vector.newBuilder[InternalRow]
+        val rest = scala.collection.mutable.Queue.empty[InternalRow]
+        rows.foreach { r =>
+          if (key.eval(r) != null) rest.enqueue(r)
+          else {
+            nulls += r
+            if (rest.nonEmpty) rest.enqueue(rest.dequeue())
+          }
+        }
+        nulls.result() ++ rest
+      }
+    arranged.sorted(new InterpretedOrdering(bound))
   }
 
   private[graft] type FieldEnc = (ByteBuf, SpecializedGetters, Int) => Unit

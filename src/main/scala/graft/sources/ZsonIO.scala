@@ -475,6 +475,28 @@ object ZsonIO {
     }
   }
 
+  /** The values of a ZSON text held in memory, parsed on the driver as
+    * `ZsonReader.fromText` parses them, when a file of it would read as
+    * one text split: Spark's split size for one file of its length
+    * (`FilePartition.maxSplitBytes`, the open cost of 4 MiB at default
+    * settings), so the driver decode gives up no parallelism a file read
+    * had. None for a larger text, and for one that does not parse in
+    * whole: `read` over a file of it decodes it or reports its error.
+    */
+  private[graft] def valuesInMemory(spark: SparkSession, bytes: Array[Byte]): Option[Vector[ZValue]] =
+    if (bytes.length > splitBytes(spark, bytes.length)) None
+    else try Some(ZsonParser.parseAll(new String(bytes, java.nio.charset.StandardCharsets.UTF_8)))
+    catch { case scala.util.control.NonFatal(_) => None }
+
+  /** The largest text split Spark cuts a file of `len` bytes into. */
+  private def splitBytes(spark: SparkSession, len: Long): Long = {
+    import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionDirectory}
+    val file = new org.apache.hadoop.fs.FileStatus(len, false, 1, 0L, 0L,
+      new org.apache.hadoop.fs.Path("/in.zson"))
+    FilePartition.maxSplitBytes(spark,
+      Seq(PartitionDirectory(org.apache.spark.sql.catalyst.InternalRow.empty, Array(file))))
+  }
+
   /** Whether a frame `read` returned holds any value: its discovery
     * records a shape for every value it sees, so only an empty read
     * comes back without the tag column's shape list.

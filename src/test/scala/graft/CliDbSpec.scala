@@ -60,6 +60,38 @@ class CliDbSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(db("drop", "-f", "demo2") == "pool deleted: demo2\n")
   }
 
+  test("a multi-file load reads its files once, in one Spark job, and leaves no spool") {
+    val lake = work.resolve("lake-multi").toString
+    val sup = new graft.cli.SuperCmd(spark, host(lake))
+    def db(args: String*): String = sup.db(args.toIndexedSeq, None)
+    db("init")
+    db("create", "-orderby", "ts:asc", "multi")
+    java.nio.file.Files.writeString(work.resolve("m1.zson"),
+      "{ts:2024-01-01T00:00:00Z,x:1}\n{ts:2024-01-02T00:00:00Z,x:2}\n")
+    // ZSON in a .json file: the same concatenated stream
+    java.nio.file.Files.writeString(work.resolve("m2.json"), "{ts:2024-01-03T00:00:00Z,y:\"a\"}\n")
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def spools(): Set[String] = Option(tmp.listFiles()).getOrElse(Array.empty)
+      .map(_.getName).filter(_.startsWith("loadcat")).toSet
+    val before = spools()
+    var out = ""
+    // five before: a discovery job per file, one over their concatenation,
+    // the commit write and the size pass
+    val seen = SparkJobs.during(spark) { out = db("load", "-use", "multi", "m1.zson", "m2.json") }
+    assert(out.endsWith(" committed\n"), out)
+    assert(seen.jobs == 1, s"a two-file load ran ${seen.jobs} Spark jobs")
+    assert(spools() -- before == Set.empty[String])
+    assert(db("query", "-z", "from multi") ==
+      "{ts:2024-01-01T00:00:00Z,x:1}\n{ts:2024-01-02T00:00:00Z,x:2}\n{ts:2024-01-03T00:00:00Z,y:\"a\"}\n")
+    // a malformed file reports its own read's error, and leaves no spool
+    java.nio.file.Files.writeString(work.resolve("bad.zson"), "{ts:2024-01-04T00:00:00Z,x:\n")
+    val err = intercept[Exception](db("load", "-use", "multi", "m1.zson", "bad.zson"))
+    assert(String.valueOf(err.getMessage).contains("zson parse at"), err)
+    val missing = intercept[Exception](db("load", "-use", "multi", "m1.zson", "nope.zson"))
+    assert(missing.getMessage == s"${work.resolve("nope.zson")}: file does not exist")
+    assert(spools() -- before == Set.empty[String])
+  }
+
   test("dev compile canonical/semantic forms from the shipped dispatch") {
     val lake = work.resolve("lake2").toString
     val sup = new graft.cli.SuperCmd(spark, host(lake))

@@ -75,71 +75,151 @@ class LakeSizeSpec extends AnyFunSuite with BeforeAndAfterAll {
       """{"kind":"commit","branch":"main","author":"graft","message":"","shapes":["{k:int64,s:string}","{k:null,s:string}","{s:string,x:float64}"],"rows":24,"bytes":220,"vbytes":143,"wins":"24,143,,"}""")
   )
 
+  private def hex(bytes: Array[Byte]): String = bytes.map(b => f"${b & 0xff}%02x").mkString
+
+  /** `root`'s commit record of `id` without its `id` and `ts`, and the
+    * object's seek index in hex ("-" when it has none).
+    */
+  private def committed(root: String, pool: String, id: String): (String, String) = {
+    val journal = new String(Files.readAllBytes(Paths.get(root, pool, "commits.jsonl")), "UTF-8")
+    val record = journal.split("\n").find(_.contains(s""""id":"$id"""")).get
+      .replaceAll(""""id":"[^"]*",""", "").replaceAll(""","ts":\d+""", "")
+    val seekFile: Path = Paths.get(root, pool, "data", s"$id-seek.zng")
+    (if (Files.exists(seekFile)) hex(Files.readAllBytes(seekFile)) else "-", record)
+  }
+
+  private val aLines = (0 until 24).map { i =>
+    if (i % 7 == 3) s"""{k:null,s:"n$i"}"""
+    else if (i % 11 == 5) s"""{s:"m$i",x:1.5}"""
+    else s"""{k:${(i * 5) % 13},s:"r$i"}"""
+  }
+  private val a2Lines = (0 until 12).map { i =>
+    if (i % 5 == 0) s"""{k:null,s:"q$i"}""" else s"""{k:${i % 4},s:"t$i",y:[$i,2]}"""
+  }
+  private val t0 = java.time.Instant.parse("2024-03-01T00:00:00Z")
+  private val bLines = (0 until 20).map { i =>
+    if (i == 7) s"""{ts:null,uid:"u$i"}"""
+    else s"""{ts:${t0.plusNanos(i * 1000000L + (i * 7919 % 1000) * 1000L)},uid:"u$i",n:${i * 37}}"""
+  }
+  private val b2Lines = (0 until 10).map(i => s"""{ts:${t0.plusNanos(i * 1000L + i)},v:$i}""")
+  private val dLines = (0 until 9).map(i => s"""{k:"${"abcab"(i % 5)}$i",m:|{"x":$i}|}""")
+
+  /** Loads every ZSON fixture, each frame built by `read` from its lines,
+    * and checks each commit against `expected`; `load` runs one load.
+    */
+  private def checkZsonFixtures(root: String, read: Seq[String] => org.apache.spark.sql.DataFrame)(
+      load: (=> String) => String): Unit = {
+    def check(name: String, pool: String, id: String): Unit =
+      assert(committed(root, pool, id) == expected(name), name)
+    Lake.create(root, "a", Some("k"), "asc", seekStride = 3L)
+    val a1 = load(Lake.load(read(aLines), root, "a"))
+    check("a1", "a", a1)
+    Lake.create(root, "ad", Some("k"), "desc", seekStride = 3L)
+    check("ad", "ad", load(Lake.load(read(aLines), root, "ad")))
+    val a2 = load(Lake.load(read(a2Lines), root, "a"))
+    check("a2", "a", a2)
+    // compaction: equal keys order by their ZNG body bytes
+    check("acompact", "a", Lake.compactIds(spark, root, "a", Seq(a1, a2)))
+    Lake.create(root, "b", Some("ts"), "desc", seekStride = 16L)
+    check("b", "b", load(Lake.load(read(bLines), root, "b")))
+    // sub-µs times ride the ns-long carrier; the seek index still types
+    // its bounds time (0x0d), like zed's — this one pin is not the old pass's
+    Lake.create(root, "b2", Some("ts"), "asc", seekStride = 9L)
+    check("b2", "b2", load(Lake.load(read(b2Lines), root, "b2")))
+    Lake.create(root, "d", Some("k"), "asc", seekStride = 5L)
+    check("d", "d", load(Lake.load(read(dLines), root, "d")))
+    Lake.create(root, "f", None)
+    check("f", "f", load(Lake.load(read(aLines), root, "f")))
+  }
+
   test("a load's seek index and commit record match the bytes the ZNG-file size pass wrote") {
     val tmp = Files.createTempDirectory("graft-lakesize")
-    def zson(name: String, lines: Seq[String]): String = {
-      val p = tmp.resolve(name)
+    var files = 0
+    def zson(lines: Seq[String]): String = {
+      files += 1
+      val p = tmp.resolve(s"$files.zson")
       Files.write(p, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
       p.toString
     }
     val root = tmp.resolve("lake").toString
-    def check(name: String, pool: String, id: String): Unit = {
-      val journal = new String(Files.readAllBytes(Paths.get(root, pool, "commits.jsonl")), "UTF-8")
-      val record = journal.split("\n").find(_.contains(s""""id":"$id"""")).get
-        .replaceAll(""""id":"[^"]*",""", "").replaceAll(""","ts":\d+""", "")
-      val seekFile: Path = Paths.get(root, pool, "data", s"$id-seek.zng")
-      val seek =
-        if (Files.exists(seekFile)) Files.readAllBytes(seekFile).map(b => f"${b & 0xff}%02x").mkString
-        else "-"
-      assert((seek, record) == expected(name), name)
-    }
-
-    val aLines = (0 until 24).map { i =>
-      if (i % 7 == 3) s"""{k:null,s:"n$i"}"""
-      else if (i % 11 == 5) s"""{s:"m$i",x:1.5}"""
-      else s"""{k:${(i * 5) % 13},s:"r$i"}"""
-    }
-    Lake.create(root, "a", Some("k"), "asc", seekStride = 3L)
-    val a1 = Lake.load(ZsonIO.read(spark, zson("a1.zson", aLines)), root, "a")
-    check("a1", "a", a1)
-    Lake.create(root, "ad", Some("k"), "desc", seekStride = 3L)
-    check("ad", "ad", Lake.load(ZsonIO.read(spark, zson("a1.zson", aLines)), root, "ad"))
-    val a2Lines = (0 until 12).map { i =>
-      if (i % 5 == 0) s"""{k:null,s:"q$i"}""" else s"""{k:${i % 4},s:"t$i",y:[$i,2]}"""
-    }
-    val a2 = Lake.load(ZsonIO.read(spark, zson("a2.zson", a2Lines)), root, "a")
-    check("a2", "a", a2)
-    // compaction: equal keys order by their ZNG body bytes
-    check("acompact", "a", Lake.compactIds(spark, root, "a", Seq(a1, a2)))
-
-    val t0 = java.time.Instant.parse("2024-03-01T00:00:00Z")
-    val bLines = (0 until 20).map { i =>
-      if (i == 7) s"""{ts:null,uid:"u$i"}"""
-      else s"""{ts:${t0.plusNanos(i * 1000000L + (i * 7919 % 1000) * 1000L)},uid:"u$i",n:${i * 37}}"""
-    }
-    Lake.create(root, "b", Some("ts"), "desc", seekStride = 16L)
-    check("b", "b", Lake.load(ZsonIO.read(spark, zson("b.zson", bLines)), root, "b"))
-    // sub-µs times ride the ns-long carrier; the seek index still types
-    // its bounds time (0x0d), like zed's — this one pin is not the old pass's
-    val b2Lines = (0 until 10).map(i => s"""{ts:${t0.plusNanos(i * 1000L + i)},v:$i}""")
-    Lake.create(root, "b2", Some("ts"), "asc", seekStride = 9L)
-    check("b2", "b2", Lake.load(ZsonIO.read(spark, zson("b2.zson", b2Lines)), root, "b2"))
+    checkZsonFixtures(root, lines => ZsonIO.read(spark, zson(lines)))(id => id)
 
     import org.apache.spark.sql.functions._
     val c = spark.range(0, 30, 1, 3).select(
       when(col("id") % 5 =!= 0, col("id") % 7).as("k"),
       concat(lit("r"), col("id").cast("string")).as("s"))
     Lake.create(root, "c", Some("k"), "desc", seekStride = 2L)
-    check("c", "c", Lake.load(c, root, "c"))
-
-    val dLines = (0 until 9).map(i => s"""{k:"${"abcab"(i % 5)}$i",m:|{"x":$i}|}""")
-    Lake.create(root, "d", Some("k"), "asc", seekStride = 5L)
-    check("d", "d", Lake.load(ZsonIO.read(spark, zson("d.zson", dLines)), root, "d"))
-
-    Lake.create(root, "f", None)
-    check("f", "f", Lake.load(ZsonIO.read(spark, zson("f.zson", aLines)), root, "f"))
+    val cId = Lake.load(c, root, "c")
+    assert(committed(root, "c", cId) == expected("c"), "c")
 
     // the ctrl QueryStats count through the same encode
-    assert(Lake.bodyStats(ZsonIO.read(spark, zson("s.zson", aLines ++ dLines))) == ((33L, 214L)))
+    assert(Lake.bodyStats(ZsonIO.read(spark, zson(aLines ++ dLines))) == ((33L, 214L)))
+  }
+
+  test("a load of driver-held rows sizes on the driver and writes the same bytes") {
+    val root = Files.createTempDirectory("graft-lakesize-local").resolve("lake").toString
+    // the size pass and the seek index run no job: the write is the one
+    checkZsonFixtures(root, lines => ZsonReader.fromText(spark, lines.mkString("", "\n", "\n"))) { load =>
+      var id = ""
+      val seen = graft.SparkJobs.during(spark) { id = load }
+      assert(seen.jobs == 1, s"a load of driver-held rows ran ${seen.jobs} Spark jobs")
+      id
+    }
+  }
+
+  test("a driver-held frame encodes the stream and probes a distributed frame of its rows gives") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.{asc, asc_nulls_last, col, desc_nulls_first}
+    val local = ZsonReader.fromText(spark, aLines.mkString("\n"))
+    val spread = spark.createDataFrame(
+      spark.sparkContext.parallelize(local.collect().toSeq, 3), local.schema)
+    assert(spread.rdd.getNumPartitions == 3)
+    def encode(df: org.apache.spark.sql.DataFrame, order: Column) = {
+      val width = df.schema.length
+      val sorted = df.coalesce(1).sortWithinPartitions(order)
+        .select(col("*"), col("k").cast("string"))
+      var out: (Array[Byte], Array[String]) = null
+      val jobs = graft.SparkJobs.during(spark) {
+        out = ZngIO.encodeInMemory(sorted, width)(r =>
+          if (r.isNullAt(width)) "" else r.getUTF8String(width).toString)
+      }.jobs
+      (hex(out._1), out._2.toSeq, jobs)
+    }
+    // equal and null keys: Spark's radix sort of a long key, and its
+    // stable sort of a string key
+    for (order <- Seq(asc_nulls_last("k"), desc_nulls_first("k"), asc("s"),
+        col("k").cast("string").asc)) {
+      val (localStream, localProbes, localJobs) = encode(local, order)
+      val (spreadStream, spreadProbes, spreadJobs) = encode(spread, order)
+      assert((localJobs, spreadJobs) == ((0, 1)), order)
+      assert(localStream == spreadStream, order)
+      assert(localProbes == spreadProbes && localProbes.length == 24, order)
+    }
+  }
+
+  test("compaction gives an untagged object's rows their own shape and keeps the exact size") {
+    val root = Files.createTempDirectory("graft-lakesize-mixed").resolve("lake").toString
+    val tag = graft.operators.Het.typeTag
+    // compact (a branch's scan) and manage (a run of objects by id)
+    for ((pool, compact) <- Seq[(String, () => Unit)](
+        "k" -> (() => Lake.compact(spark, root, "k"): Unit),
+        "m" -> (() => Lake.manage(spark, root, "m")))) {
+      Lake.create(root, pool, Some("id"), "asc")
+      Lake.load(spark.range(0, 20).toDF("id"), root, pool)
+      Lake.load(ZsonReader.fromText(spark, "{id:3,t:\"a\"}\n{id:61,u:2.5}"), root, pool)
+      def rows() = Lake.scan(spark, root, pool).drop(tag).collect().toSeq.map(_.toString).sorted
+      val before = rows()
+      val loaded = Lake.commitsOn(root, pool, "main").filter(_.kind == "commit")
+      compact()
+      val Seq(c) = Lake.commitsOn(root, pool, "main").filter(_.kind == "commit")
+      assert(c.author == "compact" && c.rows == 22, pool)
+      // the untagged rows encode as they did in their own object
+      assert(c.vbytes == loaded.map(_.vbytes).sum && c.wins.nonEmpty, pool)
+      assert(Files.exists(Paths.get(root, pool, "data", s"${c.id}-seek.zng")), pool)
+      assert(c.shapes == Seq("{id:int64}", "{id:int64,t:string}", "{id:int64,u:float64}"), pool)
+      val scan = Lake.scan(spark, root, pool)
+      assert(scan.filter(scan(tag).isNull).isEmpty, pool)
+      assert(rows() == before, pool)
+    }
   }
 }

@@ -190,8 +190,8 @@ class ZsonReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(seen.finalPlans.exists(_.contains("rangepartitioning")), seen.finalPlans.mkString("\n"))
   }
 
-  test("a keyed service load runs three Spark jobs: discovery, the commit write and the size pass") {
-    val root = tmp("zsonread-svc3").toString
+  test("a keyed service load runs one Spark job: the commit write") {
+    val root = tmp("zsonread-svc1").toString
     Lake.create(root, "p", Some("ts"), "desc")
     val svc = new Service(spark, root, 0, lakeRootOpt = Some(root))
     val port = svc.start()
@@ -208,7 +208,7 @@ class ZsonReadSpec extends AnyFunSuite with BeforeAndAfterAll {
           code = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString()).statusCode()
         }
         assert(code == 200)
-        assert(seen.jobs == 3, s"a service load ran ${seen.jobs} Spark jobs")
+        assert(seen.jobs == 1, s"a service load ran ${seen.jobs} Spark jobs")
       }
       val cs = Lake.commits(root, "p").filter(_.kind == "commit")
       assert(cs.length == 3 && cs.forall(c => c.rows == 500 && c.vbytes > 0 && c.wins.nonEmpty))
@@ -254,5 +254,115 @@ class ZsonReadSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(Lake.scan(spark, root, "p").count() ==
         text.count(l => l.split("orig_bytes:")(1).stripSuffix("}").toInt >= 100))
     } finally svc.stop()
+  }
+
+  /** A lake service on `root` for the length of `body`, which gets a
+    * branch-load call: (pool, text, content type) => (status, body).
+    */
+  private def withService[A](root: String)(body: ((String, String, String) => (Int, String)) => A): A = {
+    val svc = new Service(spark, root, 0, lakeRootOpt = Some(root))
+    val port = svc.start()
+    val client = java.net.http.HttpClient.newHttpClient()
+    def load(pool: String, text: String, ctype: String): (Int, String) = {
+      val req = java.net.http.HttpRequest.newBuilder(
+          java.net.URI.create(s"http://127.0.0.1:$port/pool/$pool/branch/main"))
+        .header("Content-Type", ctype)
+        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(text)).build()
+      val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
+      (resp.statusCode(), resp.body())
+    }
+    try body(load) finally svc.stop()
+  }
+
+  /** A pool's one object as a route leaves it: the commit record (its id
+    * and time aside), the seek index and each parquet part's sha256.
+    */
+  private def objectOf(root: String, pool: String): (Lake.Commit, Seq[Byte], Seq[String]) = {
+    val Seq(c) = Lake.commits(root, pool).filter(_.kind == "commit")
+    val data = java.nio.file.Paths.get(root, pool, "data")
+    val seek = data.resolve(s"${c.id}-seek.zng")
+    val parts = data.resolve(c.id).toFile.listFiles().map(_.getName).filter(_.endsWith(".parquet")).sorted
+      .map(n => java.security.MessageDigest.getInstance("SHA-256")
+        .digest(Files.readAllBytes(data.resolve(c.id).resolve(n))).map(b => f"${b & 0xff}%02x").mkString)
+    (c.copy(id = "", ts = 0L), if (Files.exists(seek)) Files.readAllBytes(seek).toSeq else Seq.empty,
+      parts.toSeq)
+  }
+
+  /** Loads `text` through the service into `pool` and through a file
+    * read into `pool`-file, and checks both commit the same object and
+    * scan the same rows; returns the service load's Spark job count.
+    */
+  private def sameAsFileRoute(root: String, load: (String, String, String) => (Int, String),
+      pool: String, text: String, ctype: String = "application/x-zson"): Int = {
+    Lake.create(root, pool, Some("ts"), "desc")
+    Lake.create(root, s"$pool-file", Some("ts"), "desc")
+    var res: (Int, String) = null
+    val jobs = SparkJobs.during(spark) { res = load(pool, text, ctype) }.jobs
+    assert(res._1 == 200, s"$pool: $res")
+    val f = write(tmp("zsonread-route"), "in.zson", text)
+    Lake.load(ZsonIO.read(spark, f), root, s"$pool-file", author = "service")
+    val (got, want) = (objectOf(root, pool), objectOf(root, s"$pool-file"))
+    assert(got._1 == want._1, pool)
+    assert(got._1.vbytes > 0 && got._1.wins.nonEmpty && got._2.nonEmpty, pool)
+    assert(got._2 == want._2 && got._3 == want._3, pool)
+    val (a, b) = (Lake.scan(spark, root, pool), Lake.scan(spark, root, s"$pool-file"))
+    assert(a.schema == b.schema, pool)
+    assert(a.collect().toSeq.map(_.toString) == b.collect().toSeq.map(_.toString), pool)
+    jobs
+  }
+
+  test("a service ZSON load decodes in memory and commits the object the file route commits") {
+    val root = tmp("zsonread-mem").toString
+    val bodies = Seq(
+      "lines" -> batch(40),
+      "comments" -> ("// a header\n\n" + batch(5) + "// between\n" + batch(3)),
+      "typedefs" -> ("{ts:2024-01-01T00:00:00Z,a:1,s:\"x\"}(=rec)\n{ts:2024-01-01T00:00:01Z,a:2,s:\"y\"}(rec)\n" +
+        "{ts:2024-01-01T00:00:02Z,p:80(port=uint16)}\n{ts:2024-01-01T00:00:03Z,p:81(port)}\n"),
+      "pretty" -> ("{\n    ts: 2024-01-01T00:00:00Z,\n    a: 1\n}\n" +
+        "{\n    ts: 2024-01-01T00:00:00.000000001Z,\n    b: [\n        1,\n        2\n    ],\n" +
+        "    m: |{\"x\":1}|\n}\n"))
+    withService(root) { load =>
+      for ((name, text) <- bodies)
+        assert(sameAsFileRoute(root, load, name, text) == 1, s"$name: one job, the commit write")
+      // a body sniffed as ZSON takes the same route
+      assert(sameAsFileRoute(root, load, "sniffed", batch(20), "*/*") == 1)
+    }
+  }
+
+  test("an empty or malformed ZSON body answers as the file route does") {
+    val root = tmp("zsonread-bad-svc").toString
+    Lake.create(root, "p", Some("ts"), "desc")
+    withService(root) { load =>
+      val empty = load("p", "// nothing\n\n  // here\n", "application/x-zson")
+      assert(empty == ((400,
+        """{"type":"Error","kind":"invalid operation","error":"no records in request"}""" + "\n")))
+      // a body the driver cannot parse goes to the file route, whose
+      // line-by-line parse reports the error
+      val bad = load("p", "{ts:2024-01-01T00:00:00Z,a:1}\n{ts:2024-01-01T00:00:01Z,a:\n", "application/x-zson")
+      assert(bad._1 == 400, bad)
+      assert(bad._2.contains("java.lang.IllegalArgumentException: zson parse at 27: unexpected character '\u0000'"), bad)
+    }
+    assert(Lake.commits(root, "p").isEmpty)
+  }
+
+  test("a ZSON body within Spark's split size decodes in memory; one byte over reads from a file") {
+    val root = tmp("zsonread-bound").toString
+    // a 4 KiB split for files up to 12 KiB: each of 4 tasks gets at most
+    // (length + open cost) / 4 bytes, and no split is under the open cost
+    spark.conf.set("spark.sql.files.openCostInBytes", "4096")
+    spark.conf.set("spark.sql.files.minPartitionNum", "4")
+    try {
+      val text = batch(30)
+      assert(text.length < 4096)
+      withService(root) { load =>
+        assert(sameAsFileRoute(root, load, "at", text + " " * (4096 - text.length)) == 1)
+        // two text splits: discovery, the range sort's sampling and its
+        // shuffle, the commit write and the size pass
+        assert(sameAsFileRoute(root, load, "over", text + " " * (4097 - text.length)) == 5)
+      }
+    } finally {
+      spark.conf.unset("spark.sql.files.openCostInBytes")
+      spark.conf.unset("spark.sql.files.minPartitionNum")
+    }
   }
 }
