@@ -143,8 +143,8 @@ final class Service(spark: SparkSession, defaultDir: String, port: Int,
         }
       })
     }
-    // streaming response: chunked transfer + toLocalIterator — driver
-    // memory stays one partition regardless of result size (the
+    // streaming response: chunked transfer, one rendered partition at a
+    // time — driver memory stays one partition regardless of result size (the
     // reference's paged ZNG-over-HTTP); `limit` is a guard, 0 = unlimited
     server.createContext("/query", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
@@ -179,8 +179,7 @@ final class Service(spark: SparkSession, defaultDir: String, port: Int,
             outs.foreach { case (name, leg0) =>
               val leg = if (limit > 0) leg0.limit(limit) else leg0
               line(s"""{"type":"QueryChannelSet","value":{"channel":"${Service.esc(name)}"}}""")
-              val lit = ZsonIO.toZson(leg).toLocalIterator()
-              while (lit.hasNext) line(lit.next())
+              graft.sources.ZFormat.lines(leg, "zson")(_.foreach(line))
               line(s"""{"type":"QueryChannelEnd","value":{"channel":"${Service.esc(name)}"}}""")
             }
             os.flush()
@@ -207,11 +206,7 @@ final class Service(spark: SparkSession, defaultDir: String, port: Int,
             os.flush()
             ex.getResponseBody.close()
           }
-          fmt match {
-            case "text" => graft.sources.ZFormat.lines(df, "text")(send)
-            case _ => send(scala.jdk.CollectionConverters.IteratorHasAsScala(
-              ZsonIO.toZson(df).toLocalIterator()).asScala)
-          }
+          graft.sources.ZFormat.lines(df, if (fmt == "text") "text" else "zson")(send)
         } catch {
           case e: Exception =>
             val msg = (s"""{error:"${Service.esc(String.valueOf(e.getMessage))}"}""" + "\n")
@@ -312,7 +307,7 @@ final class Service(spark: SparkSession, defaultDir: String, port: Int,
         if (unauthorized(ex)) return
         try refPoolRoutes(ex)
         catch { case e: Exception =>
-          jerr(ex, 400, "invalid operation", String.valueOf(e.getMessage)) }
+          jerr(ex, 400, "invalid operation", Service.ownMessage(e)) }
       }
     })
     server.createContext("/compile", new HttpHandler {
@@ -773,9 +768,6 @@ final class Service(spark: SparkSession, defaultDir: String, port: Int,
     val rid = graft.functions.Ksuid.newId()
     try {
       ex.getResponseHeaders.add("X-Request-Id", rid)
-      spark.conf.set("graft.lake.root", root)
-      val df = try Graft.query(spark, root, q)
-               finally spark.conf.unset("graft.lake.root")
       // no Accept (or */*): the service's configured default format
       // (service/core.go -defaultfmt)
       val defMime = defaultFmt match {
@@ -792,6 +784,20 @@ final class Service(spark: SparkSession, defaultDir: String, port: Int,
         case Some("") | Some("*/*") | None => defMime
         case Some(a) => a
       }
+      def compiled[T](c: => T): T = {
+        spark.conf.set("graft.lake.root", root)
+        try c finally spark.conf.unset("graft.lake.root")
+      }
+      // x-zjson frames each named output as its own channel, so it
+      // compiles the query to its outputs; one output is the query's frame
+      val legs: Seq[(String, org.apache.spark.sql.DataFrame)] =
+        if (fmt != "application/x-zjson") Seq("main" -> compiled(Graft.query(spark, root, q)))
+        else compiled(Graft.queryOutputs(spark, root, q)) match {
+          case Seq((_, one)) => Seq("main" -> one)
+          case outs => outs
+        }
+      // the whole result: all outputs combined
+      lazy val df = if (legs.length == 1) legs.head._2 else compiled(Graft.query(spark, root, q))
       // ?ctrl= parses with Go's strconv.ParseBool semantics
       val ctrlRaw = query(ex).get("ctrl")
       val boolTrue = Set("1", "t", "T", "TRUE", "true", "True")
@@ -838,15 +844,6 @@ final class Service(spark: SparkSession, defaultDir: String, port: Int,
           // stats ride as typed control messages (api.go QueryChannelSet/
           // QueryChannelEnd/QueryStats) when ctrl is requested; a fork
           // with named outputs frames each leg as its own channel
-          val legs: Seq[(String, org.apache.spark.sql.DataFrame)] = {
-            val outs =
-              try {
-                spark.conf.set("graft.lake.root", root)
-                try Graft.queryOutputs(spark, root, q)
-                finally spark.conf.unset("graft.lake.root")
-              } catch { case _: Exception => Seq.empty }
-            if (outs.length > 1) outs else Seq("main" -> df)
-          }
           // matched stats describe the FILTERED result (the reference's
           // progress counts records passing the filter); read stats stay
           // the whole-pool scan counters. Computed before streaming
@@ -911,12 +908,7 @@ final class Service(spark: SparkSession, defaultDir: String, port: Int,
             org.apache.commons.io.FileUtils.deleteQuietly(d.toFile): Unit
         case _ =>
           // a large x-zson response must never buffer whole on the driver
-          val it = ZsonIO.toZson(df).toLocalIterator()
-          streamLines(ex, "application/x-zson",
-            new Iterator[String] {
-              def hasNext: Boolean = it.hasNext
-              def next(): String = it.next()
-            })
+          graft.sources.ZFormat.lines(df, "zson")(streamLines(ex, "application/x-zson", _))
       }
     } catch {
       case e: Exception =>
@@ -1011,6 +1003,17 @@ final class Service(spark: SparkSession, defaultDir: String, port: Int,
 }
 
 object Service {
+  /** The message of the first error in `e`'s cause chain that is not
+    * Spark's own: a failed job wraps a task's error in Spark's abort text,
+    * with stage numbers and stack traces. `e`'s message when every error
+    * in the chain is Spark's.
+    */
+  private[graft] def ownMessage(e: Throwable): String = {
+    val own = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16)
+      .find(!_.getClass.getName.startsWith("org.apache.spark."))
+    String.valueOf(own.flatMap(c => Option(c.getMessage)).getOrElse(e.getMessage))
+  }
+
   /** ZSON string-literal escaping for interpolated response text. */
   private[graft] def esc(s: String): String =
     s.replace("\\", "\\\\").replace("\"", "\\\"")

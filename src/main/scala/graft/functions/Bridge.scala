@@ -16,6 +16,16 @@ object Bridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     ExprBridge.ofRows(spark, plan)
 
+  /** An analyzed plan to keep and reuse: see [[ofShared]]. */
+  def shareable(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+    ExprBridge.shareable(plan)
+
+  /** A new DataFrame over a [[shareable]] plan, with no new analysis. */
+  def ofShared(spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
+    ExprBridge.ofShared(spark, plan)
+
   /** Exact integral division on longs (SQL `div`) — avoids double rounding
     * on ns-scale epoch values.
     */

@@ -757,14 +757,46 @@ object Lake {
     * commits, minus anything a delete record on the branch removed. The
     * scan is planned on the driver from the journal and the objects'
     * footers (see [[readObjects]]): no Spark job runs until the frame is
-    * executed.
+    * executed. A repeated scan of an unchanged snapshot reuses the
+    * analyzed plan of the last one (see [[scans]]).
     */
   def scan(spark: SparkSession, root: String, pool: String,
            asOf: Option[String] = None,
            keyRange: Option[(String, String)] = None): DataFrame =
     scanObjects(spark, root, pool, asOf, keyRange, ownShapes = false)
 
-  /** `scan`; with `ownShapes`, as a compaction reads (see [[readObjects]]). */
+  /** Which scan a cached plan answers. */
+  private final case class ScanKey(spark: SparkSession, root: String, pool: String,
+      asOf: Option[String], keyRange: Option[(String, String)])
+
+  /** What a cached plan was built from: the range-pruned live objects
+    * (with their journal shapes), the pool's key and order, and the
+    * settings its analysis read. Objects are immutable, so an equal
+    * snapshot plans the same scan.
+    */
+  private final case class ScanSnapshot(ids: Seq[String], shapes: Seq[Seq[String]],
+      key: Option[String], order: String, conf: Seq[Option[String]])
+
+  private val scanConf = Seq("spark.sql.caseSensitive", "spark.sql.session.timeZone", "spark.sql.ansi.enabled")
+
+  /** The analyzed plans of the last pool scans, least recently used out
+    * first. A plan holds the parquet relation (footer schema, file
+    * listing) and the tag, sort and key-range filter over it; no rows.
+    */
+  private type Plan = org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+  private val scans = new java.util.LinkedHashMap[ScanKey, (ScanSnapshot, Plan)](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[ScanKey, (ScanSnapshot, Plan)]): Boolean =
+      size() > 32
+  }
+  private val scanHits = new java.util.concurrent.atomic.AtomicLong()
+  private val scanMisses = new java.util.concurrent.atomic.AtomicLong()
+
+  /** (hits, misses) of the scan plan cache since the JVM started. */
+  def scanCacheCounts: (Long, Long) = (scanHits.get, scanMisses.get)
+
+  /** `scan`; with `ownShapes`, as a compaction reads (see [[readObjects]]),
+    * never from or into the plan cache.
+    */
   private def scanObjects(spark: SparkSession, root: String, pool: String,
       asOf: Option[String], keyRange: Option[(String, String)], ownShapes: Boolean): DataFrame = {
     val all = commits(root, pool)
@@ -810,7 +842,33 @@ object Lake {
         if (kept.nonEmpty) kept else live.take(1) // keep a scannable frame for schema
       case _ => live
     }
-    val df1 = readObjects(spark, root, pool, pruned, byId, ownShapes)
+    val order = if (key.isDefined) poolOrder(root, pool) else ""
+    if (ownShapes) return planScan(spark, root, pool, pruned, byId, key, order, keyRange, ownShapes)
+    val at = ScanKey(spark, root, pool, asOf, keyRange)
+    val snap = ScanSnapshot(pruned, pruned.map(id => byId.get(id).fold(Seq.empty[String])(_.shapes)),
+      key, order, scanConf.map(spark.conf.getOption))
+    scans.synchronized(Option(scans.get(at))) match {
+      case Some((s, plan)) if s == snap =>
+        scanHits.incrementAndGet()
+        graft.functions.Bridge.ofShared(spark, plan)
+      case _ =>
+        scanMisses.incrementAndGet()
+        val df = planScan(spark, root, pool, pruned, byId, key, order, keyRange, ownShapes)
+        val plan = graft.functions.Bridge.shareable(df.queryExecution.analyzed)
+        scans.synchronized {
+          // a plan holds its session: none outlives its context
+          scans.keySet.removeIf(_.spark.sparkContext.isStopped)
+          scans.put(at, (snap, plan))
+        }
+        df
+    }
+  }
+
+  /** Plan the scan of objects `ids` (see [[scan]]). */
+  private def planScan(spark: SparkSession, root: String, pool: String, ids: Seq[String],
+      byId: Map[String, Commit], key: Option[String], order: String,
+      keyRange: Option[(String, String)], ownShapes: Boolean): DataFrame = {
+    val df1 = readObjects(spark, root, pool, ids, byId, ownShapes)
     val allShapes = df1.schema.fields.find(_.name == graft.operators.Het.typeTag)
       .filter(_.metadata.contains("shapes"))
       .map(_.metadata.getStringArray("shapes").toSeq).getOrElse(Seq.empty)
@@ -831,7 +889,7 @@ object Lake {
             val ipOrd = udf((v: String) => graft.functions.ZedFunctions.ipSortKey(v))
             ipOrd(col(k))
           } else col(k)
-        if (poolOrder(root, pool) == "asc") df1.orderBy(sortC.asc_nulls_last)
+        if (order == "asc") df1.orderBy(sortC.asc_nulls_last)
         else df1.orderBy(sortC.desc_nulls_last)
       case Some(_) =>
         // keyed pool whose loaded data lacks the key column entirely:
@@ -843,7 +901,7 @@ object Lake {
         // the tiebreak.
         ZngBody.tiebreak(df1) match {
           case Some(tb) =>
-            if (poolOrder(root, pool) == "asc") df1.orderBy(tb.asc_nulls_last)
+            if (order == "asc") df1.orderBy(tb.asc_nulls_last)
             else df1.orderBy(tb.desc_nulls_last)
           case None => df1
         }

@@ -3,6 +3,7 @@ package graft.sources
 import java.io.OutputStream
 import java.nio.charset.StandardCharsets.UTF_8
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
@@ -693,38 +694,55 @@ private[graft] object TextWriter {
     HadoopFs.prepareDir(df.sparkSession, path)
     val conf = HadoopFs.confMap(df.sparkSession)
     val schema = df.schema
-    def open(pid: Int): OutputStream = {
-      val raw = HadoopFs.create(conf, path, f"part-$pid%05d.${fmt.ext}" + (if (gzip) ".gz" else ""))
-      new java.io.BufferedOutputStream(
-        if (gzip) new java.util.zip.GZIPOutputStream(raw, 1 << 16) else raw, 1 << 16)
-    }
-    val parts = df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-      var file: OutputStream = null // opened with the first byte
-      val out = new OutputStream {
-        override def write(b: Int): Unit = write(Array(b.toByte), 0, 1)
-        override def write(b: Array[Byte], off: Int, n: Int): Unit = {
-          if (file == null) file = open(pid)
-          file.write(b, off, n)
-        }
-      }
-      try Iterator.single(render(fmt, schema, rows, out))
-      finally if (file != null) file.close()
-    }.collect()
+    val parts = Jobs.all(df.queryExecution.toRdd, new WritePart(fmt, schema, conf, path, gzip))
     var cur: AnyRef = null
     parts.foreach { p =>
       if (p.lead != null) { fmt.transition(cur, p.lead); cur = p.end }
       if (p.failure != null) throw p.failure
     }
     if (cur == null) csvEmpty(fmt, schema).foreach { h =>
-      val out = open(0)
+      val out = openPart(conf, path, fmt, gzip, 0)
       try out.write((h + "\n").getBytes(UTF_8)) finally out.close()
+    }
+  }
+
+  private def openPart(conf: Map[String, String], path: String, fmt: Fmt, gzip: Boolean,
+      pid: Int): OutputStream = {
+    val raw = HadoopFs.create(conf, path, f"part-$pid%05d.${fmt.ext}" + (if (gzip) ".gz" else ""))
+    new java.io.BufferedOutputStream(
+      if (gzip) new java.util.zip.GZIPOutputStream(raw, 1 << 16) else raw, 1 << 16)
+  }
+
+  /** A partition rendered to its part file, opened with the first byte. */
+  private final class WritePart(fmt: Fmt, schema: StructType, conf: Map[String, String],
+      path: String, gzip: Boolean) extends ((TaskContext, Iterator[InternalRow]) => Part) with Serializable {
+    def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Part = {
+      var file: OutputStream = null
+      val out = new OutputStream {
+        override def write(b: Int): Unit = write(Array(b.toByte), 0, 1)
+        override def write(b: Array[Byte], off: Int, n: Int): Unit = {
+          if (file == null) file = openPart(conf, path, fmt, gzip, ctx.partitionId())
+          file.write(b, off, n)
+        }
+      }
+      try render(fmt, schema, rows, out) finally if (file != null) file.close()
+    }
+  }
+
+  /** A partition rendered in memory, for a stream to stitch. */
+  private final class RenderPart(fmt: Fmt, schema: StructType, typed: Boolean)
+      extends ((TaskContext, Iterator[InternalRow]) => (Part, Array[Byte])) with Serializable {
+    def apply(ctx: TaskContext, rows: Iterator[InternalRow]): (Part, Array[Byte]) = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val p = render(fmt, schema, rows, bytes, typed)
+      (p, bytes.toByteArray)
     }
   }
 
   /** The frame's output as one stream of lines, handed to `use` while
     * the frame's own query execution runs. Partitions render on the
     * executors; `oneJob` fetches them all in one job, else they come to
-    * the driver one at a time, in order, for a caller that streams.
+    * the driver one job at a time, in order, for a caller that streams.
     * `typed` false prints every leaf through its value (a check of the
     * typed writers against ZFormat's rules).
     */
@@ -732,12 +750,9 @@ private[graft] object TextWriter {
       use: Iterator[String] => A): A = {
     val schema = df.schema
     SQLExecution.withNewExecutionId(df.queryExecution, Some("render")) {
-      val parts = df.queryExecution.toRdd.mapPartitions { rows =>
-        val bytes = new java.io.ByteArrayOutputStream()
-        val p = render(fmt, schema, rows, bytes, typed)
-        Iterator.single((p, bytes.toByteArray))
-      }
-      use(stitch(fmt, schema, if (oneJob) parts.collect().iterator else parts.toLocalIterator))
+      val rows = df.queryExecution.toRdd
+      val part = new RenderPart(fmt, schema, typed)
+      use(stitch(fmt, schema, if (oneJob) Jobs.all(rows, part).iterator else Jobs.each(rows, part)))
     }
   }
 

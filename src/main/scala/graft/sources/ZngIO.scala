@@ -190,12 +190,16 @@ object ZngIO {
 
   private def writeParts(df: DataFrame, path: String, encode: StreamEncoder): Unit = {
     HadoopFs.prepareDir(df.sparkSession, path)
-    val confMap = HadoopFs.confMap(df.sparkSession)
-    df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-      val out = HadoopFs.create(confMap, path, f"part-$pid%05d.zng")
+    Jobs.all(df.queryExecution.toRdd, new WritePart(HadoopFs.confMap(df.sparkSession), path, encode)): Unit
+  }
+
+  /** One partition encoded to its part file (a named class: see [[Jobs]]). */
+  private final class WritePart(conf: Map[String, String], path: String, encode: StreamEncoder)
+      extends ((org.apache.spark.TaskContext, Iterator[InternalRow]) => Unit) with Serializable {
+    def apply(ctx: org.apache.spark.TaskContext, rows: Iterator[InternalRow]): Unit = {
+      val out = HadoopFs.create(conf, path, f"part-${ctx.partitionId()}%05d.zng")
       try encode(rows, out) finally out.close()
-      Iterator.empty
-    }.count(): Unit
+    }
   }
 
   /** Encodes one partition's internal rows as one ZNG stream (EOS
